@@ -67,19 +67,6 @@ def area(batch: GeomBatch) -> np.ndarray:
     return out
 
 
-def ring_signed_areas(batch: GeomBatch) -> np.ndarray:
-    """(r,) signed shoelace area per ring (debug/tests)."""
-    x, y = batch.coords[:, 0], batch.coords[:, 1]
-    r = len(batch.ring_coord_off) - 1
-    out = np.zeros(r)
-    for ri in range(r):
-        s, e = batch.ring_coord_off[ri], batch.ring_coord_off[ri + 1]
-        if e - s >= 4:
-            xx, yy = x[s:e], y[s:e]
-            out[ri] = 0.5 * np.sum(xx[:-1] * yy[1:] - xx[1:] * yy[:-1])
-    return out
-
-
 def centroid(batch: GeomBatch) -> np.ndarray:
     """(n, 2) centroid per geometry, highest-dimension rule (the
     PostGIS/GEOS ST_Centroid convention the reference's shapely

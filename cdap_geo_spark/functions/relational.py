@@ -25,12 +25,6 @@ def global_bounds(df: DataFrame, minx="minx", miny="miny",
                   F.max(maxx).alias("maxx"), F.max(maxy).alias("maxy"))
 
 
-def sdf_force_execute(df: DataFrame) -> None:
-    """Materialize without collecting — noop-format write, the
-    reference's bench trick (``cdap_geo/utils.py:57-59``)."""
-    df.write.format("noop").mode("overwrite").save()
-
-
 def sdf_unique(df: DataFrame, col: str) -> list:
     """Distinct values of one column, collected driver-side — verbatim
     semantics of the reference's ``sdf_unique``
@@ -54,6 +48,37 @@ def sdf_memsize(df: DataFrame) -> int:
     reference; ratios between relations are comparable."""
     stats = df._jdf.queryExecution().optimizedPlan().stats()
     return int(str(stats.sizeInBytes()))
+
+
+#: Row cap of the fallback probe in :func:`broadcastable`, for frames
+#: whose size Catalyst cannot estimate (RDD-backed relations). The
+#: broadcast side of the engine's joins is a few hundred bytes per row
+#: (ids + bounds + WKB), so 250k rows stays well under a 256 MB
+#: broadcast.
+BROADCAST_PROBE_ROWS = 250_000
+
+
+def broadcastable(df: DataFrame, fanout: int = 1) -> bool:
+    """True when ``df``, replicated ``fanout`` times by the join that
+    consumes it, is small enough to broadcast.
+
+    Spark's own ``JoinSelection`` rule on the optimizer's estimate
+    (:func:`sdf_memsize`, zero jobs): ``size x fanout <=
+    spark.sql.autoBroadcastJoinThreshold``, and never when that
+    threshold is negative (broadcast disabled). Only when the estimate
+    is unknown — it is ``spark.sql.defaultSizeInBytes`` for RDD-backed
+    frames — fall back to a bounded ``limit(cap+1).count()`` probe with
+    ``cap = BROADCAST_PROBE_ROWS // fanout``: two small jobs that read
+    at most cap+1 rows, never a full scan."""
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    threshold = conf.autoBroadcastJoinThreshold()
+    if threshold < 0:
+        return False
+    size = sdf_memsize(df)
+    if size < conf.defaultSizeInBytes():
+        return size * fanout <= threshold
+    cap = max(1, BROADCAST_PROBE_ROWS // fanout)
+    return df.limit(cap + 1).count() <= cap
 
 
 def sdf_print_stats(df: DataFrame, name: str | None = None) -> DataFrame:

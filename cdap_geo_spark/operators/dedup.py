@@ -809,16 +809,6 @@ def minhash_signature_from_hashes(num_perm: int = 64, seed: int = 7):
     return _sig
 
 
-def minhash_signature_udf(num_perm: int = 64, k: int = 5, seed: int = 7):
-    """text Column -> signature Column (native md5 gram hashing +
-    NumPy permutation mins); kept as the public one-call API."""
-    sig = minhash_signature_from_hashes(num_perm, seed)
-
-    def apply(text: Column) -> Column:
-        return sig(gram_hashes(text, k))
-    return apply
-
-
 def minhash_lsh_pairs(df: DataFrame, *, num_perm: int = 64, bands: int = 16,
                       k: int = 5, threshold: float = 0.5,
                       id_col: str = "doc_id",

@@ -35,13 +35,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from cdap_geo_spark import udfs
 from cdap_geo_spark.core import cells as C
-
-#: probe-side broadcast bound (rows of the EXPLODED pending x ring
-#: relation). Same planner discipline as ``operators/sjoin.py``:
-#: broadcast only what is provably small; round-3's unconditional
-#: broadcast overflowed for a large query set at wide ring expansion
-#: (VERDICT r3 "What's wrong #3").
-BROADCAST_PROBE_ROWS = 250_000
+from cdap_geo_spark.functions.relational import BROADCAST_PROBE_ROWS
 
 #: density seeding: size the FIRST annulus so its inscribed disk is
 #: expected to hold ``SEED_SAFETY x k`` corpus points — then d_k <=

@@ -18,7 +18,11 @@ Scale levers (all explicit parameters, chosen by the caller or the
 planner heuristics — no Catalyst extension needed):
 
 * ``broadcast=True`` pins a broadcast-hash join for a small right side
-  (regions/tiles); ``'auto'`` leaves it to AQE's runtime conversion;
+  (regions/tiles); ``'auto'`` (default) pins it when
+  :func:`~cdap_geo_spark.functions.relational.broadcastable` says the
+  right side fits: its optimizer size estimate is within
+  ``spark.sql.autoBroadcastJoinThreshold`` (zero jobs), with a bounded
+  row probe only for RDD-backed frames whose size is unknown;
 * ``salt=k`` spreads hot cells (dense geographies) over k shuffle
   keys: the left side gets a deterministic salt from its id, the right
   side is replicated k ways — result set is provably salt-invariant
@@ -41,15 +45,9 @@ from pyspark.sql import DataFrame, functions as F, types as T
 
 from cdap_geo_spark import udfs
 from cdap_geo_spark.core import cells as C
+from cdap_geo_spark.functions.relational import broadcastable
 
 DEFAULT_LEVEL = C.LEVEL_100KM  # ~131 km cells ≈ the reference's 100 km grid
-
-#: ``broadcast='auto'`` probes the right side with a bounded
-#: ``limit(N+1).count()`` (reads at most N+1 rows, never a full scan)
-#: and pins a broadcast-hash join when it fits. The indexed right side
-#: is rows × cells-per-geometry ≈ a few hundred bytes each, so 250k
-#: rows stays well under a 256 MB broadcast even for multi-cell covers.
-BROADCAST_PROBE_ROWS = 250_000
 
 #: ``salt='auto'`` (the default) censuses the hottest cell on a
 #: bounded sample of the indexed LEFT side when the join is NOT
@@ -251,9 +249,8 @@ def sjoin_pairs(left: DataFrame, right: DataFrame, *,
         # the AQE sort-merge plan shuffles+sorts both indexed sides
         # (wide rows: ids + bounds + WKB blobs) and ran 3x slower than
         # the map-side broadcast plan (stage walls 25.5+69.3 s vs
-        # 31.7 s). The probe is bounded — safe against a 100 TB right.
-        n = right.limit(BROADCAST_PROBE_ROWS + 1).count()
-        broadcast = n <= BROADCAST_PROBE_ROWS
+        # 31.7 s).
+        broadcast = broadcastable(right)
 
     l = _index_side(left, left_id, left_geom, level, lh, pad,
                     keep_geom=(predicate != "bbox"), dilate=dilate_l)
@@ -389,8 +386,8 @@ def box_pairs_native(left: DataFrame, right: DataFrame, *,
     documented contract as the segments/tiles operators).
 
     Scale: identical to the WKB path — map-side cell fan-out bounded
-    by box size / cell size, one equi-join sized by the same bounded
-    broadcast probe, one narrow id-pair dedup exchange.
+    by box size / cell size, one equi-join sized by the same broadcast
+    planner, one narrow id-pair dedup exchange.
     """
     mnx, mny, mxx, mxy = bounds
     cs = int(C.cell_size(level))
@@ -414,8 +411,7 @@ def box_pairs_native(left: DataFrame, right: DataFrame, *,
             .alias("cell_id"))
 
     if broadcast == "auto":
-        n = right.limit(BROADCAST_PROBE_ROWS + 1).count()
-        broadcast = n <= BROADCAST_PROBE_ROWS
+        broadcast = broadcastable(right)
 
     l = indexed(left, left_id, "_l")
     r = indexed(right, right_id, "_r")

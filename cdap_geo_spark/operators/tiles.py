@@ -158,7 +158,12 @@ def assign_tiles(df: DataFrame, *, bbox: tuple, splits: int,
                 yi0 = np.floor(b[:, 1] / ry).astype(np.float64)
                 xi1 = np.floor(b[:, 2] / rx).astype(np.float64)
                 yi1 = np.floor(b[:, 3] / ry).astype(np.float64)
-            bad = np.isnan(b[:, 0])
+            # a bbox strictly outside the frame (the sjoin bbox
+            # prefilter's test) intersects no tile; clamping it would
+            # invent an edge tile. Frame-edge touches keep theirs.
+            outside = ((b[:, 0] > x1) | (b[:, 1] > y1)
+                       | (b[:, 2] < x0) | (b[:, 3] < y0))
+            bad = np.isnan(b[:, 0]) | outside
             xi0 = np.clip(np.nan_to_num(xi0), lx0 // rx, lx1 // rx - 1).astype(np.int64)
             yi0 = np.clip(np.nan_to_num(yi0), ly0 // ry, ly1 // ry - 1).astype(np.int64)
             xi1 = np.clip(np.nan_to_num(xi1), lx0 // rx, lx1 // rx - 1).astype(np.int64)
@@ -194,42 +199,6 @@ def assign_tiles(df: DataFrame, *, bbox: tuple, splits: int,
             yield pd.DataFrame(data)
 
     return src.mapInPandas(gen, schema=out_schema)
-
-
-def grid_cover_struct_udf(resolutions, limits):
-    """True-cover variant emitting array<struct<tile_id,ox,oy>> so the
-    tile box is recoverable without re-parsing the id (ids like
-    '-100-200' make string splitting ambiguous)."""
-    rx, ry = int(resolutions[0]), int(resolutions[1])
-    lx0, ly0, lx1, ly1 = (int(v) for v in limits)
-    out_type = T.ArrayType(T.StructType([
-        T.StructField("tile_id", T.StringType()),
-        T.StructField("ox", T.DoubleType()),
-        T.StructField("oy", T.DoubleType()),
-    ]))
-
-    @pandas_udf(out_type)
-    def _cover(minx: pd.Series, miny: pd.Series,
-               maxx: pd.Series, maxy: pd.Series) -> pd.Series:
-        mnx = minx.to_numpy(np.float64)
-        mny = miny.to_numpy(np.float64)
-        mxx = maxx.to_numpy(np.float64)
-        mxy = maxy.to_numpy(np.float64)
-        out = []
-        for a, b, c, d in zip(mnx, mny, mxx, mxy):
-            if np.isnan(a):
-                out.append([])
-                continue
-            xs = np.arange(max(int(np.floor(a / rx)) * rx, lx0),
-                           min(int(np.floor(c / rx)) * rx + rx, lx1),
-                           rx, dtype=np.int64)
-            ys = np.arange(max(int(np.floor(b / ry)) * ry, ly0),
-                           min(int(np.floor(d / ry)) * ry + ry, ly1),
-                           ry, dtype=np.int64)
-            out.append([{"tile_id": f"{x}-{y}", "ox": float(x), "oy": float(y)}
-                        for x in xs for y in ys])
-        return pd.Series(out)
-    return _cover
 
 
 def tile_rollup(assigned: DataFrame, *, resolutions, factor: int,

@@ -29,7 +29,7 @@ ENGINE_CONF = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": "65536",
     # pinned: forked python workers persist across tasks AND stages so
-    # the per-worker import + page-warm cost is paid once per core
+    # the per-worker import cost is paid once per core
     "spark.python.worker.reuse": "true",
     # throughput GC: the headline's warm main stage spent 609 s of its
     # 1261 s JVM CPU in G1 pauses at 32 task threads; ParallelGC + the
@@ -57,14 +57,6 @@ def _tune_malloc_env() -> None:
     """
     os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", "1073741824")
     os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "-1")
-    # NOTE (round 2): the round-1 96 MB per-worker pre-warm is gone.
-    # Profiling showed the warm itself costs up to ~25 s/worker when
-    # the host is in its slow page-fault state (sjoin stage task time
-    # 671 s for ~30 s of CPU), and pre-touching pages saves nothing:
-    # first-use faults cost the same and the two env vars above already
-    # keep the pages resident afterwards. CDAP_GEO_WARM_MB=<MiB> can
-    # re-enable it for experiments.
-    os.environ.setdefault("CDAP_GEO_WARM_MB", "0")
 
 
 def get_spark(app: str = "cdap_geo_spark", cores: int | None = None,

@@ -25,8 +25,9 @@ are distinct per region, so no post-join dedup (a streaming-hostile
 wide aggregation) is needed.
 
 At scale: the static index is regions x cells-per-region rows; keep it
-under the broadcast budget (the default probes it, like the batch
-planner) or pass ``broadcast=False`` to shuffle the stream side on
+under the broadcast budget (the default asks the batch planner's
+:func:`~cdap_geo_spark.functions.relational.broadcastable` about the
+raw regions) or pass ``broadcast=False`` to shuffle the stream side on
 cell_id instead (stream-static non-broadcast join).
 """
 
@@ -35,8 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from cdap_geo_spark import udfs
-from cdap_geo_spark.operators.sjoin import (BROADCAST_PROBE_ROWS,
-                                            DEFAULT_LEVEL, _index_side)
+from cdap_geo_spark.functions.relational import broadcastable
+from cdap_geo_spark.operators.sjoin import DEFAULT_LEVEL, _index_side
 
 
 def spatial_enrich_stream(points: DataFrame, regions: DataFrame, *,
@@ -71,10 +72,9 @@ def spatial_enrich_stream(points: DataFrame, regions: DataFrame, *,
         region_geom_c = region_geom
 
     if broadcast == "auto":
-        # bounded probe of the INDEXED static side (the batch
-        # planner's discipline: reads at most cap+1 rows)
-        broadcast = (r.limit(BROADCAST_PROBE_ROWS + 1).count()
-                     <= BROADCAST_PROBE_ROWS)
+        # decided on the raw regions, like the batch planner: the
+        # probe fallback on the indexed side would run its cover kernel
+        broadcast = broadcastable(regions)
 
     pb = udfs.st_bounds()(F.col(point_geom))
     pts = points.withColumn("_px", pb["minx"]).withColumn("_py", pb["miny"]) \

@@ -16,35 +16,12 @@ pairs — the Arrow-batch analogue of shapely prepared geometries
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F, types as T
 from pyspark.sql.functions import pandas_udf
 
 from cdap_geo_spark.core import cells as C, geom as G, wkb as W
-
-
-def _warm_pages_once() -> None:
-    """Touch a heap arena once per python worker process.
-
-    In this sandbox first-touch page faults are ~1000x slower than
-    warm pages (microVM lazy backing). With MALLOC_TRIM_THRESHOLD_=-1
-    (set by session._tune_malloc_env and inherited by workers) the
-    freed arena stays in the process heap, so all subsequent NumPy /
-    Arrow allocations reuse warm pages. No-op outside such
-    environments (costs one memset of CDAP_GEO_WARM_MB).
-    """
-    mb = int(os.environ.get("CDAP_GEO_WARM_MB", "0") or 0)
-    if mb > 0 and not getattr(_warm_pages_once, "_done", False):
-        arena = np.empty(mb * 131072, np.float64)  # mb MiB
-        arena[:] = 1.0
-        del arena
-        _warm_pages_once._done = True
-
-
-_warm_pages_once()
 
 BOUNDS_FIELDS = [
     T.StructField("minx", T.DoubleType()),
@@ -53,11 +30,6 @@ BOUNDS_FIELDS = [
     T.StructField("maxy", T.DoubleType()),
 ]
 BOUNDS_TYPE = T.StructType(BOUNDS_FIELDS)
-
-INDEX_TYPE = T.StructType(BOUNDS_FIELDS + [
-    T.StructField("cells", T.ArrayType(T.LongType())),
-    T.StructField("inside", T.ArrayType(T.BooleanType())),
-])
 
 
 def _to_blob_list(s: pd.Series) -> list:
@@ -80,28 +52,6 @@ def st_bounds():
         b = W.parse_wkb(_to_blob_list(s)).bounds()
         return pd.DataFrame(b, columns=["minx", "miny", "maxx", "maxy"])
     return _bounds
-
-
-def st_index(level: int, how: str = "bbox", pad: float = 1.0,
-             dilate: float = 0.0):
-    """binary WKB -> struct<minx..maxy, cells:array<long>, inside:array<bool>>.
-
-    One fused decode: bounds + hierarchical cell cover + interior flags
-    (the reference computes these in three separate per-row UDF passes:
-    ``cdap_geo/index_bbox.py:8,15-30``; ``cdap_geo/_indexing.py:290-304``).
-    ``dilate`` expands the cover for distance-join candidates.
-    """
-    @pandas_udf(INDEX_TYPE)
-    def _index(s: pd.Series) -> pd.DataFrame:
-        batch = W.parse_wkb(_to_blob_list(s))
-        b = batch.bounds()
-        off, cc, inside = C.cover_batch(batch, level, how=how, pad=pad,
-                                        dilate=dilate)
-        out = pd.DataFrame(b, columns=["minx", "miny", "maxx", "maxy"])
-        out["cells"] = [cc[off[i]:off[i + 1]] for i in range(len(batch))]
-        out["inside"] = [inside[off[i]:off[i + 1]] for i in range(len(batch))]
-        return out
-    return _index
 
 
 def st_cells(level: int, how: str = "bbox", pad: float = 1.0):
@@ -166,13 +116,6 @@ def st_num_points():
     return _n
 
 
-def st_is_valid():
-    @pandas_udf(T.BooleanType())
-    def _v(s: pd.Series) -> pd.Series:
-        return pd.Series(W.parse_wkb(_to_blob_list(s)).valid)
-    return _v
-
-
 def st_point():
     """(x: double, y: double) -> binary WKB point (vectorized emit)."""
     @pandas_udf(T.BinaryType())
@@ -229,50 +172,39 @@ def st_centroid_xy():
 # Pair predicates (the refinement pass)
 # ---------------------------------------------------------------------------
 
+#: Cache-sized kernel slices, NOT whole-batch: a 64k-pair gather
+#: touches tens of MB (coords + edge tables + masks); at 32 concurrent
+#: workers that working set thrashes the shared LLC and the per-pair
+#: cost exploded 13x (measured 313 us/pair vs 23 us/pair at 2 workers,
+#: BENCH/BASELINE.md). 2k-pair slices keep each worker's active set
+#: ~L2-sized: same-window A/B at sf0.1/local[32] cut the refine stage
+#: 110 s -> 24-44 s and per-pair kernel CPU 313 -> 29 us, and even the
+#: 2-worker run improved (117.8 -> 89.9 s). Arrow batches stay large
+#: (65536) — IPC amortization and cache behavior are decoupled by
+#: slicing in :func:`_pair_kernel`. A value <= 0 runs the whole batch
+#: as one slice.
+KERNEL_CHUNK = 2048
+
+
 def _pair_kernel(kernel, out_dtype):
     """Factorize BOTH sides: candidates repeat each doc ~once per
     overlapping region and each region across many docs, so parsing
     unique blobs only cuts WKB decode work by the duplication factor."""
-    prof = os.environ.get("CDAP_GEO_PROF")
-
     def run(l: pd.Series, r: pd.Series) -> np.ndarray:
-        import time as _time
-        t0 = _time.perf_counter()
         lcodes, lunique = pd.factorize(l, use_na_sentinel=True)
         rcodes, runique = pd.factorize(r, use_na_sentinel=True)
-        t1 = _time.perf_counter()
         lb = W.parse_wkb(_to_blob_list(pd.Series(lunique)))
         rb = W.parse_wkb(_to_blob_list(pd.Series(runique)))
-        t2 = _time.perf_counter()
-        n = len(l)
         li = lcodes.astype(np.int64)
         ri = rcodes.astype(np.int64)
         valid_pair = (ri >= 0) & (li >= 0)
-        out = np.zeros(n, out_dtype)
+        out = np.zeros(len(l), out_dtype)
         if valid_pair.any():
-            # Cache-sized kernel slices, NOT whole-batch: a 64k-pair
-            # gather touches tens of MB (coords + edge tables + masks);
-            # at 32 concurrent workers that working set thrashes the
-            # shared LLC and the per-pair cost exploded 13x (measured
-            # 313 us/pair vs 23 us/pair at 2 workers, BENCH/BASELINE.md).
-            # 2k-pair slices keep each worker's active set ~L2-sized:
-            # same-window A/B at sf0.1/local[32] cut the refine stage
-            # 110 s -> 24-44 s and per-pair kernel CPU 313 -> 29 us,
-            # and even the 2-worker run improved (117.8 -> 89.9 s).
-            # Arrow batches stay large (65536) — IPC amortization and
-            # cache behavior are decoupled by slicing HERE.
             vi = np.flatnonzero(valid_pair)
-            chunk = int(os.environ.get("CDAP_GEO_KERNEL_CHUNK", "2048"))
-            if chunk <= 0:
-                chunk = len(vi)
+            chunk = KERNEL_CHUNK if KERNEL_CHUNK > 0 else len(vi)
             for s in range(0, len(vi), chunk):
                 sl = vi[s:s + chunk]
                 out[sl] = kernel(lb, rb, li[sl], ri[sl])
-        if prof:
-            t3 = _time.perf_counter()
-            with open(f"{prof}.{os.getpid()}", "a") as f:
-                f.write(f"{n} {len(lunique)} {len(runique)} "
-                        f"{t1 - t0:.4f} {t2 - t1:.4f} {t3 - t2:.4f}\n")
         return out
     return run
 

@@ -14,3 +14,17 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+@pytest.fixture
+def no_broadcast(spark):
+    """Broadcast joins off (both thresholds -1) for one test, the
+    session's values restored after it."""
+    keys = ("spark.sql.autoBroadcastJoinThreshold",
+            "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    saved = [spark.conf.get(k) for k in keys]
+    for k in keys:
+        spark.conf.set(k, "-1")
+    yield
+    for k, v in zip(keys, saved):
+        spark.conf.set(k, v)

@@ -118,17 +118,17 @@ def test_embedding_dup_pairs_vs_bruteforce(spark):
     assert (got.ida < got.idb).all()
 
 
-def test_probe_broadcast_bounded_fallback_equality(spark):
-    """A query set above the broadcast threshold must take the plain
-    shuffle-join path and return the same results as the broadcast
-    path (threshold forced tiny so the fallback runs on test data)."""
+def test_probe_broadcast_bounded_fallback_equality(spark, no_broadcast):
+    """With broadcast joins off, the planner must send the query side
+    down the plain shuffle-join path, and that path must return the
+    same results as the broadcast path."""
+    from cdap_geo_spark.functions.relational import broadcastable
     from cdap_geo_spark.operators.embeddings import (
-        _probe_small, cosine_topk, ivf_topk, lsh_topk)
+        cosine_topk, ivf_topk, lsh_topk)
     df, _ = _emb_df(spark, n=120, dim=16)
     q = df.filter(F.col("vec_id") % 10 == 0) \
           .select(F.col("vec_id").alias("query_id"), "embedding")
-    assert _probe_small(q, 1000) is True
-    assert _probe_small(q, 3) is False
+    assert broadcastable(q) is False
 
     def key(pdf):
         return sorted(map(tuple, pdf[["query_id", "vec_id", "rank"]]
@@ -138,8 +138,7 @@ def test_probe_broadcast_bounded_fallback_equality(spark):
                    (lsh_topk, {"dim": 16, "n_planes": 8, "probes": 2}),
                    (ivf_topk, {"dim": 16, "n_clusters": 8, "nprobe": 2})]:
         bc = fn(df, q, k=3, broadcast_queries=True, **kw).toPandas()
-        no = fn(df, q, k=3, broadcast_queries="auto",
-                broadcast_threshold=2, **kw).toPandas()
+        no = fn(df, q, k=3, broadcast_queries="auto", **kw).toPandas()
         assert key(bc) == key(no), fn.__name__
 
 

@@ -244,7 +244,6 @@ def test_pair_kernel_chunk_invariance(monkeypatch):
     """The cache-sized kernel slicing (udfs._pair_kernel) must be
     result-invariant in the chunk size — slicing is a pure execution
     detail."""
-    import os
     import numpy as np
     import pandas as pd
     from cdap_geo_spark import udfs
@@ -258,8 +257,8 @@ def test_pair_kernel_chunk_invariance(monkeypatch):
     l = pd.Series([blobs[i] for i in li])
     r = pd.Series([blobs[i] for i in ri])
     outs = []
-    for chunk in ("0", "7", "256", "100000"):
-        monkeypatch.setenv("CDAP_GEO_KERNEL_CHUNK", chunk)
+    for chunk in (0, 7, 256, 100000):
+        monkeypatch.setattr(udfs, "KERNEL_CHUNK", chunk)
         run = udfs._pair_kernel(G.pairs_intersect, bool)
         outs.append(run(l, r))
     for o in outs[1:]:

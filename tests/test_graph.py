@@ -353,6 +353,18 @@ def test_adamic_adar_matches_bruteforce(spark):
     assert got == _brute_adamic(edges, 30)
 
 
+@pytest.mark.parametrize("offset", [1 << 31, -10_000])
+def test_adamic_adar_unpacked_fallback_matches_bruteforce(spark, offset):
+    """Ids >= 2^31 or negative cannot be packed into one BIGINT pair
+    key, so the unpacked plan runs; it must match brute force too."""
+    from cdap_geo_spark.operators.graph import adamic_adar
+    edges = [(a + offset, b + offset)
+             for a, b in _random_edges(45, 180, seed=17)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    got = [tuple(r) for r in adamic_adar(df, k=30).collect()]
+    assert got == _brute_adamic(edges, 30)
+
+
 def test_adamic_adar_oracle_sql_twin_matches(spark):
     import duckdb
     from cdap_geo_spark.operators.graph import (adamic_adar,

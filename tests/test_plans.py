@@ -2,6 +2,8 @@
 100 TB, so pin it (SURVEY.md §4 / task brief: '.explain the plan and
 iterate until it's the plan you'd want')."""
 
+import uuid
+
 from pyspark.sql import functions as F
 
 from cdap_geo_spark import docs as D, fixtures
@@ -32,6 +34,64 @@ def test_sjoin_broadcast_plan(spark):
     # exactly one shuffle: the pair dedup (broadcast join adds none)
     n_exchanges = plan.count("Exchange hashpartitioning")
     assert n_exchanges <= 1, plan
+
+
+def _jobs_run(spark, fn):
+    """(fn(), number of Spark jobs fn ran)."""
+    sc = spark.sparkContext
+    group = f"jobs_run_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_broadcastable_known_size_runs_no_job(spark, tmp_path):
+    from cdap_geo_spark.functions.relational import broadcastable
+    p = str(tmp_path / "t")
+    spark.range(100).write.parquet(p)
+    df = spark.read.parquet(p)
+    assert _jobs_run(spark, lambda: broadcastable(df)) == (True, 0)
+    # size x fanout over the 64m threshold: shuffle, still no job
+    assert _jobs_run(spark, lambda: broadcastable(df, 10 ** 9)) == (False, 0)
+
+
+def test_broadcastable_threshold_off(spark, no_broadcast):
+    from cdap_geo_spark.functions.relational import broadcastable
+    assert broadcastable(spark.range(10)) is False
+
+
+def test_broadcastable_unknown_size_probes_rows(spark):
+    from cdap_geo_spark.functions.relational import (BROADCAST_PROBE_ROWS,
+                                                     broadcastable,
+                                                     sdf_memsize)
+    fanout = BROADCAST_PROBE_ROWS // 2  # cap = 2 rows
+    two = spark.createDataFrame([(1,), (2,)], "a int")
+    three = spark.createDataFrame([(1,), (2,), (3,)], "a int")
+    conf = spark._jsparkSession.sessionState().conf()
+    # a local Python list is RDD-backed: Catalyst has no size for it
+    assert sdf_memsize(two) >= conf.defaultSizeInBytes()
+    ok, jobs = _jobs_run(spark, lambda: broadcastable(two, fanout))
+    assert ok is True and jobs > 0
+    ok, jobs = _jobs_run(spark, lambda: broadcastable(three, fanout))
+    assert ok is False and jobs > 0
+
+
+def test_sjoin_auto_broadcast_plans_without_jobs(spark, tmp_path):
+    """broadcast='auto' over a file-backed right side decides from the
+    optimizer's size estimate: no Spark job before the action, and the
+    small right side is still broadcast."""
+    p = str(tmp_path / "regions")
+    fixtures.regions(spark, 20).write.parquet(p)
+    rr = spark.read.parquet(p)
+    dd = D.with_geometry(fixtures.documents(spark, 50, partitions=2))
+    pairs, jobs = _jobs_run(spark, lambda: sjoin_pairs(
+        dd, rr, left_id="doc_id", right_id="region_id", level=7,
+        broadcast="auto"))
+    assert jobs == 0
+    assert "BroadcastHashJoin" in _plan(pairs)
 
 
 def test_sjoin_column_pruning(spark):

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from cdap_geo_spark import docs as D, fixtures, udfs
 from cdap_geo_spark.core import wkb as W
+from cdap_geo_spark.operators.sjoin import sjoin_pairs
 from cdap_geo_spark.operators.tiles import assign_tiles, grid_cover_udf, split_grid
 
 import oracle
@@ -105,6 +106,52 @@ def test_assign_tiles_point_single_tile(spark):
     got = set(map(tuple, assign_tiles(pts, bbox=(0, 0, 2000, 2000),
                                       splits=2).collect()))
     assert got == {("a", "0-0"), ("b", "1000-0")}
+
+
+#: case -> (bbox of a point or box geometry, tiles it must get) on the
+#: frame (0, 0, 700000, 1300000) cut 10 x 10
+_FRAME_CASES = {
+    "west": ((-50_000, 100_000, -50_000, 100_000), set()),
+    "north": ((350_000, 1_400_000, 350_000, 1_400_000), set()),
+    "east": ((800_000, 50, 800_000, 50), set()),
+    "east_box": ((710_000, 0, 720_000, 10_000), set()),
+    "corner_touch": ((700_000, 1_300_000, 700_000, 1_300_000),
+                     {"630000-1170000"}),
+    "edge_straddle": ((690_000, -10_000, 710_000, 10_000), {"630000-0"}),
+}
+
+
+@pytest.fixture(scope="module")
+def frame_case_tiles(spark):
+    """Tiles per case from assign_tiles and from the generic sjoin
+    against the split_grid tile table (one run each for all cases)."""
+    bbox, splits = (0, 0, 700_000, 1_300_000), 10
+    rows = []
+    for case, ((mnx, mny, mxx, mxy), _) in _FRAME_CASES.items():
+        blob = (W.points_to_wkb([mnx], [mny]) if (mnx, mny) == (mxx, mxy)
+                else W.boxes_to_wkb([mnx], [mny], [mxx], [mxy]))[0]
+        rows.append((case, bytes(blob)))
+    df = spark.createDataFrame(rows, "doc_id string, geometry binary")
+
+    def by_case(out):
+        got = {}
+        for r in out.collect():
+            got.setdefault(r.doc_id, set()).add(r.tile_id)
+        return got
+    return (by_case(assign_tiles(df, bbox=bbox, splits=splits)),
+            by_case(sjoin_pairs(df, split_grid(spark, bbox, splits),
+                                right_id="tile_id")))
+
+
+@pytest.mark.parametrize("case", sorted(_FRAME_CASES))
+def test_assign_tiles_out_of_frame_matches_sjoin(frame_case_tiles, case):
+    """A geometry whose bbox lies strictly outside the tile frame gets
+    no tile, not a clamped edge tile; one touching or straddling the
+    frame edge keeps its edge tile. Both agree with the generic sjoin
+    against the tile table."""
+    fast, joined = frame_case_tiles
+    want = _FRAME_CASES[case][1]
+    assert fast.get(case, set()) == joined.get(case, set()) == want
 
 
 def test_tile_rollup_matches_bruteforce(spark):
