@@ -202,6 +202,19 @@ def cover_bbox(bounds: np.ndarray, level: int, pad: float = 1.0):
     return offsets, encode(level, xs, ys)
 
 
+def point_grid(x: np.ndarray, y: np.ndarray, level: int):
+    """Grid coords (xi, yi) of the cells holding finite points, clamped
+    into ``[0, 2**level - 1]``: a point outside the world frame maps to
+    the nearest edge cell. Clamping never moves a point's cell farther
+    from any other cell, so Chebyshev ring distances stay lower bounds
+    of true distance (the kNN certification relies on this)."""
+    cs = cell_size(level)
+    top = (1 << level) - 1
+    xi = np.clip(np.floor((x - WORLD_X0) / cs), 0, top).astype(np.int64)
+    yi = np.clip(np.floor((y - WORLD_Y0) / cs), 0, top).astype(np.int64)
+    return xi, yi
+
+
 def cover_points(x: np.ndarray, y: np.ndarray, level: int, pad: float = 1.0):
     """CSR cover for points with the reference's edge-straddle rule.
 

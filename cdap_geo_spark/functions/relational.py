@@ -58,6 +58,13 @@ def sdf_memsize(df: DataFrame) -> int:
 BROADCAST_PROBE_ROWS = 250_000
 
 
+def broadcast_enabled(spark) -> bool:
+    """Spark's own switch for broadcast joins: off when
+    ``spark.sql.autoBroadcastJoinThreshold`` is negative."""
+    conf = spark._jsparkSession.sessionState().conf()
+    return conf.autoBroadcastJoinThreshold() >= 0
+
+
 def broadcastable(df: DataFrame, fanout: int = 1) -> bool:
     """True when ``df``, replicated ``fanout`` times by the join that
     consumes it, is small enough to broadcast.
@@ -70,10 +77,10 @@ def broadcastable(df: DataFrame, fanout: int = 1) -> bool:
     frames — fall back to a bounded ``limit(cap+1).count()`` probe with
     ``cap = BROADCAST_PROBE_ROWS // fanout``: two small jobs that read
     at most cap+1 rows, never a full scan."""
+    if not broadcast_enabled(df.sparkSession):
+        return False
     conf = df.sparkSession._jsparkSession.sessionState().conf()
     threshold = conf.autoBroadcastJoinThreshold()
-    if threshold < 0:
-        return False
     size = sdf_memsize(df)
     if size < conf.defaultSizeInBytes():
         return size * fanout <= threshold

@@ -1,9 +1,32 @@
-"""kNN via cell-ring expansion (absent in the reference — SURVEY.md
-§2.3 notes nearest-neighbour is only approximable there via
-``st_join(distance=d)``, ``cdap_geo/sedona.py:136-141``; the north rule
-mandates a true kNN operator).
+"""k-nearest-neighbour join of point queries over a point corpus
+(absent in the reference — SURVEY.md §2.3 notes nearest-neighbour is
+only approximable there via ``st_join(distance=d)``,
+``cdap_geo/sedona.py:136-141``; the north rule mandates a true kNN
+operator).
 
-Algorithm (distance-certified iterative expansion):
+:func:`knn_join` returns ``(query_id, doc_id, dist, rank <= k)``,
+ranked by ``(dist, corpus_id)`` — ties broken deterministically by
+corpus id. It has two routes to the same rows.
+
+**Broadcast route** (point mode, query set small enough to broadcast):
+
+1. the query ids and geometries are collected, and the geometries
+   decoded, in the driver (one small job, no Python UDF);
+2. one ``mapInArrow`` pass decodes each corpus row once and keeps,
+   per corpus partition, every query's exact top-k among that
+   partition's points (:func:`batch_topk`: the batch's points are
+   bucketed by cell and every query expands cell rings at once);
+3. one shuffle merges them: ``row_number() over (partition by query
+   order by dist, corpus_id) <= k``. The union of exact per-partition
+   top-k lists under one total order contains the global top-k, so
+   nothing needs certifying.
+
+That is at most four Spark jobs through the caller's first action,
+whatever the data (plus the planner's bounded row probe when the
+optimizer has no size estimate for the queries).
+
+**Ring route** (box mode, or a query set too large to broadcast) —
+distance-certified iterative expansion:
 
 1. index the corpus points once at ``level`` (cell_id equi-join key);
 2. round r: each still-pending query emits the hollow Chebyshev ring
@@ -14,28 +37,35 @@ Algorithm (distance-certified iterative expansion):
    d_k <= r * cellsize: every unexplored cell lies at Chebyshev ring
    >= r+1, whose nearest point is >= r*cellsize away, so no unseen
    point can beat the current top-k;
-4. final rank: ``row_number() over (partition by query order by dist,
-   corpus_id) <= k`` — ties broken deterministically by corpus id.
+4. final rank: the same window as the broadcast route's merge.
 
 The driver loop iterates over ring radii — the FIRST annulus is
 density-seeded (:func:`_seed_radius`: sized so its inscribed disk
 expects ``SEED_SAFETY*k`` points, certifying most queries in one
 round; the unseeded ``[0,0]`` round can never certify since its bound
 is d_k <= 0), then the radius doubles per round. Each round is one
-narrow equi-join; candidate accumulation stays columnar. At 100 TB the corpus index is written
-cell-clustered (repartitionByRange on cell_id) so ring joins prune to
-the touched cells via parquet min/max stats.
+narrow equi-join plus a ``localCheckpoint``; candidate accumulation
+stays columnar. At 100 TB the corpus index is written cell-clustered
+(repartitionByRange on cell_id) so ring joins prune to the touched
+cells via parquet min/max stats.
+
+Both routes put points outside the world frame into the nearest edge
+cell (:func:`cells.point_grid`), which keeps the ring bound sound.
 """
 
 from __future__ import annotations
 
-from cdap_geo_spark.core.lifetime import (track_checkpoint,
-                                           unpersist_checkpoint)
-from pyspark.sql import DataFrame, Window, functions as F
+import numpy as np
+from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from cdap_geo_spark import udfs
-from cdap_geo_spark.core import cells as C
-from cdap_geo_spark.functions.relational import BROADCAST_PROBE_ROWS
+from cdap_geo_spark.core import cells as C, wkb as W
+from cdap_geo_spark.core.lifetime import (track_checkpoint,
+                                           unpersist_checkpoint)
+from cdap_geo_spark.functions.relational import (BROADCAST_PROBE_ROWS,
+                                                 broadcast_enabled,
+                                                 broadcastable)
+from cdap_geo_spark.session import job_label
 
 #: density seeding: size the FIRST annulus so its inscribed disk is
 #: expected to hold ``SEED_SAFETY x k`` corpus points — then d_k <=
@@ -48,6 +78,10 @@ SEED_SAFETY = 4.0
 #: seed and pays extra (geometrically growing) rounds instead of a
 #: quadratic first-round probe.
 MAX_SEED_RADIUS = 16
+#: element budget of one vectorised step of :func:`batch_topk`:
+#: (query, cell) probes and (query, point) pairs are built in blocks
+#: of at most this many, whatever the batch or query-set size
+BLOCK = 1 << 16
 
 
 def _annulus_cells(lo: int, hi: int) -> int:
@@ -76,33 +110,279 @@ def _seed_radius(n_corpus: int, area: float, k: int, cellsize: float) -> int:
     return int(min(MAX_SEED_RADIUS, math.ceil(r_needed / cellsize)))
 
 
+# ---------------------------------------------------------------------------
+# Broadcast route: exact per-partition top-k (NumPy, inside the workers)
+# ---------------------------------------------------------------------------
+
+def _topk_rows(q: np.ndarray, d: np.ndarray, tie: np.ndarray,
+               k: int) -> np.ndarray:
+    """Indices of each query's first k rows under (d, tie), in
+    (q, d, tie) order."""
+    order = np.lexsort((tie, d, q))
+    qs = q[order]
+    first = np.flatnonzero(np.r_[True, qs[1:] != qs[:-1]])
+    rank = np.arange(len(qs)) - np.repeat(first,
+                                          np.diff(np.r_[first, len(qs)]))
+    return order[rank < k]
+
+
+def _kth(q: np.ndarray, d: np.ndarray, n_q: int, k: int) -> np.ndarray:
+    """Per query, the largest of its kept distances if it holds k of
+    them, else inf (rows hold at most k per query)."""
+    kth = np.full(n_q, -np.inf)
+    np.maximum.at(kth, q, d)
+    kth[np.bincount(q, minlength=n_q) < k] = np.inf
+    return kth
+
+
+def _ring_probes(qgx, qgy, active, lo, hi, side, cell_key):
+    """(query, occupied cell) pairs of the Chebyshev annulus [lo, hi]
+    around each active query's cell, in blocks of <= BLOCK probes."""
+    r = np.arange(-hi, hi + 1)
+    dx, dy = (a.ravel() for a in np.meshgrid(r, r, indexing="ij"))
+    ring = np.maximum(np.abs(dx), np.abs(dy)) >= lo
+    dx, dy = dx[ring], dy[ring]
+    step = max(1, BLOCK // len(dx))
+    for s in range(0, len(active), step):
+        a = active[s:s + step]
+        x = qgx[a, None] + dx
+        y = qgy[a, None] + dy
+        key = x * side + y
+        pos = np.minimum(np.searchsorted(cell_key, key), len(cell_key) - 1)
+        hit = ((x >= 0) & (x < side) & (y >= 0) & (y < side)
+               & (cell_key[pos] == key))
+        qi, oi = np.nonzero(hit)
+        yield a[qi], pos[qi, oi]
+
+
+def _rest_probes(qgx, qgy, active, lo, ux, uy):
+    """(query, occupied cell) pairs of every occupied cell at Chebyshev
+    distance >= lo, in blocks of <= BLOCK probes."""
+    step = max(1, BLOCK // len(ux))
+    for s in range(0, len(active), step):
+        a = active[s:s + step]
+        cheb = np.maximum(np.abs(qgx[a, None] - ux), np.abs(qgy[a, None] - uy))
+        qi, ci = np.nonzero(cheb >= lo)
+        yield a[qi], ci
+
+
+def _probe_pairs(pq, pc, start, count):
+    """Expand (query, cell) probes into (query, sorted point position)
+    pairs, in blocks of <= BLOCK pairs."""
+    cnt = count[pc]
+    ends = np.cumsum(cnt)
+    total = int(ends[-1]) if len(ends) else 0
+    for s in range(0, total, BLOCK):
+        flat = np.arange(s, min(s + BLOCK, total))
+        j = np.searchsorted(ends, flat, side="right")
+        yield pq[j], start[pc[j]] + flat - (ends[j] - cnt[j])
+
+
+def batch_topk(qx: np.ndarray, qy: np.ndarray, px: np.ndarray,
+               py: np.ndarray, tie: np.ndarray, k: int, level: int,
+               bound: np.ndarray):
+    """Each query's exact k nearest points of one batch under
+    (distance, ``tie``) — the per-partition step of the broadcast route.
+
+    The points are bucketed by their ``level`` cell and all queries
+    expand Chebyshev rings together on the ring route's schedule
+    (:func:`_seed_radius`, then ``[hi+1, 2*hi+2]``). A query stops once
+    its k-th candidate lies within ``hi*cellsize`` (every unexplored
+    point is farther), once ``bound[q]`` — the k-th distance it already
+    holds from earlier batches, inf if it holds fewer — does, or once
+    its rings cover every occupied cell. The first annulus with more
+    cells than the batch has occupied cells is replaced by a direct
+    pass over the remaining occupied cells, which ends the search.
+    Points farther than ``bound[q]`` are skipped: they cannot enter the
+    query's top k. Distances are ``sqrt(dx*dx + dy*dy)``, bit-identical
+    to :func:`udfs.st_point_distance`.
+
+    Returns ``(query index, point index, distance)`` arrays, at most k
+    rows per query.
+    """
+    n_q, n = len(qx), len(px)
+    cq = cp = np.empty(0, np.int64)
+    cd = np.empty(0, np.float64)
+    if n_q == 0 or n == 0 or k <= 0:
+        return cq, cp, cd
+    cs = C.cell_size(level)
+    side = 1 << level
+    qgx, qgy = C.point_grid(qx, qy, level)
+    gx, gy = C.point_grid(px, py, level)
+    key = gx * side + gy
+    order = np.argsort(key, kind="stable")
+    cell_key, start, count = np.unique(key[order], return_index=True,
+                                       return_counts=True)
+    ux, uy = cell_key // side, cell_key % side
+    reach = np.max([np.abs(qgx - ux.min()), np.abs(qgx - ux.max()),
+                    np.abs(qgy - uy.min()), np.abs(qgy - uy.max())], axis=0)
+    sx, sy, stie = px[order], py[order], tie[order]
+    kth = np.full(n_q, np.inf)
+    area = max(np.ptp(px) * np.ptp(py), cs * cs)
+    lo, hi = 0, _seed_radius(n, area, k, cs)
+    active = np.arange(n_q)
+    while len(active):
+        last = _annulus_cells(lo, hi) >= len(cell_key)
+        probes = (_rest_probes(qgx, qgy, active, lo, ux, uy) if last else
+                  _ring_probes(qgx, qgy, active, lo, hi, side, cell_key))
+        for pq, pc in probes:
+            for bq, bp in _probe_pairs(pq, pc, start, count):
+                dx = qx[bq] - sx[bp]
+                dy = qy[bq] - sy[bp]
+                d = np.sqrt(dx * dx + dy * dy)
+                keep = d <= np.minimum(bound[bq], kth[bq])
+                if not keep.any():
+                    continue
+                cq = np.r_[cq, bq[keep]]
+                cp = np.r_[cp, bp[keep]]
+                cd = np.r_[cd, d[keep]]
+                sel = _topk_rows(cq, cd, stie[cp], k)
+                cq, cp, cd = cq[sel], cp[sel], cd[sel]
+                kth = _kth(cq, cd, n_q, k)
+        r = hi * cs
+        done = (last | (hi >= reach[active]) | (bound[active] <= r)
+                | (kth[active] <= r))
+        active = active[~done]
+        lo, hi = hi + 1, 2 * hi + 2
+    return cq, order[cp], cd
+
+
+def _tie_keys(ids) -> np.ndarray:
+    """Dense ranks of an Arrow id array in Spark's ascending order
+    (nulls first; strings and binary by bytes)."""
+    import pyarrow.compute as pc
+    return pc.rank(ids, sort_keys="ascending", null_placement="at_start",
+                   tiebreaker="dense").to_numpy()
+
+
+def _partition_topk(qx, qy, qids, k: int, level: int, schema):
+    """``mapInArrow`` body over (corpus id, WKB) batches: per partition,
+    each query's exact top-k rows ``(query_id, corpus_id, _dist, null)``,
+    then one sentinel row ``(null, null, null, max bounds extent)``.
+
+    Arrow keeps the ids as Spark sent them (a nullable long id never
+    round-trips through float64) and ranks them in Spark's order."""
+    def run(batches):
+        import pyarrow as pa
+        keep_q = np.empty(0, np.int64)
+        keep_d = np.empty(0, np.float64)
+        keep_id = pa.array([], schema.field(1).type)
+        ext = 0.0
+        for b in batches:
+            bounds = W.parse_wkb(b.column(1).to_pylist()).bounds()
+            ok = np.flatnonzero(~np.isnan(bounds[:, 0]))
+            if not len(ok):
+                continue
+            bb = bounds[ok]
+            ext = max(ext, float(np.max(bb[:, 2] - bb[:, 0]
+                                        + bb[:, 3] - bb[:, 1])))
+            ids = b.column(0).take(ok).cast(keep_id.type)
+            q, p, d = batch_topk(qx, qy, bb[:, 0], bb[:, 1], _tie_keys(ids),
+                                 k, level, _kth(keep_q, keep_d, len(qx), k))
+            q = np.r_[keep_q, q]
+            d = np.r_[keep_d, d]
+            ids = pa.concat_arrays([keep_id, ids.take(p)])
+            sel = _topk_rows(q, d, _tie_keys(ids), k)
+            keep_q, keep_d, keep_id = q[sel], d[sel], ids.take(sel)
+        n = len(keep_q)
+        yield pa.RecordBatch.from_arrays(
+            [qids.take(keep_q), keep_id, pa.array(keep_d, pa.float64()),
+             pa.nulls(n, pa.float64())], schema=schema)
+        yield pa.RecordBatch.from_arrays(
+            [pa.nulls(1, f.type) for f in schema][:3]
+            + [pa.array([ext], pa.float64())], schema=schema)
+    return run
+
+
+# ---------------------------------------------------------------------------
+# knn_join
+# ---------------------------------------------------------------------------
+
+def _non_point(side: str, ext: float) -> ValueError:
+    if side == "queries":
+        return ValueError(
+            "knn_join queries contain non-point geometries "
+            f"(max bounds extent {ext:.3g}): see the corpus message — "
+            "same contract")
+    return ValueError(
+        "knn_join corpus contains non-point geometries "
+        f"(max bounds extent {ext:.3g}): kNN ranks point-to-point "
+        "distance only — pointify/centroid the corpus first, or pass "
+        "require_points=False to accept min-corner distance semantics")
+
+
+def _num_partitions(df: DataFrame) -> int:
+    """Partition count of ``df``'s planned RDD, without running a job.
+    A plan with an exchange runs adaptively, and planning its RDD would
+    run its shuffle stages, so it reports its planned output
+    partitioning instead (the shuffle-partition setting if unknown)."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        n = plan.inputPlan().outputPartitioning().numPartitions()
+        return n if n > 0 else int(
+            df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return plan.execute().getNumPartitions()
+
+
+def _top_k(df: DataFrame, query_id: str, corpus_id: str,
+           k: int) -> DataFrame:
+    """Each query's first k rows by (``_dist``, corpus id), numbered in
+    ``rank``."""
+    w = Window.partitionBy(query_id).orderBy("_dist", corpus_id)
+    return df.withColumn("rank", F.row_number().over(w)) \
+             .filter(F.col("rank") <= k)
+
+
 def knn_join(queries: DataFrame, corpus: DataFrame, *, k: int,
              level: int = 9,
              query_id: str = "query_id", corpus_id: str = "doc_id",
              query_geom: str = "geometry", corpus_geom: str = "geometry",
              max_rounds: int = 12,
              broadcast_queries: bool | str = "auto",
-             broadcast_threshold: int = BROADCAST_PROBE_ROWS,
              require_points: bool = True,
              how: str = "point") -> DataFrame:
     """(query_id, doc_id, dist, rank<=k) for point queries over a point
-    corpus. Exact (certified by the ring bound), deterministic ties.
+    corpus. Exact, deterministic ties (by corpus id).
 
-    **Input contract (round 5)**: both sides must be POINTS — the ring
-    bound certifies point-to-point distance only; a box/polygon input
-    would silently rank by its bounds' min-corner distance.
+    **Route** (see the module docstring): point mode takes the
+    broadcast route when ``broadcast_queries`` is True, or when it is
+    ``'auto'`` (default) and
+    :func:`~cdap_geo_spark.functions.relational.broadcastable` says
+    the query set, fanned out ``k x`` the corpus partition count (the
+    merge receives at most k rows per query from each partition), fits
+    the broadcast threshold — decided from the optimizer's estimate,
+    with no Spark job for file-backed queries. Otherwise (box mode,
+    ``broadcast_queries=False``, a large query set, or broadcast joins
+    switched off with ``spark.sql.autoBroadcastJoinThreshold < 0``) it
+    runs the certified ring loop. ``max_rounds`` bounds the ring loop
+    only. Both routes return the same rows.
+
+    In the ring loop, ``'auto'`` decides PER ROUND: the probe relation
+    is pending queries x annulus cells, whose exact row count is known
+    (pending is counted each round anyway, the annulus size is
+    arithmetic), so the probe is broadcast only while that product
+    stays under ``BROADCAST_PROBE_ROWS`` and broadcast joins are on —
+    a large query set at wide expansion falls back to a plain shuffle
+    equi-join on cell_id instead of overflowing the broadcast. True
+    broadcasts every round, False never.
+
+    **Input contract (round 5)**: both sides must be POINTS — the
+    ranking is point-to-point distance only; a box/polygon input would
+    silently rank by its bounds' min-corner distance.
     ``require_points=True`` (default) therefore validates both
-    relations (one extra ``max`` over aggregates the plan already
-    runs / a persisted relation) and raises on any non-degenerate
-    extent. ``require_points=False`` opts into the documented
-    corner-distance semantics for callers who meant it (e.g. tiny
-    boxes from a lossy decode).
+    relations and raises ``ValueError`` at call time on any
+    non-degenerate extent (the queries are checked first).
+    ``require_points=False`` opts into the documented corner-distance
+    semantics for callers who meant it (e.g. tiny boxes from a lossy
+    decode). Rows with a null or empty geometry take no part, on
+    either side.
 
     **``how='box'`` (round 5d)**: exact kNN under BOUNDING-BOX distance
     (box-to-box min Euclidean distance; exact for axis-aligned box
     geometries, a bbox approximation for general polygons — the
     honest upgrade over the validated-out corner-distance trap).
-    Differences from point mode, each load-bearing for soundness:
+    Always the ring loop. Differences from point mode, each
+    load-bearing for soundness:
 
     - the corpus indexes into its full cell COVER (explode — a box
       appears under every cell it touches), so a near box can never
@@ -117,19 +397,15 @@ def knn_join(queries: DataFrame, corpus: DataFrame, *, k: int,
       >= hi*cellsize, and the strict compare removes the
       boundary-equality tie (a box ending exactly on a cell edge)
       that the point mode tolerates as measure-zero;
-    - the per-round broadcast decision uses a bounded count of the
-      actual probe relation (ring size varies per query box, so the
+    - the per-round broadcast decision uses the exact probe row count
+      of the next annulus (ring size varies per query box, so the
       closed-form annulus arithmetic no longer applies).
 
     ``require_points`` is ignored in box mode.
 
-    ``broadcast_queries='auto'`` (default) decides PER ROUND: the
-    probe relation is pending queries x annulus cells, whose exact
-    row count is known (pending is counted each round anyway, the
-    annulus size is arithmetic), so the probe is broadcast only while
-    that product stays under ``broadcast_threshold`` — a large query
-    set at wide expansion falls back to a plain shuffle equi-join on
-    cell_id instead of overflowing the broadcast.
+    Spark jobs are named after the step that runs them (``knn.plan``,
+    ``knn.queries``, ``knn.local_topk``, ``knn.merge``;
+    ``knn.stats`` and ``knn.round[r]`` in the ring loop).
 
     **Lifetime contract**: the returned DataFrame is backed by a
     tracked ``localCheckpoint`` (no recomputable lineage). When run
@@ -139,8 +415,87 @@ def knn_join(queries: DataFrame, corpus: DataFrame, *, k: int,
     """
     if how not in ("point", "box"):
         raise ValueError(f"knn_join how must be 'point' or 'box': {how!r}")
-    box = how == "box"
+    spark = queries.sparkSession
+    args = dict(k=k, level=level, query_id=query_id, corpus_id=corpus_id,
+                query_geom=query_geom, corpus_geom=corpus_geom)
+    if how == "point":
+        if broadcast_queries == "auto":
+            with job_label(spark, "knn.plan"):
+                fast = broadcastable(
+                    queries, fanout=k * max(1, _num_partitions(corpus)))
+        else:
+            fast = bool(broadcast_queries)
+        if fast:
+            return _knn_broadcast(queries, corpus,
+                                  require_points=require_points, **args)
+    return _knn_rings(queries, corpus, max_rounds=max_rounds,
+                      broadcast_queries=broadcast_queries,
+                      require_points=require_points, box=how == "box",
+                      **args)
+
+
+def _knn_broadcast(queries: DataFrame, corpus: DataFrame, *, k, level,
+                   query_id, corpus_id, query_geom, corpus_geom,
+                   require_points) -> DataFrame:
+    """The broadcast route: collect the queries, one corpus pass of
+    exact per-partition top-k, one merge shuffle."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    spark = queries.sparkSession
+    with job_label(spark, "knn.queries"):
+        rows = queries.select(query_id, query_geom).collect()
+    # decoded here: a broadcastable query set is small, and a Python
+    # UDF job would cost more than the decode
+    bounds = W.parse_wkb([None if r[1] is None else bytes(r[1])
+                          for r in rows]).bounds()
+    ok = np.flatnonzero(~np.isnan(bounds[:, 0]))
+    bounds = bounds[ok]
+    if require_points and len(ok):
+        ext = float(np.max(bounds[:, 2] - bounds[:, 0]
+                           + bounds[:, 3] - bounds[:, 1]))
+        if ext > 0:
+            raise _non_point("queries", ext)
+    schema = T.StructType([
+        T.StructField(query_id, queries.schema[query_id].dataType),
+        T.StructField(corpus_id, corpus.schema[corpus_id].dataType),
+        T.StructField("_dist", T.DoubleType()),
+        T.StructField("_ext", T.DoubleType()),
+    ])
+    arrow_schema = to_arrow_schema(schema)
+    topk = _partition_topk(
+        bounds[:, 0], bounds[:, 1],
+        pa.array([rows[i][0] for i in ok], arrow_schema.field(0).type),
+        k, level, arrow_schema)
+    with job_label(spark, "knn.local_topk"):
+        # lazy: the sentinel read below is its first action
+        local = track_checkpoint(
+            corpus.select(corpus_id, corpus_geom).mapInArrow(topk, schema)
+                  .localCheckpoint(eager=False))
+        if require_points:
+            ext = max((r[0] for r in local.where(F.col("_ext").isNotNull())
+                       .select("_ext").collect()), default=0.0)
+            if ext > 0:
+                raise _non_point("corpus", ext)
+    with job_label(spark, "knn.merge"):
+        # adaptive execution runs the merge's shuffle while planning
+        # the checkpoint; the caller's first action runs its last stage
+        out = _top_k(local.where(F.col("_ext").isNull()), query_id,
+                     corpus_id, k) \
+            .select(query_id, corpus_id, F.col("_dist").alias("dist"),
+                    "rank") \
+            .localCheckpoint(eager=False)
+    return track_checkpoint(out)
+
+
+def _knn_rings(queries: DataFrame, corpus: DataFrame, *, k, level,
+               query_id, corpus_id, query_geom, corpus_geom, max_rounds,
+               broadcast_queries, require_points, box) -> DataFrame:
+    """The ring route: certified cell-ring expansion, one round per
+    Spark join (module docstring)."""
+    spark = queries.sparkSession
     cs = C.cell_size(level)
+    may_broadcast = broadcast_enabled(spark)
 
     qb = udfs.st_bounds()(F.col(query_geom))
     cb = udfs.st_bounds()(F.col(corpus_geom))
@@ -169,55 +524,41 @@ def knn_join(queries: DataFrame, corpus: DataFrame, *, k: int,
             F.col(corpus_id),
             cb["minx"].alias("_cx"), cb["miny"].alias("_cy"),
             (cb["maxx"] - cb["minx"] + cb["maxy"] - cb["miny"]).alias("_cext"),
-            udfs.st_cell_point(level)(F.col(corpus_geom)).alias("cell_id"),
-        ).where(F.col("cell_id").isNotNull())
+        ).where(F.col("_cx").isNotNull()) \
+         .withColumn("cell_id", udfs.st_grid_cell(level)(F.col("_cx"),
+                                                         F.col("_cy")))
         c_cols = ["_cx", "_cy"]
     corp = corp.persist()
     try:
         pending = q.persist()
-        if broadcast_queries == "auto":
-            # bounded probe (reads <= cap+1 rows, never a full scan);
-            # n_pending is refreshed exactly by each round's count()
-            cap = broadcast_threshold
-            n = pending.limit(cap + 1).count()
-            n_pending = n if n <= cap else None  # None = too big
-        else:
-            n_pending = None
-        # density-seed the first annulus (one agg over the persisted
-        # index — it materializes the persist round 1 pays anyway)
-        if box:
-            # exploded cover: distinct boxes for the density estimate
-            # (approx — the seed is a heuristic, the bound is exact)
-            cstat = corp.agg(
-                F.approx_count_distinct(corpus_id).alias("n"),
-                F.min("_cminx").alias("x0"), F.max("_cmaxx").alias("x1"),
-                F.min("_cminy").alias("y0"), F.max("_cmaxy").alias("y1")
-            ).first()
-        else:
-            cstat = corp.agg(
-                F.count("*").alias("n"),
-                F.min("_cx").alias("x0"), F.max("_cx").alias("x1"),
-                F.min("_cy").alias("y0"), F.max("_cy").alias("y1"),
-                F.max("_cext").alias("ext")).first()
-        if require_points and not box:
-            if cstat and cstat["ext"] is not None and cstat["ext"] > 0:
-                raise ValueError(
-                    "knn_join corpus contains non-point geometries "
-                    f"(max bounds extent {cstat['ext']:.3g}): the ring "
-                    "bound certifies point-to-point distance only — "
-                    "pointify/centroid the corpus first, or pass "
-                    "require_points=False to accept min-corner "
-                    "distance semantics")
-            qext = pending.agg(F.max("_qext").alias("ext")).first()
-            if qext and qext["ext"] is not None and qext["ext"] > 0:
-                raise ValueError(
-                    "knn_join queries contain non-point geometries "
-                    f"(max bounds extent {qext['ext']:.3g}): see the "
-                    "corpus message — same contract")
+        n_pending = None   # unknown until round 1's count: no broadcast
+        with job_label(spark, "knn.stats"):
+            if require_points and not box:
+                qext = pending.agg(F.max("_qext").alias("ext")).first()
+                if qext and qext["ext"] is not None and qext["ext"] > 0:
+                    raise _non_point("queries", qext["ext"])
+            # density-seed the first annulus (one agg over the persisted
+            # index — it materializes the persist round 1 pays anyway)
+            if box:
+                # exploded cover: distinct boxes for the density estimate
+                # (approx — the seed is a heuristic, the bound is exact)
+                cstat = corp.agg(
+                    F.approx_count_distinct(corpus_id).alias("n"),
+                    F.min("_cminx").alias("x0"), F.max("_cmaxx").alias("x1"),
+                    F.min("_cminy").alias("y0"), F.max("_cmaxy").alias("y1")
+                ).first()
+            else:
+                cstat = corp.agg(
+                    F.count("*").alias("n"),
+                    F.min("_cx").alias("x0"), F.max("_cx").alias("x1"),
+                    F.min("_cy").alias("y0"), F.max("_cy").alias("y1"),
+                    F.max("_cext").alias("ext")).first()
+            if require_points and not box:
+                if cstat and cstat["ext"] is not None and cstat["ext"] > 0:
+                    raise _non_point("corpus", cstat["ext"])
         if not cstat or not cstat["n"]:
             # empty corpus: no neighbour exists — return the empty
             # result instead of spinning max_rounds of empty joins
-            from pyspark.sql import types as T
             pending.unpersist()
             schema = T.StructType([
                 q.schema[query_id],
@@ -225,7 +566,7 @@ def knn_join(queries: DataFrame, corpus: DataFrame, *, k: int,
                 T.StructField("dist", T.DoubleType()),
                 T.StructField("rank", T.IntegerType(), nullable=False),
             ])
-            return queries.sparkSession.createDataFrame([], schema)
+            return spark.createDataFrame([], schema)
         area = max((cstat["x1"] - cstat["x0"]) * (cstat["y1"] - cstat["y0"]),
                    cs * cs)
         hi0 = _seed_radius(cstat["n"], area, k, cs)
@@ -262,89 +603,88 @@ def knn_join(queries: DataFrame, corpus: DataFrame, *, k: int,
 
         probe_rows_next = None
         if box and broadcast_queries == "auto":
-            row = pending.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(rect_ring_cells(lo, hi)).alias("pr")).first()
+            with job_label(spark, "knn.stats"):
+                row = pending.agg(
+                    F.sum(rect_ring_cells(lo, hi)).alias("pr")).first()
             probe_rows_next = row["pr"] or 0
         while rounds < max_rounds:
-            if box:
-                ring = udfs.st_ring_cells_rect(level)(
-                    F.col("_qminx"), F.col("_qminy"),
-                    F.col("_qmaxx"), F.col("_qmaxy"),
-                    F.lit(lo), F.lit(hi))
-            else:
-                ring = udfs.st_ring_cells(level)(
-                    F.col("_qx"), F.col("_qy"), F.lit(lo), F.lit(hi))
-            probes = pending.select(
-                query_id, *q_cols, F.explode(ring).alias("cell_id"))
-            if broadcast_queries == "auto":
+            # adaptive execution runs a lazy checkpoint's shuffles
+            # while planning it, so the whole round sits in its label
+            with job_label(spark, f"knn.round[{rounds}]"):
                 if box:
-                    bc = (probe_rows_next is not None
-                          and probe_rows_next <= broadcast_threshold)
+                    ring = udfs.st_ring_cells_rect(level)(
+                        F.col("_qminx"), F.col("_qminy"),
+                        F.col("_qmaxx"), F.col("_qmaxy"),
+                        F.lit(lo), F.lit(hi))
                 else:
-                    bc = (n_pending is not None and
-                          n_pending * _annulus_cells(lo, hi)
-                          <= broadcast_threshold)
-            else:
-                bc = bool(broadcast_queries)
-            if bc:
-                probes = F.broadcast(probes)
-            found = probes.join(corp, "cell_id") \
-                .select(query_id, *q_cols, corpus_id, *c_cols) \
-                .withColumn("_dist", dist)
-            merged = found if acc is None else acc.unionByName(found)
-            if box:
-                # a box arrives once per touched cover cell (within a
-                # round and across annuli); duplicate pairs would
-                # double-count in the top-k window. Rows of one pair
-                # are identical, so dropDuplicates is exact.
-                merged = merged.dropDuplicates([query_id, corpus_id])
-            # keep only each query's current top-k — bounds the
-            # accumulator to k rows per query between rounds.
-            # localCheckpoint truncates the lineage: acc feeds pending
-            # feeds next round's acc, so without truncation the logical
-            # plan doubles per round (classic iterative-algorithm trap).
-            w = Window.partitionBy(query_id).orderBy("_dist", corpus_id)
-            # lazy checkpoint: the stats agg below is this round's
-            # first action on acc and materializes it — eager=True
-            # would spend a whole extra job per round on the same work
-            new_acc = merged.withColumn("_rn", F.row_number().over(w)) \
-                            .filter(F.col("_rn") <= k).drop("_rn") \
-                            .localCheckpoint(eager=False)
-            # the OLD acc's blocks feed new_acc's lineage (checkpoint
-            # truncation makes them unrecomputable) — release it only
-            # AFTER the count below materializes new_acc
-            prev_acc, acc = acc, new_acc
-            # done: k candidates AND certified (d_k <= hi*cs: every
-            # unexplored cell is at Chebyshev ring >= hi+1, so no
-            # unseen point can be closer than hi*cellsize)
-            stats = acc.groupBy(query_id).agg(
-                F.count("*").alias("_n"), F.max("_dist").alias("_dk"))
-            # box mode certifies STRICTLY (see docstring): unseen
-            # boxes are >= hi*cs away, and < removes the
-            # boundary-equality tie the point mode tolerates
-            if box:
-                certified = F.col("_dk") < F.lit(float(hi) * cs)
-            else:
-                certified = F.col("_dk") <= F.lit(float(hi) * cs)
-            done_q = stats.filter((F.col("_n") >= k) & certified)
-            pending_next = pending.join(done_q.select(query_id),
-                                        query_id, "left_anti") \
-                                  .localCheckpoint(eager=False)
-            # the round's first action materializes BOTH lazy
-            # checkpoints (acc feeds done_q feeds this join), so the
-            # next round starts from stored blocks. Box mode folds the
-            # NEXT annulus's exact probe-row count into the same
-            # aggregate (replacing the former per-round limit+count
-            # probe job on the exploded ring relation).
-            if box and broadcast_queries == "auto":
-                row = pending_next.agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum(rect_ring_cells(hi + 1, hi * 2 + 2))
-                    .alias("pr")).first()
-                n_pending, probe_rows_next = row["n"], row["pr"] or 0
-            else:
-                n_pending = pending_next.count()
+                    ring = udfs.st_ring_cells(level)(
+                        F.col("_qx"), F.col("_qy"), F.lit(lo), F.lit(hi))
+                probes = pending.select(
+                    query_id, *q_cols, F.explode(ring).alias("cell_id"))
+                if broadcast_queries == "auto":
+                    probe_rows = (probe_rows_next if box else
+                                  None if n_pending is None else
+                                  n_pending * _annulus_cells(lo, hi))
+                    bc = (may_broadcast and probe_rows is not None
+                          and probe_rows <= BROADCAST_PROBE_ROWS)
+                else:
+                    bc = bool(broadcast_queries)
+                if bc:
+                    probes = F.broadcast(probes)
+                found = probes.join(corp, "cell_id") \
+                    .select(query_id, *q_cols, corpus_id, *c_cols) \
+                    .withColumn("_dist", dist)
+                merged = found if acc is None else acc.unionByName(found)
+                if box:
+                    # a box arrives once per touched cover cell (within a
+                    # round and across annuli); duplicate pairs would
+                    # double-count in the top-k window. Rows of one pair
+                    # are identical, so dropDuplicates is exact.
+                    merged = merged.dropDuplicates([query_id, corpus_id])
+                # keep only each query's current top-k — bounds the
+                # accumulator to k rows per query between rounds.
+                # localCheckpoint truncates the lineage: acc feeds pending
+                # feeds next round's acc, so without truncation the logical
+                # plan doubles per round (classic iterative-algorithm trap).
+                # lazy checkpoint: the stats agg below is this round's
+                # first action on acc and materializes it — eager=True
+                # would spend a whole extra job per round on the same work
+                new_acc = _top_k(merged, query_id, corpus_id, k).drop("rank") \
+                    .localCheckpoint(eager=False)
+                # the OLD acc's blocks feed new_acc's lineage (checkpoint
+                # truncation makes them unrecomputable) — release it only
+                # AFTER the count below materializes new_acc
+                prev_acc, acc = acc, new_acc
+                # done: k candidates AND certified (d_k <= hi*cs: every
+                # unexplored cell is at Chebyshev ring >= hi+1, so no
+                # unseen point can be closer than hi*cellsize)
+                stats = acc.groupBy(query_id).agg(
+                    F.count("*").alias("_n"), F.max("_dist").alias("_dk"))
+                # box mode certifies STRICTLY (see docstring): unseen
+                # boxes are >= hi*cs away, and < removes the
+                # boundary-equality tie the point mode tolerates
+                if box:
+                    certified = F.col("_dk") < F.lit(float(hi) * cs)
+                else:
+                    certified = F.col("_dk") <= F.lit(float(hi) * cs)
+                done_q = stats.filter((F.col("_n") >= k) & certified)
+                pending_next = pending.join(done_q.select(query_id),
+                                            query_id, "left_anti") \
+                                      .localCheckpoint(eager=False)
+                # the round's first action materializes BOTH lazy
+                # checkpoints (acc feeds done_q feeds this join), so the
+                # next round starts from stored blocks. Box mode folds the
+                # NEXT annulus's exact probe-row count into the same
+                # aggregate (replacing the former per-round limit+count
+                # probe job on the exploded ring relation).
+                if box and broadcast_queries == "auto":
+                    row = pending_next.agg(
+                        F.count(F.lit(1)).alias("n"),
+                        F.sum(rect_ring_cells(hi + 1, hi * 2 + 2))
+                        .alias("pr")).first()
+                    n_pending, probe_rows_next = row["n"], row["pr"] or 0
+                else:
+                    n_pending = pending_next.count()
             if prev_acc is not None:
                 unpersist_checkpoint(prev_acc)
             unpersist_checkpoint(pending)
@@ -355,12 +695,8 @@ def knn_join(queries: DataFrame, corpus: DataFrame, *, k: int,
             rounds += 1
         unpersist_checkpoint(pending)  # loop-only; materialized by its count
         track_checkpoint(acc)        # feeds the result; scoped release
-        w = Window.partitionBy(query_id).orderBy("_dist", corpus_id)
-        out = acc.withColumn("rank", F.row_number().over(w)) \
-                 .filter(F.col("rank") <= k) \
-                 .select(query_id, corpus_id, F.col("_dist").alias("dist"),
-                         "rank")
-        return out
+        return _top_k(acc, query_id, corpus_id, k) \
+            .select(query_id, corpus_id, F.col("_dist").alias("dist"), "rank")
     finally:
         corp.unpersist()
 

@@ -11,8 +11,10 @@ sizing. On a real cluster the same conf ships via
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+from pyspark.traceback_utils import SCCallSiteSync
 
 ENGINE_CONF = {
     # AQE: runtime re-plan — broadcast conversion, coalesce, skew split
@@ -127,3 +129,25 @@ def get_spark(app: str = "cdap_geo_spark", cores: int | None = None,
                             base_dir="cdap_geo_spark")
         spark.sparkContext.addPyFile(zip_base + ".zip")
     return spark
+
+
+@contextmanager
+def job_label(spark: SparkSession, label: str):
+    """Name every Spark job started inside the block ``label``.
+
+    Sets the jobs' short call site (the name the Spark UI and status
+    API list them under; the job description stays the caller's) and
+    restores the previous one on exit. PySpark's own actions
+    (``collect``, ``first``, ``toPandas``) overwrite the call site
+    only when no other ``SCCallSiteSync`` is open, so the block holds
+    one level of that nesting count while it runs.
+    """
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("callSite.short")
+    sc.setLocalProperty("callSite.short", label)
+    SCCallSiteSync._spark_stack_depth += 1
+    try:
+        yield
+    finally:
+        SCCallSiteSync._spark_stack_depth -= 1
+        sc.setLocalProperty("callSite.short", prev)

@@ -258,17 +258,29 @@ def st_point_distance():
 # kNN support
 # ---------------------------------------------------------------------------
 
+def st_grid_cell(level: int):
+    """(x, y) -> int64 id of the cell holding the point, clamped into
+    the world grid (:func:`cells.point_grid`) — the kNN corpus key,
+    on the same grid as :func:`st_ring_cells`. Inputs must be
+    non-null."""
+    @pandas_udf(T.LongType())
+    def _cell(x: pd.Series, y: pd.Series) -> pd.Series:
+        xi, yi = C.point_grid(x.to_numpy(np.float64),
+                              y.to_numpy(np.float64), level)
+        return pd.Series(C.encode(level, xi, yi))
+    return _cell
+
+
 def st_ring_cells(level: int):
     """(x, y, lo:int, hi:int) -> array<long> cells whose Chebyshev
-    distance from the point's cell lies in [lo, hi] — the annulus
-    probe for geometric cell-ring expansion in kNN (lo=hi=0 is the
-    point's own cell)."""
+    distance from the point's (clamped) cell lies in [lo, hi] — the
+    annulus probe for geometric cell-ring expansion in kNN (lo=hi=0
+    is the point's own cell)."""
     @pandas_udf(T.ArrayType(T.LongType()))
     def _ring(x: pd.Series, y: pd.Series, lo: pd.Series, hi: pd.Series) -> pd.Series:
-        cs = C.cell_size(level)
         n = 1 << level
-        xi = np.floor((x.to_numpy(np.float64) - C.WORLD_X0) / cs).astype(np.int64)
-        yi = np.floor((y.to_numpy(np.float64) - C.WORLD_Y0) / cs).astype(np.int64)
+        xi, yi = C.point_grid(x.to_numpy(np.float64),
+                              y.to_numpy(np.float64), level)
         los = lo.to_numpy(np.int64)
         his = hi.to_numpy(np.int64)
         out = []

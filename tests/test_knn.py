@@ -2,13 +2,31 @@
 (FIXTURES.md §5 oracle: brute-force distance sort in pandas).
 """
 
+import math
+import struct
+
 import numpy as np
+import pytest
 
 from cdap_geo_spark import fixtures
 from cdap_geo_spark.operators.knn import knn_join
 
 
+def _rows(df) -> list:
+    """(query_id, rank, doc_id, dist) rows, sorted."""
+    return sorted((r.query_id, r["rank"], r.doc_id, r.dist)
+                  for r in df.collect())
+
+
 def test_knn_matches_bruteforce(spark):
+    _check_matches_bruteforce(spark)
+
+
+def test_knn_matches_bruteforce_ring_loop(spark, no_broadcast):
+    _check_matches_bruteforce(spark)
+
+
+def _check_matches_bruteforce(spark):
     corpus = fixtures.documents(spark, 400, partitions=4)
     from cdap_geo_spark import docs as D
     corpus = D.with_geometry(corpus).select("doc_id", "geometry").cache()
@@ -38,6 +56,14 @@ def test_knn_matches_bruteforce(spark):
 
 
 def test_knn_k1_and_sparse_region(spark):
+    _check_k1_and_sparse_region(spark)
+
+
+def test_knn_k1_and_sparse_region_ring_loop(spark, no_broadcast):
+    _check_k1_and_sparse_region(spark)
+
+
+def _check_k1_and_sparse_region(spark):
     # queries in empty areas force multi-ring expansion
     from pyspark.sql import functions as F
     from cdap_geo_spark import udfs
@@ -55,22 +81,21 @@ def test_knn_k1_and_sparse_region(spark):
     assert list(got.sort_values("rank").doc_id) == ["c3", "c2"]
 
 
-def test_knn_non_broadcast_path_matches(spark):
-    # force the shuffle-join probe path with a tiny threshold: results
-    # must equal the broadcast path (and the auto planner must pick
-    # non-broadcast without erroring)
+def test_knn_non_broadcast_path_matches(spark, no_broadcast, monkeypatch):
+    # broadcast joins off: 'auto' must take the ring loop through
+    # shuffle joins, and return the broadcast route's rows exactly
+    from cdap_geo_spark.operators import knn as K
     corpus = fixtures.documents(spark, 300, partitions=4)
     from cdap_geo_spark import docs as D
     corpus = D.with_geometry(corpus).select("doc_id", "geometry").cache()
     queries = fixtures.knn_queries(spark, 8).cache()
-    bc = knn_join(queries, corpus, k=3, level=9, require_points=False,
-                  broadcast_queries=True).toPandas()
-    no = knn_join(queries, corpus, k=3, level=9, require_points=False,
-                  broadcast_queries="auto",
-                  broadcast_threshold=2).toPandas()
-    key = lambda p: sorted(map(tuple, p[["query_id", "doc_id", "rank"]]
-                               .itertuples(index=False)))
-    assert key(bc) == key(no)
+    bc = _rows(knn_join(queries, corpus, k=3, level=9, require_points=False,
+                        broadcast_queries=True))
+    monkeypatch.setattr(K, "_knn_broadcast", None)   # must not be taken
+    rings = knn_join(queries, corpus, k=3, level=9, require_points=False,
+                     broadcast_queries="auto")
+    assert bc == _rows(rings)
+    assert len(bc) == 8 * 3
 
 
 def test_annulus_cells_arithmetic():
@@ -136,6 +161,148 @@ def test_knn_rejects_non_point_corpus(spark):
     pts = fixtures.knn_queries(spark, 80).select(
         F.col("query_id").alias("doc_id"), "geometry")
     assert knn_join(queries, pts, k=2, level=9).count() == 6
+
+
+# --- differential tests: broadcast route vs ring loop vs brute force ---
+
+#: POINT EMPTY (NaN coordinates) and GEOMETRYCOLLECTION EMPTY
+POINT_EMPTY = b"\x01\x01\x00\x00\x00" + struct.pack("<dd", math.nan, math.nan)
+COLLECTION_EMPTY = b"\x01\x07\x00\x00\x00\x00\x00\x00\x00"
+
+
+def _points(spark, rows, id_type="string", parts=1):
+    """(id, geometry) frame from (id, x, y) rows, ``parts`` partitions
+    dealt round-robin; a row (id, wkb) keeps its raw WKB (or None)."""
+    from cdap_geo_spark.core import wkb as W
+    data = [(r[0], W.point_to_wkb(float(r[1]), float(r[2])))
+            if len(r) == 3 else r for r in rows]
+    rdd = spark.sparkContext.parallelize(data, parts)
+    return spark.createDataFrame(rdd, f"gid {id_type}, geometry binary")
+
+
+def _bruteforce(queries, corpus, k):
+    """Sorted (query_id, rank, doc_id, dist) rows of the exact kNN over
+    the (id, x, y) rows, ranked by (dist, doc_id)."""
+    out = []
+    for qid, qx, qy in (q for q in queries if len(q) == 3):
+        ranked = sorted((math.sqrt((qx - cx) * (qx - cx)
+                                   + (qy - cy) * (qy - cy)), cid)
+                        for cid, cx, cy in (c for c in corpus if len(c) == 3))
+        out += [(qid, i + 1, cid, d) for i, (d, cid) in
+                enumerate(ranked[:k])]
+    return sorted(out)
+
+
+def _routes(spark, queries, corpus, k, *, id_type="string", parts=4,
+            level=9):
+    """knn_join's rows on each route (forced), as ``_rows`` lists."""
+    q = _points(spark, queries, id_type).withColumnRenamed("gid", "query_id")
+    c = _points(spark, corpus, id_type, parts) \
+        .withColumnRenamed("gid", "doc_id")
+    return {route: _rows(knn_join(q, c, k=k, level=level,
+                                  broadcast_queries=flag))
+            for route, flag in (("broadcast", True), ("rings", False))}
+
+
+def _assert_routes_exact(spark, queries, corpus, k, **kw):
+    want = _bruteforce(queries, corpus, k)
+    got = _routes(spark, queries, corpus, k, **kw)
+    assert got["broadcast"] == want
+    assert got["rings"] == want
+
+
+def test_knn_distance_ties_across_partitions(spark):
+    # eight points at exactly 5 m from the query, one per partition,
+    # ids not in coordinate order: both routes must keep the smallest
+    # ids, the (dist, corpus_id) rule, from every partition's share
+    ring = [(3, 4), (4, 3), (-3, 4), (5, 0), (0, 5), (-5, 0), (0, -5),
+            (-4, -3)]
+    ids = ["c7", "c2", "c5", "c0", "c6", "c1", "c4", "c3"]
+    corpus = [(i, 1000.0 + x, 2000.0 + y) for i, (x, y) in zip(ids, ring)]
+    corpus += [("far", 9000.0, 9000.0)]
+    queries = [("q", 1000.0, 2000.0)]
+    _assert_routes_exact(spark, queries, corpus, 3, parts=len(corpus))
+    # long ids order numerically, not as strings
+    corpus = [(int(i[1:]) * 10, x, y) for i, x, y in corpus[:-1]]
+    _assert_routes_exact(spark, [(1, 1000.0, 2000.0)], corpus, 4,
+                         id_type="long", parts=8)
+
+
+def test_knn_duplicate_coordinates(spark):
+    rng = np.random.RandomState(23)
+    xy = rng.randint(0, 50_000, size=(40, 2)).astype(float)
+    corpus = [(f"c{i:02d}", *xy[i % 13]) for i in range(40)]
+    queries = [(f"q{j}", *xy[j]) for j in range(5)] \
+        + [("q_dup", *xy[0]), ("q_off", 25_000.5, 25_000.5)]
+    _assert_routes_exact(spark, queries, corpus, 6)
+
+
+def test_knn_negative_coordinates(spark):
+    rng = np.random.RandomState(29)
+    pts = rng.uniform(-300_000, 300_000, size=(120, 2)).round(1)
+    corpus = [(f"c{i:03d}", *pts[i]) for i in range(100)]
+    queries = [(f"q{i:03d}", *pts[i]) for i in range(100, 120)]
+    _assert_routes_exact(spark, queries, corpus, 5)
+
+
+def test_knn_points_outside_the_cell_world(spark):
+    # x below WORLD_X0 = -1,048,576: the cell index must clamp to the
+    # grid edge on both sides, or A (10 km away) is never probed and B
+    # (1,040 km away) is reported as the certified nearest neighbour
+    corpus = [("A", -1_050_000.0, 0.0), ("B", 0.0, 0.0)]
+    queries = [("q", -1_040_000.0, 0.0), ("q_out", -1_300_000.0, 300_000.0)]
+    want = _bruteforce(queries, corpus, 1)
+    assert [r[2] for r in want] == ["A", "A"]
+    _assert_routes_exact(spark, queries, corpus, 1)
+
+
+def test_knn_null_and_empty_geometries(spark):
+    corpus = [("c1", 10.0, 10.0), ("c2", None), ("c3", POINT_EMPTY),
+              ("c4", COLLECTION_EMPTY), ("c5", 500.0, 40.0),
+              ("c6", -70.0, 3.0)]
+    queries = [("q1", 0.0, 0.0), ("q2", None), ("q3", POINT_EMPTY),
+               ("q4", 400.0, 0.0)]
+    _assert_routes_exact(spark, queries, corpus, 2)
+
+
+def test_knn_k_larger_than_corpus(spark):
+    corpus = [("c1", 0.0, 0.0), ("c2", 100.0, 0.0), ("c3", 0.0, 300.0)]
+    queries = [("q1", 1.0, 1.0), ("q2", -400_000.0, 700_000.0)]
+    _assert_routes_exact(spark, queries, corpus, 10)
+
+
+@pytest.mark.parametrize("flag", [True, False])
+def test_knn_empty_corpus_keeps_schema(spark, flag):
+    corpus = _points(spark, [], parts=2).withColumnRenamed("gid", "doc_id")
+    queries = _points(spark, [("q1", 5.0, 9.0)]) \
+        .withColumnRenamed("gid", "query_id")
+    got = knn_join(queries, corpus, k=3, broadcast_queries=flag)
+    assert got.collect() == []
+    assert [(f.name, f.dataType.simpleString()) for f in got.schema] == [
+        ("query_id", "string"), ("doc_id", "string"), ("dist", "double"),
+        ("rank", "int")]
+
+
+@pytest.mark.parametrize("flag", [True, False])
+def test_knn_require_points_raises_at_call_time(spark, flag):
+    from pyspark.sql import functions as F
+    from cdap_geo_spark import udfs
+    pts = fixtures.knn_queries(spark, 10)
+    boxes = fixtures.regions(spark, 10).select(
+        F.col("region_id").alias("query_id"), "geometry")
+    corpus = pts.withColumnRenamed("query_id", "doc_id")
+    # no action on the result: knn_join itself raises
+    with pytest.raises(ValueError, match="corpus contains non-point"):
+        knn_join(pts, boxes.withColumnRenamed("query_id", "doc_id"), k=2,
+                 broadcast_queries=flag)
+    with pytest.raises(ValueError, match="queries contain non-point"):
+        knn_join(boxes, corpus, k=2, broadcast_queries=flag)
+    # a degenerate box (zero extent) is a point
+    one = spark.createDataFrame(
+        [("b", 5.0, 5.0)], "query_id string, x double, y double"
+    ).select("query_id",
+             udfs.st_box()("x", "y", "x", "y").alias("geometry"))
+    assert knn_join(one, corpus, k=2, broadcast_queries=flag).count() == 2
 
 
 def _random_boxes(spark, n, seed, prefix, max_side=40000.0, min_side=10.0):

@@ -36,8 +36,8 @@ def test_sjoin_broadcast_plan(spark):
     assert n_exchanges <= 1, plan
 
 
-def _jobs_run(spark, fn):
-    """(fn(), number of Spark jobs fn ran)."""
+def _job_names(spark, fn):
+    """(fn(), the names of the Spark jobs fn ran, in start order)."""
     sc = spark.sparkContext
     group = f"jobs_run_{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
@@ -45,7 +45,16 @@ def _jobs_run(spark, fn):
         out = fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    ids = sorted(sc.statusTracker().getJobIdsForGroup(group))
+    return out, [store.job(i).name() for i in ids]
+
+
+def _jobs_run(spark, fn):
+    """(fn(), number of Spark jobs fn ran)."""
+    out, names = _job_names(spark, fn)
+    return out, len(names)
 
 
 def test_broadcastable_known_size_runs_no_job(spark, tmp_path):
@@ -92,6 +101,34 @@ def test_sjoin_auto_broadcast_plans_without_jobs(spark, tmp_path):
         broadcast="auto"))
     assert jobs == 0
     assert "BroadcastHashJoin" in _plan(pairs)
+
+
+def test_knn_auto_runs_constant_jobs(spark, tmp_path):
+    """knn_join on parquet-backed points takes the broadcast route with
+    no planning job and runs at most 5 Spark jobs through the caller's
+    collect() (the ring loop ran ~24), each named after its step; the
+    caller's own call-site name is restored after."""
+    from cdap_geo_spark.operators.knn import knn_join
+    qp, cp = str(tmp_path / "q"), str(tmp_path / "c")
+    fixtures.knn_queries(spark, 40).select("query_id", "geometry") \
+        .write.parquet(qp)
+    fixtures.knn_queries(spark, 3000).select(
+        F.col("query_id").alias("doc_id"), "geometry") \
+        .repartition(4).write.parquet(cp)
+    queries, corpus = spark.read.parquet(qp), spark.read.parquet(cp)
+    sc = spark.sparkContext
+    sc.setLocalProperty("callSite.short", "caller")
+    try:
+        res, names = _job_names(spark, lambda: knn_join(
+            queries, corpus, k=5, broadcast_queries="auto"))
+        assert sc.getLocalProperty("callSite.short") == "caller"
+    finally:
+        sc.setLocalProperty("callSite.short", None)
+    rows, more = _job_names(spark, res.collect)
+    assert len(rows) == 40 * 5
+    assert len(names) + len(more) <= 5, names + more
+    assert {"knn.queries", "knn.local_topk"} <= set(names)
+    assert set(names) <= {"knn.queries", "knn.local_topk", "knn.merge"}
 
 
 def test_sjoin_column_pruning(spark):
