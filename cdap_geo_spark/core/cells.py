@@ -347,6 +347,14 @@ def _refine_cover(batch: GeomBatch, offsets: np.ndarray, cells: np.ndarray,
     todo = multi & ~is_pt & batch.valid
 
     cminx, cminy, cmaxx, cmaxy = cell_box(cells)
+    # cover_bbox clamps whatever lies beyond the world frame into the
+    # edge cells, so an edge cell reaches out to infinity on that side
+    level, xi, yi = decode(cells)
+    top = (1 << level) - 1
+    cminx[xi == 0] = -np.inf
+    cminy[yi == 0] = -np.inf
+    cmaxx[xi == top] = np.inf
+    cmaxy[yi == top] = np.inf
 
     # ---- axis-aligned rectangles: pure arithmetic ----------------------
     is_rect = _is_axis_rect(batch, bounds) & todo

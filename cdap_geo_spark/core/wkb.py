@@ -447,6 +447,26 @@ def boxes_to_wkb(minx, miny, maxx, maxy) -> list:
     return [flat[i * 93:(i + 1) * 93] for i in range(n)]
 
 
+def boxes_batch(minx, miny, maxx, maxy) -> GeomBatch:
+    """Axis-aligned boxes straight to a :class:`GeomBatch` — the batch
+    ``parse_wkb(boxes_to_wkb(...))`` returns, without the bytes."""
+    n = len(minx)
+    ring = np.empty((n, 5, 2))
+    ring[:, [0, 3, 4], 0] = np.asarray(minx, np.float64)[:, None]
+    ring[:, [1, 2], 0] = np.asarray(maxx, np.float64)[:, None]
+    ring[:, [0, 1, 4], 1] = np.asarray(miny, np.float64)[:, None]
+    ring[:, [2, 3], 1] = np.asarray(maxy, np.float64)[:, None]
+    return GeomBatch(
+        kinds=np.full(n, KIND_POLYGON, np.uint8),
+        valid=np.ones(n, bool),
+        geom_part_off=np.arange(n + 1, dtype=np.int64),
+        part_kind=np.full(n, KIND_POLYGON, np.uint8),
+        part_ring_off=np.arange(n + 1, dtype=np.int64),
+        ring_coord_off=np.arange(n + 1, dtype=np.int64) * 5,
+        coords=ring.reshape(n * 5, 2),
+    )
+
+
 def polygon_to_wkb(rings) -> bytes:
     """One polygon from [exterior, hole, ...] coordinate arrays."""
     buf = bytearray()

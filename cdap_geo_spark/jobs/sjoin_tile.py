@@ -24,10 +24,13 @@ stage — parquet data + per-partition lineage/metrics JSON, committed
 manifest-last so a crash anywhere re-runs exactly the unfinished
 stages; identical params + inputs skip):
 
-1. ``pairs_tiled``  — decode primary geometry (native expressions over
-   the spans array, zero Python), hierarchical cell cover, cell
-   equi-join with exact intersects refinement, map-side tile cover of
-   matched docs, one narrow dedup -> (doc_id, region_id, tile_id).
+1. ``pairs_tiled``  — extract the primary geometry (native expressions
+   over the spans array, zero Python); read the regions once and index
+   their cells in the driver; one Python pass over the docs that
+   decodes, covers, probes the region cells and refines each doc once
+   (the cell equi-join when the regions are too large to collect);
+   map-side tile cover of the matched docs; one narrow dedup ->
+   (doc_id, region_id, tile_id).
 2. ``enriched``     — join the matches back to the source documents by
    doc_id so every output row carries the ORIGINAL spans payload
    (one AQE-planned equi-join; the wide spans column never rides

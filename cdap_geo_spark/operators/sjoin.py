@@ -1,24 +1,41 @@
-"""The spatial join planner — cell equi-join + exact refinement.
+"""The spatial join planner — cell index probe + exact refinement.
 
 Re-expresses the reference's ``bbox_join``/``bbox_intersects``
 (``cdap_geo/index_bbox.py:32-76``) and ``bng_join``
-(``cdap_geo/index_bng.py:16-36``) as ONE Spark-first pipeline:
+(``cdap_geo/index_bng.py:16-36``) as one Spark-first operator,
+:func:`sjoin_pairs`, with two routes to the same pairs.
+
+**Broadcast route** (the right side is small — regions, tiles):
+
+    collect (right_id, right_geom)   (1 JVM-only job, ``sjoin.regions``)
+      -> decode + cover + sort the cells, in the driver  (RegionIndex)
+    left: 1 mapInArrow pass per batch:
+      decode -> cover -> probe the sorted cells (np.searchsorted)
+      -> per-batch (left row, region) dedup -> bbox prefilter
+      -> exact refine against the regions decoded once
+    -> dropDuplicates([l_id, r_id])   (narrow, only with dedup=True)
+
+One Python boundary; each left geometry is decoded once, each region
+once per call. No join and no shuffle except the optional id-pair
+dedup.
+
+**Shuffle route** (the right side does not fit, or ``broadcast=False``):
 
     decode+bounds+cells   (1 fused Arrow PUDF per side)
       -> explode cells    (Generate)
-      -> equi-join on cell_id  (broadcast | shuffle-hash, optional salt)
-      -> dropDuplicates([l_id, r_id])   (narrow pre-payload dedup)
+      -> equi-join on cell_id  (shuffle-hash or sort-merge, optional salt)
       -> native bbox-overlap prefilter  (pure Catalyst, codegen'd)
       -> exact intersects refinement    (1 Arrow PUDF)
+      -> dropDuplicates([l_id, r_id])   (narrow id pairs)
 
 vs the reference's ~4 shuffles + 3 Python round-trips (SURVEY.md §3.1):
-this plan is 1-2 shuffles and 2 Arrow boundaries.
+this plan is 1-2 shuffles and 3 Arrow boundaries.
 
 Scale levers (all explicit parameters, chosen by the caller or the
 planner heuristics — no Catalyst extension needed):
 
-* ``broadcast=True`` pins a broadcast-hash join for a small right side
-  (regions/tiles); ``'auto'`` (default) pins it when
+* ``broadcast=True`` takes the broadcast route; ``'auto'`` (default)
+  takes it when
   :func:`~cdap_geo_spark.functions.relational.broadcastable` says the
   right side fits: its optimizer size estimate is within
   ``spark.sql.autoBroadcastJoinThreshold`` (zero jobs), with a bounded
@@ -27,12 +44,13 @@ planner heuristics — no Catalyst extension needed):
   keys: the left side gets a deterministic salt from its id, the right
   side is replicated k ways — result set is provably salt-invariant
   (property-tested). ``salt='auto'`` (default) runs a bounded
-  hot-cell census (:func:`_auto_salt`) on the non-broadcast path and
+  hot-cell census (:func:`_auto_salt`) on the shuffle route and
   picks ``ceil(hot_share * parallelism)`` itself — no hand tuning;
 * ``how='marked'`` on a polygon right side flags cells wholly inside
   the polygon (``cdap_geo/_indexing.py:290-304``): candidates produced
   by such cells skip the exact-refinement kernel when the left cover
-  is exact (cell box ⊆ polygon and left ∩ cell box ≠ ∅ ⟹ intersects).
+  is exact (cell box ⊆ polygon and left ∩ cell box ≠ ∅ ⟹ intersects),
+  on both routes.
 
 The reference's ``monotonically_increasing_id`` + cache pitfall
 (``cdap_geo/index_bbox.py:36-43``: ids stable only while cached) is
@@ -41,11 +59,13 @@ avoided: callers supply stable content keys (``doc_id``).
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from cdap_geo_spark import udfs
-from cdap_geo_spark.core import cells as C
+from cdap_geo_spark.core import cells as C, geom as G, wkb as W
 from cdap_geo_spark.functions.relational import broadcastable
+from cdap_geo_spark.session import job_label
 
 DEFAULT_LEVEL = C.LEVEL_100KM  # ~131 km cells ≈ the reference's 100 km grid
 
@@ -88,7 +108,6 @@ def _census_sample(l_indexed: DataFrame,
     a partition boundary (so some partition STARTS inside it), and
     cells below that share don't need salting in the first place.
     """
-    import numpy as np
     import pandas as pd
 
     # quota sized by defaultParallelism, not the exact partition count:
@@ -164,10 +183,7 @@ def _index_side(df: DataFrame, id_col: str, geom_col: str, level: int,
     shuffle — the reference's drop-columns-then-fetch-back advice
     (README.md:64-67) built into the plan.
     """
-    import numpy as np
     import pandas as pd
-
-    from cdap_geo_spark.core import cells as C, wkb as W
 
     src = df.select(F.col(id_col), F.col(geom_col))
     id_field = src.schema[id_col]
@@ -220,7 +236,7 @@ def sjoin_pairs(left: DataFrame, right: DataFrame, *,
                 distance: float | None = None,
                 keep_distance: bool = False,
                 keep_left_geom: bool = False) -> DataFrame:
-    """Candidate-generate + refine; returns distinct (left_id, right_id).
+    """Candidate-generate + refine; returns (left_id, right_id) pairs.
 
     predicate: 'intersects' (exact, ``bbox_intersects`` semantics,
     ``cdap_geo/index_bbox.py:73-76``), 'bbox' (bbox-overlap only —
@@ -228,14 +244,33 @@ def sjoin_pairs(left: DataFrame, right: DataFrame, *,
     within ``distance`` metres — ``st_join(distance=d)`` semantics,
     ``cdap_geo/sedona.py:136-147`` — via cell-dilated covers + exact
     distance refinement, never a nested-loop join).
+
+    Output columns: ``left_id``, ``right_id``, then ``geometry`` (the
+    left geometry; intersects with ``keep_left_geom``) or ``dist``
+    (distance with ``keep_distance``). Both routes (module docstring)
+    return this schema and, with ``dedup=True``, the same rows.
+
+    ``broadcast``: True takes the broadcast route, False the shuffle
+    route; 'auto' takes the broadcast route when
+    :func:`~cdap_geo_spark.functions.relational.broadcastable` says
+    the right side fits. The broadcast route reads the right side
+    once, here, in one Spark job (``sjoin.regions``); later changes
+    to the right side's source are not seen by the returned frame.
+
+    ``dedup=False`` skips the id-pair shuffle and leaves repeats in:
+    the broadcast route emits a pair at most once per left ROW (a
+    repeated left id repeats it), the shuffle route once per cell the
+    two covers share. Compare the two as sets.
     """
     dilate_l = 0.0
+    if predicate not in ("intersects", "bbox", "distance"):
+        raise ValueError(f"unknown predicate {predicate!r}")
     if predicate == "distance":
         if distance is None:
             raise ValueError("distance predicate needs distance=")
         # dilate the LEFT cover by the distance: everything within d of
         # the left geometry lies inside its dilated cover, so the cell
-        # equi-join loses no candidates.
+        # probe loses no candidates.
         dilate_l = float(distance)
 
     lh = left_how or ("intersects" if predicate != "distance" else "bbox")
@@ -243,14 +278,17 @@ def sjoin_pairs(left: DataFrame, right: DataFrame, *,
     # exact-cover fast path is only sound when the left cover is exact
     fast_path_ok = (predicate == "intersects" and lh == "intersects")
 
+    spark = left.sparkSession
     if broadcast == "auto":
-        # Planner: pin a broadcast-hash join for a small right side
-        # instead of leaving it to AQE. Profiled at sf0.1/local[32]:
-        # the AQE sort-merge plan shuffles+sorts both indexed sides
-        # (wide rows: ids + bounds + WKB blobs) and ran 3x slower than
-        # the map-side broadcast plan (stage walls 25.5+69.3 s vs
-        # 31.7 s).
-        broadcast = broadcastable(right)
+        with job_label(spark, "sjoin.broadcast_probe"):
+            broadcast = broadcastable(right)
+    if broadcast is True:
+        return _sjoin_broadcast(
+            left, right, left_id=left_id, right_id=right_id,
+            left_geom=left_geom, right_geom=right_geom, level=level,
+            predicate=predicate, lh=lh, rh=rh, pad=pad, dilate=dilate_l,
+            distance=distance, fast_path_ok=fast_path_ok, dedup=dedup,
+            keep_distance=keep_distance, keep_left_geom=keep_left_geom)
 
     l = _index_side(left, left_id, left_geom, level, lh, pad,
                     keep_geom=(predicate != "bbox"), dilate=dilate_l)
@@ -270,13 +308,10 @@ def sjoin_pairs(left: DataFrame, right: DataFrame, *,
         "_maxx": "_rmaxx", "_maxy": "_rmaxy", "_inside": "_rinside"})
 
     if salt == "auto":
-        # broadcast joins have no shuffle keys to skew; otherwise let
-        # the bounded hot-cell census pick the factor (round-2 left
+        # the bounded hot-cell census picks the factor (round-2 left
         # this knob manual — the planner now closes the loop itself)
-        salt = 1 if broadcast is True else _auto_salt(
-            l, left.sparkSession.sparkContext.defaultParallelism)
-    elif broadcast is True:
-        salt = 1
+        with job_label(spark, "sjoin.salt_census"):
+            salt = _auto_salt(l, spark.sparkContext.defaultParallelism)
 
     join_keys = ["cell_id"]
     if salt > 1:
@@ -286,13 +321,119 @@ def sjoin_pairs(left: DataFrame, right: DataFrame, *,
                          F.explode(F.sequence(F.lit(0), F.lit(salt - 1))))
         join_keys = ["cell_id", "_salt"]
 
-    rside = F.broadcast(r) if broadcast is True else r
-    cand = l.join(rside, on=join_keys, how="inner")
+    cand = l.join(r, on=join_keys, how="inner")
     return refine_candidates(
         cand, left_id=left_id, right_id=right_id, predicate=predicate,
         distance=distance, left_geom_c=left_geom_c, right_geom=right_geom,
         fast_path_ok=fast_path_ok, dedup=dedup,
         keep_distance=keep_distance, keep_left_geom=keep_left_geom)
+
+
+class RegionIndex:
+    """The broadcast route's right side, built in the driver: the
+    decoded regions, their bounds and ids, and their cell cover as a
+    cell-sorted table (``cells[i]`` is covered by region
+    ``region[i]``; ``inside[i]`` marks a cell wholly inside it)."""
+
+    def __init__(self, ids, blobs: list, level: int, how: str, pad: float):
+        self.ids = ids
+        self.batch = W.parse_wkb(blobs)
+        self.bounds = self.batch.bounds()
+        off, cells, inside = C.cover_batch(self.batch, level, how=how,
+                                           pad=pad)
+        owner = np.repeat(np.arange(len(blobs)), np.diff(off))
+        order = np.argsort(cells, kind="stable")
+        self.cells = cells[order]
+        self.region = owner[order]
+        self.inside = inside[order]
+
+    def probe(self, cells: np.ndarray, owner: np.ndarray):
+        """(left row, region, any shared cell inside) for every
+        distinct (left row, region) pair whose covers share a cell;
+        ``cells[i]`` is covered by left row ``owner[i]``."""
+        lo = np.searchsorted(self.cells, cells, "left")
+        cnt = np.searchsorted(self.cells, cells, "right") - lo
+        n = int(cnt.sum())
+        pos = np.arange(n) + np.repeat(lo - (np.cumsum(cnt) - cnt), cnt)
+        key = (np.repeat(owner, cnt) * len(self.bounds)
+               + self.region[pos])
+        key, inv = np.unique(key, return_inverse=True)
+        inside = np.zeros(len(key), bool)
+        inside[inv[self.inside[pos]]] = True
+        return key // len(self.bounds), key % len(self.bounds), inside
+
+
+def batch_pairs(index: RegionIndex, lb, *, level: int, how: str,
+                pad: float, dilate: float, predicate: str,
+                distance: float | None, fast_path_ok: bool):
+    """Matching (left row, region[, distance]) of one decoded left
+    batch against the region index: cover, probe, bbox prefilter, then
+    the exact kernel — the broadcast route's per-batch work."""
+    off, cells, _ = C.cover_batch(lb, level, how=how, pad=pad,
+                                  dilate=dilate)
+    li, ri, inside = index.probe(
+        cells, np.repeat(np.arange(len(lb)), np.diff(off)))
+    margin = float(distance) if predicate == "distance" else 0.0
+    keep = udfs.bbox_overlap(lb.bounds()[li], index.bounds[ri], margin)
+    li, ri, inside = li[keep], ri[keep], inside[keep]
+    if predicate == "bbox":
+        return li, ri, None
+    if predicate == "distance":
+        d = udfs.pair_kernel_chunked(G.pairs_distance, lb, index.batch,
+                                     li, ri, np.float64)
+        hit = d <= distance
+        return li[hit], ri[hit], d[hit]
+    hit = inside if fast_path_ok else np.zeros(len(li), bool)
+    todo = np.flatnonzero(~hit)
+    hit[todo] = udfs.pair_kernel_chunked(G.pairs_intersect, lb, index.batch,
+                                         li[todo], ri[todo], bool)
+    return li[hit], ri[hit], None
+
+
+def _sjoin_broadcast(left: DataFrame, right: DataFrame, *, left_id,
+                     right_id, left_geom, right_geom, level, predicate, lh,
+                     rh, pad, dilate, distance, fast_path_ok, dedup,
+                     keep_distance, keep_left_geom) -> DataFrame:
+    """The broadcast route: collect and index the right side here, then
+    one ``mapInArrow`` pass over the left side."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    with job_label(left.sparkSession, "sjoin.regions"):
+        rows = right.select(right_id, right_geom).collect()
+    keep_geom = keep_left_geom and predicate == "intersects"
+    keep_dist = keep_distance and predicate == "distance"
+    schema = T.StructType(
+        [T.StructField(left_id, left.schema[left_id].dataType),
+         T.StructField(right_id, right.schema[right_id].dataType)]
+        + ([T.StructField("geometry", left.schema[left_geom].dataType)]
+           if keep_geom else [])
+        + ([T.StructField("dist", T.DoubleType())] if keep_dist else []))
+    arrow_schema = to_arrow_schema(schema)
+    index = RegionIndex(
+        pa.array([r[0] for r in rows], arrow_schema.field(1).type),
+        [None if r[1] is None else bytes(r[1]) for r in rows],
+        level, rh, pad)
+    kw = dict(level=level, how=lh, pad=pad, dilate=dilate,
+              predicate=predicate, distance=distance,
+              fast_path_ok=fast_path_ok)
+
+    def run(batches):
+        for b in batches:
+            geoms = b.column(1)
+            li, ri, d = batch_pairs(index, W.parse_wkb(geoms.to_pylist()),
+                                    **kw)
+            cols = [b.column(0).take(li), index.ids.take(ri)]
+            if keep_geom:
+                cols.append(geoms.take(li))
+            if keep_dist:
+                cols.append(pa.array(d, pa.float64()))
+            yield pa.RecordBatch.from_arrays(
+                [c.cast(f.type) for c, f in zip(cols, arrow_schema)],
+                schema=arrow_schema)
+
+    out = left.select(left_id, left_geom).mapInArrow(run, schema)
+    return out.dropDuplicates([left_id, right_id]) if dedup else out
 
 
 def refine_candidates(cand: DataFrame, *, left_id: str, right_id: str,
@@ -318,8 +459,8 @@ def refine_candidates(cand: DataFrame, *, left_id: str, right_id: str,
           (F.col("_lmaxy") + margin < F.col("_rminy")))
     )
 
-    # Refine BEFORE dedup: refinement is map-side (no shuffle when the
-    # join is broadcast), so running it on per-cell candidate copies
+    # Refine BEFORE dedup: refinement is map-side (no shuffle after
+    # the join), so running it on per-cell candidate copies
     # costs only duplicate kernel work for multi-cell geometries, while
     # the dedup shuffle shrinks from (ids + 2 WKB blobs + flags) rows —
     # which Spark sort-aggregates because binary columns aren't

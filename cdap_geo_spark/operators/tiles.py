@@ -183,19 +183,19 @@ def assign_tiles(df: DataFrame, *, bbox: tuple, splits: int,
                 sel = np.flatnonzero(multi)
                 if len(sel):
                     # refine candidates against the tile boxes in-batch
-                    tb = W.parse_wkb(W.boxes_to_wkb(
-                        (tx[sel] * rx).astype(np.float64),
-                        (ty[sel] * ry).astype(np.float64),
-                        ((tx[sel] + 1) * rx).astype(np.float64),
-                        ((ty[sel] + 1) * ry).astype(np.float64)))
+                    tb = W.boxes_batch(tx[sel] * rx, ty[sel] * ry,
+                                       (tx[sel] + 1) * rx, (ty[sel] + 1) * ry)
                     keep_mask[sel] = G.pairs_intersect(
                         batch, tb, owner[sel], np.arange(len(sel)))
-            names = [f"{x * rx}-{y * ry}" for x, y in
-                     zip(tx[keep_mask], ty[keep_mask])]
+            # one name per distinct tile, gathered per row
+            tiles, inv = np.unique(np.stack([tx[keep_mask], ty[keep_mask]]),
+                                   axis=1, return_inverse=True)
+            names = np.array([f"{x * rx}-{y * ry}" for x, y in tiles.T],
+                             dtype=object)
             data = {id_col: pdf[id_col].to_numpy()[owner[keep_mask]]}
             for c in keep:
                 data[c] = pdf[c].to_numpy()[owner[keep_mask]]
-            data["tile_id"] = names
+            data["tile_id"] = names[inv.reshape(-1)]
             yield pd.DataFrame(data)
 
     return src.mapInPandas(gen, schema=out_schema)

@@ -33,6 +33,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from cdap_geo_spark.session import job_label
+
 
 def fingerprint(*parts) -> str:
     """Stable hex fingerprint of params and parent fingerprints."""
@@ -94,7 +96,8 @@ class Manifest:
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(partition_by)
-        writer.parquet(data_dir)
+        with job_label(self.spark, f"manifest.write[{name}]"):
+            writer.parquet(data_dir)
         files = self._collect_metrics(data_dir)
         total = sum(f["rows"] for f in files)
         wall_ms = int((time.time() - t0) * 1000)

@@ -121,3 +121,21 @@ def test_null_geometry_empty_cover():
     b = W.parse_wkb([None, W.point_to_wkb(10, 10)])
     off, cells, inside = C.cover_batch(b, 10)
     assert np.diff(off).tolist() == [0, 1]
+
+
+@pytest.mark.parametrize("how", ["intersects", "marked"])
+def test_exact_cover_keeps_geometry_outside_the_world(how):
+    """A geometry beyond the world frame is clamped into the edge cells;
+    the exact cover keeps those cells (it dropped every one when the
+    geometry spanned more than one) and never marks them inside."""
+    east = 2 * C.WORLD_SIZE
+    blobs = W.boxes_to_wkb([east, -east], [-1e4, -east],
+                           [east + 2e5, -east + 2e5], [1e4, -east + 2e5])
+    blobs.append(W.polygon_to_wkb([[[east, 0], [east + 2e5, 5e3],
+                                    [east + 1e5, 2e4], [east, 0]]]))
+    b = W.parse_wkb(blobs)
+    want, _, _ = C.cover_batch(b, 7, how="bbox")
+    off, cells, inside = C.cover_batch(b, 7, how=how)
+    assert (np.diff(off) > 0).all()
+    assert np.array_equal(np.diff(off), np.diff(want))
+    assert not inside.any()

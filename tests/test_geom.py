@@ -266,6 +266,37 @@ def test_pair_kernel_chunk_invariance(monkeypatch):
     assert outs[0].sum() > 0  # some self/near pairs intersect
 
 
+@pytest.mark.parametrize("predicate", ["intersects", "distance"])
+def test_broadcast_batch_pairs_chunk_invariance(monkeypatch, predicate):
+    """The broadcast sjoin pass refines through the same slicing loop:
+    its per-batch pairs are invariant in the chunk size too."""
+    import pyarrow as pa
+    from cdap_geo_spark import udfs
+    from cdap_geo_spark.operators.sjoin import RegionIndex, batch_pairs
+
+    rng = np.random.default_rng(5)
+    x0 = rng.uniform(0, 650_000, 200)
+    y0 = rng.uniform(0, 1_250_000, 200)
+    w = rng.uniform(1_000, 80_000, 200)
+    index = RegionIndex(pa.array(np.arange(200)),
+                        W.boxes_to_wkb(x0, y0, x0 + w, y0 + w),
+                        7, "marked" if predicate == "intersects" else "bbox",
+                        1.0)
+    lb = W.parse_wkb(doc_geometry_wkb(np.arange(3000, dtype=np.int64)))
+    kw = dict(level=7, pad=1.0, predicate=predicate, fast_path_ok=False,
+              how="intersects" if predicate == "intersects" else "bbox",
+              dilate=0.0 if predicate == "intersects" else 2_000.0,
+              distance=None if predicate == "intersects" else 2_000.0)
+    outs = []
+    for chunk in (0, 7, 256, 100000):
+        monkeypatch.setattr(udfs, "KERNEL_CHUNK", chunk)
+        outs.append(batch_pairs(index, lb, **kw))
+    for o in outs[1:]:
+        for a, b in zip(outs[0], o):
+            np.testing.assert_array_equal(a, b)
+    assert len(outs[0][0]) > 256  # the small chunks really slice
+
+
 # ---------------------------------------------------------------------------
 # slab-union kernel property tests (hypothesis)
 # ---------------------------------------------------------------------------

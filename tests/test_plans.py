@@ -23,17 +23,39 @@ def test_tile_assign_has_no_shuffle(spark):
     assert "Exchange" not in plan, plan
 
 
-def test_sjoin_broadcast_plan(spark):
-    dd = D.with_geometry(fixtures.documents(spark, 50, partitions=2))
-    rr = fixtures.regions(spark, 20)
-    plan = _plan(sjoin_pairs(dd, rr, left_id="doc_id", right_id="region_id",
-                             level=7, broadcast=True))
-    assert "BroadcastHashJoin" in plan
-    # dedup happens on narrow id pairs -> hash aggregate, never sort agg
-    assert "SortAggregate" not in plan
-    # exactly one shuffle: the pair dedup (broadcast join adds none)
-    n_exchanges = plan.count("Exchange hashpartitioning")
-    assert n_exchanges <= 1, plan
+#: physical operators that run Python workers
+_PYTHON_NODES = ("MapInArrow", "MapInPandas", "ArrowEvalPython",
+                 "BatchEvalPython", "FlatMapGroupsInPandas",
+                 "FlatMapCoGroupsInPandas", "AggregateInPandas",
+                 "WindowInPandas")
+
+
+def _parquet_world(spark, tmp_path, n_docs=50, n_regions=20):
+    """(docs with geometry, regions), both read back from parquet so the
+    plans hold no fixture-generator Python nodes."""
+    dp, rp = str(tmp_path / "docs"), str(tmp_path / "regions")
+    fixtures.documents(spark, n_docs, partitions=2).write.parquet(dp)
+    fixtures.regions(spark, n_regions).write.parquet(rp)
+    return (D.with_geometry(spark.read.parquet(dp)),
+            spark.read.parquet(rp).select("region_id", "geometry"))
+
+
+def test_sjoin_broadcast_plan(spark, tmp_path):
+    dd, rr = _parquet_world(spark, tmp_path)
+    out = sjoin_pairs(dd, rr, left_id="doc_id", right_id="region_id",
+                      level=7, broadcast=True)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    nodes = [ln for ln in plan.splitlines()
+             if any(f"- {p} " in ln or ln.startswith(p + " ")
+                    for p in _PYTHON_NODES)]
+    # one Python pass, over the left side; no join, no refine UDF
+    assert len(nodes) == 1 and "MapInArrow" in nodes[0], plan
+    assert "doc_id" in nodes[0] and "geometry" in nodes[0], plan
+    for absent in ("BroadcastHashJoin", "ArrowEvalPython", "MapInPandas",
+                   "SortAggregate"):
+        assert absent not in plan, plan
+    # at most one shuffle: the narrow id-pair dedup
+    assert plan.count("Exchange hashpartitioning") <= 1, plan
 
 
 def _job_names(spark, fn):
@@ -55,6 +77,19 @@ def _jobs_run(spark, fn):
     """(fn(), number of Spark jobs fn ran)."""
     out, names = _job_names(spark, fn)
     return out, len(names)
+
+
+def _caller_job_names(spark, fn):
+    """``_job_names`` with the caller's call-site name set to 'caller',
+    checking that fn leaves that name in place."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("callSite.short", "caller")
+    try:
+        out, names = _job_names(spark, fn)
+        assert sc.getLocalProperty("callSite.short") == "caller"
+    finally:
+        sc.setLocalProperty("callSite.short", None)
+    return out, names
 
 
 def test_broadcastable_known_size_runs_no_job(spark, tmp_path):
@@ -88,19 +123,45 @@ def test_broadcastable_unknown_size_probes_rows(spark):
     assert ok is False and jobs > 0
 
 
-def test_sjoin_auto_broadcast_plans_without_jobs(spark, tmp_path):
-    """broadcast='auto' over a file-backed right side decides from the
-    optimizer's size estimate: no Spark job before the action, and the
-    small right side is still broadcast."""
-    p = str(tmp_path / "regions")
-    fixtures.regions(spark, 20).write.parquet(p)
-    rr = spark.read.parquet(p)
-    dd = D.with_geometry(fixtures.documents(spark, 50, partitions=2))
-    pairs, jobs = _jobs_run(spark, lambda: sjoin_pairs(
+def test_sjoin_auto_broadcast_reads_regions_in_one_job(spark, tmp_path):
+    """broadcast='auto' over file-backed inputs decides from the
+    optimizer's size estimate (no probe job) and takes the broadcast
+    route: the one job at call time is the labelled region read, and
+    the caller's own call-site name is restored after it."""
+    dd, rr = _parquet_world(spark, tmp_path)
+    pairs, names = _caller_job_names(spark, lambda: sjoin_pairs(
         dd, rr, left_id="doc_id", right_id="region_id", level=7,
         broadcast="auto"))
-    assert jobs == 0
-    assert "BroadcastHashJoin" in _plan(pairs)
+    assert names == ["sjoin.regions"]
+    plan = _plan(pairs)
+    assert "MapInArrow" in plan and "BroadcastHashJoin" not in plan
+
+
+def test_sjoin_tile_pipeline_runs_bounded_labelled_jobs(spark, tmp_path):
+    """sjoin_pairs -> assign_tiles -> dropDuplicates -> count() on
+    parquet inputs: a bounded number of jobs, each the labelled region
+    read or the caller's action."""
+    dd, rr = _parquet_world(spark, tmp_path, n_docs=400, n_regions=40)
+
+    def run():
+        pairs = sjoin_pairs(dd, rr, left_id="doc_id", right_id="region_id",
+                            level=7, dedup=False, keep_left_geom=True)
+        tiled = assign_tiles(pairs, bbox=(0, 0, 700_000, 1_300_000),
+                             splits=10, keep=("region_id",))
+        return tiled.dropDuplicates(["doc_id", "region_id",
+                                     "tile_id"]).count()
+    n, names = _caller_job_names(spark, run)
+    assert n > 0
+    assert names[0] == "sjoin.regions" and len(names) <= 4, names
+    assert set(names[1:]) == {"caller"}, names
+
+
+def test_manifest_write_jobs_are_labelled(spark, tmp_path):
+    from cdap_geo_spark.plans.manifest import Manifest
+    _, names = _caller_job_names(spark, lambda: Manifest(
+        spark, str(tmp_path / "m")).run_stage(
+            "ids", "fp1", lambda: spark.range(10)))
+    assert names and set(names) == {"manifest.write[ids]"}, names
 
 
 def test_knn_auto_runs_constant_jobs(spark, tmp_path):

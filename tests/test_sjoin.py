@@ -4,6 +4,8 @@
 join output rows").
 """
 
+import struct
+
 import numpy as np
 import pytest
 
@@ -247,3 +249,206 @@ def test_box_pairs_native_matches_wkb_bbox_path(spark):
                      "maxy"),
             left_id="a", right_id="b", level=lv).collect()}
         assert got == want
+
+
+# ---------------------------------------------------------------------------
+# broadcast route vs shuffle route
+# ---------------------------------------------------------------------------
+
+def _box(x0, y0, x1, y1):
+    return bytes(W.boxes_to_wkb([x0], [y0], [x1], [y1])[0])
+
+
+def _pt(x, y):
+    return bytes(W.point_to_wkb(x, y))
+
+
+def _line(*xy):
+    return bytes(W.linestring_to_wkb(xy))
+
+
+#: an L-shaped polygon over [100k, 500k]^2 (the [300k, 500k]^2 quarter
+#: cut out): at level 7 (32,768 m cells) its cover has cells marked
+#: wholly inside, so point candidates take the fast path
+_L_POLY = bytes(W.polygon_to_wkb([[
+    [100_000, 100_000], [500_000, 100_000], [500_000, 300_000],
+    [300_000, 300_000], [300_000, 500_000], [100_000, 500_000],
+    [100_000, 100_000]]]))
+#: a line around the L, never touching it: its bbox covers the L's
+#: inside cells, so a bbox left cover must not take the fast path
+_AROUND_L = _line((50_000, 600_000), (600_000, 600_000), (600_000, 50_000))
+_EMPTY = struct.pack("<BIdd", 1, 1, float("nan"), float("nan"))
+_EMPTY_GC = struct.pack("<BII", 1, 7, 0)
+
+#: (doc_id, geometry): edges of the sjoin contract; ids are nullable
+#: longs, a few repeat (same geometry)
+_EDGE_DOCS = [
+    (1, _pt(500, 500)),                       # inside A
+    (1, _pt(500, 500)),                       # duplicate doc_id
+    (2, _box(1_000, 0, 2_000, 1_000)),        # shares A's east edge
+    (3, _pt(1_000, 1_000)),                   # on A's corner vertex
+    (4, _line((1_000, 1_000), (3_000, 3_000))),  # touches A's corner
+    (5, None),
+    (6, _EMPTY),
+    (7, b"garbage!!"),
+    (8, _pt(-500_000, -300_000)),             # negative, inside B
+    (9, _box(-450_000, -260_000, -440_000, -250_000)),  # touches B
+    (10, _pt(-2_000_000, -2_000_000)),        # outside the cell world
+    (11, _pt(3_500_000, 0)),                  # outside, east
+    (12, _pt(-3_000_000, -2_000_000)),        # clamped into C's cells
+    (13, _pt(200_000, 200_000)),              # deep inside the L
+    (13, _pt(200_000, 200_000)),
+    (14, _pt(450_000, 150_000)),              # inside the L's arm
+    (15, _pt(400_000, 400_000)),              # in the L's notch
+    (16, _AROUND_L),
+    (17, _box(450_000, 250_000, 550_000, 350_000)),  # multi-cell, overlaps
+    (18, _pt(1_000_500, 1_000_500)),          # in the second 101
+    (None, _pt(700, 300)),                    # null id, inside A
+    (19, _pt(2_000, 500)),                    # 1 km east of A
+]
+#: (region_id, geometry)
+_EDGE_REGIONS = [
+    (100, _box(0, 0, 1_000, 1_000)),                          # A
+    (100, _box(0, 0, 1_000, 1_000)),                          # duplicate
+    (101, _box(-600_000, -400_000, -450_000, -250_000)),      # B
+    (101, _box(1_000_000, 1_000_000, 1_001_000, 1_001_000)),  # same id
+    (102, _box(-2_100_000, -2_100_000, -1_900_000, -1_900_000)),  # C
+    (103, _box(3_400_000, -10_000, 3_600_000, 10_000)),       # D
+    (104, _L_POLY),
+    (105, None),
+    (106, _EMPTY_GC),
+    (107, b"\x01\x03"),
+    (None, _box(1_500, 0, 2_500, 1_000)),
+]
+
+_ROUTE_CASES = {
+    "intersects": ("intersects", {}),
+    "intersects_geom": ("intersects", {"keep_left_geom": True}),
+    "intersects_bbox_cover": ("intersects", {"left_how": "bbox"}),
+    "bbox": ("bbox", {}),
+    "distance": ("distance", {"distance": 5_000.0}),
+    "distance_kept": ("distance", {"distance": 5_000.0,
+                                   "keep_distance": True}),
+}
+
+
+def _edge_oracle(predicate, distance=None):
+    """Brute force over every (doc, region) row pair."""
+    lv = W.parse_wkb([g for _, g in _EDGE_DOCS])
+    rv = W.parse_wkb([g for _, g in _EDGE_REGIONS])
+    lb, rb = lv.bounds(), rv.bounds()
+    out = set()
+    for i, (lid, lg) in enumerate(_EDGE_DOCS):
+        for j, (rid, rg) in enumerate(_EDGE_REGIONS):
+            if not (lv.valid[i] and rv.valid[j]):
+                continue
+            if predicate == "bbox":
+                hit = not (lb[i, 0] > rb[j, 2] or lb[i, 1] > rb[j, 3]
+                           or lb[i, 2] < rb[j, 0] or lb[i, 3] < rb[j, 1])
+            elif predicate == "intersects":
+                hit = oracle.intersects(oracle.parse(lg), oracle.parse(rg))
+            else:
+                hit = oracle.distance(oracle.parse(lg),
+                                      oracle.parse(rg)) <= distance
+            if hit:
+                out.add((lid, rid))
+    return out
+
+
+@pytest.fixture(scope="module")
+def edge_world(spark):
+    docs = spark.createDataFrame(_EDGE_DOCS, "doc_id long, geometry binary")
+    regions = spark.createDataFrame(_EDGE_REGIONS,
+                                    "region_id long, geometry binary")
+    return docs.repartition(3), regions
+
+
+@pytest.mark.parametrize("dedup", [True, False], ids=["dedup", "nodedup"])
+@pytest.mark.parametrize("case", sorted(_ROUTE_CASES))
+def test_broadcast_route_matches_shuffle_route(spark, edge_world,
+                                               no_broadcast, case, dedup):
+    """The broadcast route (one mapInArrow pass against the driver-built
+    region index) returns the shuffle route's schema and rows: exact
+    rows with dedup, the same row set without, and both equal the
+    brute force over the edge cases."""
+    from collections import Counter
+    docs, regions = edge_world
+    predicate, kw = _ROUTE_CASES[case]
+    args = dict(level=7, predicate=predicate, dedup=dedup, **kw)
+    fast = sjoin_pairs(docs, regions, broadcast=True, **args)
+    slow = sjoin_pairs(docs, regions, broadcast=False, salt=1, **args)
+    assert fast.schema.simpleString() == slow.schema.simpleString()
+    got, want = fast.collect(), slow.collect()
+    if dedup:
+        assert Counter(map(tuple, got)) == Counter(map(tuple, want))
+    else:
+        assert set(map(tuple, got)) == set(map(tuple, want))
+    pairs = {(r[0], r[1]) for r in got}
+    brute = _edge_oracle(predicate, kw.get("distance"))
+    if predicate == "bbox":
+        # see test_bbox_predicate_misses_overlap_outside_left_cover
+        assert pairs == brute - {(16, 104)}
+    else:
+        assert pairs == brute
+
+
+@pytest.mark.xfail(strict=True, reason="predicate='bbox' covers the left "
+                   "side with how='intersects', so overlapping bboxes "
+                   "whose left geometry misses the right side's cells "
+                   "are not paired")
+def test_bbox_predicate_misses_overlap_outside_left_cover(spark, edge_world):
+    docs, regions = edge_world
+    got = {(r[0], r[1]) for r in sjoin_pairs(
+        docs, regions, level=7, predicate="bbox").collect()}
+    assert (16, 104) in got
+
+
+def test_edge_oracle_covers_the_cases():
+    """The edge cases above really exercise what they name."""
+    hits = _edge_oracle("intersects")
+    assert {(1, 100), (2, 100), (3, 100), (4, 100), (None, 100),
+            (8, 101), (9, 101), (18, 101), (10, 102), (11, 103),
+            (13, 104), (14, 104), (17, 104), (2, None)} <= hits
+    assert not {(12, 102), (15, 104), (16, 104)} & hits
+    assert not any(d in (5, 6, 7) or r in (105, 106, 107)
+                   for d, r in hits)
+    assert (19, 100) in _edge_oracle("distance", 5_000.0) - hits
+
+
+def test_broadcast_inside_cells_take_the_fast_path(monkeypatch):
+    """Points deep inside the L are accepted by a marked inside cell,
+    without the exact kernel; a bbox left cover never is."""
+    import pyarrow as pa
+    from cdap_geo_spark.core import geom as G
+    from cdap_geo_spark.operators import sjoin as SJ
+    index = SJ.RegionIndex(pa.array([104]), [_L_POLY], 7, "marked", 1.0)
+    assert index.inside.any()
+    lb = W.parse_wkb([_pt(200_000, 200_000), _AROUND_L])
+    refined, real = [], G.pairs_intersect
+
+    def spy(lb_, rb_, li, ri):
+        refined.extend(li.tolist())
+        return real(lb_, rb_, li, ri)
+    monkeypatch.setattr(G, "pairs_intersect", spy)
+    kw = dict(level=7, pad=1.0, dilate=0.0, predicate="intersects",
+              distance=None)
+    li, _, _ = SJ.batch_pairs(index, lb, how="intersects",
+                              fast_path_ok=True, **kw)
+    assert li.tolist() == [0] and refined == []
+    li, _, _ = SJ.batch_pairs(index, lb, how="bbox", fast_path_ok=False,
+                              **kw)
+    assert li.tolist() == [0] and refined == [0, 1]
+
+
+@pytest.mark.parametrize("predicate", ["intersects", "bbox", "distance"])
+def test_broadcast_empty_right_side_keeps_schema(spark, edge_world,
+                                                 predicate):
+    docs, regions = edge_world
+    args = dict(level=7, predicate=predicate, dedup=False,
+                keep_left_geom=True, keep_distance=True,
+                distance=100.0 if predicate == "distance" else None)
+    empty = regions.limit(0)
+    fast = sjoin_pairs(docs, empty, broadcast=True, **args)
+    slow = sjoin_pairs(docs, empty, broadcast=False, salt=1, **args)
+    assert fast.schema.simpleString() == slow.schema.simpleString()
+    assert fast.count() == 0 == slow.count()

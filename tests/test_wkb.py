@@ -39,6 +39,20 @@ def test_box_roundtrip():
     assert G.area(b)[0] == pytest.approx(200.0)
 
 
+def test_boxes_batch_equals_parsed_boxes():
+    rng = np.random.RandomState(2)
+    x0, y0 = rng.uniform(-1e6, 1e6, 40), rng.uniform(-1e6, 1e6, 40)
+    x1, y1 = x0 + rng.uniform(0, 1e4, 40), y0 + rng.uniform(0, 1e4, 40)
+    for n in (40, 0):
+        args = (x0[:n], y0[:n], x1[:n], y1[:n])
+        want, got = W.parse_wkb(W.boxes_to_wkb(*args)), W.boxes_batch(*args)
+        for f in ("kinds", "valid", "geom_part_off", "part_kind",
+                  "part_ring_off", "ring_coord_off", "coords"):
+            a, b = getattr(want, f), getattr(got, f)
+            assert a.dtype == b.dtype, f
+            np.testing.assert_array_equal(a, b, err_msg=f)
+
+
 def test_null_and_malformed_never_raise():
     blobs = [None, b"", b"\x01\x01\x00", b"garbage!!", W.point_to_wkb(5, 5)]
     b = W.parse_wkb(blobs)
