@@ -22,10 +22,13 @@ Spark 4.x engine:
   bit-for-bit through every stage.
 
 Submodules import lazily so the pure-NumPy kernel layer
-(``cdap_geo_spark.core``) stays usable without a JVM.
+(``cdap_geo_spark.core``) stays usable without a JVM. Imported in a
+Spark Python worker, the package stops the worker re-reading unchanged
+zip archives before every task (:mod:`cdap_geo_spark.zipcache`).
 """
 
 import importlib
+import sys
 
 __version__ = "0.1.0"
 
@@ -41,6 +44,10 @@ _LAZY = {
     "knn": "cdap_geo_spark.operators.knn",
     "manifest": "cdap_geo_spark.plans.manifest",
 }
+
+if "pyspark.worker" in sys.modules:
+    from cdap_geo_spark import zipcache as _zipcache
+    _zipcache.install()
 
 
 def __getattr__(name):

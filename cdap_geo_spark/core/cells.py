@@ -240,6 +240,26 @@ def cover_points(x: np.ndarray, y: np.ndarray, level: int, pad: float = 1.0):
     return cover_bbox(bounds, level, pad=0.0)
 
 
+def _cover_point_parts(batch: GeomBatch, rows: np.ndarray, level: int,
+                       pad: float):
+    """(owner row, cell) of the point cover of every part of the point
+    geometries ``rows``, each cell once per row, in part order."""
+    part = batch.part_ring_off[batch.geom_part_off]
+    lo = batch.ring_coord_off[part[rows]]
+    cnt = batch.ring_coord_off[part[rows + 1]] - lo
+    idx = np.arange(int(cnt.sum())) + np.repeat(lo - (np.cumsum(cnt) - cnt),
+                                                cnt)
+    off, cells = cover_points(batch.coords[idx, 0], batch.coords[idx, 1],
+                              level, pad)
+    owner = np.repeat(np.repeat(rows, cnt), np.diff(off))
+    # two parts in one cell: keep the first
+    order = np.lexsort((cells, owner))
+    dup = np.zeros(len(cells), bool)
+    dup[order[1:]] = ((owner[order[1:]] == owner[order[:-1]])
+                      & (cells[order[1:]] == cells[order[:-1]]))
+    return owner[~dup], cells[~dup]
+
+
 def cover_batch(batch: GeomBatch, level: int, how: str = "bbox",
                 pad: float = 1.0, dilate: float = 0.0):
     """CSR cover of a parsed geometry batch.
@@ -265,25 +285,19 @@ def cover_batch(batch: GeomBatch, level: int, how: str = "bbox",
     is_pt = ((batch.kinds == KIND_POINT) | (batch.kinds == KIND_MULTIPOINT)) \
         & batch.valid
     bounds = batch.bounds()
-    # Points (incl. multipoints, per part) use the edge-straddle rule;
-    # approximate multipoints by their per-point union via the bbox of
-    # each point — single points dominate, multipoints are rare.
     offsets_box, cells_box = cover_bbox(
         np.where(is_pt[:, None], np.nan, bounds), level, pad)
-    px = np.where(is_pt, bounds[:, 0], np.nan)
-    py = np.where(is_pt, bounds[:, 1], np.nan)
-    # single points: bounds min==max so this is the point itself.
-    offsets_pt, cells_pt = cover_points(px, py, level, pad)
-    # merge the two CSRs row-wise
+    # points use the edge-straddle rule, a MultiPoint on every part
+    owner_pt, cells_pt = _cover_point_parts(batch, np.flatnonzero(is_pt),
+                                            level, pad)
+    # merge the box CSR and the point cells row-wise
     counts_box = offsets_box[1:] - offsets_box[:-1]
-    counts_pt = offsets_pt[1:] - offsets_pt[:-1]
-    counts = counts_box + counts_pt
+    counts = counts_box + np.bincount(owner_pt, minlength=n)
     offsets = np.zeros(n + 1, np.int64)
     np.cumsum(counts, out=offsets[1:])
     # each row's cells come from exactly one of the two sources, so a
     # stable sort of concatenated owners re-interleaves them correctly
-    owners = np.concatenate([np.repeat(np.arange(n), counts_box),
-                             np.repeat(np.arange(n), counts_pt)])
+    owners = np.concatenate([np.repeat(np.arange(n), counts_box), owner_pt])
     merged = np.concatenate([cells_box, cells_pt])
     order = np.argsort(owners, kind="stable")
     cells = merged[order]

@@ -27,9 +27,10 @@ stages; identical params + inputs skip):
 1. ``pairs_tiled``  — extract the primary geometry (native expressions
    over the spans array, zero Python); read the regions once and index
    their cells in the driver; one Python pass over the docs that
-   decodes, covers, probes the region cells and refines each doc once
-   (the cell equi-join when the regions are too large to collect);
-   map-side tile cover of the matched docs; one narrow dedup ->
+   decodes, covers, probes the region cells, refines each doc once and
+   tiles each matched doc from the same decoded batch (when the
+   regions are too large to collect: the cell equi-join, then a
+   map-side tile pass of its own); one narrow dedup ->
    (doc_id, region_id, tile_id).
 2. ``enriched``     — join the matches back to the source documents by
    doc_id so every output row carries the ORIGINAL spans payload

@@ -17,7 +17,11 @@ Re-expresses the reference's ``bbox_join``/``bbox_intersects``
 
 One Python boundary; each left geometry is decoded once, each region
 once per call. No join and no shuffle except the optional id-pair
-dedup.
+dedup. With ``dedup=False`` and the left geometry kept, the returned
+frame carries its :class:`BroadcastPass`: ``assign_tiles`` over that
+frame tiles each matched left row in the same pass and emits
+``(left_id, right_id, tile_id)``, so the headline sjoin -> tiles ->
+dedup plan keeps one Python boundary.
 
 **Shuffle route** (the right side does not fit, or ``broadcast=False``):
 
@@ -260,7 +264,10 @@ def sjoin_pairs(left: DataFrame, right: DataFrame, *,
     ``dedup=False`` skips the id-pair shuffle and leaves repeats in:
     the broadcast route emits a pair at most once per left ROW (a
     repeated left id repeats it), the shuffle route once per cell the
-    two covers share. Compare the two as sets.
+    two covers share. Compare the two as sets. On the broadcast route
+    with ``dedup=False`` and ``keep_left_geom=True``,
+    :func:`~cdap_geo_spark.operators.tiles.assign_tiles` over the
+    returned frame runs inside its pass.
     """
     dilate_l = 0.0
     if predicate not in ("intersects", "bbox", "distance"):
@@ -390,6 +397,60 @@ def batch_pairs(index: RegionIndex, lb, *, level: int, how: str,
     return li[hit], ri[hit], None
 
 
+class BroadcastPass:
+    """The broadcast route's pass over the left side, kept on the frame
+    the route returns with ``dedup=False`` and the left geometry:
+    ``src`` is ``(left_id, left_geom)``, ``index`` the driver-built
+    regions and ``kw`` the :func:`batch_pairs` options."""
+
+    def __init__(self, src: DataFrame, index: RegionIndex, kw: dict,
+                 left_id: str, right_id: str):
+        self.src, self.index, self.kw = src, index, kw
+        self.left_id, self.right_id = left_id, right_id
+
+    def with_tiles(self, tile_cover, schema: T.StructType) -> DataFrame:
+        """The same pass emitting ``(left_id[, right_id], tile_id)`` per
+        matched pair and tile of its left geometry, for
+        :func:`~cdap_geo_spark.operators.tiles.assign_tiles`.
+        ``tile_cover(batch, rows)`` gives ``(owner, names, inv)`` as
+        :func:`~cdap_geo_spark.operators.tiles.tile_cover` does; each
+        matched left row is tiled once, from the batch already
+        decoded."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        index, kw = self.index, self.kw
+        arrow_schema = to_arrow_schema(schema)
+        keep_right = len(schema) == 3
+
+        def run(batches):
+            for b in batches:
+                lb = W.parse_wkb(b.column(1).to_pylist())
+                li, ri, _ = batch_pairs(index, lb, **kw)
+                rows, at = np.unique(li, return_inverse=True)
+                owner, names, inv = tile_cover(lb, rows)
+                # the tiles of rows[k] are tile rows start[k]:start[k+1]
+                start = np.searchsorted(owner, np.arange(len(rows) + 1))
+                n = start[at + 1] - start[at]
+                pair = np.repeat(np.arange(len(li)), n)
+                tile = np.arange(int(n.sum())) + np.repeat(
+                    start[at] - (np.cumsum(n) - n), n)
+                cols = [b.column(0).take(li[pair])]
+                if keep_right:
+                    cols.append(index.ids.take(ri[pair]))
+                cols.append(pa.array(names, pa.string()).take(inv[tile]))
+                yield _record_batch(cols, arrow_schema)
+
+        return self.src.mapInArrow(run, schema)
+
+
+def _record_batch(cols, arrow_schema):
+    import pyarrow as pa
+    return pa.RecordBatch.from_arrays(
+        [c.cast(f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema)
+
+
 def _sjoin_broadcast(left: DataFrame, right: DataFrame, *, left_id,
                      right_id, left_geom, right_geom, level, predicate, lh,
                      rh, pad, dilate, distance, fast_path_ok, dedup,
@@ -428,12 +489,17 @@ def _sjoin_broadcast(left: DataFrame, right: DataFrame, *, left_id,
                 cols.append(geoms.take(li))
             if keep_dist:
                 cols.append(pa.array(d, pa.float64()))
-            yield pa.RecordBatch.from_arrays(
-                [c.cast(f.type) for c, f in zip(cols, arrow_schema)],
-                schema=arrow_schema)
+            yield _record_batch(cols, arrow_schema)
 
-    out = left.select(left_id, left_geom).mapInArrow(run, schema)
-    return out.dropDuplicates([left_id, right_id]) if dedup else out
+    src = left.select(left_id, left_geom)
+    out = src.mapInArrow(run, schema)
+    if dedup:
+        return out.dropDuplicates([left_id, right_id])
+    if keep_geom:
+        # tiles.assign_tiles over exactly this frame runs in this pass
+        out._broadcast_pass = BroadcastPass(src, index, kw, left_id,
+                                            right_id)
+    return out
 
 
 def refine_candidates(cand: DataFrame, *, left_id: str, right_id: str,
@@ -496,9 +562,9 @@ def refine_candidates(cand: DataFrame, *, left_id: str, right_id: str,
     raise ValueError(f"unknown predicate {predicate!r}")
 
 
-#: cell-key packing for :func:`box_pairs_native` — coordinates are
-#: non-negative (the repo's documented segments/tiles contract), so
-#: ``cx * 2^32 + cy`` is collision-free for any realistic extent.
+#: cell-key packing for :func:`box_pairs_native`: ``cx * 2^32 + cy``.
+#: With a negative ``cy`` two cells can share a key; a shared key only
+#: adds candidates, which the exact bbox test removes.
 _CELL_PACK = 1 << 32
 
 
@@ -518,13 +584,14 @@ def box_pairs_native(left: DataFrame, right: DataFrame, *,
     a WKB blob and two Arrow kernels buys nothing).
 
     Losslessness of the native cover: each side covers the INCLUSIVE
-    integer cell range ``floor(min/cs) .. floor(max/cs)`` per axis, so
-    two boxes that overlap OR touch share at least one cell (any point
-    of the shared region lies in a cell covered by both); the exact
-    strict-inequality bbox test then decides, exactly as
-    :func:`refine_candidates` does for the decoded path. Coordinates
-    must be non-negative (Spark DIV truncates toward zero — the same
-    documented contract as the segments/tiles operators).
+    integer cell range ``c(min) .. c(max)`` per axis, with
+    ``c(v) = CAST(v AS BIGINT) DIV cs``. ``c`` truncates toward zero,
+    so the cells next to the axes are twice as wide, but it is
+    monotone: any point ``p`` of the region two boxes share has
+    ``c(p)`` inside both ranges, so boxes that overlap OR touch share a
+    cell, at negative coordinates too. The exact strict-inequality
+    bbox test then decides, exactly as :func:`refine_candidates` does
+    for the decoded path.
 
     Scale: identical to the WKB path — map-side cell fan-out bounded
     by box size / cell size, one equi-join sized by the same broadcast

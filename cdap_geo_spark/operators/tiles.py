@@ -12,6 +12,11 @@ is a regular grid: a regular grid is addressable by floor arithmetic,
 so assignment is a map-side cell cover at the tile resolution — zero
 shuffle, no tile table scan. The generic sjoin path stays available
 for irregular tile sets.
+
+:func:`tile_cover` is the one tile rule, in NumPy. :func:`assign_tiles`
+runs it in a ``mapInPandas`` pass of its own, or, over the frame the
+broadcast sjoin route returned, inside that route's pass over the left
+side (one Python node for sjoin + tiles).
 """
 
 from __future__ import annotations
@@ -22,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from pyspark.sql.functions import pandas_udf
 
 from cdap_geo_spark import udfs
-from cdap_geo_spark.core import wkb as W
+from cdap_geo_spark.core import geom as G, wkb as W
 
 
 def split_grid(spark: SparkSession, bbox: tuple, splits: int,
@@ -117,6 +122,66 @@ def grid_cover_udf(resolutions, limits, compat: str = "reference"):
     return _cover
 
 
+def tile_cover(batch: W.GeomBatch, rows: np.ndarray, grid: tuple,
+               exact: bool = True):
+    """Tiles of the grid ``(x0, y0, x1, y1, rx, ry)`` (frame and tile
+    size) that each geometry ``batch[rows[k]]`` intersects — the one
+    tile rule of :func:`assign_tiles`, in NumPy.
+
+    Returns ``(owner, names, inv)``: tile row ``j`` belongs to
+    ``rows[owner[j]]`` (``owner`` ascending) and is named
+    ``names[inv[j]]``, ``'{x}-{y}'`` of the tile origin, each distinct
+    tile named once.
+    """
+    x0, y0, x1, y1, rx, ry = grid
+    lx0, ly0, lx1, ly1 = int(x0), int(y0), int(x1), int(y1)
+    b = batch.bounds()[rows]
+    # candidate tiles: floor-arithmetic cover of the bbox
+    with np.errstate(invalid="ignore"):
+        xi0 = np.floor(b[:, 0] / rx).astype(np.float64)
+        yi0 = np.floor(b[:, 1] / ry).astype(np.float64)
+        xi1 = np.floor(b[:, 2] / rx).astype(np.float64)
+        yi1 = np.floor(b[:, 3] / ry).astype(np.float64)
+    # a bbox strictly outside the frame (the sjoin bbox prefilter's
+    # test) intersects no tile; clamping it would invent an edge tile.
+    # Frame-edge touches keep theirs.
+    outside = ((b[:, 0] > x1) | (b[:, 1] > y1)
+               | (b[:, 2] < x0) | (b[:, 3] < y0))
+    bad = np.isnan(b[:, 0]) | outside
+    xi0 = np.clip(np.nan_to_num(xi0), lx0 // rx, lx1 // rx - 1).astype(np.int64)
+    yi0 = np.clip(np.nan_to_num(yi0), ly0 // ry, ly1 // ry - 1).astype(np.int64)
+    xi1 = np.clip(np.nan_to_num(xi1), lx0 // rx, lx1 // rx - 1).astype(np.int64)
+    yi1 = np.clip(np.nan_to_num(yi1), ly0 // ry, ly1 // ry - 1).astype(np.int64)
+    nx = np.where(bad, 0, xi1 - xi0 + 1)
+    ny = np.where(bad, 0, yi1 - yi0 + 1)
+    counts = nx * ny
+    owner = np.repeat(np.arange(len(rows)), counts)
+    total = int(counts.sum())
+    local = np.arange(total) - np.repeat(
+        np.concatenate(([0], np.cumsum(counts)[:-1])), counts)
+    tx = xi0[owner] + local // np.maximum(ny[owner], 1)
+    ty = yi0[owner] + local % np.maximum(ny[owner], 1)
+    keep = np.ones(total, bool)
+    if exact and total:
+        sel = np.flatnonzero(counts[owner] > 1)
+        if len(sel):
+            # refine candidates against the tile boxes in-batch
+            tb = W.boxes_batch(tx[sel] * rx, ty[sel] * ry,
+                               (tx[sel] + 1) * rx, (ty[sel] + 1) * ry)
+            keep[sel] = G.pairs_intersect(batch, tb, rows[owner[sel]],
+                                          np.arange(len(sel)))
+    tiles, inv = np.unique(np.stack([tx[keep], ty[keep]]), axis=1,
+                           return_inverse=True)
+    names = np.array([f"{x * rx}-{y * ry}" for x, y in tiles.T],
+                     dtype=object)
+    return owner[keep], names, inv.reshape(-1)
+
+
+def _is_cached(df: DataFrame) -> bool:
+    level = df.storageLevel
+    return level.useMemory or level.useDisk or level.useOffHeap
+
+
 def assign_tiles(df: DataFrame, *, bbox: tuple, splits: int,
                  geom_col: str = "geometry", id_col: str = "doc_id",
                  exact: bool = True, keep: tuple = ()) -> DataFrame:
@@ -127,7 +192,16 @@ def assign_tiles(df: DataFrame, *, bbox: tuple, splits: int,
     ('exact' cover mode); ``exact=True`` refines candidates with the
     exact intersects kernel against the tile box (only needed for
     non-rectangular geometries spanning multiple tiles; points are
-    exact already).
+    exact already). :func:`tile_cover` is the rule.
+
+    Over the frame that the broadcast route of
+    :func:`~cdap_geo_spark.operators.sjoin.sjoin_pairs` returned with
+    ``dedup=False`` and ``keep_left_geom=True`` — that object itself,
+    not cached, with ``id_col`` its left id and ``keep`` at most its
+    right id — the tiles are assigned inside the join's own pass over
+    the left side: one Python node, each matched left row tiled once,
+    and the left geometry never leaves it. Any other frame gets a
+    ``mapInPandas`` pass of its own. Both give the same rows.
     """
     x0, y0, x1, y1 = (float(v) for v in bbox)
     dx = (x1 - x0) / splits
@@ -135,11 +209,7 @@ def assign_tiles(df: DataFrame, *, bbox: tuple, splits: int,
     if not (float(dx).is_integer() and float(dy).is_integer()
             and float(x0).is_integer() and float(y0).is_integer()):
         raise ValueError("regular-grid fast path needs integral tile frame")
-    rx, ry = int(dx), int(dy)
-    lx0, ly0, lx1, ly1 = int(x0), int(y0), int(x1), int(y1)
-
-    from cdap_geo_spark.core import geom as G, wkb as W
-
+    grid = (x0, y0, x1, y1, int(dx), int(dy))
     keep = [c for c in keep if c != id_col]
     src = df.select(F.col(id_col), *[F.col(c) for c in keep],
                     F.col(geom_col))
@@ -147,55 +217,24 @@ def assign_tiles(df: DataFrame, *, bbox: tuple, splits: int,
                               + [src.schema[c] for c in keep]
                               + [T.StructField("tile_id", T.StringType())])
 
+    joined = vars(df).get("_broadcast_pass")
+    if (joined is not None and geom_col == "geometry"
+            and id_col == joined.left_id
+            and set(keep) <= {joined.right_id} and not _is_cached(df)):
+        return joined.with_tiles(
+            lambda batch, rows: tile_cover(batch, rows, grid, exact),
+            out_schema)
+
     def gen(batches):
         for pdf in batches:
             blobs = [None if v is None else bytes(v) for v in pdf[geom_col]]
             batch = W.parse_wkb(blobs)
-            b = batch.bounds()
-            # candidate tiles: floor-arithmetic cover of the bbox
-            with np.errstate(invalid="ignore"):
-                xi0 = np.floor(b[:, 0] / rx).astype(np.float64)
-                yi0 = np.floor(b[:, 1] / ry).astype(np.float64)
-                xi1 = np.floor(b[:, 2] / rx).astype(np.float64)
-                yi1 = np.floor(b[:, 3] / ry).astype(np.float64)
-            # a bbox strictly outside the frame (the sjoin bbox
-            # prefilter's test) intersects no tile; clamping it would
-            # invent an edge tile. Frame-edge touches keep theirs.
-            outside = ((b[:, 0] > x1) | (b[:, 1] > y1)
-                       | (b[:, 2] < x0) | (b[:, 3] < y0))
-            bad = np.isnan(b[:, 0]) | outside
-            xi0 = np.clip(np.nan_to_num(xi0), lx0 // rx, lx1 // rx - 1).astype(np.int64)
-            yi0 = np.clip(np.nan_to_num(yi0), ly0 // ry, ly1 // ry - 1).astype(np.int64)
-            xi1 = np.clip(np.nan_to_num(xi1), lx0 // rx, lx1 // rx - 1).astype(np.int64)
-            yi1 = np.clip(np.nan_to_num(yi1), ly0 // ry, ly1 // ry - 1).astype(np.int64)
-            nx = np.where(bad, 0, xi1 - xi0 + 1)
-            ny = np.where(bad, 0, yi1 - yi0 + 1)
-            counts = nx * ny
-            owner = np.repeat(np.arange(len(pdf)), counts)
-            total = int(counts.sum())
-            local = np.arange(total) - np.repeat(
-                np.concatenate(([0], np.cumsum(counts)[:-1])), counts)
-            tx = xi0[owner] + local // np.maximum(ny[owner], 1)
-            ty = yi0[owner] + local % np.maximum(ny[owner], 1)
-            keep_mask = np.ones(total, bool)
-            if exact and total:
-                multi = counts[owner] > 1
-                sel = np.flatnonzero(multi)
-                if len(sel):
-                    # refine candidates against the tile boxes in-batch
-                    tb = W.boxes_batch(tx[sel] * rx, ty[sel] * ry,
-                                       (tx[sel] + 1) * rx, (ty[sel] + 1) * ry)
-                    keep_mask[sel] = G.pairs_intersect(
-                        batch, tb, owner[sel], np.arange(len(sel)))
-            # one name per distinct tile, gathered per row
-            tiles, inv = np.unique(np.stack([tx[keep_mask], ty[keep_mask]]),
-                                   axis=1, return_inverse=True)
-            names = np.array([f"{x * rx}-{y * ry}" for x, y in tiles.T],
-                             dtype=object)
-            data = {id_col: pdf[id_col].to_numpy()[owner[keep_mask]]}
+            owner, names, inv = tile_cover(batch, np.arange(len(pdf)), grid,
+                                           exact)
+            data = {id_col: pdf[id_col].to_numpy()[owner]}
             for c in keep:
-                data[c] = pdf[c].to_numpy()[owner[keep_mask]]
-            data["tile_id"] = names[inv.reshape(-1)]
+                data[c] = pdf[c].to_numpy()[owner]
+            data["tile_id"] = names[inv]
             yield pd.DataFrame(data)
 
     return src.mapInPandas(gen, schema=out_schema)

@@ -11,7 +11,8 @@ commit protocol:
 * output is written to ``<root>/<name>/data`` parquet, then the
   manifest ``<root>/<name>/manifest.json`` is written LAST (the commit
   point — a crash before it leaves no manifest, so the stage re-runs;
-  after it, re-runs are no-ops);
+  after it, re-runs are no-ops). A re-run that rebuilds a committed
+  stage removes its manifest before the overwrite deletes the data;
 * per-partition metrics (rows, bytes per output file) come from the
   parquet footers — no second scan of the data;
 * fingerprints chain: a stage's fingerprint hashes its params + its
@@ -96,6 +97,10 @@ class Manifest:
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(partition_by)
+        # the overwrite deletes the committed data first: uncommit it,
+        # so a write that fails part-way cannot be resumed as committed
+        if info is not None:
+            os.remove(mpath)
         with job_label(self.spark, f"manifest.write[{name}]"):
             writer.parquet(data_dir)
         files = self._collect_metrics(data_dir)

@@ -4,6 +4,7 @@ stages; upstream fingerprint change invalidates; metrics recorded."""
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from cdap_geo_spark import fixtures
@@ -54,6 +55,26 @@ def test_crash_before_commit_reruns(spark, tmp_path):
     r = man.run_stage("s3", fp, lambda: spark.range(5))
     assert not r.skipped  # no manifest → stage re-ran idempotently
     assert man.read("s3").count() == 5
+
+
+def test_failed_rebuild_uncommits_the_stage(spark, tmp_path):
+    """Commit fingerprint A; a rebuild with fingerprint B fails part-way
+    through its overwrite; a run with A again must rebuild the stage,
+    not report the deleted data as committed."""
+    man = Manifest(spark, str(tmp_path))
+    fa, fb = fingerprint("a"), fingerprint("b")
+    assert not man.run_stage("s", fa, lambda: spark.range(100)).skipped
+
+    def failing():
+        return spark.range(0, 100, 1, 4).select(
+            F.when(F.col("id") == 90, F.raise_error(F.lit("injected crash")))
+            .otherwise(F.col("id")).alias("id"))
+    with pytest.raises(Exception, match="injected crash"):
+        man.run_stage("s", fb, failing)
+    assert man.stage_info("s") is None
+    again = man.run_stage("s", fa, lambda: spark.range(100))
+    assert not again.skipped and again.rows == 100
+    assert man.read("s").count() == 100
 
 
 def test_ingest_clusters_and_resumes(spark, tmp_path):

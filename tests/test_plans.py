@@ -58,6 +58,32 @@ def test_sjoin_broadcast_plan(spark, tmp_path):
     assert plan.count("Exchange hashpartitioning") <= 1, plan
 
 
+def _python_nodes(df) -> list:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [ln for ln in plan.splitlines()
+            if any(f"- {p} " in ln or ln.startswith(p + " ")
+                   for p in _PYTHON_NODES)]
+
+
+def test_sjoin_tile_pipeline_has_one_python_node(spark, tmp_path):
+    """The headline sjoin_pairs -> assign_tiles -> dropDuplicates runs
+    one Python node: the tiles are assigned inside the broadcast join's
+    pass over the docs, which emits no geometry. A copy of the pairs
+    frame (``select('*')``) keeps the tiles' own node."""
+    dd, rr = _parquet_world(spark, tmp_path)
+    pairs = sjoin_pairs(dd, rr, left_id="doc_id", right_id="region_id",
+                        level=7, dedup=False, keep_left_geom=True)
+
+    def headline(p):
+        return assign_tiles(p, bbox=(0, 0, 700_000, 1_300_000), splits=10,
+                            keep=("region_id",)).dropDuplicates(
+            ["doc_id", "region_id", "tile_id"])
+    nodes = _python_nodes(headline(pairs))
+    assert len(nodes) == 1 and "MapInArrow" in nodes[0], nodes
+    assert "region_id" in nodes[0] and "tile_id" in nodes[0], nodes
+    assert len(_python_nodes(headline(pairs.select("*")))) == 2
+
+
 def _job_names(spark, fn):
     """(fn(), the names of the Spark jobs fn ran, in start order)."""
     sc = spark.sparkContext

@@ -251,6 +251,43 @@ def test_box_pairs_native_matches_wkb_bbox_path(spark):
         assert got == want
 
 
+def test_box_pairs_native_negative_coordinates_match_brute_force(spark):
+    """Negative and zero-straddling boxes: CAST ... DIV truncates toward
+    zero, so the cells around the origin are wider and packed keys can
+    collide, but overlapping boxes still share a cell and the exact
+    bbox test drops every extra candidate."""
+    from pyspark.sql import functions as F
+    from cdap_geo_spark.operators.sjoin import box_pairs_native
+
+    rng = np.random.RandomState(5)
+    n = 250
+    x0 = rng.randint(-400_000, 400_000, n).astype(float)
+    y0 = rng.randint(-400_000, 400_000, n).astype(float)
+    w = rng.randint(0, 80_000, n).astype(float)
+    h = rng.randint(0, 80_000, n).astype(float)
+    rows = [(i, float(x0[i]), float(y0[i]), float(x0[i] + w[i]),
+             float(y0[i] + h[i])) for i in range(n)]
+    rows += [(1000, -2_000.0, -2_000.0, -1_000.0, -1_000.0),  # touches 1001
+             (1001, -1_000.0, -1_500.0, 500.0, -900.0),
+             (1002, -30_000.5, 10.0, -29_999.5, 20.0),        # tiny, x < 0
+             (1003, -30_000.0, 15.0, -30_000.0, 15.0)]       # a point in it
+    arr = np.array([r[1:] for r in rows])
+    ids = [r[0] for r in rows]
+    hit = ~((arr[:, None, 0] > arr[None, :, 2])
+            | (arr[:, None, 1] > arr[None, :, 3])
+            | (arr[:, None, 2] < arr[None, :, 0])
+            | (arr[:, None, 3] < arr[None, :, 1]))
+    want = {(ids[a], ids[b]) for a, b in zip(*np.nonzero(hit))}
+    assert {(1000, 1001), (1002, 1003)} <= want
+    b = spark.createDataFrame(
+        rows, "id long, minx double, miny double, maxx double, maxy double")
+    for lv in (6, 7, 8):
+        got = {(r["a"], r["b"]) for r in box_pairs_native(
+            b.withColumnRenamed("id", "a"), b.withColumnRenamed("id", "b"),
+            left_id="a", right_id="b", level=lv).collect()}
+        assert got == want, lv
+
+
 # ---------------------------------------------------------------------------
 # broadcast route vs shuffle route
 # ---------------------------------------------------------------------------
@@ -452,3 +489,31 @@ def test_broadcast_empty_right_side_keeps_schema(spark, edge_world,
     slow = sjoin_pairs(docs, empty, broadcast=False, salt=1, **args)
     assert fast.schema.simpleString() == slow.schema.simpleString()
     assert fast.count() == 0 == slow.count()
+
+
+def _multipoint(*xy):
+    return struct.pack("<BII", 1, 4, len(xy)) + b"".join(
+        struct.pack("<BIdd", 1, 1, x, y) for x, y in xy)
+
+
+@pytest.mark.parametrize("broadcast", [True, False],
+                         ids=["broadcast", "shuffle"])
+def test_multipoint_pairs_with_a_region_near_any_part(spark, no_broadcast,
+                                                      broadcast):
+    """A MultiPoint is covered on every part, not only at its bbox's
+    min corner: (0 0, 500000 500000) meets a region around its second
+    point, on both routes and for every predicate."""
+    docs = spark.createDataFrame(
+        [(1, _multipoint((0, 0), (500_000, 500_000))),
+         (2, _multipoint((499_500, 499_500), (499_600, 499_600))),
+         (3, _multipoint((0, 0), (100, 100)))],
+        "doc_id long, geometry binary")
+    regions = spark.createDataFrame(
+        [(10, _box(499_000, 499_000, 501_000, 501_000))],
+        "region_id long, geometry binary")
+    for predicate, kw in (("intersects", {}), ("bbox", {}),
+                          ("distance", {"distance": 10.0})):
+        got = {tuple(r) for r in sjoin_pairs(
+            docs, regions, level=7, predicate=predicate,
+            broadcast=broadcast, salt=1, **kw).collect()}
+        assert got == {(1, 10), (2, 10)}, predicate

@@ -316,3 +316,102 @@ def test_adaptive_tiles_validates(spark):
         adaptive_tiles(df, max_per_tile=0)
     with _pt.raises(ValueError):
         adaptive_tiles(df, max_per_tile=5, min_level=10, max_level=9)
+
+
+# ---------------------------------------------------------------------------
+# tiles assigned inside the broadcast sjoin pass vs the tiles' own pass
+# ---------------------------------------------------------------------------
+
+#: a frame around the sjoin edge set, cut into 250 km tiles
+_EDGE_FRAME, _EDGE_SPLITS = (-1_000_000, -1_000_000, 1_000_000, 1_000_000), 8
+
+
+def _tile_edge_world():
+    """The sjoin edge set plus tile edges: a line through three of its
+    four candidate tiles, the L as a doc (nine candidates, eight hit),
+    and a point on the frame's far corner inside a region."""
+    from test_sjoin import _EDGE_DOCS, _EDGE_REGIONS, _L_POLY, _box, _line, _pt
+    docs = _EDGE_DOCS + [
+        (20, _line((120_000, 120_000), (480_000, 280_000))),
+        (21, _L_POLY),
+        (22, _pt(1_000_000, 1_000_000)),
+    ]
+    regions = _EDGE_REGIONS + [(108, _box(990_000, 990_000, 1_000_000,
+                                          1_000_000))]
+    return docs, regions
+
+
+def _half_open_tiles(docs, tiles_by_doc):
+    """Drop the tiles a geometry only touches from their far side: a
+    tile owns its west and south edges, not its east and north ones,
+    except on the frame's east and north edges."""
+    import re
+    bounds = dict(zip([d for d, _ in docs],
+                      W.parse_wkb([g for _, g in docs]).bounds()))
+    x1, y1 = _EDGE_FRAME[2], _EDGE_FRAME[3]
+    rx = (_EDGE_FRAME[2] - _EDGE_FRAME[0]) // _EDGE_SPLITS
+    ry = (_EDGE_FRAME[3] - _EDGE_FRAME[1]) // _EDGE_SPLITS
+    out = {}
+    for d, tiles in tiles_by_doc.items():
+        b = bounds[d]
+        for t in tiles:
+            tx, ty = map(int, re.fullmatch(r"(-?\d+)-(-?\d+)", t).groups())
+            if ((b[0] == tx + rx and tx + rx != x1)
+                    or (b[1] == ty + ry and ty + ry != y1)):
+                continue
+            out.setdefault(d, set()).add(t)
+    return out
+
+
+@pytest.mark.parametrize("keep", [("region_id",), ()],
+                         ids=["keep_region", "no_keep"])
+def test_tiles_in_the_sjoin_pass_match_both_references(spark, no_broadcast,
+                                                       keep):
+    """assign_tiles over the broadcast sjoin frame (one pass) returns the
+    rows of assign_tiles over a copy of that frame (its own pass), row
+    for row, and the pairs of the shuffle sjoin times the tiles the
+    generic sjoin finds against the split_grid table."""
+    from collections import Counter
+    docs_rows, region_rows = _tile_edge_world()
+    docs = spark.createDataFrame(docs_rows, "doc_id long, geometry binary") \
+        .repartition(3)
+    regions = spark.createDataFrame(region_rows,
+                                    "region_id long, geometry binary")
+    pairs = sjoin_pairs(docs, regions, level=7, broadcast=True, dedup=False,
+                        keep_left_geom=True)
+    args = dict(bbox=_EDGE_FRAME, splits=_EDGE_SPLITS, keep=keep)
+    fused = assign_tiles(pairs, **args)
+    own = assign_tiles(pairs.select("*"), **args)
+    assert fused.schema == own.schema
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in plan(fused)  # tiled in the sjoin pass
+    assert "MapInPandas" in plan(own)
+    got = Counter(map(tuple, fused.collect()))
+    assert got == Counter(map(tuple, own.collect()))
+
+    matched = {tuple(r) for r in sjoin_pairs(
+        docs, regions, level=7, broadcast=False, salt=1).collect()}
+    tiles_by_doc = {}
+    for r in sjoin_pairs(docs, split_grid(spark, _EDGE_FRAME, _EDGE_SPLITS),
+                         right_id="tile_id", level=7, broadcast=False,
+                         salt=1).collect():
+        tiles_by_doc.setdefault(r.doc_id, set()).add(r.tile_id)
+    tiles_by_doc = _half_open_tiles(docs_rows, tiles_by_doc)
+    want = {(d, r, t) for d, r in matched for t in tiles_by_doc.get(d, ())}
+    if not keep:
+        want = {(d, t) for d, _, t in want}
+    assert set(got) == want
+    # the cases are there: multi-tile refines, tile and frame edges,
+    # matched docs outside the frame, repeated and null ids
+    assert tiles_by_doc[20] == {"0-0", "250000-0", "250000-250000"}
+    assert len(tiles_by_doc[21]) == 8
+    assert "500000-500000" not in tiles_by_doc[21]
+    assert tiles_by_doc[8] == {"-500000--500000"}
+    assert tiles_by_doc[2] == {"0-0"}
+    assert tiles_by_doc[22] == {"750000-750000"}
+    assert {(10, 102), (11, 103), (18, 101)} <= matched
+    assert not {10, 11, 18} & set(tiles_by_doc)
+    assert got[(1, 100, "0-0") if keep else (1, "0-0")] > 1
+    assert any(k[0] is None for k in got)
