@@ -342,7 +342,7 @@ def bbox(column, resolutions=(100_000, 100_000),
     via the compat grid cover)."""
     from cdap_geo_spark.operators.tiles import grid_cover_udf
     b = udfs.st_bounds()(F.col(column) if isinstance(column, str) else column)
-    cov = grid_cover_udf(resolutions, limits, compat="reference")
+    cov = grid_cover_udf(resolutions, limits)
     return cov(b["minx"], b["miny"], b["maxx"], b["maxy"])
 
 

@@ -33,7 +33,12 @@ from __future__ import annotations
 import numpy as np
 
 from cdap_geo_spark.core import geom as G
-from cdap_geo_spark.core.wkb import GeomBatch, KIND_MULTIPOINT, KIND_POINT
+from cdap_geo_spark.core.wkb import (
+    GeomBatch,
+    KIND_MULTIPOINT,
+    KIND_POINT,
+    _expand_ranges,
+)
 
 LEVEL_SHIFT = 58
 MORTON_MASK = (1 << LEVEL_SHIFT) - 1
@@ -312,37 +317,6 @@ def cover_batch(batch: GeomBatch, level: int, how: str = "bbox",
     return new_off, cells[keep], inside[keep]
 
 
-def _is_axis_rect(batch: GeomBatch, bounds: np.ndarray) -> np.ndarray:
-    """(n,) True for single-part single-ring 5-point axis-aligned
-    rectangles — the dominant polygon class (region boxes, tiles) that
-    gets the fully-vectorized cover refinement."""
-    n = len(batch)
-    out = np.zeros(n, bool)
-    from cdap_geo_spark.core.wkb import KIND_POLYGON
-    one_part = (batch.geom_part_off[1:] - batch.geom_part_off[:-1]) == 1
-    cand = np.flatnonzero(one_part & batch.valid &
-                          (batch.kinds == np.uint8(KIND_POLYGON)))
-    if len(cand) == 0:
-        return out
-    p = batch.geom_part_off[cand]
-    one_ring = (batch.part_ring_off[p + 1] - batch.part_ring_off[p]) == 1
-    cand = cand[one_ring]
-    if len(cand) == 0:
-        return out
-    r = batch.part_ring_off[batch.geom_part_off[cand]]
-    five = (batch.ring_coord_off[r + 1] - batch.ring_coord_off[r]) == 5
-    cand = cand[five]
-    for g in cand:  # vectorize-enough: only the final structural check
-        s = batch.ring_coord_off[batch.part_ring_off[batch.geom_part_off[g]]]
-        c = batch.coords[s:s + 5]
-        xs, ys = c[:, 0], c[:, 1]
-        if (np.all((xs == bounds[g, 0]) | (xs == bounds[g, 2])) and
-                np.all((ys == bounds[g, 1]) | (ys == bounds[g, 3])) and
-                np.all(c[0] == c[4])):
-            out[g] = True
-    return out
-
-
 def _refine_cover(batch: GeomBatch, offsets: np.ndarray, cells: np.ndarray,
                   how: str, is_pt: np.ndarray, bounds: np.ndarray):
     """Vectorized exact-cover refinement.
@@ -371,7 +345,7 @@ def _refine_cover(batch: GeomBatch, offsets: np.ndarray, cells: np.ndarray,
     cmaxy[yi == top] = np.inf
 
     # ---- axis-aligned rectangles: pure arithmetic ----------------------
-    is_rect = _is_axis_rect(batch, bounds) & todo
+    is_rect = G.is_axis_rect(batch, bounds) & todo
     rp = is_rect[owner]
     if rp.any():
         g = owner[rp]
@@ -382,93 +356,46 @@ def _refine_cover(batch: GeomBatch, offsets: np.ndarray, cells: np.ndarray,
                           (cminy[rp] > bounds[g, 1]) & (cmaxy[rp] < bounds[g, 3]))
         todo = todo & ~is_rect
 
-    gp = todo[owner]
-    if not gp.any():
+    pair_idx = np.flatnonzero(todo[owner])
+    if len(pair_idx) == 0:
         return keep, inside
 
-    # ---- general geometries: flat SAT edge test + grouped corner PIP --
-    pair_idx = np.flatnonzero(gp)
+    # ---- general geometries: flat SAT edge test + flat corner PIP -----
     pg = owner[pair_idx]
+    bx0, by0 = cminx[pair_idx], cminy[pair_idx]
+    bx1, by1 = cmaxx[pair_idx], cmaxy[pair_idx]
+    table = G.edge_table(batch)
+    e_x0, e_y0, e_x1, e_y1, _, edge_off = table
 
-    # global edge table (x0,y0,x1,y1, geom) for the geometries involved
-    need = np.unique(pg)
-    e_x0, e_y0, e_x1, e_y1, e_geom, edge_off = _edge_table(batch, need)
-    # map geom id -> position in `need`
-    pos = np.full(len(batch), -1, np.int64)
-    pos[need] = np.arange(len(need))
-    ppos = pos[pg]
-
-    # expand (pair, edge) rows
-    starts = edge_off[ppos]
-    stops = edge_off[ppos + 1]
-    from cdap_geo_spark.core.wkb import _expand_ranges
+    # expand (cell, edge) rows
+    starts = edge_off[pg]
+    stops = edge_off[pg + 1]
     eidx = _expand_ranges(starts, stops)
     pown = np.repeat(np.arange(len(pair_idx)), stops - starts)
+    x0, y0, x1, y1 = e_x0[eidx], e_y0[eidx], e_x1[eidx], e_y1[eidx]
+    bx0e, by0e, bx1e, by1e = bx0[pown], by0[pown], bx1[pown], by1[pown]
+    # SAT: bbox overlap AND NOT all-4-corners strictly one side
+    bbox_ok = (np.minimum(x0, x1) <= bx1e) & (np.maximum(x0, x1) >= bx0e) & \
+              (np.minimum(y0, y1) <= by1e) & (np.maximum(y0, y1) >= by0e)
+    dx, dy = x1 - x0, y1 - y0
+    s1 = dx * (by0e - y0) - dy * (bx0e - x0)
+    s2 = dx * (by0e - y0) - dy * (bx1e - x0)
+    s3 = dx * (by1e - y0) - dy * (bx0e - x0)
+    s4 = dx * (by1e - y0) - dy * (bx1e - x0)
+    all_pos = (s1 > 0) & (s2 > 0) & (s3 > 0) & (s4 > 0)
+    all_neg = (s1 < 0) & (s2 < 0) & (s3 < 0) & (s4 < 0)
+    crossed = np.zeros(len(pair_idx), bool)
+    crossed[pown[bbox_ok & ~(all_pos | all_neg)]] = True
 
-    hit = np.zeros(len(pair_idx), bool)
-    if len(eidx):
-        bx0 = cminx[pair_idx][pown]
-        by0 = cminy[pair_idx][pown]
-        bx1 = cmaxx[pair_idx][pown]
-        by1 = cmaxy[pair_idx][pown]
-        x0, y0, x1, y1 = e_x0[eidx], e_y0[eidx], e_x1[eidx], e_y1[eidx]
-        # SAT: bbox overlap AND NOT all-4-corners strictly one side
-        bbox_ok = (np.minimum(x0, x1) <= bx1) & (np.maximum(x0, x1) >= bx0) & \
-                  (np.minimum(y0, y1) <= by1) & (np.maximum(y0, y1) >= by0)
-        dx, dy = x1 - x0, y1 - y0
-        s1 = dx * (by0 - y0) - dy * (bx0 - x0)
-        s2 = dx * (by0 - y0) - dy * (bx1 - x0)
-        s3 = dx * (by1 - y0) - dy * (bx0 - x0)
-        s4 = dx * (by1 - y0) - dy * (bx1 - x0)
-        all_pos = (s1 > 0) & (s2 > 0) & (s3 > 0) & (s4 > 0)
-        all_neg = (s1 < 0) & (s2 < 0) & (s3 < 0) & (s4 < 0)
-        edge_hit = bbox_ok & ~(all_pos | all_neg)
-        np.logical_or.at(hit, pown, edge_hit)
-        crossed = hit.copy()
-    else:
-        crossed = np.zeros(len(pair_idx), bool)
-
-    # corner-in-polygon per geometry (covers cells wholly inside; also
-    # the 'marked' containment flag)
-    corners_in = np.zeros(len(pair_idx), bool)
-    group_starts = np.flatnonzero(np.concatenate(([True], pg[1:] != pg[:-1])))
-    group_stops = np.concatenate((group_starts[1:], [len(pg)]))
-    for gs, ge in zip(group_starts, group_stops):
-        g = int(pg[gs])
-        rings = G._geom_polygon_rings(batch, g)
-        if not rings:
-            continue
-        sel = pair_idx[gs:ge]
-        px = np.concatenate([cminx[sel], cmaxx[sel], cminx[sel], cmaxx[sel]])
-        py = np.concatenate([cminy[sel], cminy[sel], cmaxy[sel], cmaxy[sel]])
-        res = G.points_in_rings(px, py, rings).reshape(4, ge - gs)
-        hit[gs:ge] |= res.any(axis=0)
-        corners_in[gs:ge] = res.all(axis=0)
-
-    keep[pair_idx] = hit
+    # corner-in-polygon (covers cells wholly inside; also the 'marked'
+    # containment flag): the four corners of every cell in one call
+    corners = G.points_in_geoms(np.concatenate([bx0, bx1, bx0, bx1]),
+                                np.concatenate([by0, by0, by1, by1]),
+                                table, np.tile(pg, 4)).reshape(4, -1)
+    keep[pair_idx] = crossed | corners.any(axis=0)
     if how == "marked":
-        inside[pair_idx] = corners_in & ~crossed
+        inside[pair_idx] = corners.all(axis=0) & ~crossed
     return keep, inside
-
-
-def _edge_table(batch: GeomBatch, gids: np.ndarray):
-    """Flat edge arrays for the given geometries + CSR offsets."""
-    xs0, ys0, xs1, ys1, owner = [], [], [], [], []
-    counts = np.zeros(len(gids), np.int64)
-    for i, g in enumerate(gids):
-        e = G._geom_edges(batch, int(g))
-        counts[i] = len(e)
-        if len(e):
-            xs0.append(e[:, 0])
-            ys0.append(e[:, 1])
-            xs1.append(e[:, 2])
-            ys1.append(e[:, 3])
-    off = np.zeros(len(gids) + 1, np.int64)
-    np.cumsum(counts, out=off[1:])
-    if xs0:
-        return (np.concatenate(xs0), np.concatenate(ys0),
-                np.concatenate(xs1), np.concatenate(ys1), None, off)
-    return (np.zeros(0), np.zeros(0), np.zeros(0), np.zeros(0), None, off)
 
 
 def _boxes_cross_edges(minx, miny, maxx, maxy, edges) -> np.ndarray:

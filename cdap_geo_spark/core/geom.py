@@ -10,10 +10,11 @@ Semantics pinned to the reference's shapely usage:
 
 All pair predicates are batch kernels: they take a GeomBatch per side
 plus (li, ri) index arrays naming candidate pairs, and return a bool /
-float array per pair. Inside a batch, work is grouped by the heavier
-geometry so each polygon's edge table is assembled once and tested
-against many partners at once (the NumPy analogue of shapely's
-prepared geometries, cf. ``cdap_geo/_indexing.py:253-254``).
+float array per pair. ``intersects`` and ``distance`` build each
+side's edges once per batch as a flat CSR table (:func:`edge_table`),
+expand every pair into (element, element) rows — edge x edge, probe
+point x edge, vertex x edge — evaluate them in one vectorized pass
+per chunk and reduce per pair, with no Python loop over geometries.
 """
 
 from __future__ import annotations
@@ -22,15 +23,16 @@ import numpy as np
 
 from cdap_geo_spark.core.wkb import (
     GeomBatch,
-    KIND_LINESTRING,
-    KIND_MULTILINESTRING,
-    KIND_MULTIPOINT,
-    KIND_MULTIPOLYGON,
     KIND_POINT,
     KIND_POLYGON,
+    _expand_ranges,
 )
 
 _EPS = 1e-9
+#: farther than this from a segment's bbox, no point is on the segment
+#: under the eps rule of :func:`_on_segment` (its reach is at most
+#: sqrt(2) * max(eps, eps / length), and length > eps)
+_NEAR = 2.0
 
 
 # ---------------------------------------------------------------------------
@@ -183,7 +185,7 @@ def vertex_counts(batch: GeomBatch) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# Ring extraction helpers (grouped kernels below)
+# Ring extraction helpers (per-geometry; centroid and the region ops)
 # ---------------------------------------------------------------------------
 
 def _geom_ring_range(batch: GeomBatch, g: int):
@@ -230,13 +232,8 @@ def _geom_polygon_rings(batch: GeomBatch, g: int):
     return rings
 
 
-def _has_polygon(batch: GeomBatch, g: int) -> bool:
-    p0, p1 = batch.geom_part_off[g], batch.geom_part_off[g + 1]
-    return bool(np.any(batch.part_kind[p0:p1] == KIND_POLYGON))
-
-
 # ---------------------------------------------------------------------------
-# Point-in-polygon (vectorized: many points vs one polygon's rings)
+# Point and segment rules (elementwise, broadcasting)
 # ---------------------------------------------------------------------------
 
 def points_in_rings(px: np.ndarray, py: np.ndarray, rings) -> np.ndarray:
@@ -266,11 +263,11 @@ def points_in_rings(px: np.ndarray, py: np.ndarray, rings) -> np.ndarray:
     return inside | boundary
 
 
-def _points_on_segments(px, py, x0, y0, x1, y1) -> np.ndarray:
-    """(k,) True if point lies on any of the (E,) segments (within eps)."""
-    PX, PY = px[:, None], py[:, None]
-    dx, dy = (x1 - x0)[None, :], (y1 - y0)[None, :]
-    ex, ey = PX - x0[None, :], PY - y0[None, :]
+def _on_segment(px, py, x0, y0, x1, y1):
+    """Point on segment within eps; a zero-length segment counts when
+    the point equals its end (so a point part is a zero-length edge)."""
+    dx, dy = x1 - x0, y1 - y0
+    ex, ey = px - x0, py - y0
     cross = dx * ey - dy * ex
     seg_len2 = dx * dx + dy * dy
     dot = ex * dx + ey * dy
@@ -278,15 +275,18 @@ def _points_on_segments(px, py, x0, y0, x1, y1) -> np.ndarray:
     within = (dot >= -_EPS) & (dot <= seg_len2 + _EPS)
     degenerate = seg_len2 <= _EPS * _EPS
     on_pt = degenerate & (np.abs(ex) <= _EPS) & (np.abs(ey) <= _EPS)
-    return np.any((on_line & within & ~degenerate) | on_pt, axis=1)
+    return (on_line & within & ~degenerate) | on_pt
 
 
-def segments_intersect(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """(A,B) bool: segment set a (A,4) × segment set b (B,4) intersection,
-    boundary/collinear touch counts as True."""
-    ax0, ay0, ax1, ay1 = (a[:, i][:, None] for i in range(4))
-    bx0, by0, bx1, by1 = (b[:, i][None, :] for i in range(4))
+def _points_on_segments(px, py, x0, y0, x1, y1) -> np.ndarray:
+    """(k,) True if point lies on any of the (E,) segments (within eps)."""
+    return np.any(_on_segment(px[:, None], py[:, None], x0[None, :],
+                              y0[None, :], x1[None, :], y1[None, :]), axis=1)
 
+
+def _segments_cross(ax0, ay0, ax1, ay1, bx0, by0, bx1, by1):
+    """Segment a meets segment b: a proper crossing, or an end of one
+    on the other (touch and collinear overlap count)."""
     d1 = _orient(bx0, by0, bx1, by1, ax0, ay0)
     d2 = _orient(bx0, by0, bx1, by1, ax1, ay1)
     d3 = _orient(ax0, ay0, ax1, ay1, bx0, by0)
@@ -303,6 +303,13 @@ def segments_intersect(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     return proper | touch
 
 
+def segments_intersect(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """(A,B) bool: segment set a (A,4) × segment set b (B,4) intersection,
+    boundary/collinear touch counts as True."""
+    return _segments_cross(*(a[:, i][:, None] for i in range(4)),
+                           *(b[:, i][None, :] for i in range(4)))
+
+
 def _orient(x0, y0, x1, y1, px, py):
     return (x1 - x0) * (py - y0) - (y1 - y0) * (px - x0)
 
@@ -313,14 +320,13 @@ def _on_seg(x0, y0, x1, y1, px, py):
 
 
 # ---------------------------------------------------------------------------
-# Pairwise predicates over candidate pair lists
+# Flat tables and pair expansion
 # ---------------------------------------------------------------------------
 
 def is_axis_rect(batch: GeomBatch, bounds: np.ndarray | None = None) -> np.ndarray:
     """(n,) True for single-part single-ring 5-point axis-aligned
     rectangles — the dominant polygon class (boxes, tiles), which gets
     closed-form pair kernels."""
-    from cdap_geo_spark.core.wkb import KIND_POLYGON
     if bounds is None:
         bounds = batch.bounds()
     n = len(batch)
@@ -357,75 +363,86 @@ def is_axis_rect(batch: GeomBatch, bounds: np.ndarray | None = None) -> np.ndarr
     return out
 
 
-def polygon_edge_table(batch: GeomBatch):
-    """Global polygon-ring edge table, fully vectorized.
+def edge_table(batch: GeomBatch):
+    """Every geometry's edges in one flat table, fully vectorized.
 
-    Returns (x0, y0, x1, y1, geom_edge_off) where geom_edge_off is a
-    CSR (n+1,) giving each geometry's slice of edges. Only polygon
-    parts contribute (rings closed as stored); geometries without
-    polygon parts have empty slices.
+    Returns ``(x0, y0, x1, y1, ring, off)``: the edge end arrays, a
+    mask of the edges on polygon rings (the ones point-in-polygon
+    parity counts) and the (n+1,) CSR offsets of each geometry's
+    edges. Polygon rings (closed as stored) and line paths contribute
+    their consecutive vertex pairs; a point part contributes one
+    zero-length edge, so contact with it is a touch like any other.
     """
-    from cdap_geo_spark.core.wkb import KIND_POLYGON, _expand_ranges
-    n = len(batch)
-    p = len(batch.part_kind)
-    part_geom = np.repeat(np.arange(n),
-                          batch.geom_part_off[1:] - batch.geom_part_off[:-1])
-    is_poly_part = batch.part_kind == KIND_POLYGON
-    nrings = batch.part_ring_off[1:] - batch.part_ring_off[:-1]
-    ring_part = np.repeat(np.arange(p), nrings)
-    ring_is_poly = is_poly_part[ring_part] if p else np.zeros(0, bool)
-    ring_geom = part_geom[ring_part] if p else np.zeros(0, np.int64)
-    r_starts = batch.ring_coord_off[:-1]
-    r_stops = batch.ring_coord_off[1:]
-    ring_edges = np.maximum(r_stops - r_starts - 1, 0)
-    ring_edges = np.where(ring_is_poly, ring_edges, 0)
-    eidx = _expand_ranges(r_starts, r_starts + ring_edges)
-    x0 = batch.coords[eidx, 0] if len(eidx) else np.zeros(0)
-    y0 = batch.coords[eidx, 1] if len(eidx) else np.zeros(0)
-    x1 = batch.coords[eidx + 1, 0] if len(eidx) else np.zeros(0)
-    y1 = batch.coords[eidx + 1, 1] if len(eidx) else np.zeros(0)
-    counts = np.zeros(n, np.int64)
-    np.add.at(counts, ring_geom, ring_edges)
-    off = np.zeros(n + 1, np.int64)
-    np.cumsum(counts, out=off[1:])
-    return x0, y0, x1, y1, off
+    ncoord = np.diff(batch.ring_coord_off)
+    kind = np.repeat(batch.part_kind, np.diff(batch.part_ring_off))
+    point = kind == KIND_POINT
+    nedge = np.where(point, ncoord, np.maximum(ncoord - 1, 0))
+    start = batch.ring_coord_off[:-1]
+    i0 = _expand_ranges(start, start + nedge)
+    i1 = i0 + np.repeat(~point, nedge)
+    ring = np.repeat(kind == KIND_POLYGON, nedge)
+    ends = np.concatenate(([0], np.cumsum(nedge)))
+    off = ends[batch.part_ring_off[batch.geom_part_off]]
+    c = batch.coords
+    return c[i0, 0], c[i0, 1], c[i1, 0], c[i1, 1], ring, off
 
 
-def _points_in_geoms_flat(px: np.ndarray, py: np.ndarray,
-                          rb: GeomBatch, ri: np.ndarray,
-                          edge_table=None) -> np.ndarray:
-    """(m,) even-odd PIP of point i against rb[ri[i]] — flat over the
-    pair-expanded edge table, zero per-group Python."""
-    if edge_table is None:
-        edge_table = polygon_edge_table(rb)
-    ex0, ey0, ex1, ey1, off = edge_table
-    from cdap_geo_spark.core.wkb import _expand_ranges
-    starts, stops = off[ri], off[ri + 1]
-    eidx = _expand_ranges(starts, stops)
-    pown = np.repeat(np.arange(len(ri)), stops - starts)
-    out = np.zeros(len(ri), bool)
-    if len(eidx) == 0:
-        return out
-    X0, Y0 = ex0[eidx], ey0[eidx]
-    X1, Y1 = ex1[eidx], ey1[eidx]
-    PX, PY = px[pown], py[pown]
-    cond = (Y0 > PY) != (Y1 > PY)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        xint = X0 + (PY - Y0) / (Y1 - Y0) * (X1 - X0)
-    crossing = cond & (PX < xint)
-    counts = np.zeros(len(ri), np.int64)
-    np.add.at(counts, pown, crossing.astype(np.int64))
-    out = (counts % 2).astype(bool)
-    # boundary touch counts as inside
-    dx, dy = X1 - X0, Y1 - Y0
-    ex, ey = PX - X0, PY - Y0
-    cross = dx * ey - dy * ex
-    seg_len2 = dx * dx + dy * dy
-    dot = ex * dx + ey * dy
-    on = (np.abs(cross) <= _EPS * np.maximum(1.0, np.sqrt(seg_len2))) & \
-         (dot >= -_EPS) & (dot <= seg_len2 + _EPS) & (seg_len2 > _EPS * _EPS)
-    np.logical_or.at(out, pown, on)
-    return out
+#: pair-expanded rows per chunk (bounds the kernels' temporaries)
+_ROW_BUDGET = 1_000_000
+
+
+def _pair_rows(a_off, ai, b_off, bi):
+    """Pair-expanded index rows: for item k, every element ``a`` of the
+    CSR slice ``a_off[ai[k]]:a_off[ai[k] + 1]`` with every element
+    ``b`` of ``b_off[bi[k]]:b_off[bi[k] + 1]``, a-major.
+
+    Yields ``(lo, hi, k, a, b)`` for runs of items ``[lo, hi)`` of
+    about ``_ROW_BUDGET`` rows. An item is never split, so its rows
+    are contiguous in one chunk.
+    """
+    na = a_off[ai + 1] - a_off[ai]
+    nb = b_off[bi + 1] - b_off[bi]
+    ends = np.cumsum(na * nb)
+    lo, m = 0, len(ai)
+    while lo < m:
+        base = int(ends[lo - 1]) if lo else 0
+        hi = max(int(np.searchsorted(ends, base + _ROW_BUDGET, "right")),
+                 lo + 1)
+        if ends[hi - 1] > base:
+            k = np.repeat(np.arange(lo, hi), na[lo:hi])
+            a = _expand_ranges(a_off[ai[lo:hi]], a_off[ai[lo:hi] + 1])
+            reps = nb[k]
+            yield (lo, hi, np.repeat(k, reps), np.repeat(a, reps),
+                   _expand_ranges(b_off[bi[k]], b_off[bi[k] + 1]))
+        lo = hi
+
+
+def points_in_geoms(px: np.ndarray, py: np.ndarray, table,
+                    gi: np.ndarray) -> np.ndarray:
+    """(k,) point i touches geometry ``gi[i]`` of an :func:`edge_table`:
+    inside its polygon rings by even-odd parity (holes included), or on
+    any of its edges by the :func:`_points_on_segments` rule, which
+    also makes a point on a point part's zero-length edge equal to it.
+    Flat over the pair-expanded (point, edge) rows."""
+    x0, y0, x1, y1, ring, off = table
+    n = len(gi)
+    odd = np.zeros(n, bool)
+    on = np.zeros(n, bool)
+    one = np.arange(n + 1)
+    for lo, hi, k, _, e in _pair_rows(one, one[:-1], off, gi):
+        # only an edge whose y-range (widened past the eps rule's reach)
+        # holds the point can cross its ray or carry it
+        PY, Y0, Y1 = py[k], y0[e], y1[e]
+        s = np.flatnonzero((PY >= np.minimum(Y0, Y1) - _NEAR)
+                           & (PY <= np.maximum(Y0, Y1) + _NEAR))
+        k, e, PY, Y0, Y1 = k[s], e[s], PY[s], Y0[s], Y1[s]
+        PX, X0, X1 = px[k], x0[e], x1[e]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            xint = X0 + (PY - Y0) / (Y1 - Y0) * (X1 - X0)
+            crossing = ring[e] & ((Y0 > PY) != (Y1 > PY)) & (PX < xint)
+            on[k[_on_segment(PX, PY, X0, Y0, X1, Y1)]] = True
+        odd[lo:hi] = np.bincount(k[crossing] - lo, minlength=hi - lo) % 2 == 1
+    return odd | on
 
 
 def _is_single_point(batch: GeomBatch) -> np.ndarray:
@@ -434,104 +451,44 @@ def _is_single_point(batch: GeomBatch) -> np.ndarray:
     return batch.valid & (batch.kinds == KIND_POINT) & ((last - first) == 1)
 
 
-def general_edge_table(batch: GeomBatch):
-    """Like :func:`polygon_edge_table` but including LineString parts
-    (every part with >=2 coords per ring contributes its path edges)."""
-    from cdap_geo_spark.core.wkb import KIND_LINESTRING, KIND_POLYGON, \
-        _expand_ranges
-    n = len(batch)
-    p = len(batch.part_kind)
-    part_geom = np.repeat(np.arange(n),
-                          batch.geom_part_off[1:] - batch.geom_part_off[:-1])
-    edgy = (batch.part_kind == KIND_POLYGON) | \
-           (batch.part_kind == KIND_LINESTRING)
-    nrings = batch.part_ring_off[1:] - batch.part_ring_off[:-1]
-    ring_part = np.repeat(np.arange(p), nrings)
-    ring_ok = edgy[ring_part] if p else np.zeros(0, bool)
-    ring_geom = part_geom[ring_part] if p else np.zeros(0, np.int64)
-    r_starts = batch.ring_coord_off[:-1]
-    r_stops = batch.ring_coord_off[1:]
-    ring_edges = np.maximum(r_stops - r_starts - 1, 0)
-    ring_edges = np.where(ring_ok, ring_edges, 0)
-    eidx = _expand_ranges(r_starts, r_starts + ring_edges)
-    x0 = batch.coords[eidx, 0] if len(eidx) else np.zeros(0)
-    y0 = batch.coords[eidx, 1] if len(eidx) else np.zeros(0)
-    x1 = batch.coords[eidx + 1, 0] if len(eidx) else np.zeros(0)
-    y1 = batch.coords[eidx + 1, 1] if len(eidx) else np.zeros(0)
-    counts = np.zeros(n, np.int64)
-    np.add.at(counts, ring_geom, ring_edges)
-    off = np.zeros(n + 1, np.int64)
-    np.cumsum(counts, out=off[1:])
-    return x0, y0, x1, y1, off
-
+# ---------------------------------------------------------------------------
+# Pairwise predicates over candidate pair lists
+# ---------------------------------------------------------------------------
 
 def _edges_cross_flat(lt, rt, li: np.ndarray, ri: np.ndarray) -> np.ndarray:
-    """(m,) any left edge intersects any right edge per pair — flat
-    cartesian expansion per pair (chunked), exact incl. touch."""
-    lx0, ly0, lx1, ly1, loff = lt
-    rx0, ry0, rx1, ry1, roff = rt
-    m = len(li)
-    out = np.zeros(m, bool)
-    el = loff[li + 1] - loff[li]
-    er = roff[ri + 1] - roff[ri]
-    rows = el * er
-    total = int(rows.sum())
-    if total == 0:
-        return out
-    # process pairs in chunks bounded by expanded row count
-    order = np.arange(m)
-    csum = np.cumsum(rows)
-    budget = 1_000_000
-    cuts = np.searchsorted(csum, np.arange(budget, total + budget, budget))
-    chunk_starts = [0] + sorted(set(int(c) for c in cuts if 0 < c < m)) + [m]
-    for cs_i in range(len(chunk_starts) - 1):
-        sel = order[chunk_starts[cs_i]:chunk_starts[cs_i + 1]]
-        sel = sel[rows[sel] > 0]
-        if len(sel) == 0:
-            continue
-        nrows = rows[sel]
-        pown = np.repeat(np.arange(len(sel)), nrows)
-        base = np.concatenate(([0], np.cumsum(nrows)[:-1]))
-        local = np.arange(int(nrows.sum())) - base[pown]
-        le_local = local // er[sel][pown]
-        re_local = local % er[sel][pown]
-        lidx = loff[li[sel]][pown] + le_local
-        ridx = roff[ri[sel]][pown] + re_local
-        ax0, ay0, ax1, ay1 = lx0[lidx], ly0[lidx], lx1[lidx], ly1[lidx]
-        bx0, by0, bx1, by1 = rx0[ridx], ry0[ridx], rx1[ridx], ry1[ridx]
-        # bbox reject first (cheap), then orientation test
-        ok = (np.minimum(ax0, ax1) <= np.maximum(bx0, bx1) + _EPS) & \
-             (np.maximum(ax0, ax1) >= np.minimum(bx0, bx1) - _EPS) & \
-             (np.minimum(ay0, ay1) <= np.maximum(by0, by1) + _EPS) & \
-             (np.maximum(ay0, ay1) >= np.minimum(by0, by1) - _EPS)
-        hit = np.zeros(len(ok), bool)
-        if ok.any():
-            s = np.flatnonzero(ok)
-            d1 = _orient(bx0[s], by0[s], bx1[s], by1[s], ax0[s], ay0[s])
-            d2 = _orient(bx0[s], by0[s], bx1[s], by1[s], ax1[s], ay1[s])
-            d3 = _orient(ax0[s], ay0[s], ax1[s], ay1[s], bx0[s], by0[s])
-            d4 = _orient(ax0[s], ay0[s], ax1[s], ay1[s], bx1[s], by1[s])
-            proper = (((d1 > _EPS) & (d2 < -_EPS)) | ((d1 < -_EPS) & (d2 > _EPS))) & \
-                     (((d3 > _EPS) & (d4 < -_EPS)) | ((d3 < -_EPS) & (d4 > _EPS)))
-            touch = (
-                (np.abs(d1) <= _EPS) & _on_seg(bx0[s], by0[s], bx1[s], by1[s], ax0[s], ay0[s]) |
-                (np.abs(d2) <= _EPS) & _on_seg(bx0[s], by0[s], bx1[s], by1[s], ax1[s], ay1[s]) |
-                (np.abs(d3) <= _EPS) & _on_seg(ax0[s], ay0[s], ax1[s], ay1[s], bx0[s], by0[s]) |
-                (np.abs(d4) <= _EPS) & _on_seg(ax0[s], ay0[s], ax1[s], ay1[s], bx1[s], by1[s])
-            )
-            hit[s] = proper | touch
-        np.logical_or.at(out, sel[pown], hit)
+    """(m,) some edge of table-geometry ``li[k]`` meets some edge of
+    ``ri[k]`` — over the pair-expanded (edge, edge) rows, exact incl.
+    touch, a bbox reject first."""
+    lx0, ly0, lx1, ly1, _, loff = lt
+    rx0, ry0, rx1, ry1, _, roff = rt
+    out = np.zeros(len(li), bool)
+    for _, _, k, a, b in _pair_rows(loff, li, roff, ri):
+        ax0, ay0, ax1, ay1 = lx0[a], ly0[a], lx1[a], ly1[a]
+        bx0, by0, bx1, by1 = rx0[b], ry0[b], rx1[b], ry1[b]
+        s = np.flatnonzero(
+            (np.minimum(ax0, ax1) <= np.maximum(bx0, bx1) + _EPS) &
+            (np.maximum(ax0, ax1) >= np.minimum(bx0, bx1) - _EPS) &
+            (np.minimum(ay0, ay1) <= np.maximum(by0, by1) + _EPS) &
+            (np.maximum(ay0, ay1) >= np.minimum(by0, by1) - _EPS))
+        hit = _segments_cross(ax0[s], ay0[s], ax1[s], ay1[s],
+                              bx0[s], by0[s], bx1[s], by1[s])
+        out[k[s[hit]]] = True
     return out
 
 
-def _geom_has_polygon(batch: GeomBatch) -> np.ndarray:
-    """(n,) vectorized: geometry has at least one polygon part."""
-    n = len(batch)
-    part_geom = np.repeat(np.arange(n),
-                          batch.geom_part_off[1:] - batch.geom_part_off[:-1])
-    out = np.zeros(n, bool)
-    if len(part_geom):
-        np.logical_or.at(out, part_geom, batch.part_kind == KIND_POLYGON)
+def _parts_touch(ab: GeomBatch, ai: np.ndarray, bt,
+                 bi: np.ndarray) -> np.ndarray:
+    """(m,) the first vertex of some part of ``ab[ai[k]]`` touches
+    table-geometry ``bi[k]`` (:func:`points_in_geoms`)."""
+    p0, p1 = ab.geom_part_off[ai], ab.geom_part_off[ai + 1]
+    part = _expand_ranges(p0, p1)
+    own = np.repeat(np.arange(len(ai)), p1 - p0)
+    first = ab.ring_coord_off[ab.part_ring_off[part]]
+    has = ab.ring_coord_off[ab.part_ring_off[part + 1]] > first
+    own, first = own[has], first[has]
+    out = np.zeros(len(ai), bool)
+    out[own[points_in_geoms(ab.coords[first, 0], ab.coords[first, 1],
+                            bt, bi[own])]] = True
     return out
 
 
@@ -539,24 +496,27 @@ def pairs_intersect(lb: GeomBatch, rb: GeomBatch,
                     li: np.ndarray, ri: np.ndarray) -> np.ndarray:
     """Exact ``intersects`` for candidate pairs (li[i], ri[i]).
 
-    Closed-form fast path for point x axis-rectangle pairs (the
-    dominant case: point docs vs region boxes/tiles); everything else
-    goes through the grouped vectorized kernels (one edge table per
-    distinct right geometry). Dispatch by kind:
+    A pair intersects iff an edge of one side meets an edge of the
+    other (point parts are zero-length edges), or the first vertex of
+    some part of one side touches the other side — inside its polygon
+    rings, on an edge, or equal to a point part — in either direction.
+    This is exact: a part is connected, so a part that meets no edge
+    of the partner lies wholly inside one face of it, and its first
+    vertex says which.
 
-    * point × polygon → vectorized PIP;
-    * point × point  → coordinate equality (eps);
-    * anything with edges × anything with edges → edge-pair
-      intersection test, plus containment probes both ways.
+    Selected by input kind: a single point against an axis-aligned
+    rectangle is closed form, and a single point against anything else
+    is its one probe (the dominant cases: point docs vs region boxes
+    and polygons, tiles).
     """
     m = len(li)
     out = np.zeros(m, bool)
     if m == 0:
         return out
     ok = lb.valid[li] & rb.valid[ri]
+    lpt = _is_single_point(lb)
 
     # ---- closed-form: single-point left x axis-rect right -------------
-    lpt = _is_single_point(lb)
     rrect_bounds = rb.bounds()
     rrect = is_axis_rect(rb, rrect_bounds)
     fast = ok & lpt[li] & rrect[ri]
@@ -568,292 +528,56 @@ def pairs_intersect(lb: GeomBatch, rb: GeomBatch,
             lb.geom_part_off[fl]]], 1]
         out[fast] = ((px >= rrect_bounds[fr, 0]) & (px <= rrect_bounds[fr, 2]) &
                      (py >= rrect_bounds[fr, 1]) & (py <= rrect_bounds[fr, 3]))
-
-    # ---- flat PIP: single-point left x general polygon right ----------
-    rhas_poly = _geom_has_polygon(rb)
-    flatpip = ok & ~fast & lpt[li] & rhas_poly[ri]
-    if flatpip.any():
-        fl, fr = li[flatpip], ri[flatpip]
-        cidx = lb.ring_coord_off[lb.part_ring_off[lb.geom_part_off[fl]]]
-        out[flatpip] = _points_in_geoms_flat(
-            lb.coords[cidx, 0], lb.coords[cidx, 1], rb, fr)
-
-    rest = ok & ~fast & ~flatpip
-    if not rest.any():
+    pt = ok & ~fast & lpt[li]
+    rest = ok & ~lpt[li]
+    if not (pt.any() or rest.any()):
         return out
+    rt = edge_table(rb)
 
-    # ---- flat edge-cross + containment probes for edge-bearing lefts --
-    ltab = general_edge_table(lb)
-    rtab = general_edge_table(rb)
-    l_has_edges = (ltab[4][1:] - ltab[4][:-1]) > 0
-    r_has_edges = (rtab[4][1:] - rtab[4][:-1]) > 0
-    # multipoint rights (no edges, >1 coord) need the per-point fallback
-    rfirst = rb.ring_coord_off[rb.part_ring_off[rb.geom_part_off[:-1]]]
-    rlast = rb.ring_coord_off[rb.part_ring_off[rb.geom_part_off[1:]]]
-    r_multi_pts = ~r_has_edges & ((rlast - rfirst) > 1)
-    lfirst = lb.ring_coord_off[lb.part_ring_off[lb.geom_part_off[:-1]]]
-    llast = lb.ring_coord_off[lb.part_ring_off[lb.geom_part_off[1:]]]
-    lhas_poly = _geom_has_polygon(lb)
+    # ---- single-point left: its one probe -----------------------------
+    if pt.any():
+        out[pt] = _parts_touch(lb, li[pt], rt, ri[pt])
 
-    # multi-PART geometries break the single-probe containment shortcut
-    # (one part may sit inside the partner with no edge crossings while
-    # the probed part is outside) -> exact grouped fallback for them
-    l_multi_part = (lb.geom_part_off[1:] - lb.geom_part_off[:-1]) > 1
-    r_multi_part = (rb.geom_part_off[1:] - rb.geom_part_off[:-1]) > 1
-    flatC = rest & l_has_edges[li] & ~r_multi_pts[ri] & \
-        ~l_multi_part[li] & ~r_multi_part[ri]
-    if flatC.any():
-        fl, fr = li[flatC], ri[flatC]
-        hit = _edges_cross_flat(ltab, rtab, fl, fr)
-        # left vertex inside right polygon (covers left-inside-right)
-        sub = rhas_poly[fr]
-        if sub.any():
-            hit[sub] |= _points_in_geoms_flat(
-                lb.coords[lfirst[fl[sub]], 0], lb.coords[lfirst[fl[sub]], 1],
-                rb, fr[sub])
-        # right vertex inside left polygon (covers right-inside-left)
-        sub = lhas_poly[fl] & (rlast[fr] > rfirst[fr])
-        if sub.any():
-            hit[sub] |= _points_in_geoms_flat(
-                rb.coords[rfirst[fr[sub]], 0], rb.coords[rfirst[fr[sub]], 1],
-                lb, fl[sub])
-        # point-like right on a left edge (single-point rights only here)
-        sub = ~r_has_edges[fr] & ((rlast[fr] - rfirst[fr]) == 1)
-        if sub.any():
-            hit[sub] |= _points_on_edges_flat(
-                rb.coords[rfirst[fr[sub]], 0], rb.coords[rfirst[fr[sub]], 1],
-                ltab, fl[sub])
-        out[flatC] = hit
-
-    # ---- grouped fallback: multipoint lefts / multipoint rights -------
-    rest2 = rest & ~flatC
-    if not rest2.any():
-        return out
-    idx = np.flatnonzero(rest2)
-    li_r, ri_r = li[idx], ri[idx]
-    order = np.argsort(ri_r, kind="stable")
-    li_s, ri_s = li_r[order], ri_r[order]
-    res = np.zeros(len(idx), bool)
-    group_starts = np.flatnonzero(np.concatenate(
-        ([True], ri_s[1:] != ri_s[:-1])))
-    group_stops = np.concatenate((group_starts[1:], [len(idx)]))
-    for gs, ge in zip(group_starts, group_stops):
-        r = int(ri_s[gs])
-        sel = np.arange(gs, ge)
-        res[sel] = _group_intersects(lb, li_s[sel], rb, r)
-    out[idx[order]] = res
+    # ---- everything else: edges, then part probes both ways -----------
+    if rest.any():
+        lt = edge_table(lb)
+        rl, rr = li[rest], ri[rest]
+        out[rest] = (_edges_cross_flat(lt, rt, rl, rr)
+                     | _parts_touch(lb, rl, rt, rr)
+                     | _parts_touch(rb, rr, lt, rl))
     return out
 
 
-def _points_on_edges_flat(px: np.ndarray, py: np.ndarray, table,
-                          gi: np.ndarray) -> np.ndarray:
-    """(m,) point i lies on any edge of table-geometry gi[i] — flat."""
-    from cdap_geo_spark.core.wkb import _expand_ranges
-    ex0, ey0, ex1, ey1, off = table
-    starts, stops = off[gi], off[gi + 1]
-    eidx = _expand_ranges(starts, stops)
-    pown = np.repeat(np.arange(len(gi)), stops - starts)
-    out = np.zeros(len(gi), bool)
-    if len(eidx) == 0:
-        return out
-    X0, Y0, X1, Y1 = ex0[eidx], ey0[eidx], ex1[eidx], ey1[eidx]
-    PX, PY = px[pown], py[pown]
-    dx, dy = X1 - X0, Y1 - Y0
-    ex_, ey_ = PX - X0, PY - Y0
-    cross = dx * ey_ - dy * ex_
-    seg_len2 = dx * dx + dy * dy
-    dot = ex_ * dx + ey_ * dy
-    on = (np.abs(cross) <= _EPS * np.maximum(1.0, np.sqrt(seg_len2))) & \
-         (dot >= -_EPS) & (dot <= seg_len2 + _EPS) & (seg_len2 > _EPS * _EPS)
-    np.logical_or.at(out, pown, on)
+def _vertex_edge_min(ab: GeomBatch, ai: np.ndarray, bt,
+                     bi: np.ndarray) -> np.ndarray:
+    """(m,) least distance from a vertex of ``ab[ai[k]]`` to an edge of
+    table-geometry ``bi[k]`` (inf when either has none)."""
+    x0, y0, x1, y1, _, eoff = bt
+    voff = ab.ring_coord_off[ab.part_ring_off[ab.geom_part_off]]
+    out = np.full(len(ai), np.inf)
+    for _, _, k, v, e in _pair_rows(voff, ai, eoff, bi):
+        px, py = ab.coords[v, 0], ab.coords[v, 1]
+        X0, Y0 = x0[e], y0[e]
+        dx, dy = x1[e] - X0, y1[e] - Y0
+        len2 = dx * dx + dy * dy
+        t = np.clip(((px - X0) * dx + (py - Y0) * dy)
+                    / np.where(len2 == 0, 1, len2), 0.0, 1.0)
+        d2 = (px - (X0 + t * dx)) ** 2 + (py - (Y0 + t * dy)) ** 2
+        start = np.flatnonzero(np.concatenate(([True], k[1:] != k[:-1])))
+        out[k[start]] = np.sqrt(np.minimum.reduceat(d2, start))
     return out
-
-
-_EDGE_CHUNK = 131_072  # bound the (L_edges x R_edges) matrices
-
-
-def _group_intersects(lb: GeomBatch, lids: np.ndarray,
-                      rb: GeomBatch, r: int) -> np.ndarray:
-    """intersects(lb[lids[i]], rb[r]) for all i — fully vectorized:
-    the group's left geometries are flattened into one edge/point table
-    and tested against the (single) right geometry in bulk."""
-    k = len(lids)
-    result = np.zeros(k, bool)
-    r_rings = _geom_polygon_rings(rb, r)
-    r_edges = _geom_edges(rb, r)
-    r_pts = _geom_points(rb, r)
-    r_is_poly = len(r_rings) > 0
-
-    # split left side by shape class
-    l_kinds = lb.kinds[lids]
-    is_pt = (l_kinds == KIND_POINT) | (l_kinds == KIND_MULTIPOINT)
-
-    # --- left points ---------------------------------------------------
-    if is_pt.any():
-        idx = np.flatnonzero(is_pt)
-        owners, px, py = _gather_points(lb, lids[idx])
-        if len(px):
-            if r_is_poly:
-                hit = points_in_rings(px, py, r_rings)
-            elif len(r_edges):
-                hit = _points_on_segments(px, py, r_edges[:, 0], r_edges[:, 1],
-                                          r_edges[:, 2], r_edges[:, 3])
-            elif len(r_pts):
-                hit = _points_equal_any(px, py, r_pts)
-            else:
-                hit = np.zeros(len(px), bool)
-            np.logical_or.at(result, idx[owners], hit)
-
-    # --- left geometries with edges (flat table, no per-row loop) ------
-    nonpt = np.flatnonzero(~is_pt)
-    if len(nonpt) == 0:
-        return result
-    gids = lids[nonpt]
-    ex0, ey0, ex1, ey1, eowner = _flat_edges(lb, gids)
-
-    if len(ex0) and len(r_edges):
-        # edge-pair intersection, chunked to bound memory
-        step = max(1, _EDGE_CHUNK // max(len(r_edges), 1))
-        for s in range(0, len(ex0), step):
-            e = slice(s, s + step)
-            m = segments_intersect(
-                np.column_stack([ex0[e], ey0[e], ex1[e], ey1[e]]), r_edges)
-            np.logical_or.at(result, nonpt[eowner[e]], m.any(axis=1))
-
-    if r_is_poly and len(ex0):
-        # left entirely inside right: probe each left geometry's first
-        # vertex (sound: if no edges cross, containment is all-or-none)
-        first = np.concatenate(([True], eowner[1:] != eowner[:-1]))
-        probe_owner = nonpt[eowner[first]]
-        hit = points_in_rings(ex0[first], ey0[first], r_rings)
-        np.logical_or.at(result, probe_owner, hit)
-
-    # right inside left polygons: probe right's first vertex against all
-    # left polygons at once
-    has_poly = np.array([_has_polygon(lb, int(g)) for g in gids])
-    if has_poly.any() and len(r_pts):
-        sub = nonpt[has_poly]
-        hit = _point_in_many(r_pts[0, 0], r_pts[0, 1], lb, lids[sub])
-        np.logical_or.at(result, sub, hit)
-
-    if len(r_pts) and not len(r_edges) and len(ex0):
-        # right is point-like: on-any-left-edge test, flat per owner
-        for pi in range(len(r_pts)):
-            d = _seg_point_mask(r_pts[pi, 0], r_pts[pi, 1],
-                                ex0, ey0, ex1, ey1)
-            np.logical_or.at(result, nonpt[eowner], d)
-    return result
-
-
-def _flat_edges(batch: GeomBatch, gids: np.ndarray):
-    """All edges of the given geometries: (x0,y0,x1,y1,owner) where
-    owner indexes into gids. Vectorized: edges are consecutive coord
-    pairs within rings; ring boundaries break the chain."""
-    xs0, ys0, xs1, ys1, own = [], [], [], [], []
-    for j, g in enumerate(gids):
-        e = _geom_edges(batch, int(g))
-        if len(e):
-            xs0.append(e[:, 0])
-            ys0.append(e[:, 1])
-            xs1.append(e[:, 2])
-            ys1.append(e[:, 3])
-            own.append(np.full(len(e), j, np.int64))
-    if not xs0:
-        z = np.zeros(0)
-        return z, z, z, z, np.zeros(0, np.int64)
-    return (np.concatenate(xs0), np.concatenate(ys0), np.concatenate(xs1),
-            np.concatenate(ys1), np.concatenate(own))
-
-
-def _seg_point_mask(px: float, py: float, x0, y0, x1, y1) -> np.ndarray:
-    """(E,) True where the single point lies on each segment."""
-    dx, dy = x1 - x0, y1 - y0
-    ex, ey = px - x0, py - y0
-    cross = dx * ey - dy * ex
-    seg_len2 = dx * dx + dy * dy
-    dot = ex * dx + ey * dy
-    on_line = np.abs(cross) <= _EPS * np.maximum(1.0, np.sqrt(seg_len2))
-    within = (dot >= -_EPS) & (dot <= seg_len2 + _EPS)
-    degenerate = seg_len2 <= _EPS * _EPS
-    on_pt = degenerate & (np.abs(ex) <= _EPS) & (np.abs(ey) <= _EPS)
-    return (on_line & within & ~degenerate) | on_pt
-
-
-def _point_in_many(px: float, py: float, batch: GeomBatch,
-                   gids: np.ndarray) -> np.ndarray:
-    """One point vs many polygons: even-odd crossing counts accumulated
-    per owner over the flat edge table of polygon rings only."""
-    k = len(gids)
-    out = np.zeros(k, bool)
-    xs0, ys0, xs1, ys1, own = [], [], [], [], []
-    for j, g in enumerate(gids):
-        rings = _geom_polygon_rings(batch, int(g))
-        for ring in rings:
-            xs0.append(ring[:-1, 0])
-            ys0.append(ring[:-1, 1])
-            xs1.append(ring[1:, 0])
-            ys1.append(ring[1:, 1])
-            own.append(np.full(len(ring) - 1, j, np.int64))
-    if not xs0:
-        return out
-    x0 = np.concatenate(xs0)
-    y0 = np.concatenate(ys0)
-    x1 = np.concatenate(xs1)
-    y1 = np.concatenate(ys1)
-    owner = np.concatenate(own)
-    cond = (y0 > py) != (y1 > py)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        xint = x0 + (py - y0) / (y1 - y0) * (x1 - x0)
-    crossing = cond & (px < xint)
-    counts = np.zeros(k, np.int64)
-    np.add.at(counts, owner, crossing.astype(np.int64))
-    out = (counts % 2).astype(bool)
-    boundary = _seg_point_mask(px, py, x0, y0, x1, y1)
-    np.logical_or.at(out, owner, boundary)
-    return out
-
-
-def _gather_points(batch: GeomBatch, gids: np.ndarray):
-    """All point coords of the (point-ish) geometries gids.
-
-    Returns (owners, px, py) where owners[i] indexes back into gids.
-    Fast path: single-point geometries are gathered with one fancy
-    index; only multipoints loop.
-    """
-    first = batch.ring_coord_off[batch.part_ring_off[batch.geom_part_off[gids]]]
-    last = batch.ring_coord_off[batch.part_ring_off[batch.geom_part_off[gids + 1]]]
-    ncoords = last - first
-    single = ncoords == 1
-    owners_s = np.flatnonzero(single)
-    px_s = batch.coords[first[single], 0]
-    py_s = batch.coords[first[single], 1]
-    if single.all():
-        return owners_s, px_s, py_s
-    owners, xs, ys = [owners_s], [px_s], [py_s]
-    for j in np.flatnonzero(~single):
-        pts = _geom_points(batch, int(gids[j]))
-        if len(pts):
-            owners.append(np.full(len(pts), j))
-            xs.append(pts[:, 0])
-            ys.append(pts[:, 1])
-    return (np.concatenate(owners), np.concatenate(xs), np.concatenate(ys))
-
-
-def _points_equal_any(px, py, pts) -> np.ndarray:
-    dx = np.abs(px[:, None] - pts[None, :, 0])
-    dy = np.abs(py[:, None] - pts[None, :, 1])
-    return np.any((dx <= _EPS) & (dy <= _EPS), axis=1)
 
 
 def pairs_distance(lb: GeomBatch, rb: GeomBatch,
                    li: np.ndarray, ri: np.ndarray) -> np.ndarray:
     """Exact euclidean distance per candidate pair (0 if intersecting).
 
-    Non-intersecting geometries attain their min distance at a vertex
-    of one side vs an edge (or vertex) of the other, so the kernel is
-    exact: min over (left vertices x right edges) and (right vertices
-    x left edges), vectorized per right-geometry group like
-    :func:`pairs_intersect`.
+    Two disjoint geometries are nearest at a vertex of one side and an
+    edge of the other (a point part is a zero-length edge, so two point
+    sets meet vertex to vertex). The kernel is the minimum over
+    (left vertices x right edges) and (right vertices x left edges),
+    flat over the pair-expanded rows; a single point against an
+    axis-aligned rectangle is closed form.
     """
     m = len(li)
     out = np.full(m, np.inf)
@@ -873,104 +597,18 @@ def pairs_distance(lb: GeomBatch, rb: GeomBatch,
         dx = np.maximum(np.maximum(rbounds[fr, 0] - px, px - rbounds[fr, 2]), 0)
         dy = np.maximum(np.maximum(rbounds[fr, 1] - py, py - rbounds[fr, 3]), 0)
         out[fast] = np.sqrt(dx * dx + dy * dy)
-    if fast.all():
+    sub = np.flatnonzero(okv & ~fast)
+    if len(sub) == 0:
         return out
-    sub = np.flatnonzero(~fast)
-    li, ri = li[sub], ri[sub]
-    subout = np.full(len(sub), np.inf)
-
-    inter = pairs_intersect(lb, rb, li, ri)
-    subout[inter] = 0.0
-    ok = lb.valid[li] & rb.valid[ri] & ~inter
-    order = np.argsort(ri, kind="stable")
-    group_starts = np.flatnonzero(np.concatenate(
-        ([True], ri[order][1:] != ri[order][:-1])))
-    group_stops = np.concatenate((group_starts[1:], [len(sub)]))
-    for gs, ge in zip(group_starts, group_stops):
-        sel = order[gs:ge]
-        sel = sel[ok[sel]]
-        if len(sel) == 0:
-            continue
-        r = int(ri[sel[0]])
-        lids = li[sel]
-        r_edges = _geom_edges(rb, r)
-        r_pts = _geom_points(rb, r)
-        # all left vertices with owner map
-        owners, px, py = _gather_points_all(lb, lids)
-        best = np.full(len(sel), np.inf)
-        if len(r_edges) and len(px):
-            d = _point_seg_min_per_point(px, py, r_edges)
-            np.minimum.at(best, owners, d)
-        elif len(r_pts) and len(px):
-            d2 = (px[:, None] - r_pts[None, :, 0]) ** 2 + \
-                 (py[:, None] - r_pts[None, :, 1]) ** 2
-            np.minimum.at(best, owners, np.sqrt(d2.min(axis=1)))
-        # right vertices vs left edges
-        ex0, ey0, ex1, ey1, eowner = _flat_edges(lb, lids)
-        if len(ex0) and len(r_pts):
-            for pi in range(len(r_pts)):
-                d = _point_to_segs(r_pts[pi, 0], r_pts[pi, 1],
-                                   ex0, ey0, ex1, ey1)
-                np.minimum.at(best, eowner, d)
-        subout[sel] = best
-    out[sub] = subout
+    inter = pairs_intersect(lb, rb, li[sub], ri[sub])
+    out[sub[inter]] = 0.0
+    far = sub[~inter]
+    if len(far):
+        fl, fr = li[far], ri[far]
+        lt, rt = edge_table(lb), edge_table(rb)
+        out[far] = np.minimum(_vertex_edge_min(lb, fl, rt, fr),
+                              _vertex_edge_min(rb, fr, lt, fl))
     return out
-
-
-def _gather_points_all(batch: GeomBatch, gids: np.ndarray):
-    """ALL vertices of the given geometries (any kind), with owners."""
-    first = batch.ring_coord_off[batch.part_ring_off[batch.geom_part_off[gids]]]
-    last = batch.ring_coord_off[batch.part_ring_off[batch.geom_part_off[gids + 1]]]
-    lens = last - first
-    from cdap_geo_spark.core.wkb import _expand_ranges
-    idx = _expand_ranges(first, last)
-    owners = np.repeat(np.arange(len(gids)), lens)
-    return owners, batch.coords[idx, 0], batch.coords[idx, 1]
-
-
-def _point_seg_min_per_point(px, py, segs) -> np.ndarray:
-    """(k,) min distance of each point to any segment, chunked."""
-    k = len(px)
-    out = np.full(k, np.inf)
-    step = max(1, _EDGE_CHUNK // max(len(segs), 1))
-    x0, y0 = segs[:, 0][None, :], segs[:, 1][None, :]
-    x1, y1 = segs[:, 2][None, :], segs[:, 3][None, :]
-    dx, dy = x1 - x0, y1 - y0
-    len2 = dx * dx + dy * dy
-    safe = np.where(len2 == 0, 1, len2)
-    for s in range(0, k, step):
-        PX, PY = px[s:s + step][:, None], py[s:s + step][:, None]
-        t = np.clip(((PX - x0) * dx + (PY - y0) * dy) / safe, 0.0, 1.0)
-        cx, cy = x0 + t * dx, y0 + t * dy
-        d2 = (PX - cx) ** 2 + (PY - cy) ** 2
-        out[s:s + step] = np.sqrt(d2.min(axis=1))
-    return out
-
-
-def _point_to_segs(px: float, py: float, x0, y0, x1, y1) -> np.ndarray:
-    """(E,) distance of one point to each segment."""
-    dx, dy = x1 - x0, y1 - y0
-    len2 = dx * dx + dy * dy
-    safe = np.where(len2 == 0, 1, len2)
-    t = np.clip(((px - x0) * dx + (py - y0) * dy) / safe, 0.0, 1.0)
-    cx, cy = x0 + t * dx, y0 + t * dy
-    return np.sqrt((px - cx) ** 2 + (py - cy) ** 2)
-
-
-def _min_point_seg(pts: np.ndarray, segs: np.ndarray) -> float:
-    px, py = pts[:, 0][:, None], pts[:, 1][:, None]
-    x0, y0 = segs[:, 0][None, :], segs[:, 1][None, :]
-    x1, y1 = segs[:, 2][None, :], segs[:, 3][None, :]
-    dx, dy = x1 - x0, y1 - y0
-    len2 = dx * dx + dy * dy
-    with np.errstate(divide="ignore", invalid="ignore"):
-        t = np.clip(((px - x0) * dx + (py - y0) * dy) / np.where(len2 == 0, 1, len2),
-                    0.0, 1.0)
-    cx, cy = x0 + t * dx, y0 + t * dy
-    d2 = (px - cx) ** 2 + (py - cy) ** 2
-    return float(np.sqrt(d2.min()))
-
-
 def _geom_polygon_rings_signed(batch: GeomBatch, g: int):
     """Rings of all polygon parts of geometry g as (ring, sign) pairs:
     ring 0 of each part is the exterior (+1), later rings are holes
@@ -1108,8 +746,7 @@ def pairs_intersection_area(lb: GeomBatch, rb: GeomBatch,
     area(L ∩ R) = sum over cell pairs of sign_l*sign_r*|cell_l ∩ cell_r|
     — exact for valid inputs because the signed indicators multiply
     pointwise. Cell pairs are bbox-pruned. Per-geometry covers are
-    cached across the pair batch (grouped-kernel convention, module
-    docstring)."""
+    cached across the pair batch."""
     m = len(li)
     out = np.zeros(m)
     # axis-rect ⊗ axis-rect fast path: the overlap is the bbox overlap

@@ -65,19 +65,17 @@ def split_grid(spark: SparkSession, bbox: tuple, splits: int,
     )
 
 
-def grid_cover_udf(resolutions, limits, compat: str = "reference"):
+def grid_cover_udf(resolutions, limits):
     """Fixed-grid cover -> array<string> of '{x}-{y}' ids.
 
-    ``compat='reference'`` reproduces the reference's ``bbox_index``
-    formula verbatim (``cdap_geo/index_bbox.py:15-30``): keep origins
-    (x, y) stepping ``resolutions`` across ``limits`` where
+    Reproduces the reference's ``bbox_index`` formula verbatim
+    (``cdap_geo/index_bbox.py:15-30``): keep origins (x, y) stepping
+    ``resolutions`` across ``limits`` where
     ``minx < x < maxx+res and miny < y < maxy+res``. Note this is
     shifted one cell positive of the true geometric cover — the quirk
     is harmless for self-joins (both sides shift identically, so the
     equi-join result equals the true-cover join) but must be
     reproduced bit-for-bit for id parity with the reference.
-    ``compat='exact'`` emits the true cover (cells whose box overlaps
-    the bbox, boundaries inclusive).
     """
     rx, ry = int(resolutions[0]), int(resolutions[1])
     lx0, ly0, lx1, ly1 = (int(v) for v in limits)
@@ -94,29 +92,21 @@ def grid_cover_udf(resolutions, limits, compat: str = "reference"):
             if np.isnan(a):
                 out.append([])
                 continue
-            if compat == "reference":
-                # O(cells covered) enumeration of the same set the
-                # reference scans O(grid) for — anchored at limits[0]
-                # exactly like the reference's range(limits[0], ...)
-                # (``cdap_geo/index_bbox.py:20-21``), so non-aligned
-                # limits still produce identical ids
-                k0 = int(np.floor((a - lx0) / rx)) + 1
-                xs = lx0 + rx * np.arange(max(k0, 0),
-                                          max(int(np.ceil((min(c + rx, lx1)
-                                                           - lx0) / rx)), 0))
-                xs = xs[(xs > a) & (xs < min(c + rx, lx1))].astype(np.int64)
-                k0 = int(np.floor((b - ly0) / ry)) + 1
-                ys = ly0 + ry * np.arange(max(k0, 0),
-                                          max(int(np.ceil((min(d + ry, ly1)
-                                                           - ly0) / ry)), 0))
-                ys = ys[(ys > b) & (ys < min(d + ry, ly1))].astype(np.int64)
-            else:
-                xs = np.arange(max(int(np.floor(a / rx)) * rx, lx0),
-                               min(int(np.floor(c / rx)) * rx + rx, lx1),
-                               rx, dtype=np.int64)
-                ys = np.arange(max(int(np.floor(b / ry)) * ry, ly0),
-                               min(int(np.floor(d / ry)) * ry + ry, ly1),
-                               ry, dtype=np.int64)
+            # O(cells covered) enumeration of the same set the
+            # reference scans O(grid) for — anchored at limits[0]
+            # exactly like the reference's range(limits[0], ...)
+            # (``cdap_geo/index_bbox.py:20-21``), so non-aligned
+            # limits still produce identical ids
+            k0 = int(np.floor((a - lx0) / rx)) + 1
+            xs = lx0 + rx * np.arange(max(k0, 0),
+                                      max(int(np.ceil((min(c + rx, lx1)
+                                                       - lx0) / rx)), 0))
+            xs = xs[(xs > a) & (xs < min(c + rx, lx1))].astype(np.int64)
+            k0 = int(np.floor((b - ly0) / ry)) + 1
+            ys = ly0 + ry * np.arange(max(k0, 0),
+                                      max(int(np.ceil((min(d + ry, ly1)
+                                                       - ly0) / ry)), 0))
+            ys = ys[(ys > b) & (ys < min(d + ry, ly1))].astype(np.int64)
             out.append([f"{x}-{y}" for x in xs for y in ys])
         return pd.Series(out)
     return _cover

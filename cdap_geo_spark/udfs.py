@@ -66,19 +66,16 @@ def st_cells(level: int, how: str = "bbox", pad: float = 1.0):
 
 def st_cell_point(level: int):
     """binary WKB point -> single int64 cell id (no straddle; for
-    storage layout / range partitioning keys). Null for invalid."""
+    storage layout / range partitioning keys). A point outside the
+    world frame gets the nearest edge cell (``cells.point_grid``), the
+    cell a region cover clamps to. Null for invalid."""
     @pandas_udf(T.LongType())
     def _cell(s: pd.Series) -> pd.Series:
-        batch = W.parse_wkb(_to_blob_list(s))
-        b = batch.bounds()
-        cs = C.cell_size(level)
-        with np.errstate(invalid="ignore"):
-            xi = np.floor((b[:, 0] - C.WORLD_X0) / cs)
-            yi = np.floor((b[:, 1] - C.WORLD_Y0) / cs)
-        bad = np.isnan(xi) | np.isnan(yi)
-        ids = C.encode(level, np.nan_to_num(xi).astype(np.int64),
-                       np.nan_to_num(yi).astype(np.int64)).astype(object)
-        out = pd.Series(ids)
+        b = W.parse_wkb(_to_blob_list(s)).bounds()
+        bad = np.isnan(b[:, 0]) | np.isnan(b[:, 1])
+        xi, yi = C.point_grid(np.nan_to_num(b[:, 0]),
+                              np.nan_to_num(b[:, 1]), level)
+        out = pd.Series(C.encode(level, xi, yi).astype(object))
         out[bad] = None
         return out
     return _cell

@@ -106,6 +106,9 @@ def _points(g):
 
 
 def _on_segment(p, a, b):
+    if abs(b[0] - a[0]) + abs(b[1] - a[1]) <= EPS:
+        # zero-length segment: only its end is on it
+        return abs(p[0] - a[0]) <= EPS and abs(p[1] - a[1]) <= EPS
     cross = (b[0] - a[0]) * (p[1] - a[1]) - (b[1] - a[1]) * (p[0] - a[0])
     if abs(cross) > EPS * max(1.0, abs(b[0] - a[0]) + abs(b[1] - a[1])):
         return False
@@ -151,25 +154,26 @@ def seg_intersect(s1, s2):
     return False
 
 
+def _touches(p, g):
+    """Point p lies in or on g: inside its polygon rings, on any of its
+    segments, or equal to any of its points."""
+    if _rings(g) and point_in_polygon(p, g):
+        return True
+    if any(_on_segment(p, *s) for s in _segments(g)):
+        return True
+    return any(abs(p[0] - q[0]) <= EPS and abs(p[1] - q[1]) <= EPS
+               for q in _points(g))
+
+
 def intersects(ga, gb):
     """Exact intersects, shapely semantics (boundary touch = True)."""
     if ga is None or gb is None:
         return False
-    # any point of a in/on b
-    for p in _points(ga):
-        if _rings(gb):
-            if point_in_polygon(p, gb):
-                return True
-        else:
-            for s in _segments(gb):
-                if _on_segment(p, *s):
-                    return True
-            for q in _points(gb):
-                if abs(p[0] - q[0]) <= EPS and abs(p[1] - q[1]) <= EPS:
-                    return True
-    for q in _points(gb):
-        if _rings(ga) and point_in_polygon(q, ga):
-            return True
+    # any point of one side in/on the other
+    if any(_touches(p, gb) for p in _points(ga)):
+        return True
+    if any(_touches(q, ga) for q in _points(gb)):
+        return True
     for sa in _segments(ga):
         for sb in _segments(gb):
             if seg_intersect(sa, sb):

@@ -61,3 +61,31 @@ def test_enrich_stream_multi_batch_and_batch_twin(spark, tmp_path):
     key = lambda p: sorted(map(tuple, p[["doc_id", "region_id"]]
                                .itertuples(index=False)))
     assert key(got) == key(twin)
+
+
+def test_enrich_keeps_points_outside_the_world_frame(spark):
+    """Points beyond the cell world are enriched with the regions around
+    them, like the batch sjoin pairs them: a point takes the edge cell
+    that region covers clamp into."""
+    from cdap_geo_spark.core import wkb as W
+
+    def box(x0, y0, x1, y1):
+        return bytes(W.boxes_to_wkb([x0], [y0], [x1], [y1])[0])
+
+    pts = spark.createDataFrame(
+        [(1, bytes(W.point_to_wkb(-2_000_000.0, 0.0))),
+         (2, bytes(W.point_to_wkb(5_000_000.0, 0.0))),
+         (3, bytes(W.point_to_wkb(0.0, 0.0)))],
+        "doc_id long, geometry binary")
+    regs = spark.createDataFrame(
+        [(10, box(-2_100_000, -10_000, -1_900_000, 10_000)),
+         (20, box(4_900_000, -10_000, 5_100_000, 10_000)),
+         (30, box(-10_000, -10_000, 10_000, 10_000))],
+        "region_id long, geometry binary")
+    want = {(1, 10), (2, 20), (3, 30)}
+    for broadcast in (True, False):
+        assert {tuple(r) for r in sjoin_pairs(
+            pts, regs, left_id="doc_id", right_id="region_id", level=8,
+            broadcast=broadcast, salt=1).collect()} == want
+    got = spatial_enrich_stream(pts, regs, level=8)
+    assert {(r.doc_id, r.region_id) for r in got.collect()} == want

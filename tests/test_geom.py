@@ -66,25 +66,120 @@ def test_intersects_property_random_pairs():
 
 
 def _batch_to_oracle(sl):
-    """Single-geometry batch -> oracle dict."""
-    kind = int(sl.kinds[0])
-    paths = []
-    for ri in range(len(sl.ring_coord_off) - 1):
-        s, e = sl.ring_coord_off[ri], sl.ring_coord_off[ri + 1]
-        paths.append([tuple(c) for c in sl.coords[s:e]])
-    if kind == W.KIND_POINT:
-        return {"type": "Point", "coords": paths[0][0]}
-    if kind == W.KIND_LINESTRING:
-        return {"type": "LineString", "coords": paths[0]}
-    if kind == W.KIND_POLYGON:
-        return {"type": "Polygon", "rings": paths}
-    if kind == W.KIND_MULTIPOINT:
-        return {"type": "Multi",
-                "parts": [{"type": "Point", "coords": p[0]} for p in paths]}
-    if kind == W.KIND_MULTILINESTRING:
-        return {"type": "Multi",
-                "parts": [{"type": "LineString", "coords": p} for p in paths]}
-    raise AssertionError(kind)
+    """Single-geometry batch -> oracle dict, built from its parts."""
+    parts = []
+    for p in range(sl.geom_part_off[0], sl.geom_part_off[1]):
+        paths = [[tuple(c) for c in sl.coords[sl.ring_coord_off[r]:
+                                              sl.ring_coord_off[r + 1]]]
+                 for r in range(sl.part_ring_off[p], sl.part_ring_off[p + 1])]
+        kind = int(sl.part_kind[p])
+        if kind == W.KIND_POINT:
+            parts.append({"type": "Point", "coords": paths[0][0]})
+        elif kind == W.KIND_LINESTRING:
+            parts.append({"type": "LineString", "coords": paths[0]})
+        elif kind == W.KIND_POLYGON:
+            parts.append({"type": "Polygon", "rings": paths})
+        else:
+            raise AssertionError(kind)
+    if int(sl.kinds[0]) in (W.KIND_POINT, W.KIND_LINESTRING, W.KIND_POLYGON):
+        return parts[0]
+    return {"type": "Multi", "parts": parts}
+
+
+def _box_ring(x0, y0, w, h):
+    return [[x0, y0], [x0 + w, y0], [x0 + w, y0 + h], [x0, y0 + h], [x0, y0]]
+
+
+def _random_polygon(rng, hole, big):
+    """A box or a triangle on the integer grid, sides up to 13 units if
+    ``big`` else 4; with ``hole``, a box with a box hole strictly inside
+    it."""
+    lo, hi = (4, 14) if big else (1, 5)
+    if hole:
+        x0, y0 = rng.randint(0, 12, 2)
+        w, h = rng.randint(max(lo, 4), hi, 2)
+        hx, hy = x0 + rng.randint(1, w - 2), y0 + rng.randint(1, h - 2)
+        hw = rng.randint(1, x0 + w - hx)
+        hh = rng.randint(1, y0 + h - hy)
+        return [_box_ring(x0, y0, w, h), _box_ring(hx, hy, hw, hh)[::-1]]
+    x0, y0 = rng.randint(0, 18, 2)
+    if rng.rand() < 0.5:
+        return [_box_ring(x0, y0, *rng.randint(lo, hi, 2))]
+    while True:
+        t = np.array([x0, y0]) + rng.randint(0, hi, (3, 2))
+        if np.cross(t[1] - t[0], t[2] - t[0]) != 0:
+            return [np.vstack([t, t[:1]]).tolist()]
+
+
+def _random_line(rng):
+    steps = rng.randint(-5, 6, (rng.randint(2, 5), 2))
+    return np.cumsum(steps, axis=0) + rng.randint(0, 20, 2)
+
+
+def _random_point(rng):
+    return W.point_to_wkb(*rng.randint(0, 20, 2).astype(float))
+
+
+def _random_geometry(rng, kind):
+    """One WKB geometry of ``kind`` with integer coordinates in a small
+    window, so shared vertices, touches and nesting are common."""
+    if kind == "Point":
+        return _random_point(rng)
+    if kind == "MultiPoint":
+        return W.multi_to_wkb(W.KIND_MULTIPOINT, [
+            _random_point(rng) for _ in range(rng.randint(2, 5))])
+    if kind == "LineString":
+        return W.linestring_to_wkb(_random_line(rng))
+    if kind == "MultiLineString":
+        return W.multi_to_wkb(W.KIND_MULTILINESTRING, [
+            W.linestring_to_wkb(_random_line(rng))
+            for _ in range(rng.randint(2, 4))])
+    if kind == "Polygon":
+        return W.polygon_to_wkb(_random_polygon(rng, hole=True, big=True))
+    # MultiPolygon: 2-3 small parts, bbox-disjoint so it is valid
+    parts, boxes, n = [], [], rng.randint(2, 4)
+    while len(parts) < n:
+        rings = _random_polygon(rng, hole=False, big=False)
+        c = np.asarray(rings[0])
+        b = (*c.min(axis=0), *c.max(axis=0))
+        if all(b[0] > q[2] or b[2] < q[0] or b[1] > q[3] or b[3] < q[1]
+               for q in boxes):
+            parts.append(W.polygon_to_wkb(rings))
+            boxes.append(b)
+    return W.multi_to_wkb(W.KIND_MULTIPOLYGON, parts)
+
+
+_KINDS = ["Point", "MultiPoint", "LineString", "MultiLineString",
+          "Polygon", "MultiPolygon"]
+_PER_KIND = 20
+
+
+def test_multipart_pairs_match_the_oracle():
+    """Every kind, multi-part ones included, on both sides: a part of
+    one side may lie wholly inside the other with no edge contact while
+    the first part lies outside. intersects and distance agree with the
+    oracle on every pair."""
+    rng = np.random.RandomState(20)
+    blobs = [_random_geometry(rng, k) for k in _KINDS for _ in range(_PER_KIND)]
+    lb = W.parse_wkb(blobs[::2])
+    rb = W.parse_wkb(blobs[1::2])
+    lg = [oracle.parse(b) for b in blobs[::2]]
+    rg = [oracle.parse(b) for b in blobs[1::2]]
+    assert set(lb.kinds.tolist()) == set(rb.kinds.tolist()) == set(range(1, 7))
+    li = np.repeat(np.arange(len(lb)), len(rb))
+    ri = np.tile(np.arange(len(rb)), len(lb))
+    hit = G.pairs_intersect(lb, rb, li, ri)
+    dist = G.pairs_distance(lb, rb, li, ri)
+    want_hit = np.array([oracle.intersects(lg[i], rg[j])
+                         for i, j in zip(li, ri)])
+    want_dist = np.array([oracle.distance(lg[i], rg[j])
+                          for i, j in zip(li, ri)])
+    assert 0.2 < want_hit.mean() < 0.8
+    bad = np.flatnonzero(hit != want_hit)
+    assert not len(bad), [(_KINDS[2 * li[k] // _PER_KIND],
+                           _KINDS[(2 * ri[k] + 1) // _PER_KIND], hit[k])
+                          for k in bad[:10]]
+    np.testing.assert_allclose(dist, want_dist, rtol=1e-12, atol=1e-12)
 
 
 def test_boundary_touch_counts_as_intersecting():

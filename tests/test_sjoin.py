@@ -517,3 +517,39 @@ def test_multipoint_pairs_with_a_region_near_any_part(spark, no_broadcast,
             docs, regions, level=7, predicate=predicate,
             broadcast=broadcast, salt=1, **kw).collect()}
         assert got == {(1, 10), (2, 10)}, predicate
+
+
+def _multi(kind, *parts):
+    return bytes(W.multi_to_wkb(kind, parts))
+
+
+@pytest.mark.parametrize("broadcast", [True, False],
+                         ids=["broadcast", "shuffle"])
+def test_multipart_doc_pairs_with_a_region_around_a_later_part(
+        spark, no_broadcast, broadcast):
+    """A MultiPolygon or MultiLineString doc whose second part lies
+    wholly inside a region, touching none of its edges, while the first
+    part lies far away, pairs with that region on both routes."""
+    far = _box(0, 0, 1_000, 1_000)
+    docs = spark.createDataFrame(
+        [(1, _multi(W.KIND_MULTIPOLYGON, far,
+                    _box(104_000, 104_000, 106_000, 106_000))),
+         (2, _multi(W.KIND_MULTILINESTRING, _line((0, 0), (1_000, 0)),
+                    _line((104_000, 104_000), (106_000, 105_000)))),
+         (3, _multi(W.KIND_MULTIPOLYGON, far,
+                    _box(305_000, 305_000, 310_000, 310_000))),
+         (4, _multi(W.KIND_MULTIPOLYGON, far,
+                    _box(200_000, 200_000, 201_000, 201_000)))],
+        "doc_id long, geometry binary")
+    triangle = bytes(W.polygon_to_wkb([[
+        [300_000, 300_000], [340_000, 300_000], [300_000, 340_000],
+        [300_000, 300_000]]]))
+    regions = spark.createDataFrame(
+        [(10, _box(100_000, 100_000, 110_000, 110_000)), (20, triangle)],
+        "region_id long, geometry binary")
+    for predicate, kw in (("intersects", {}),
+                          ("distance", {"distance": 10.0})):
+        got = {tuple(r) for r in sjoin_pairs(
+            docs, regions, level=7, predicate=predicate,
+            broadcast=broadcast, salt=1, **kw).collect()}
+        assert got == {(1, 10), (2, 10), (3, 20)}, predicate

@@ -2,7 +2,7 @@
 
 ``split_grid`` boxes must match the reference's enumeration
 (``cdap_geo/misc.py:6-17``: x-major then y, equal boxes); the
-fixed-grid cover in 'reference' compat mode must reproduce
+fixed-grid cover must reproduce
 ``bbox_index`` (``cdap_geo/index_bbox.py:15-30``) bit-for-bit.
 """
 
@@ -71,7 +71,7 @@ def test_grid_cover_reference_compat(spark):
     # grid-aligned edge cases
     rows += [(0.0, 0.0, 100000.0, 100000.0), (100000.0, 0.0, 100000.0, 0.0)]
     df = spark.createDataFrame(rows, "minx double, miny double, maxx double, maxy double")
-    cov = grid_cover_udf(res, lim, compat="reference")
+    cov = grid_cover_udf(res, lim)
     got = df.select(cov("minx", "miny", "maxx", "maxy").alias("c")).collect()
     for row, g in zip(rows, got):
         want = _reference_bbox_index(*row, res, lim)
@@ -415,3 +415,27 @@ def test_tiles_in_the_sjoin_pass_match_both_references(spark, no_broadcast,
     assert not {10, 11, 18} & set(tiles_by_doc)
     assert got[(1, 100, "0-0") if keep else (1, "0-0")] > 1
     assert any(k[0] is None for k in got)
+
+
+def test_multipart_doc_gets_the_tile_of_every_part(spark):
+    """A MultiPolygon whose second part lies wholly inside a tile,
+    touching none of its edges, gets that tile as well as its first
+    part's, from assign_tiles on its own pass and inside the sjoin
+    pass."""
+    from test_sjoin import _box
+    doc = W.multi_to_wkb(W.KIND_MULTIPOLYGON, [
+        _box(1_000, 1_000, 2_000, 2_000),
+        _box(150_000, 300_000, 151_000, 301_000)])
+    docs = spark.createDataFrame([(1, bytes(doc))],
+                                 "doc_id long, geometry binary")
+    regions = spark.createDataFrame([(10, _box(0, 0, 5_000, 5_000))],
+                                    "region_id long, geometry binary")
+    args = dict(bbox=(0, 0, 700_000, 1_300_000), splits=10)
+    pairs = sjoin_pairs(docs, regions, level=7, broadcast=True, dedup=False,
+                        keep_left_geom=True)
+    fused = assign_tiles(pairs, **args)
+    assert "MapInPandas" not in \
+        fused._jdf.queryExecution().executedPlan().toString()
+    want = {"0-0", "140000-260000"}
+    assert {r.tile_id for r in assign_tiles(docs, **args).collect()} == want
+    assert {r.tile_id for r in fused.collect()} == want
