@@ -86,8 +86,9 @@ def _q_sjoin_pip_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     _spatial_conf(spark)
     docs = D.with_geometry(R.interleaved_docs(spark, sf_dir))
     regions = R.region_boxes(spark, sf_dir).select("region_id", "geometry")
-    # broadcast disabled -> the planner's bounded hot-cell census
-    # picks the salt factor itself (salt='auto' is the default)
+    # broadcast disabled -> the shuffle route: cell equi-join whose hot
+    # cells AQE's skew join splits (the name predates that; it is kept
+    # as part of the oracle surface)
     out = sjoin_pairs(docs, regions, left_id="doc_id", right_id="region_id",
                       level=8, broadcast=False)
     return out.select(F.col("doc_id").cast("long"),

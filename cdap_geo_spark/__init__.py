@@ -12,7 +12,7 @@ Spark 4.x engine:
   (H3/S2-style parent/child/k-ring algebra) replacing the reference's
   string cell ids (``cdap_geo/index_bbox.py:23``,
   ``cdap_geo/_indexing.py:105``);
-* the spatial join is cell-cover → explode → salted
+* the spatial join is cell-cover → explode →
   broadcast-or-shuffle equi-join → bbox prefilter → exact
   point-in-polygon/intersects refinement (the ``bbox_intersects``
   contract, ``cdap_geo/index_bbox.py:32-76``);

@@ -22,7 +22,8 @@ Usage (local / tests): ``python -m cdap_geo_spark.jobs.sjoin_tile ...``
 Stage layout (each one a :class:`~cdap_geo_spark.plans.manifest.Manifest`
 stage — parquet data + per-partition lineage/metrics JSON, committed
 manifest-last so a crash anywhere re-runs exactly the unfinished
-stages; identical params + inputs skip):
+stages; identical params + input files skip, an input rewritten in
+place re-runs):
 
 1. ``pairs_tiled``  — extract the primary geometry (native expressions
    over the spans array, zero Python); read the regions once and index
@@ -81,10 +82,12 @@ def run(spark: SparkSession, *, docs: str, regions: str, out: str,
         check_invariant: bool = True) -> dict:
     """Run (or resume) the full job; returns the summary dict."""
     from cdap_geo_spark import docs as D
-    from cdap_geo_spark.plans.manifest import Manifest, fingerprint
+    from cdap_geo_spark.plans.manifest import (Manifest, fingerprint,
+                                               input_identity)
 
     man = Manifest(spark, out)
-    fp1 = fingerprint("pairs_tiled", docs, regions, level, bbox, splits)
+    fp1 = fingerprint("pairs_tiled", input_identity(docs),
+                      input_identity(regions), level, bbox, splits)
     s1 = man.run_stage(
         "pairs_tiled", fp1,
         lambda: build_pairs_tiled(spark, docs, regions, level=level,

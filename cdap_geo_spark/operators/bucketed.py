@@ -43,9 +43,9 @@ Scale notes:
   and the other side with ``salt=s, replicate_salt=True`` (each row
   written once per salt value). Both sides bucket on
   ``(cell_id, _salt)``, so the join is still exchange-free and the
-  hot cell's work spreads over ``s`` buckets — the bucketed
-  equivalent of ``sjoin_pairs``'s ``salt='auto'`` shuffle-path fix.
-  Storage cost: the replicated side is written ``s``×;
+  hot cell's work spreads over ``s`` buckets — what AQE's skew-join
+  split does at run time on ``sjoin_pairs``'s shuffle route, fixed
+  in the layout. Storage cost: the replicated side is written ``s``×;
 * both tables MUST be written with the same bucket count — Spark
   only elides both Exchanges when the bucket counts match (one-side
   multiples re-shuffle the other side).
@@ -137,8 +137,9 @@ def index_to_bucketed_table(df: DataFrame, table: str, *,
                 f"{row.mean:.1f}) — that cell's join work lands in ONE "
                 f"bucket and AQE cannot split it. Consider salt=s here "
                 f"plus salt=s, replicate_salt=True on the partner "
-                f"table, a finer level, or the salted shuffle path "
-                f"(sjoin_pairs(salt='auto')).",
+                f"table, a finer level, or the shuffle path "
+                f"(sjoin_pairs(broadcast=False), where AQE splits the "
+                f"hot cell).",
                 RuntimeWarning, stacklevel=2)
 
     # one exchange keyed exactly like the bucket hash BEFORE the write:

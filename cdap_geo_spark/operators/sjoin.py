@@ -27,7 +27,7 @@ dedup plan keeps one Python boundary.
 
     decode+bounds+cells   (1 fused Arrow PUDF per side)
       -> explode cells    (Generate)
-      -> equi-join on cell_id  (shuffle-hash or sort-merge, optional salt)
+      -> equi-join on cell_id  (shuffle-hash or sort-merge)
       -> native bbox-overlap prefilter  (pure Catalyst, codegen'd)
       -> exact intersects refinement    (1 Arrow PUDF)
       -> dropDuplicates([l_id, r_id])   (narrow id pairs)
@@ -35,26 +35,28 @@ dedup plan keeps one Python boundary.
 vs the reference's ~4 shuffles + 3 Python round-trips (SURVEY.md §3.1):
 this plan is 1-2 shuffles and 3 Arrow boundaries.
 
-Scale levers (all explicit parameters, chosen by the caller or the
-planner heuristics — no Catalyst extension needed):
+The plan follows from the inputs and the predicate; there is nothing
+to tune:
 
-* ``broadcast=True`` takes the broadcast route; ``'auto'`` (default)
-  takes it when
-  :func:`~cdap_geo_spark.functions.relational.broadcastable` says the
-  right side fits: its optimizer size estimate is within
+* **Route.** ``broadcast='auto'`` (default) takes the broadcast route
+  when :func:`~cdap_geo_spark.functions.relational.broadcastable` says
+  the right side fits: its optimizer size estimate is within
   ``spark.sql.autoBroadcastJoinThreshold`` (zero jobs), with a bounded
-  row probe only for RDD-backed frames whose size is unknown;
-* ``salt=k`` spreads hot cells (dense geographies) over k shuffle
-  keys: the left side gets a deterministic salt from its id, the right
-  side is replicated k ways — result set is provably salt-invariant
-  (property-tested). ``salt='auto'`` (default) runs a bounded
-  hot-cell census (:func:`_auto_salt`) on the shuffle route and
-  picks ``ceil(hot_share * parallelism)`` itself — no hand tuning;
-* ``how='marked'`` on a polygon right side flags cells wholly inside
-  the polygon (``cdap_geo/_indexing.py:290-304``): candidates produced
-  by such cells skip the exact-refinement kernel when the left cover
-  is exact (cell box ⊆ polygon and left ∩ cell box ≠ ∅ ⟹ intersects),
-  on both routes.
+  row probe only for RDD-backed frames whose size is unknown.
+* **Covers.** ``'intersects'`` covers the left side with the cells its
+  geometry touches and the right side with ``how='marked'``, which
+  flags cells wholly inside a polygon (``cdap_geo/_indexing.py:290-304``):
+  a candidate from such a cell skips the exact kernel (cell box ⊆
+  polygon and left ∩ cell box ≠ ∅ ⟹ intersects), on both routes.
+  ``'bbox'`` and ``'distance'`` cover both sides by their bounding
+  boxes (the left one dilated by the distance), so every bbox-overlap
+  pair shares a cell. Every cover pads by :data:`PAD`.
+* **Skew.** A hot cell (a dense geography) on the shuffle route is
+  one skewed join partition; AQE's skew join
+  (``spark.sql.adaptive.skewJoin.enabled``, on in
+  :data:`~cdap_geo_spark.session.ENGINE_CONF`) splits it at run time
+  and the plan shows ``SortMergeJoin(skew=true)``. No census job runs
+  before the action.
 
 The reference's ``monotonically_increasing_id`` + cache pitfall
 (``cdap_geo/index_bbox.py:36-43``: ids stable only while cached) is
@@ -72,102 +74,9 @@ from cdap_geo_spark.functions.relational import broadcastable
 from cdap_geo_spark.session import job_label
 
 DEFAULT_LEVEL = C.LEVEL_100KM  # ~131 km cells ≈ the reference's 100 km grid
-
-#: ``salt='auto'`` (the default) censuses the hottest cell on a
-#: bounded sample of the indexed LEFT side when the join is NOT
-#: broadcast; the sample never exceeds this many indexed rows.
-#: Round 6: 100k -> 32k and per-partition oversample 8 -> 2. The old
-#: budget decoded up to oversample x sample ~ 800k rows — MORE than
-#: the whole sf0.1 left side, i.e. the census cost a full extra decode
-#: pass (the round-5 sjoin_pip_salted regression). 32k samples resolve
-#: a hot-cell share of 1/32 (the smallest worth salting at this
-#: parallelism) with ~1000 expected hits — ample for ceil(share x
-#: parallelism).
-SALT_SAMPLE_ROWS = 32_000
-#: replication factor ceiling — salting replicates the right side
-#: ``salt``-fold, so unbounded salts would trade skew for volume.
-MAX_AUTO_SALT = 32
-
-
-def _census_sample(l_indexed: DataFrame,
-                   sample_rows: int = SALT_SAMPLE_ROWS) -> DataFrame:
-    """Scattered bounded sample of ``cell_id`` for the hot-cell census.
-
-    A ``limit(N)`` draws rows from whichever partitions Spark scans
-    first — on the engine's OWN recommended at-rest layout (``ingest``
-    range-clusters on cell_id, ``io.py``) that is one geographic
-    corner, so the census either sees one cell at ~100% share
-    (over-salts) or misses the true hot cell entirely. Instead take an
-    equal quota of rows from EVERY partition: a mapInPandas generator
-    consumes up to ``OVERSAMPLE x quota`` rows per partition (a few
-    Arrow batches — the lazy iterator never pulls the rest of the
-    upstream decode, bounded even against a 100 TB left side) and
-    yields a seeded uniform subsample of ``quota`` of them, so the
-    within-partition sort order (clustering puts equal cells in runs)
-    doesn't bias the sample toward partition prefixes.
-
-    Residual bias, stated honestly: a hot run confined entirely to the
-    unread tail of one partition is still invisible — but on a
-    range-clustered layout a cell with share >= 1/num_partitions spans
-    a partition boundary (so some partition STARTS inside it), and
-    cells below that share don't need salting in the first place.
-    """
-    import pandas as pd
-
-    # quota sized by defaultParallelism, not the exact partition count:
-    # the former .rdd.getNumPartitions() touch dragged the whole plan
-    # through the RDD conversion path (round-5 VERDICT #9) for a number
-    # that only scales the per-partition quota — any same-order proxy
-    # serves, and the total read stays bounded per partition either way
-    n_parts = max(1, l_indexed.sparkSession.sparkContext
-                  .defaultParallelism)
-    quota = max(64, sample_rows // n_parts)
-    oversample = 2
-
-    def take_quota(batches):
-        rng = np.random.RandomState(0xC3115)
-        chunks, seen = [], 0
-        for pdf in batches:
-            chunks.append(pdf["cell_id"])
-            seen += len(pdf)
-            if seen >= oversample * quota:
-                break
-        if not chunks:
-            return
-        cells = pd.concat(chunks, ignore_index=True)
-        if len(cells) > quota:
-            cells = cells.iloc[rng.choice(len(cells), quota, replace=False)]
-        yield pd.DataFrame({"cell_id": cells.to_numpy()})
-
-    return l_indexed.select("cell_id").mapInPandas(
-        take_quota, schema="cell_id long")
-
-
-def _auto_salt(l_indexed: DataFrame, parallelism: int,
-               sample_rows: int = SALT_SAMPLE_ROWS) -> int:
-    """Pick the salt factor from a bounded hot-cell census.
-
-    The shuffle join partitions by ``cell_id``; one dense-geography
-    cell holding share ``s`` of the left rows caps speed-up at ``1/s``
-    regardless of cluster size. Salting the left id across ``k`` keys
-    splits that cell's rows ``k`` ways, so the smallest sufficient
-    ``k`` is ``ceil(s * parallelism)`` (hot cell back under one
-    healthy partition's share). ``s`` comes from a per-partition-quota
-    sample of the already-indexed relation (:func:`_census_sample`) —
-    same idea as :func:`hot_cells`, but reusing the join's own cell
-    cover, never scanning the full input, and unbiased under
-    range-clustered layouts (the round-3 ``limit()`` census provably
-    mis-estimated on exactly the ``ingest`` layout).
-    """
-    import math
-    stats = (_census_sample(l_indexed, sample_rows)
-             .groupBy("cell_id").count()
-             .agg(F.max("count").alias("mx"), F.sum("count").alias("n"))
-             .first())
-    if not stats or not stats.n:
-        return 1
-    share = stats.mx / stats.n
-    return int(min(MAX_AUTO_SALT, max(1, math.ceil(share * parallelism))))
+#: cover pad (m): a geometry within this of a cell edge also covers
+#: the neighbouring cell (``cdap_geo/_indexing.py:116-127``)
+PAD = 1.0
 
 
 def _index_side(df: DataFrame, id_col: str, geom_col: str, level: int,
@@ -232,10 +141,7 @@ def sjoin_pairs(left: DataFrame, right: DataFrame, *,
                 left_geom: str = "geometry", right_geom: str = "geometry",
                 level: int = DEFAULT_LEVEL,
                 predicate: str = "intersects",
-                left_how: str | None = None, right_how: str | None = None,
-                pad: float = 1.0,
                 broadcast: bool | str = "auto",
-                salt: int | str = "auto",
                 dedup: bool = True,
                 distance: float | None = None,
                 keep_distance: bool = False,
@@ -243,11 +149,13 @@ def sjoin_pairs(left: DataFrame, right: DataFrame, *,
     """Candidate-generate + refine; returns (left_id, right_id) pairs.
 
     predicate: 'intersects' (exact, ``bbox_intersects`` semantics,
-    ``cdap_geo/index_bbox.py:73-76``), 'bbox' (bbox-overlap only —
-    the ``bbox_join`` contract, ``:32-71``), or 'distance' (pairs
-    within ``distance`` metres — ``st_join(distance=d)`` semantics,
-    ``cdap_geo/sedona.py:136-147`` — via cell-dilated covers + exact
-    distance refinement, never a nested-loop join).
+    ``cdap_geo/index_bbox.py:73-76``), 'bbox' (every pair whose
+    bounding boxes overlap or touch — the ``bbox_join`` contract,
+    ``:32-71``), or 'distance' (pairs within ``distance`` metres —
+    ``st_join(distance=d)`` semantics, ``cdap_geo/sedona.py:136-147`` —
+    via cell-dilated covers + exact distance refinement, never a
+    nested-loop join). The cell covers of both sides follow from the
+    predicate (module docstring).
 
     Output columns: ``left_id``, ``right_id``, then ``geometry`` (the
     left geometry; intersects with ``keep_left_geom``) or ``dist``
@@ -260,6 +168,8 @@ def sjoin_pairs(left: DataFrame, right: DataFrame, *,
     the right side fits. The broadcast route reads the right side
     once, here, in one Spark job (``sjoin.regions``); later changes
     to the right side's source are not seen by the returned frame.
+    The shuffle route runs no job before the action; AQE splits hot
+    cells.
 
     ``dedup=False`` skips the id-pair shuffle and leaves repeats in:
     the broadcast route emits a pair at most once per left ROW (a
@@ -269,37 +179,32 @@ def sjoin_pairs(left: DataFrame, right: DataFrame, *,
     :func:`~cdap_geo_spark.operators.tiles.assign_tiles` over the
     returned frame runs inside its pass.
     """
-    dilate_l = 0.0
     if predicate not in ("intersects", "bbox", "distance"):
         raise ValueError(f"unknown predicate {predicate!r}")
-    if predicate == "distance":
-        if distance is None:
-            raise ValueError("distance predicate needs distance=")
-        # dilate the LEFT cover by the distance: everything within d of
-        # the left geometry lies inside its dilated cover, so the cell
-        # probe loses no candidates.
-        dilate_l = float(distance)
+    if predicate == "distance" and distance is None:
+        raise ValueError("distance predicate needs distance=")
+    # bbox and distance pairs need no shared touched cell, only
+    # overlapping (dilated) boxes: both sides take bbox covers. The
+    # LEFT cover is dilated by the distance, so everything within d of
+    # the left geometry lies inside it and the probe loses no pair.
+    lh, rh = (("intersects", "marked") if predicate == "intersects"
+              else ("bbox", "bbox"))
+    dilate = float(distance) if predicate == "distance" else 0.0
 
-    lh = left_how or ("intersects" if predicate != "distance" else "bbox")
-    rh = right_how or ("marked" if predicate == "intersects" else "bbox")
-    # exact-cover fast path is only sound when the left cover is exact
-    fast_path_ok = (predicate == "intersects" and lh == "intersects")
-
-    spark = left.sparkSession
     if broadcast == "auto":
-        with job_label(spark, "sjoin.broadcast_probe"):
+        with job_label(left.sparkSession, "sjoin.broadcast_probe"):
             broadcast = broadcastable(right)
     if broadcast is True:
         return _sjoin_broadcast(
             left, right, left_id=left_id, right_id=right_id,
             left_geom=left_geom, right_geom=right_geom, level=level,
-            predicate=predicate, lh=lh, rh=rh, pad=pad, dilate=dilate_l,
-            distance=distance, fast_path_ok=fast_path_ok, dedup=dedup,
+            predicate=predicate, lh=lh, rh=rh, dilate=dilate,
+            distance=distance, dedup=dedup,
             keep_distance=keep_distance, keep_left_geom=keep_left_geom)
 
-    l = _index_side(left, left_id, left_geom, level, lh, pad,
-                    keep_geom=(predicate != "bbox"), dilate=dilate_l)
-    r = _index_side(right, right_id, right_geom, level, rh, pad,
+    l = _index_side(left, left_id, left_geom, level, lh, PAD,
+                    keep_geom=(predicate != "bbox"), dilate=dilate)
+    r = _index_side(right, right_id, right_geom, level, rh, PAD,
                     keep_geom=(predicate != "bbox"))
 
     l = l.withColumnsRenamed({
@@ -314,25 +219,11 @@ def sjoin_pairs(left: DataFrame, right: DataFrame, *,
         "_minx": "_rminx", "_miny": "_rminy",
         "_maxx": "_rmaxx", "_maxy": "_rmaxy", "_inside": "_rinside"})
 
-    if salt == "auto":
-        # the bounded hot-cell census picks the factor (round-2 left
-        # this knob manual — the planner now closes the loop itself)
-        with job_label(spark, "sjoin.salt_census"):
-            salt = _auto_salt(l, spark.sparkContext.defaultParallelism)
-
-    join_keys = ["cell_id"]
-    if salt > 1:
-        l = l.withColumn("_salt", F.pmod(F.xxhash64(F.col(left_id)),
-                                         F.lit(salt)).cast("int"))
-        r = r.withColumn("_salt",
-                         F.explode(F.sequence(F.lit(0), F.lit(salt - 1))))
-        join_keys = ["cell_id", "_salt"]
-
-    cand = l.join(r, on=join_keys, how="inner")
     return refine_candidates(
-        cand, left_id=left_id, right_id=right_id, predicate=predicate,
-        distance=distance, left_geom_c=left_geom_c, right_geom=right_geom,
-        fast_path_ok=fast_path_ok, dedup=dedup,
+        l.join(r, on="cell_id", how="inner"), left_id=left_id,
+        right_id=right_id, predicate=predicate, distance=distance,
+        left_geom_c=left_geom_c, right_geom=right_geom,
+        fast_path_ok=(predicate == "intersects"), dedup=dedup,
         keep_distance=keep_distance, keep_left_geom=keep_left_geom)
 
 
@@ -372,10 +263,12 @@ class RegionIndex:
 
 def batch_pairs(index: RegionIndex, lb, *, level: int, how: str,
                 pad: float, dilate: float, predicate: str,
-                distance: float | None, fast_path_ok: bool):
+                distance: float | None):
     """Matching (left row, region[, distance]) of one decoded left
     batch against the region index: cover, probe, bbox prefilter, then
-    the exact kernel — the broadcast route's per-batch work."""
+    the exact kernel — the broadcast route's per-batch work. A marked
+    inside cell accepts an intersects pair without the kernel only when
+    the left cover ``how`` is exact (``'intersects'``)."""
     off, cells, _ = C.cover_batch(lb, level, how=how, pad=pad,
                                   dilate=dilate)
     li, ri, inside = index.probe(
@@ -390,7 +283,7 @@ def batch_pairs(index: RegionIndex, lb, *, level: int, how: str,
                                      li, ri, np.float64)
         hit = d <= distance
         return li[hit], ri[hit], d[hit]
-    hit = inside if fast_path_ok else np.zeros(len(li), bool)
+    hit = inside if how == "intersects" else np.zeros(len(li), bool)
     todo = np.flatnonzero(~hit)
     hit[todo] = udfs.pair_kernel_chunked(G.pairs_intersect, lb, index.batch,
                                          li[todo], ri[todo], bool)
@@ -453,8 +346,8 @@ def _record_batch(cols, arrow_schema):
 
 def _sjoin_broadcast(left: DataFrame, right: DataFrame, *, left_id,
                      right_id, left_geom, right_geom, level, predicate, lh,
-                     rh, pad, dilate, distance, fast_path_ok, dedup,
-                     keep_distance, keep_left_geom) -> DataFrame:
+                     rh, dilate, distance, dedup, keep_distance,
+                     keep_left_geom) -> DataFrame:
     """The broadcast route: collect and index the right side here, then
     one ``mapInArrow`` pass over the left side."""
     import pyarrow as pa
@@ -474,10 +367,9 @@ def _sjoin_broadcast(left: DataFrame, right: DataFrame, *, left_id,
     index = RegionIndex(
         pa.array([r[0] for r in rows], arrow_schema.field(1).type),
         [None if r[1] is None else bytes(r[1]) for r in rows],
-        level, rh, pad)
-    kw = dict(level=level, how=lh, pad=pad, dilate=dilate,
-              predicate=predicate, distance=distance,
-              fast_path_ok=fast_path_ok)
+        level, rh, PAD)
+    kw = dict(level=level, how=lh, pad=PAD, dilate=dilate,
+              predicate=predicate, distance=distance)
 
     def run(batches):
         for b in batches:
@@ -658,15 +550,3 @@ def sjoin(left: DataFrame, right: DataFrame, *,
         for c in collisions:
             l = l.withColumnRenamed(c, c + lsuffix)
     return pairs.join(l, on=left_id).join(r, on=right_id)
-
-
-def hot_cells(df: DataFrame, geom_col: str = "geometry",
-              level: int = DEFAULT_LEVEL, threshold: int = 100_000) -> DataFrame:
-    """Cell census for skew planning: cells whose row count exceeds
-    ``threshold``. Persisted by callers into the manifest so repeated
-    joins reuse the census instead of re-scanning (SURVEY.md §4 skew
-    row)."""
-    cov = df.select(udfs.st_cells(level)(F.col(geom_col)).alias("_cells"))
-    return (cov.select(F.explode("_cells").alias("cell_id"))
-            .groupBy("cell_id").count()
-            .filter(F.col("count") > threshold))

@@ -8,7 +8,7 @@ and keeps the wide value payload OUT of the spatial shuffle:
 
 1. the spatial join runs on the narrow ``(id, geometry)`` projection
    only (:func:`cdap_geo_spark.operators.sjoin.sjoin_pairs` — cell-cover
-   equi-join + exact refinement, broadcast/salting decided there);
+   equi-join + exact refinement, broadcast decided there);
 2. the measure column joins back by id AFTER the pair relation exists
    (AQE picks broadcast vs shuffle — the payload never rides the
    cell-exploded candidate relation);

@@ -17,7 +17,10 @@ commit protocol:
   parquet footers — no second scan of the data;
 * fingerprints chain: a stage's fingerprint hashes its params + its
   parents' fingerprints, so upstream changes invalidate downstream
-  checkpoints automatically (lineage).
+  checkpoints automatically (lineage);
+* an input enters a fingerprint as its :func:`input_identity` (the
+  files under it, with size and mtime), not its bare path, so an input
+  rewritten in place re-runs the stages that read it.
 
 On a 1000-executor cluster the same layout works on any shared
 filesystem/object store with atomic rename; the manifest JSON is tiny
@@ -44,6 +47,24 @@ def fingerprint(*parts) -> str:
         h.update(repr(p).encode())
         h.update(b"\x00")
     return h.hexdigest()[:16]
+
+
+def input_identity(path: str) -> list:
+    """Sorted ``(relative path, size, mtime)`` of every file under
+    ``path`` (the file itself when ``path`` is one), listed through the
+    Hadoop FileSystem API of the active session, so it works on any
+    store Spark reads. Hash it with :func:`fingerprint`."""
+    sc = SparkSession.active().sparkContext
+    root = sc._jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(sc._jsc.hadoopConfiguration())
+    prefix = fs.makeQualified(root).toString().rstrip("/")
+    out = []
+    files = fs.listFiles(root, True)
+    while files.hasNext():
+        st = files.next()
+        rel = st.getPath().toString()[len(prefix):].lstrip("/")
+        out.append((rel, st.getLen(), st.getModificationTime()))
+    return sorted(out)
 
 
 @dataclass

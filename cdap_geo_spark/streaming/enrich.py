@@ -16,13 +16,13 @@ streaming shuffle, no state store):
          cells marked fully-inside (the sjoin fast path)
 
 Correctness note: a point lies in exactly ONE grid cell (floor on
-both axes); the region cover (``how='marked'``, same ``pad`` as the
-batch planner) contains every cell the region touches, so any point
-intersecting the region shares its cell with one cover row — the
-equi-join loses no matches. Output rows are unique per
-(point, region): each point carries one cell, and per-cell cover rows
-are distinct per region, so no post-join dedup (a streaming-hostile
-wide aggregation) is needed.
+both axes); the region cover (``how='marked'``, padded by the batch
+planner's :data:`~cdap_geo_spark.operators.sjoin.PAD`) contains every
+cell the region touches, so any point intersecting the region shares
+its cell with one cover row — the equi-join loses no matches. Output
+rows are unique per (point, region): each point carries one cell, and
+per-cell cover rows are distinct per region, so no post-join dedup (a
+streaming-hostile wide aggregation) is needed.
 
 At scale: the static index is regions x cells-per-region rows; keep it
 under the broadcast budget (the default asks the batch planner's
@@ -37,14 +37,13 @@ from pyspark.sql import DataFrame, functions as F
 
 from cdap_geo_spark import udfs
 from cdap_geo_spark.functions.relational import broadcastable
-from cdap_geo_spark.operators.sjoin import DEFAULT_LEVEL, _index_side
+from cdap_geo_spark.operators.sjoin import DEFAULT_LEVEL, PAD, _index_side
 
 
 def spatial_enrich_stream(points: DataFrame, regions: DataFrame, *,
                           region_id: str = "region_id",
                           point_geom: str = "geometry",
                           level: int = DEFAULT_LEVEL,
-                          pad: float = 1.0,
                           region_geom: str = "geometry",
                           broadcast: bool | str = "auto") -> DataFrame:
     """Enrich a streaming point relation with the regions it falls in.
@@ -61,7 +60,7 @@ def spatial_enrich_stream(points: DataFrame, regions: DataFrame, *,
     backfilling with the exact plan the stream runs).
     """
     r = _index_side(regions, region_id, region_geom, level,
-                    "marked", pad, keep_geom=True)
+                    "marked", PAD, keep_geom=True)
     r = r.withColumnsRenamed({
         "_minx": "_rminx", "_miny": "_rminy",
         "_maxx": "_rmaxx", "_maxy": "_rmaxy", "_inside": "_rinside"})

@@ -1,7 +1,7 @@
 """Profile sjoin_pip at the bench sf: per-stage wall/task metrics.
 
 Usage: python scripts/profile_sjoin.py [variant ...]
-variants: default | salted | broadcast
+variants: default | shuffle | broadcast
 Writes a per-stage summary parsed from the Spark event log.
 """
 from __future__ import annotations
@@ -28,8 +28,8 @@ def run_variant(spark, variant: str) -> dict:
     docs = D.with_geometry(R.interleaved_docs(spark, SF_DIR))
     regions = R.region_boxes(spark, SF_DIR).select("region_id", "geometry")
     kw = dict(left_id="doc_id", right_id="region_id", level=8)
-    if variant == "salted":
-        kw.update(salt=8, broadcast=False)
+    if variant == "shuffle":
+        kw.update(broadcast=False)
     elif variant == "broadcast":
         kw.update(broadcast=True)
     out = sjoin_pairs(docs, regions, **kw)
@@ -81,7 +81,7 @@ def main():
         "spark.eventLog.rolling.enabled": "false",
     })
     spark.sparkContext.setLogLevel("ERROR")
-    variants = sys.argv[1:] or ["default", "salted", "broadcast"]
+    variants = sys.argv[1:] or ["default", "shuffle", "broadcast"]
     results = []
     for v in variants:
         results.append(run_variant(spark, v))

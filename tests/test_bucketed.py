@@ -57,7 +57,7 @@ def test_bucketed_join_plan_has_no_exchange(spark, bucketed_world):
         docs, regions = bucketed_world
         shuffled = sjoin_pairs(docs, regions, left_id="doc_id",
                                right_id="region_id", level=9,
-                               broadcast=False, salt=1, dedup=False)
+                               broadcast=False, dedup=False)
         assert not plan_has_no_exchange(shuffled)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved[0])
@@ -96,8 +96,7 @@ def test_bucketed_bbox_predicate(spark, bucketed_world, tmp_path):
     docs, regions = bucketed_world
     want = _pairs(sjoin_pairs(docs, regions, left_id="doc_id",
                               right_id="region_id", level=9,
-                              predicate="bbox", left_how="bbox",
-                              right_how="bbox"))
+                              predicate="bbox"))
     # bbox tables: covers computed with how='bbox' on both sides
     index_to_bucketed_table(docs, "bt_docs_bbox", id_col="doc_id",
                             level=9, how="bbox", buckets=8,

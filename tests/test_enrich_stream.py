@@ -86,6 +86,6 @@ def test_enrich_keeps_points_outside_the_world_frame(spark):
     for broadcast in (True, False):
         assert {tuple(r) for r in sjoin_pairs(
             pts, regs, left_id="doc_id", right_id="region_id", level=8,
-            broadcast=broadcast, salt=1).collect()} == want
+            broadcast=broadcast).collect()} == want
     got = spatial_enrich_stream(pts, regs, level=8)
     assert {(r.doc_id, r.region_id) for r in got.collect()} == want

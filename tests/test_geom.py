@@ -378,7 +378,7 @@ def test_broadcast_batch_pairs_chunk_invariance(monkeypatch, predicate):
                         7, "marked" if predicate == "intersects" else "bbox",
                         1.0)
     lb = W.parse_wkb(doc_geometry_wkb(np.arange(3000, dtype=np.int64)))
-    kw = dict(level=7, pad=1.0, predicate=predicate, fast_path_ok=False,
+    kw = dict(level=7, pad=1.0, predicate=predicate,
               how="intersects" if predicate == "intersects" else "bbox",
               dilate=0.0 if predicate == "intersects" else 2_000.0,
               distance=None if predicate == "intersects" else 2_000.0)

@@ -68,6 +68,33 @@ def test_job_runs_resumes_and_preserves_spans(spark, job_inputs, tmp_path):
     assert all(p["bytes"] > 0 for p in man["partitions"])
 
 
+def test_job_rebuilds_after_an_input_is_rewritten_in_place(spark, job_inputs,
+                                                           tmp_path):
+    """Rewriting the regions parquet at the same path between two runs
+    re-runs ``pairs_tiled`` with the new regions; the old output is not
+    resumed."""
+    from pyspark.sql import functions as F
+    from cdap_geo_spark import fixtures
+    from cdap_geo_spark.jobs.sjoin_tile import run
+    docs, _ = job_inputs
+    regs, out = str(tmp_path / "regions"), str(tmp_path / "out")
+    fixtures.regions(spark, 60).write.parquet(regs)
+    s1 = run(spark, docs=docs, regions=regs, out=out,
+             check_invariant=False)
+    assert s1["rows"] > 0
+
+    fixtures.regions(spark, 60).withColumn(
+        "region_id", F.concat(F.lit("new_"), "region_id")) \
+        .write.mode("overwrite").parquet(regs)
+    s2 = run(spark, docs=docs, regions=regs, out=out,
+             check_invariant=False)
+    assert [st["skipped"] for st in s2["stages"]] == [False, False]
+    ids = {r[0] for r in spark.read.parquet(
+        os.path.join(out, "pairs_tiled", "data"))
+        .select("region_id").distinct().collect()}
+    assert ids and all(i.startswith("new_") for i in ids)
+
+
 def test_package_zip_is_importable_and_deterministic(tmp_path):
     sys.path.insert(0, os.path.join(REPO, "scripts"))
     try:

@@ -237,12 +237,15 @@ def test_sjoin_column_pruning(spark):
         assert "PushedFilters" in plan or "ReadSchema" in plan
 
 
-def test_salted_join_replicates_right_side(spark):
-    dd = D.with_geometry(fixtures.documents(spark, 50, partitions=2))
-    rr = fixtures.regions(spark, 20)
-    plan = _plan(sjoin_pairs(dd, rr, left_id="doc_id", right_id="region_id",
-                             level=7, salt=4, broadcast=False))
-    assert "explode" in plan.lower()  # right side replicated by salt
+def test_sjoin_shuffle_route_runs_no_job_before_the_action(spark, tmp_path):
+    """broadcast=False plans the cell equi-join without a Spark job:
+    no hot-cell census runs at call time (AQE splits hot cells)."""
+    dd, rr = _parquet_world(spark, tmp_path, n_docs=400, n_regions=40)
+    pairs, jobs = _jobs_run(spark, lambda: sjoin_pairs(
+        dd, rr, left_id="doc_id", right_id="region_id", level=7,
+        broadcast=False))
+    assert jobs == 0
+    assert pairs.count() > 0
 
 
 def test_sdf_autopartition_widens_not_shrinks(spark):

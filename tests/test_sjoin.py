@@ -11,7 +11,7 @@ import pytest
 
 from cdap_geo_spark import docs as D, fixtures
 from cdap_geo_spark.core import wkb as W
-from cdap_geo_spark.operators.sjoin import sjoin, sjoin_pairs, hot_cells
+from cdap_geo_spark.operators.sjoin import sjoin, sjoin_pairs
 
 import oracle
 
@@ -75,71 +75,6 @@ def test_sjoin_level_invariance(spark, small_world, base_pairs):
                                   right_id="region_id")) == base_pairs
 
 
-def test_sjoin_salt_invariance(spark, small_world, base_pairs):
-    # SURVEY.md §5.3: result set identical under salting
-    dg, rr, _ = small_world
-    assert _pairs_set(sjoin_pairs(dg, rr, level=7, salt=4, left_id="doc_id",
-                                  right_id="region_id")) == base_pairs
-
-
-def test_sjoin_auto_salt_invariance(spark, small_world, base_pairs):
-    # the planner's own census-picked salt (broadcast disabled so the
-    # auto path actually runs) must not change the result set
-    dg, rr, _ = small_world
-    assert _pairs_set(sjoin_pairs(dg, rr, level=7, salt="auto",
-                                  broadcast=False, left_id="doc_id",
-                                  right_id="region_id")) == base_pairs
-
-
-def test_auto_salt_census_scales_with_skew(spark):
-    # all rows in one cell -> share 1 -> salt = min(parallelism, cap);
-    # near-uniform cells -> salt collapses to 1
-    from pyspark.sql import functions as F
-    from cdap_geo_spark.operators.sjoin import (MAX_AUTO_SALT, _auto_salt)
-    hot = spark.range(2000).select(F.lit(42).alias("cell_id"))
-    p = spark.sparkContext.defaultParallelism
-    assert _auto_salt(hot, p) == min(p, MAX_AUTO_SALT)
-    uniform = spark.range(2000).select((F.col("id") % 1000).alias("cell_id"))
-    assert _auto_salt(uniform, p) <= 2
-
-
-def test_auto_salt_census_unbiased_on_clustered_layout(spark):
-    # The engine's own recommended at-rest layout range-clusters on
-    # cell_id (io.py ingest): the hot cell then lives in ONE partition,
-    # typically not the first. The round-3 limit() census read only the
-    # first partitions and missed it; the per-partition-quota census
-    # must find it regardless of which partition holds the hot cell.
-    from pyspark.sql import functions as F
-    from cdap_geo_spark.operators.sjoin import _auto_salt
-    # 10k rows; ids >= 9000 share cell 10_000_000 (10% hot share), the
-    # rest are unique cells below it -> range clustering puts the hot
-    # cell in the LAST partition.
-    df = (spark.range(10_000)
-          .select(F.when(F.col("id") >= 9000, F.lit(10_000_000))
-                  .otherwise(F.col("id")).alias("cell_id"))
-          .repartitionByRange(8, "cell_id")
-          .sortWithinPartitions("cell_id"))
-    salt = _auto_salt(df, parallelism=32, sample_rows=1000)
-    # true hot share 10% x parallelism 32 -> expect ~ceil(3.2)=4;
-    # accept the stratified sample's rounding but NOT a miss (salt=1)
-    assert 2 <= salt <= 8
-
-
-def test_census_sample_bounded_and_scattered(spark):
-    from pyspark.sql import functions as F
-    from cdap_geo_spark.operators.sjoin import _census_sample
-    df = (spark.range(100_000)
-          .select(F.col("id").alias("cell_id"))
-          .repartitionByRange(8, "cell_id"))
-    sample = _census_sample(df, sample_rows=800).toPandas()
-    # quota = max(64, 800//8) = 100 per partition, 8 partitions
-    assert len(sample) <= 8 * 100
-    # scattered: rows drawn from every eighth of the key range
-    assert sample["cell_id"].nunique() > 0
-    buckets = (sample["cell_id"] // 12_500).nunique()
-    assert buckets == 8
-
-
 def test_sjoin_broadcast_equals_shuffle(spark, small_world, base_pairs):
     dg, rr, _ = small_world
     assert _pairs_set(sjoin_pairs(dg, rr, level=7, broadcast=True,
@@ -147,11 +82,71 @@ def test_sjoin_broadcast_equals_shuffle(spark, small_world, base_pairs):
                                   right_id="region_id")) == base_pairs
 
 
-def test_sjoin_no_marked_fastpath_same_result(spark, small_world, base_pairs):
+def test_sjoin_no_marked_fastpath_same_result(spark, small_world):
+    """The marked-cell fast path is sound: a region index built with
+    'marked' (inside cells skip the exact kernel) and one built with
+    'intersects' (every candidate refined) give the same pairs."""
+    import pyarrow as pa
+    from cdap_geo_spark.operators import sjoin as SJ
     dg, rr, _ = small_world
-    nofast = _pairs_set(sjoin_pairs(dg, rr, level=7, right_how="intersects",
-                                    left_id="doc_id", right_id="region_id"))
-    assert base_pairs == nofast
+    regs = rr.select("region_id", "geometry").collect()
+    ids = pa.array([r[0] for r in regs])
+    blobs = [None if r[1] is None else bytes(r[1]) for r in regs]
+    lb = W.parse_wkb([None if r[0] is None else bytes(r[0])
+                      for r in dg.select("geometry").collect()])
+    kw = dict(level=7, how="intersects", pad=SJ.PAD, dilate=0.0,
+              predicate="intersects", distance=None)
+    marked = SJ.RegionIndex(ids, blobs, 7, "marked", SJ.PAD)
+    assert marked.inside.any()
+    exact = SJ.RegionIndex(ids, blobs, 7, "intersects", SJ.PAD)
+    assert not exact.inside.any()
+    fast = set(zip(*SJ.batch_pairs(marked, lb, **kw)[:2]))
+    slow = set(zip(*SJ.batch_pairs(exact, lb, **kw)[:2]))
+    assert len(fast) > 0 and fast == slow
+
+
+def test_shuffle_route_splits_hot_cell_with_aqe(spark, no_broadcast):
+    """A hot cell on the shuffle route is split by AQE's skew join
+    (thresholds lowered for this test, restored after it), and the
+    pairs still equal the broadcast route's."""
+    from pyspark.sql import functions as F
+    rng = np.random.RandomState(11)
+    n = 6_000
+    hot = rng.rand(n) < 0.9
+    x = np.where(hot, 100_500 + rng.rand(n) * 20_000,
+                 rng.rand(n) * 600_000)
+    y = np.where(hot, 100_500 + rng.rand(n) * 20_000,
+                 rng.rand(n) * 1_200_000)
+    docs = spark.createDataFrame(
+        [(i, _pt(float(x[i]), float(y[i]))) for i in range(n)],
+        "doc_id long, geometry binary").repartition(4)
+    regions = spark.createDataFrame(
+        [(j, _box(float(x0), float(y0), float(x0) + 15_000.0,
+                  float(y0) + 15_000.0))
+         for j, (x0, y0) in enumerate(
+             [(100_000 + 5_000 * k, 100_000 + 5_000 * k) for k in range(4)]
+             + [(60_000 * k, 90_000 * k) for k in range(1, 12)])],
+        "region_id long, geometry binary")
+    conf = {"spark.sql.adaptive.advisoryPartitionSizeInBytes": "16k",
+            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes":
+                "16k",
+            "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2"}
+    saved = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        slow = sjoin_pairs(docs, regions, level=7, broadcast=False)
+        got = _pairs_set(slow)
+        plan = slow._jdf.queryExecution().executedPlan().toString()
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert "SortMergeJoin(skew=true)" in plan, plan
+    want = _pairs_set(sjoin_pairs(docs, regions, level=7, broadcast=True))
+    assert len(want) > 0.5 * n and got == want
 
 
 def test_bbox_predicate_is_bbox_overlap(spark, small_world):
@@ -200,14 +195,6 @@ def test_parallelism_invariance(spark, small_world, base_pairs):
                                  level=7, left_id="doc_id",
                                  right_id="region_id"))
     assert got == base_pairs
-
-
-def test_hot_cells_census(spark, small_world):
-    dg, _, _ = small_world
-    hc = hot_cells(dg, level=3, threshold=10)
-    rows = hc.collect()
-    assert all(r["count"] > 10 for r in rows)
-    assert len(rows) >= 1  # coarse level concentrates rows
 
 
 def test_box_pairs_native_matches_wkb_bbox_path(spark):
@@ -361,7 +348,6 @@ _EDGE_REGIONS = [
 _ROUTE_CASES = {
     "intersects": ("intersects", {}),
     "intersects_geom": ("intersects", {"keep_left_geom": True}),
-    "intersects_bbox_cover": ("intersects", {"left_how": "bbox"}),
     "bbox": ("bbox", {}),
     "distance": ("distance", {"distance": 5_000.0}),
     "distance_kept": ("distance", {"distance": 5_000.0,
@@ -413,30 +399,28 @@ def test_broadcast_route_matches_shuffle_route(spark, edge_world,
     predicate, kw = _ROUTE_CASES[case]
     args = dict(level=7, predicate=predicate, dedup=dedup, **kw)
     fast = sjoin_pairs(docs, regions, broadcast=True, **args)
-    slow = sjoin_pairs(docs, regions, broadcast=False, salt=1, **args)
+    slow = sjoin_pairs(docs, regions, broadcast=False, **args)
     assert fast.schema.simpleString() == slow.schema.simpleString()
     got, want = fast.collect(), slow.collect()
     if dedup:
         assert Counter(map(tuple, got)) == Counter(map(tuple, want))
     else:
         assert set(map(tuple, got)) == set(map(tuple, want))
-    pairs = {(r[0], r[1]) for r in got}
-    brute = _edge_oracle(predicate, kw.get("distance"))
-    if predicate == "bbox":
-        # see test_bbox_predicate_misses_overlap_outside_left_cover
-        assert pairs == brute - {(16, 104)}
-    else:
-        assert pairs == brute
+    assert {(r[0], r[1]) for r in got} == _edge_oracle(
+        predicate, kw.get("distance"))
 
 
-@pytest.mark.xfail(strict=True, reason="predicate='bbox' covers the left "
-                   "side with how='intersects', so overlapping bboxes "
-                   "whose left geometry misses the right side's cells "
-                   "are not paired")
-def test_bbox_predicate_misses_overlap_outside_left_cover(spark, edge_world):
+@pytest.mark.parametrize("broadcast", [True, False],
+                         ids=["broadcast", "shuffle"])
+def test_bbox_predicate_pairs_overlap_outside_left_cover(
+        spark, edge_world, no_broadcast, broadcast):
+    """A line around the L touches none of the L's cells but its bbox
+    overlaps the L's: predicate='bbox' covers the left side by its
+    bbox, so the pair is found on both routes."""
     docs, regions = edge_world
     got = {(r[0], r[1]) for r in sjoin_pairs(
-        docs, regions, level=7, predicate="bbox").collect()}
+        docs, regions, level=7, predicate="bbox",
+        broadcast=broadcast).collect()}
     assert (16, 104) in got
 
 
@@ -469,11 +453,9 @@ def test_broadcast_inside_cells_take_the_fast_path(monkeypatch):
     monkeypatch.setattr(G, "pairs_intersect", spy)
     kw = dict(level=7, pad=1.0, dilate=0.0, predicate="intersects",
               distance=None)
-    li, _, _ = SJ.batch_pairs(index, lb, how="intersects",
-                              fast_path_ok=True, **kw)
+    li, _, _ = SJ.batch_pairs(index, lb, how="intersects", **kw)
     assert li.tolist() == [0] and refined == []
-    li, _, _ = SJ.batch_pairs(index, lb, how="bbox", fast_path_ok=False,
-                              **kw)
+    li, _, _ = SJ.batch_pairs(index, lb, how="bbox", **kw)
     assert li.tolist() == [0] and refined == [0, 1]
 
 
@@ -486,7 +468,7 @@ def test_broadcast_empty_right_side_keeps_schema(spark, edge_world,
                 distance=100.0 if predicate == "distance" else None)
     empty = regions.limit(0)
     fast = sjoin_pairs(docs, empty, broadcast=True, **args)
-    slow = sjoin_pairs(docs, empty, broadcast=False, salt=1, **args)
+    slow = sjoin_pairs(docs, empty, broadcast=False, **args)
     assert fast.schema.simpleString() == slow.schema.simpleString()
     assert fast.count() == 0 == slow.count()
 
@@ -515,7 +497,7 @@ def test_multipoint_pairs_with_a_region_near_any_part(spark, no_broadcast,
                           ("distance", {"distance": 10.0})):
         got = {tuple(r) for r in sjoin_pairs(
             docs, regions, level=7, predicate=predicate,
-            broadcast=broadcast, salt=1, **kw).collect()}
+            broadcast=broadcast, **kw).collect()}
         assert got == {(1, 10), (2, 10)}, predicate
 
 
@@ -551,5 +533,5 @@ def test_multipart_doc_pairs_with_a_region_around_a_later_part(
                           ("distance", {"distance": 10.0})):
         got = {tuple(r) for r in sjoin_pairs(
             docs, regions, level=7, predicate=predicate,
-            broadcast=broadcast, salt=1, **kw).collect()}
+            broadcast=broadcast, **kw).collect()}
         assert got == {(1, 10), (2, 10), (3, 20)}, predicate

@@ -392,11 +392,11 @@ def test_tiles_in_the_sjoin_pass_match_both_references(spark, no_broadcast,
     assert got == Counter(map(tuple, own.collect()))
 
     matched = {tuple(r) for r in sjoin_pairs(
-        docs, regions, level=7, broadcast=False, salt=1).collect()}
+        docs, regions, level=7, broadcast=False).collect()}
     tiles_by_doc = {}
     for r in sjoin_pairs(docs, split_grid(spark, _EDGE_FRAME, _EDGE_SPLITS),
-                         right_id="tile_id", level=7, broadcast=False,
-                         salt=1).collect():
+                         right_id="tile_id", level=7,
+                         broadcast=False).collect():
         tiles_by_doc.setdefault(r.doc_id, set()).add(r.tile_id)
     tiles_by_doc = _half_open_tiles(docs_rows, tiles_by_doc)
     want = {(d, r, t) for d, r in matched for t in tiles_by_doc.get(d, ())}
