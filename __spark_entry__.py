@@ -3064,11 +3064,12 @@ def _q_window_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static spatial enrich (``streaming/enrich.py``) run on
-    its batch twin — the operator executes the IDENTICAL map-side plan
-    per micro-batch (stream-static broadcast cell join + bbox
-    prefilter + exact refine), so the batch run oracle-gates the
-    streaming plan; the streaming execution itself is pinned by
-    ``tests/test_enrich_stream.py`` against this same result."""
+    its batch twin — the operator executes the IDENTICAL plan per
+    micro-batch (the sjoin broadcast route's one ``mapInArrow`` pass
+    against regions indexed once, when it is called), so the batch run
+    oracle-gates the streaming plan; the streaming execution itself is
+    pinned by ``tests/test_enrich_stream.py`` against this same
+    result."""
     from cdap_geo_spark import docs as D
     from cdap_geo_spark.sources import relational as R
     from cdap_geo_spark.streaming.enrich import spatial_enrich_stream

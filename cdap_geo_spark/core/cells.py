@@ -245,10 +245,27 @@ def cover_points(x: np.ndarray, y: np.ndarray, level: int, pad: float = 1.0):
     return cover_bbox(bounds, level, pad=0.0)
 
 
+def _edge_cell_box(cells: np.ndarray):
+    """:func:`cell_box`, with the edge cells of the world frame reaching
+    out to infinity on their outer side: the covers clamp whatever lies
+    beyond the frame into them."""
+    minx, miny, maxx, maxy = cell_box(cells)
+    level, xi, yi = decode(cells)
+    top = (1 << level) - 1
+    minx[xi == 0] = -np.inf
+    miny[yi == 0] = -np.inf
+    maxx[xi == top] = np.inf
+    maxy[yi == top] = np.inf
+    return minx, miny, maxx, maxy
+
+
 def _cover_point_parts(batch: GeomBatch, rows: np.ndarray, level: int,
-                       pad: float):
+                       pad: float, exact: bool):
     """(owner row, cell) of the point cover of every part of the point
-    geometries ``rows``, each cell once per row, in part order."""
+    geometries ``rows``, each cell once per row, in part order. With
+    ``exact`` a part keeps only the cells whose closed box holds it:
+    the straddle rule also gives a part within ``pad`` of an edge the
+    cell across it, which the part does not touch."""
     part = batch.part_ring_off[batch.geom_part_off]
     lo = batch.ring_coord_off[part[rows]]
     cnt = batch.ring_coord_off[part[rows + 1]] - lo
@@ -257,6 +274,12 @@ def _cover_point_parts(batch: GeomBatch, rows: np.ndarray, level: int,
     off, cells = cover_points(batch.coords[idx, 0], batch.coords[idx, 1],
                               level, pad)
     owner = np.repeat(np.repeat(rows, cnt), np.diff(off))
+    if exact:
+        xy = batch.coords[np.repeat(idx, np.diff(off))]
+        minx, miny, maxx, maxy = _edge_cell_box(cells)
+        hold = ((minx <= xy[:, 0]) & (xy[:, 0] <= maxx)
+                & (miny <= xy[:, 1]) & (xy[:, 1] <= maxy))
+        owner, cells = owner[hold], cells[hold]
     # two parts in one cell: keep the first
     order = np.lexsort((cells, owner))
     dup = np.zeros(len(cells), bool)
@@ -294,7 +317,7 @@ def cover_batch(batch: GeomBatch, level: int, how: str = "bbox",
         np.where(is_pt[:, None], np.nan, bounds), level, pad)
     # points use the edge-straddle rule, a MultiPoint on every part
     owner_pt, cells_pt = _cover_point_parts(batch, np.flatnonzero(is_pt),
-                                            level, pad)
+                                            level, pad, how != "bbox")
     # merge the box CSR and the point cells row-wise
     counts_box = offsets_box[1:] - offsets_box[:-1]
     counts = counts_box + np.bincount(owner_pt, minlength=n)
@@ -332,17 +355,10 @@ def _refine_cover(batch: GeomBatch, offsets: np.ndarray, cells: np.ndarray,
     counts = offsets[1:] - offsets[:-1]
     owner = np.repeat(np.arange(len(batch)), counts)
     multi = counts > 1
+    # point covers are exact already (_cover_point_parts)
     todo = multi & ~is_pt & batch.valid
 
-    cminx, cminy, cmaxx, cmaxy = cell_box(cells)
-    # cover_bbox clamps whatever lies beyond the world frame into the
-    # edge cells, so an edge cell reaches out to infinity on that side
-    level, xi, yi = decode(cells)
-    top = (1 << level) - 1
-    cminx[xi == 0] = -np.inf
-    cminy[yi == 0] = -np.inf
-    cmaxx[xi == top] = np.inf
-    cmaxy[yi == top] = np.inf
+    cminx, cminy, cmaxx, cmaxy = _edge_cell_box(cells)
 
     # ---- axis-aligned rectangles: pure arithmetic ----------------------
     is_rect = G.is_axis_rect(batch, bounds) & todo

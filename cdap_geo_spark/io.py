@@ -11,9 +11,12 @@ version:
   range partitioning beats hash ``repartition`` here because parquet
   min/max column stats then give PARTITION PRUNING on cell ranges for
   free (a filter or a cell-join probe skips untouched files);
-* dataset stats (global bbox, row counts, hot cells) are collected in
-  the same job and committed to the checkpoint manifest — no second
-  full scan (the reference re-scans, ``cdap_geo/write.py:35-54``).
+* the write is a checkpointed manifest stage: per-file row counts and
+  bytes come from the parquet footers, so no stats scan follows the
+  write (the reference re-scans, ``cdap_geo/write.py:35-54``); the
+  stage fingerprint hashes the input's analyzed plan and the files it
+  reads, so a different or rewritten input rebuilds instead of
+  resuming stale output.
 """
 
 from __future__ import annotations
@@ -22,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from cdap_geo_spark import udfs
 from cdap_geo_spark.core import cells as C
-from cdap_geo_spark.plans.manifest import Manifest, cell_histogram, fingerprint
+from cdap_geo_spark.plans.manifest import Manifest, fingerprint, input_identity
 
 
 def with_cell_id(df: DataFrame, geom_col: str = "geometry",
@@ -42,7 +45,9 @@ def ingest(spark: SparkSession, docs: DataFrame, out_root: str, *,
     Returns the (possibly resumed) clustered DataFrame.
     """
     man = Manifest(spark, out_root)
-    fp = fingerprint("ingest", level, partitions, params)
+    fp = fingerprint("ingest", level, partitions, params,
+                     docs._jdf.queryExecution().analyzed().semanticHash(),
+                     [input_identity(f) for f in sorted(docs.inputFiles())])
 
     def build():
         d = with_cell_id(docs, geom_col, level)
@@ -50,27 +55,8 @@ def ingest(spark: SparkSession, docs: DataFrame, out_root: str, *,
         return (d.repartitionByRange(n, "cell_id")
                  .sortWithinPartitions("cell_id"))
 
-    res = man.run_stage(stage, fp, build)
-    out = man.read(stage)
-    if not res.skipped:
-        # enrich the manifest with dataset stats (footer-only + 1 agg)
-        info = man.stage_info(stage)
-        b = udfs.st_bounds()(F.col(geom_col))
-        stats = out.select(b.alias("_b")).agg(
-            F.min("_b.minx").alias("minx"), F.min("_b.miny").alias("miny"),
-            F.max("_b.maxx").alias("maxx"), F.max("_b.maxy").alias("maxy"),
-        ).collect()[0]
-        info["dataset_bbox"] = [stats["minx"], stats["miny"],
-                                stats["maxx"], stats["maxy"]]
-        info["hot_cells"] = cell_histogram(out)
-        import json
-        import os
-        mpath = os.path.join(out_root, stage, "manifest.json")
-        tmp = mpath + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(info, f, indent=1)
-        os.replace(tmp, mpath)
-    return out
+    man.run_stage(stage, fp, build)
+    return man.read(stage)
 
 
 def merged_column_names(columns: list, splitter: str = "-") -> list:

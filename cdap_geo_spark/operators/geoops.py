@@ -25,6 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 from pyspark.sql.functions import pandas_udf
 
+from cdap_geo_spark import udfs
 from cdap_geo_spark.core import cells as C, geom as G, wkb as W
 
 
@@ -804,10 +805,8 @@ def subdivide_by_cells(df: DataFrame, *, level: int,
     cell) with the cell box as the clip window — each row is a bounded
     work unit for downstream kernels (the skew remedy for huge
     polygons)."""
-    from cdap_geo_spark.operators.sjoin import _index_side
-    idx = _index_side(df, id_col, geom_col, level, "intersects", 1.0,
-                      keep_geom=True)
-    return idx.select(id_col, geom_col, "cell_id")
+    return df.select(id_col, geom_col, F.explode(udfs.st_cells(
+        level, how="intersects")(F.col(geom_col))).alias("cell_id"))
 
 
 # ---------------------------------------------------------------------------

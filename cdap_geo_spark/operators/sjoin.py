@@ -22,6 +22,8 @@ frame carries its :class:`BroadcastPass`: ``assign_tiles`` over that
 frame tiles each matched left row in the same pass and emits
 ``(left_id, right_id, tile_id)``, so the headline sjoin -> tiles ->
 dedup plan keeps one Python boundary.
+:func:`~cdap_geo_spark.streaming.enrich.spatial_enrich_stream` runs the
+same pass over each micro-batch of a stream.
 
 **Shuffle route** (the right side does not fit, or ``broadcast=False``):
 
@@ -245,6 +247,21 @@ class RegionIndex:
         self.region = owner[order]
         self.inside = inside[order]
 
+    @classmethod
+    def collect(cls, right: DataFrame, right_id: str, right_geom: str,
+                level: int, how: str) -> "RegionIndex":
+        """Read ``(right_id, right_geom)`` in one Spark job
+        (``sjoin.regions``) and index it here, in the driver."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        with job_label(right.sparkSession, "sjoin.regions"):
+            rows = right.select(right_id, right_geom).collect()
+        return cls(pa.array([r[0] for r in rows],
+                            to_arrow_type(right.schema[right_id].dataType)),
+                   [None if r[1] is None else bytes(r[1]) for r in rows],
+                   level, how, PAD)
+
     def probe(self, cells: np.ndarray, owner: np.ndarray):
         """(left row, region, any shared cell inside) for every
         distinct (left row, region) pair whose covers share a cell;
@@ -353,8 +370,7 @@ def _sjoin_broadcast(left: DataFrame, right: DataFrame, *, left_id,
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    with job_label(left.sparkSession, "sjoin.regions"):
-        rows = right.select(right_id, right_geom).collect()
+    index = RegionIndex.collect(right, right_id, right_geom, level, rh)
     keep_geom = keep_left_geom and predicate == "intersects"
     keep_dist = keep_distance and predicate == "distance"
     schema = T.StructType(
@@ -364,10 +380,6 @@ def _sjoin_broadcast(left: DataFrame, right: DataFrame, *, left_id,
            if keep_geom else [])
         + ([T.StructField("dist", T.DoubleType())] if keep_dist else []))
     arrow_schema = to_arrow_schema(schema)
-    index = RegionIndex(
-        pa.array([r[0] for r in rows], arrow_schema.field(1).type),
-        [None if r[1] is None else bytes(r[1]) for r in rows],
-        level, rh, PAD)
     kw = dict(level=level, how=lh, pad=PAD, dilate=dilate,
               predicate=predicate, distance=distance)
 

@@ -99,9 +99,7 @@ class Manifest:
         with open(mpath) as f:
             return json.load(f)
 
-    def run_stage(self, name: str, fp: str, build,
-                  partition_by: str | None = None,
-                  sort_within: str | None = None) -> StageResult:
+    def run_stage(self, name: str, fp: str, build) -> StageResult:
         """Run (or resume-skip) one checkpointed stage.
 
         ``build`` is a zero-arg callable returning the stage DataFrame.
@@ -115,15 +113,12 @@ class Manifest:
                                info["total_rows"], 0, info["partitions"])
         t0 = time.time()
         df = build()
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(partition_by)
         # the overwrite deletes the committed data first: uncommit it,
         # so a write that fails part-way cannot be resumed as committed
         if info is not None:
             os.remove(mpath)
         with job_label(self.spark, f"manifest.write[{name}]"):
-            writer.parquet(data_dir)
+            df.write.mode("overwrite").parquet(data_dir)
         files = self._collect_metrics(data_dir)
         total = sum(f["rows"] for f in files)
         wall_ms = int((time.time() - t0) * 1000)
@@ -160,11 +155,3 @@ class Manifest:
                 })
         return out
 
-
-def cell_histogram(df: DataFrame, cell_col: str = "cell_id",
-                   top: int = 50) -> list:
-    """Hot-cell census rows for the manifest (skew planning input)."""
-    rows = (df.groupBy(cell_col).count()
-            .orderBy("count", ascending=False).limit(top).collect())
-    return [{"cell_id": int(r[cell_col]), "rows": int(r["count"])}
-            for r in rows if r[cell_col] is not None]

@@ -104,17 +104,28 @@ def test_marked_cells_are_inside():
 
 def test_cover_agreement_with_exact_predicate():
     """Covered cells with how='intersects' are exactly the cells whose
-    box intersects the geometry (within the pad rule on the bbox hull)."""
+    box intersects the geometry (within the pad rule on the bbox hull).
+    A point within the pad of a cell edge keeps the cell across it only
+    when it lies on that edge."""
     ring = np.array([[500.0, 500.0], [20000.0, 800.0], [10000.0, 15000.0],
                      [500.0, 500.0]])
-    blob = W.polygon_to_wkb([ring])
-    b = W.parse_wkb([blob])
+    cs = C.cell_size(13)  # 512 m: x = 0 and y = 0 are cell edges
+    blobs = [W.polygon_to_wkb([ring]),
+             W.point_to_wkb(0.7, 16_000.0),    # 0.7 m east of an edge
+             W.point_to_wkb(-0.3, cs + 0.4),   # beside a corner
+             W.point_to_wkb(cs, 100.5),        # on an edge
+             W.point_to_wkb(-cs, -cs),         # on a corner
+             W.multi_to_wkb(W.KIND_MULTIPOINT, [
+                 W.point_to_wkb(0.7, 16_000.0),
+                 W.point_to_wkb(-2 * cs - 0.5, 100.5)])]
+    b = W.parse_wkb(blobs)
     off, cells, _ = C.cover_batch(b, 13, how="intersects")
     minx, miny, maxx, maxy = C.cell_box(cells)
     boxes = W.parse_wkb(W.boxes_to_wkb(minx, miny, maxx, maxy))
     hit = G.pairs_intersect(boxes, b, np.arange(len(cells)),
-                            np.zeros(len(cells), np.int64))
+                            np.repeat(np.arange(len(blobs)), np.diff(off)))
     assert hit.all()
+    assert np.diff(off)[1:].tolist() == [1, 1, 2, 4, 2]
 
 
 def test_null_geometry_empty_cover():

@@ -84,6 +84,22 @@ def test_sjoin_tile_pipeline_has_one_python_node(spark, tmp_path):
     assert len(_python_nodes(headline(pairs.select("*")))) == 2
 
 
+def test_enrich_batch_twin_has_one_python_node_and_no_join(spark, tmp_path):
+    """spatial_enrich_stream on a batch relation runs the plan of each
+    micro-batch: one MapInArrow pass over the rows (payload included),
+    no join and no exchange; the regions were indexed when it was
+    called."""
+    from cdap_geo_spark.streaming.enrich import spatial_enrich_stream
+    dd, rr = _parquet_world(spark, tmp_path)
+    out = spatial_enrich_stream(dd, rr, level=7)
+    out.collect()
+    nodes = _python_nodes(out)
+    assert len(nodes) == 1 and "MapInArrow" in nodes[0], nodes
+    assert "spans" in nodes[0] and "region_id" in nodes[0], nodes
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan and "Exchange" not in plan, plan
+
+
 def _job_names(spark, fn):
     """(fn(), the names of the Spark jobs fn ran, in start order)."""
     sc = spark.sparkContext

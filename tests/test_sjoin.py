@@ -535,3 +535,32 @@ def test_multipart_doc_pairs_with_a_region_around_a_later_part(
             docs, regions, level=7, predicate=predicate,
             broadcast=broadcast, **kw).collect()}
         assert got == {(1, 10), (2, 10), (3, 20)}, predicate
+
+
+#: a polygon whose east edge dents in to x = 0.5 at y = 16000, just east
+#: of the level-7 cell edge x = 0; the cell west of that edge is marked
+#: wholly inside it
+_DENT = bytes(W.polygon_to_wkb([[
+    [-40_000, -1_000], [100, -1_000], [0.5, 16_000], [100, 33_000],
+    [-40_000, 33_000], [-40_000, -1_000]]]))
+
+
+@pytest.mark.parametrize("broadcast", [True, False],
+                         ids=["broadcast", "shuffle"])
+def test_point_beside_a_marked_cell_is_refined(spark, no_broadcast,
+                                               broadcast):
+    """A point within the pad east of a cell edge takes the cell across
+    the edge by the straddle rule. That cell is marked inside the dented
+    polygon, but the point at x = 0.7 lies outside it: the exact left
+    cover drops the cell, so no route accepts the pair unrefined."""
+    docs = spark.createDataFrame(
+        [(1, _pt(0.7, 16_000)), (2, _pt(0.3, 16_000)),
+         (3, _pt(-0.3, 16_000))], "doc_id long, geometry binary")
+    regions = spark.createDataFrame([(10, _DENT)],
+                                    "region_id long, geometry binary")
+    got = {tuple(r) for r in sjoin_pairs(
+        docs, regions, level=7, broadcast=broadcast).collect()}
+    assert got == {(2, 10), (3, 10)}
+    assert got == {(d, 10) for d, g in docs.collect()
+                   if oracle.intersects(oracle.parse(bytes(g)),
+                                        oracle.parse(_DENT))}
