@@ -134,7 +134,7 @@ def _q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     _spatial_conf(spark)
     corpus = R.doc_points(spark, sf_dir).select("doc_id", "geometry")
     queries = R.query_points(spark, sf_dir)
-    out = knn_join(queries, corpus, k=5, level=8, max_rounds=40)
+    out = knn_join(queries, corpus, k=5, level=8)
     return out.select(F.col("query_id").cast("long"),
                       F.col("doc_id").cast("long"),
                       F.col("rank").cast("long"))
@@ -147,7 +147,7 @@ def _q_knn_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = R.doc_boxes(spark, sf_dir) \
                .selectExpr("doc_id as query_id", "geometry")
     corpus = R.region_boxes(spark, sf_dir).select("region_id", "geometry")
-    out = knn_join(queries, corpus, k=3, level=8, max_rounds=60,
+    out = knn_join(queries, corpus, k=3, level=8,
                    corpus_id="region_id", how="box")
     return out.select(F.col("query_id").cast("long"),
                       F.col("region_id").cast("long"),
@@ -172,7 +172,7 @@ def _q_idw(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_nationkey").alias("query_id"),
         ((F.col("n_nationkey") * 104729 + 7) % 700000).alias("x"),
         ((F.col("n_nationkey") * 130363 + 3) % 1300000).alias("y"))
-    out = idw_interpolate(queries, corpus, k=5, level=8, max_rounds=40)
+    out = idw_interpolate(queries, corpus, k=5, level=8)
     return out.select(F.col("query_id").cast("long"), "n_nb",
                       "num", "den", "est_centi")
 
@@ -195,7 +195,7 @@ def _q_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_nationkey").alias("query_id"),
         ((F.col("n_nationkey") * 104729 + 7) % 700000).alias("x"),
         ((F.col("n_nationkey") * 130363 + 3) % 1300000).alias("y"))
-    out = knn_classify(queries, corpus, k=5, level=8, max_rounds=40)
+    out = knn_classify(queries, corpus, k=5, level=8)
     return out.select(F.col("query_id").cast("long"),
                       F.col("label"), "votes")
 

@@ -1,4 +1,4 @@
-"""Int64 hierarchical Z-order cell scheme (H3/S2-style algebra).
+"""Int64 hierarchical Z-order cell scheme (H3/S2-style ids).
 
 Replaces the reference's two string cell-id schemes — the fixed-grid
 ``'{x}-{y}'`` ids (``cdap_geo/index_bbox.py:23``) and BNG letter refs
@@ -9,9 +9,9 @@ Replaces the reference's two string cell-id schemes — the fixed-grid
 where (xi, yi) is the cell's grid coordinate at ``level`` (cell size =
 ``world / 2**level``) and morton interleaves up to 29 bits per axis.
 Integer ids keep shuffle keys 8 bytes wide (vs 12+ byte strings) and
-give parent/child/k-ring by bit arithmetic — BNG letters are just a
-base-25 rendering of the same quadtree, so this preserves the
-reference's semantics while being join-key friendly.
+carry their level, so ids of mixed levels never collide — BNG letters
+are just a base-25 rendering of the same quadtree, so this preserves
+the reference's semantics while being join-key friendly.
 
 Cover semantics are pinned to the reference:
 
@@ -106,51 +106,10 @@ def decode(ids: np.ndarray):
     return level, xi, yi
 
 
-def parent(ids: np.ndarray, steps: int = 1) -> np.ndarray:
-    level, xi, yi = decode(ids)
-    lv = level - steps
-    if np.any(lv < 0):
-        raise ValueError("parent below level 0")
-    return encode_mixed(lv, xi >> steps, yi >> steps)
-
-
-def children(cell_id: int) -> np.ndarray:
-    level, xi, yi = decode(np.array([cell_id]))
-    lv = int(level[0]) + 1
-    if lv > MAX_LEVEL:
-        raise ValueError("children beyond max level")
-    x0, y0 = int(xi[0]) << 1, int(yi[0]) << 1
-    xs = np.array([x0, x0 + 1, x0, x0 + 1])
-    ys = np.array([y0, y0, y0 + 1, y0 + 1])
-    return encode(lv, xs, ys)
-
-
 def encode_mixed(levels: np.ndarray, xi: np.ndarray, yi: np.ndarray) -> np.ndarray:
     """encode() when level varies per row."""
     m = _part1by1(xi) | (_part1by1(yi) << np.uint64(1))
     return ((levels.astype(np.uint64) << np.uint64(LEVEL_SHIFT)) | m).astype(np.int64)
-
-
-def k_ring(cell_id: int, k: int) -> np.ndarray:
-    """All cells within Chebyshev distance k (the (2k+1)^2 block,
-    clipped to the world) — ring expansion primitive for kNN and
-    distance joins."""
-    level, xi, yi = decode(np.array([cell_id]))
-    lv, cx, cy = int(level[0]), int(xi[0]), int(yi[0])
-    n = 1 << lv
-    xs = np.arange(max(cx - k, 0), min(cx + k, n - 1) + 1)
-    ys = np.arange(max(cy - k, 0), min(cy + k, n - 1) + 1)
-    gx, gy = np.meshgrid(xs, ys, indexing="ij")
-    return encode(lv, gx.ravel(), gy.ravel())
-
-
-def ring_only(cell_id: int, k: int) -> np.ndarray:
-    """Just the hollow ring at Chebyshev distance exactly k."""
-    if k == 0:
-        return np.array([cell_id], np.int64)
-    full = k_ring(cell_id, k)
-    inner = set(k_ring(cell_id, k - 1).tolist())
-    return np.array([c for c in full.tolist() if c not in inner], np.int64)
 
 
 def cell_box(ids: np.ndarray):

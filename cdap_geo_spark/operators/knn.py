@@ -26,28 +26,33 @@ whatever the data (plus the planner's bounded row probe when the
 optimizer has no size estimate for the queries).
 
 **Ring route** (box mode, or a query set too large to broadcast) —
-distance-certified iterative expansion:
+distance-certified iterative expansion, every round planned by
+Catalyst (no Python after the one ``st_bounds`` decode per side):
 
-1. index the corpus points once at ``level`` (cell_id equi-join key);
-2. round r: each still-pending query emits the hollow Chebyshev ring
-   of cells at radius r around its own cell (Arrow PUDF
-   ``st_ring_cells``), equi-joins the corpus index, and unions the
-   candidates into an accumulator;
-3. a query is DONE when its current k-th nearest candidate distance
-   d_k <= r * cellsize: every unexplored cell lies at Chebyshev ring
-   >= r+1, whose nearest point is >= r*cellsize away, so no unseen
-   point can beat the current top-k;
+1. both sides become boxes — point mode uses a degenerate box at the
+   bounds' min corner — with their inclusive grid ranges at ``level``
+   (:func:`~cdap_geo_spark.operators.sjoin.grid_range`); the corpus
+   is indexed under every cell of its range;
+2. round [lo, hi]: each pending query explodes its range widened by
+   ``hi``, clipped to the corpus's grid extent, keeps the cells at
+   Chebyshev distance [lo, hi] from its range, equi-joins the corpus
+   index, and merges the candidates into a per-query top-k
+   accumulator. A join row is kept only at the corpus row's cover
+   cell nearest the query's range, so each (query, corpus) pair is
+   found exactly once, in one round;
+3. a query is DONE when it holds k candidates and its k-th distance
+   d_k < hi * cellsize — every unseen row lies in cells at Chebyshev
+   distance >= hi+1 from the query's range, hence more than
+   hi*cellsize away — or when ``hi`` reaches its Chebyshev distance
+   to the far side of the corpus extent (every row has been seen);
 4. final rank: the same window as the broadcast route's merge.
 
-The driver loop iterates over ring radii — the FIRST annulus is
-density-seeded (:func:`_seed_radius`: sized so its inscribed disk
-expects ``SEED_SAFETY*k`` points, certifying most queries in one
-round; the unseeded ``[0,0]`` round can never certify since its bound
-is d_k <= 0), then the radius doubles per round. Each round is one
-narrow equi-join plus a ``localCheckpoint``; candidate accumulation
-stays columnar. At 100 TB the corpus index is written cell-clustered
-(repartitionByRange on cell_id) so ring joins prune to the touched
-cells via parquet min/max stats.
+The first annulus is density-seeded (:func:`_seed_radius`: sized so
+its inscribed disk expects ``SEED_SAFETY*k`` points, certifying most
+queries in one round), then the radius doubles per round, so the loop
+ends by itself within about ``level + 2`` rounds. Each round is one
+equi-join plus a ``localCheckpoint``; candidate accumulation stays
+columnar.
 
 Both routes put points outside the world frame into the nearest edge
 cell (:func:`cells.point_grid`), which keeps the ring bound sound.
@@ -65,6 +70,7 @@ from cdap_geo_spark.core.lifetime import (track_checkpoint,
 from cdap_geo_spark.functions.relational import (BROADCAST_PROBE_ROWS,
                                                  broadcast_enabled,
                                                  broadcastable)
+from cdap_geo_spark.operators.sjoin import explode_grid, grid_range
 from cdap_geo_spark.session import job_label
 
 #: density seeding: size the FIRST annulus so its inscribed disk is
@@ -97,10 +103,10 @@ def _seed_radius(n_corpus: int, area: float, k: int, cellsize: float) -> int:
     Uniform-density estimate: the inscribed disk of the annulus
     ``[0, hi]`` has radius ``hi*cellsize``; choose the smallest ``hi``
     whose disk is expected to hold ``SEED_SAFETY*k`` points, so the
-    round-1 certification test ``d_k <= hi*cellsize`` usually passes.
-    A skewed corpus only costs extra rounds for sparse-area queries —
-    the certification bound itself is density-free, so correctness
-    never depends on this estimate.
+    round-1 certification test (``d_k`` within ``hi*cellsize``) usually
+    passes. A skewed corpus only costs extra rounds for sparse-area
+    queries — the certification bound itself is density-free, so
+    correctness never depends on this estimate.
     """
     import math
     if n_corpus <= 0 or area <= 0 or cellsize <= 0:
@@ -195,7 +201,7 @@ def batch_topk(qx: np.ndarray, qy: np.ndarray, px: np.ndarray,
     pass over the remaining occupied cells, which ends the search.
     Points farther than ``bound[q]`` are skipped: they cannot enter the
     query's top k. Distances are ``sqrt(dx*dx + dy*dy)``, bit-identical
-    to :func:`udfs.st_point_distance`.
+    to the ring route's native box distance over degenerate boxes.
 
     Returns ``(query index, point index, distance)`` arrays, at most k
     rows per query.
@@ -337,7 +343,6 @@ def knn_join(queries: DataFrame, corpus: DataFrame, *, k: int,
              level: int = 9,
              query_id: str = "query_id", corpus_id: str = "doc_id",
              query_geom: str = "geometry", corpus_geom: str = "geometry",
-             max_rounds: int = 12,
              broadcast_queries: bool | str = "auto",
              require_points: bool = True,
              how: str = "point") -> DataFrame:
@@ -354,17 +359,19 @@ def knn_join(queries: DataFrame, corpus: DataFrame, *, k: int,
     with no Spark job for file-backed queries. Otherwise (box mode,
     ``broadcast_queries=False``, a large query set, or broadcast joins
     switched off with ``spark.sql.autoBroadcastJoinThreshold < 0``) it
-    runs the certified ring loop. ``max_rounds`` bounds the ring loop
-    only. Both routes return the same rows.
+    runs the certified ring loop, which ends once every query is
+    certified or has seen the whole corpus extent. Both routes return
+    the same rows.
 
     In the ring loop, ``'auto'`` decides PER ROUND: the probe relation
-    is pending queries x annulus cells, whose exact row count is known
-    (pending is counted each round anyway, the annulus size is
-    arithmetic), so the probe is broadcast only while that product
-    stays under ``BROADCAST_PROBE_ROWS`` and broadcast joins are on —
-    a large query set at wide expansion falls back to a plain shuffle
+    is at most each pending query's clipped window of cells, whose
+    size the previous round's count action sums natively, so the
+    probe is broadcast only while that sum stays under
+    ``BROADCAST_PROBE_ROWS`` and broadcast joins are on — a large
+    query set at wide expansion falls back to a plain shuffle
     equi-join on cell_id instead of overflowing the broadcast. True
-    broadcasts every round, False never.
+    broadcasts every round; False adds no hint, which leaves the join
+    to Spark's own size-based planning.
 
     **Input contract (round 5)**: both sides must be POINTS — the
     ranking is point-to-point distance only; a box/polygon input would
@@ -381,27 +388,8 @@ def knn_join(queries: DataFrame, corpus: DataFrame, *, k: int,
     (box-to-box min Euclidean distance; exact for axis-aligned box
     geometries, a bbox approximation for general polygons — the
     honest upgrade over the validated-out corner-distance trap).
-    Always the ring loop. Differences from point mode, each
-    load-bearing for soundness:
-
-    - the corpus indexes into its full cell COVER (explode — a box
-      appears under every cell it touches), so a near box can never
-      hide behind a far min-corner;
-    - probes ring around the query's cover RECTANGLE
-      (``st_ring_cells_rect``, same floor/ceil arithmetic as the
-      corpus cover so the two grids align);
-    - candidates dedup on (query, corpus) before top-k — one box can
-      arrive from several cover cells;
-    - certification is STRICT (``d_k < hi*cellsize``): an unseen box
-      has every cover cell at Chebyshev ring >= hi+1, hence distance
-      >= hi*cellsize, and the strict compare removes the
-      boundary-equality tie (a box ending exactly on a cell edge)
-      that the point mode tolerates as measure-zero;
-    - the per-round broadcast decision uses the exact probe row count
-      of the next annulus (ring size varies per query box, so the
-      closed-form annulus arithmetic no longer applies).
-
-    ``require_points`` is ignored in box mode.
+    Always the ring loop, which then uses full boxes instead of min
+    corners; ``require_points`` is ignored.
 
     Spark jobs are named after the step that runs them (``knn.plan``,
     ``knn.queries``, ``knn.local_topk``, ``knn.merge``;
@@ -428,8 +416,7 @@ def knn_join(queries: DataFrame, corpus: DataFrame, *, k: int,
         if fast:
             return _knn_broadcast(queries, corpus,
                                   require_points=require_points, **args)
-    return _knn_rings(queries, corpus, max_rounds=max_rounds,
-                      broadcast_queries=broadcast_queries,
+    return _knn_rings(queries, corpus, broadcast_queries=broadcast_queries,
                       require_points=require_points, box=how == "box",
                       **args)
 
@@ -489,77 +476,85 @@ def _knn_broadcast(queries: DataFrame, corpus: DataFrame, *, k, level,
 
 
 def _knn_rings(queries: DataFrame, corpus: DataFrame, *, k, level,
-               query_id, corpus_id, query_geom, corpus_geom, max_rounds,
+               query_id, corpus_id, query_geom, corpus_geom,
                broadcast_queries, require_points, box) -> DataFrame:
-    """The ring route: certified cell-ring expansion, one round per
-    Spark join (module docstring)."""
+    """The ring route: certified cell-ring expansion, one Spark join per
+    round, no Python after the one bounds decode per side (module
+    docstring)."""
     spark = queries.sparkSession
     cs = C.cell_size(level)
-    may_broadcast = broadcast_enabled(spark)
 
-    qb = udfs.st_bounds()(F.col(query_geom))
-    cb = udfs.st_bounds()(F.col(corpus_geom))
-    if box:
-        q = queries.select(
-            F.col(query_id),
-            qb["minx"].alias("_qminx"), qb["miny"].alias("_qminy"),
-            qb["maxx"].alias("_qmaxx"), qb["maxy"].alias("_qmaxy"),
-        ).where(F.col("_qminx").isNotNull())
-        q_cols = ["_qminx", "_qminy", "_qmaxx", "_qmaxy"]
-        corp = corpus.select(
-            F.col(corpus_id),
-            cb["minx"].alias("_cminx"), cb["miny"].alias("_cminy"),
-            cb["maxx"].alias("_cmaxx"), cb["maxy"].alias("_cmaxy"),
-            F.explode(udfs.st_cells(level, "bbox", pad=0.0)(
-                F.col(corpus_geom))).alias("cell_id"))
-        c_cols = ["_cminx", "_cminy", "_cmaxx", "_cmaxy"]
-    else:
-        q = queries.select(
-            F.col(query_id),
-            qb["minx"].alias("_qx"), qb["miny"].alias("_qy"),
-            (qb["maxx"] - qb["minx"] + qb["maxy"] - qb["miny"]).alias("_qext"),
-        ).where(F.col("_qx").isNotNull())
-        q_cols = ["_qx", "_qy"]
-        corp = corpus.select(
-            F.col(corpus_id),
-            cb["minx"].alias("_cx"), cb["miny"].alias("_cy"),
-            (cb["maxx"] - cb["minx"] + cb["maxy"] - cb["miny"]).alias("_cext"),
-        ).where(F.col("_cx").isNotNull()) \
-         .withColumn("cell_id", udfs.st_grid_cell(level)(F.col("_cx"),
-                                                         F.col("_cy")))
-        c_cols = ["_cx", "_cy"]
-    corp = corp.persist()
+    def decoded(df: DataFrame, id_col: str, geom: str) -> DataFrame:
+        # persisted before any filter on the bounds: a filter pushed
+        # below the decode would run the UDF a second time
+        return df.select(F.col(id_col), udfs.st_bounds()(F.col(geom))
+                         .alias("_b")).persist()
+
+    def boxes(df: DataFrame, id_col: str, p: str) -> DataFrame:
+        """(id, bounds, extent, grid range) per non-empty geometry; in
+        point mode a degenerate box at the bounds' min corner."""
+        top = ("maxx", "maxy") if box else ("minx", "miny")
+        out = df.where(F.col("_b.minx").isNotNull()).select(
+            id_col,
+            F.col("_b.minx").alias(p + "minx"),
+            F.col("_b.miny").alias(p + "miny"),
+            F.col("_b." + top[0]).alias(p + "maxx"),
+            F.col("_b." + top[1]).alias(p + "maxy"),
+            (F.col("_b.maxx") - F.col("_b.minx") + F.col("_b.maxy")
+             - F.col("_b.miny")).alias(p + "ext"))
+        rng = grid_range(p + "minx", p + "miny", p + "maxx", p + "maxy",
+                         level)
+        return out.select("*", *(c.alias(p + n) for c, n in
+                                 zip(rng, ("x0", "y0", "x1", "y1"))))
+
+    cached = (decoded(queries, query_id, query_geom),
+              decoded(corpus, corpus_id, corpus_geom))
+    q = boxes(cached[0], query_id, "_q")
+    corp = boxes(cached[1], corpus_id, "_c")
     try:
-        pending = q.persist()
-        n_pending = None   # unknown until round 1's count: no broadcast
         with job_label(spark, "knn.stats"):
-            if require_points and not box:
-                qext = pending.agg(F.max("_qext").alias("ext")).first()
-                if qext and qext["ext"] is not None and qext["ext"] > 0:
-                    raise _non_point("queries", qext["ext"])
-            # density-seed the first annulus (one agg over the persisted
-            # index — it materializes the persist round 1 pays anyway)
-            if box:
-                # exploded cover: distinct boxes for the density estimate
-                # (approx — the seed is a heuristic, the bound is exact)
-                cstat = corp.agg(
-                    F.approx_count_distinct(corpus_id).alias("n"),
-                    F.min("_cminx").alias("x0"), F.max("_cmaxx").alias("x1"),
-                    F.min("_cminy").alias("y0"), F.max("_cmaxy").alias("y1")
-                ).first()
-            else:
-                cstat = corp.agg(
-                    F.count("*").alias("n"),
-                    F.min("_cx").alias("x0"), F.max("_cx").alias("x1"),
-                    F.min("_cy").alias("y0"), F.max("_cy").alias("y1"),
-                    F.max("_cext").alias("ext")).first()
-            if require_points and not box:
-                if cstat and cstat["ext"] is not None and cstat["ext"] > 0:
-                    raise _non_point("corpus", cstat["ext"])
-        if not cstat or not cstat["n"]:
-            # empty corpus: no neighbour exists — return the empty
-            # result instead of spinning max_rounds of empty joins
-            pending.unpersist()
+            cst = corp.agg(
+                F.count("*").alias("n"), F.max("_cext").alias("ext"),
+                F.min("_cminx").alias("x0"), F.min("_cminy").alias("y0"),
+                F.max("_cmaxx").alias("x1"), F.max("_cmaxy").alias("y1"),
+                F.min("_cx0").alias("gx0"), F.min("_cy0").alias("gy0"),
+                F.max("_cx1").alias("gx1"), F.max("_cy1").alias("gy1")
+            ).first()
+            # the corpus's grid extent: probes are clipped to it, and a
+            # query whose rings reach its far side has seen every row
+            ex0, ey0, ex1, ey1 = ((cst["gx0"], cst["gy0"], cst["gx1"],
+                                   cst["gy1"]) if cst["n"] else (0, 0, 0, 0))
+            area = (max((cst["x1"] - cst["x0"]) * (cst["y1"] - cst["y0"]),
+                        cs * cs) if cst["n"] else 0.0)
+            hi = _seed_radius(cst["n"], area, k, cs)
+
+            def window(h: int):
+                """Each query's range widened by ``h``, clipped to the
+                corpus extent."""
+                return (F.greatest(F.col("_qx0") - h, F.lit(ex0)),
+                        F.greatest(F.col("_qy0") - h, F.lit(ey0)),
+                        F.least(F.col("_qx1") + h, F.lit(ex1)),
+                        F.least(F.col("_qy1") + h, F.lit(ey1)))
+
+            def probe_rows(h: int):
+                x0, y0, x1, y1 = window(h)
+                # summed as doubles: a bigint sum may overflow
+                return F.sum((F.greatest(x1 - x0 + 1, F.lit(0))
+                              * F.greatest(y1 - y0 + 1, F.lit(0)))
+                             .cast("double"))
+
+            pending = q.withColumn("_reach", F.greatest(
+                F.col("_qx0") - ex0, ex1 - F.col("_qx1"),
+                F.col("_qy0") - ey0, ey1 - F.col("_qy1")))
+            qst = pending.agg(F.count("*").alias("n"),
+                              F.max("_qext").alias("ext"),
+                              probe_rows(hi).alias("pr")).first()
+        if require_points and not box:
+            for what, st in (("queries", qst), ("corpus", cst)):
+                if st["ext"] is not None and st["ext"] > 0:
+                    raise _non_point(what, st["ext"])
+        if not cst["n"] or not qst["n"]:
+            # no neighbour exists: the empty result, without a round
             schema = T.StructType([
                 q.schema[query_id],
                 T.StructField(corpus_id, corp.schema[corpus_id].dataType),
@@ -567,146 +562,99 @@ def _knn_rings(queries: DataFrame, corpus: DataFrame, *, k, level,
                 T.StructField("rank", T.IntegerType(), nullable=False),
             ])
             return spark.createDataFrame([], schema)
-        area = max((cstat["x1"] - cstat["x0"]) * (cstat["y1"] - cstat["y0"]),
-                   cs * cs)
-        hi0 = _seed_radius(cstat["n"], area, k, cs)
-        acc = None
-        # geometric annulus schedule seeded at the density-derived
-        # radius: [0,hi0], [hi0+1, 2*hi0+2], ...
-        lo, hi = 0, hi0
-        rounds = 0
-        if box:
-            # exact box-to-box min distance, fully native arithmetic
-            dx = F.greatest(F.col("_qminx") - F.col("_cmaxx"),
-                            F.col("_cminx") - F.col("_qmaxx"), F.lit(0.0))
-            dy = F.greatest(F.col("_qminy") - F.col("_cmaxy"),
-                            F.col("_cminy") - F.col("_qmaxy"), F.lit(0.0))
-            dist = F.sqrt(dx * dx + dy * dy)
-        else:
-            dist = udfs.st_point_distance()(
-                F.col("_qx"), F.col("_qy"), F.col("_cx"), F.col("_cy"))
-        def rect_ring_cells(lo_r: int, hi_r: int):
-            # native exact cell count of st_ring_cells_rect's annulus
-            # for one query box: cover rect (wc x hc cells) expanded by
-            # hi_r, minus the expansion by lo_r-1 — folded into the
-            # round's single count action so box mode needs no extra
-            # per-round probe job (the decision only picks broadcast
-            # vs shuffle; the result is identical either way)
-            wc = (F.floor(F.col("_qmaxx") / cs)
-                  - F.floor(F.col("_qminx") / cs) + 1)
-            hc = (F.floor(F.col("_qmaxy") / cs)
-                  - F.floor(F.col("_qminy") / cs) + 1)
-            outer = (wc + 2 * hi_r) * (hc + 2 * hi_r)
-            if lo_r <= 0:
-                return outer
-            return outer - (wc + 2 * (lo_r - 1)) * (hc + 2 * (lo_r - 1))
 
-        probe_rows_next = None
-        if box and broadcast_queries == "auto":
-            with job_label(spark, "knn.stats"):
-                row = pending.agg(
-                    F.sum(rect_ring_cells(lo, hi)).alias("pr")).first()
-            probe_rows_next = row["pr"] or 0
-        while rounds < max_rounds:
+        index = explode_grid(corp, (F.col("_cx0"), F.col("_cy0"),
+                                    F.col("_cx1"), F.col("_cy1")), level)
+        # a pair is kept only at the corpus row's cover cell nearest the
+        # query's range, so each (query, corpus) pair is found once
+        nearest = (
+            (F.col("_gx") == F.least(F.greatest("_cx0", "_qx0"), "_cx1"))
+            & (F.col("_gy") == F.least(F.greatest("_cy0", "_qy0"), "_cy1")))
+        dx = F.greatest(F.col("_qminx") - F.col("_cmaxx"),
+                        F.col("_cminx") - F.col("_qmaxx"), F.lit(0.0))
+        dy = F.greatest(F.col("_qminy") - F.col("_cmaxy"),
+                        F.col("_cminy") - F.col("_qmaxy"), F.lit(0.0))
+        dist = F.sqrt(dx * dx + dy * dy)
+        # a probe cell's Chebyshev distance from its query's range
+        cheb = F.greatest(F.col("_qx0") - F.col("_gx"),
+                          F.col("_gx") - F.col("_qx1"),
+                          F.col("_qy0") - F.col("_gy"),
+                          F.col("_gy") - F.col("_qy1"), F.lit(0))
+        n_pending, n_probes = qst["n"], qst["pr"]
+        lo, rounds, acc = 0, 0, None
+        while n_pending:
             # adaptive execution runs a lazy checkpoint's shuffles
             # while planning it, so the whole round sits in its label
             with job_label(spark, f"knn.round[{rounds}]"):
-                if box:
-                    ring = udfs.st_ring_cells_rect(level)(
-                        F.col("_qminx"), F.col("_qminy"),
-                        F.col("_qmaxx"), F.col("_qmaxy"),
-                        F.lit(lo), F.lit(hi))
-                else:
-                    ring = udfs.st_ring_cells(level)(
-                        F.col("_qx"), F.col("_qy"), F.lit(lo), F.lit(hi))
-                probes = pending.select(
-                    query_id, *q_cols, F.explode(ring).alias("cell_id"))
+                # the Chebyshev annulus [lo, hi] around each query's
+                # range: its clipped window minus the cells nearer
+                # than lo
+                probes = explode_grid(
+                    pending.select(query_id, "_qminx", "_qminy", "_qmaxx",
+                                   "_qmaxy", "_qx0", "_qy0", "_qx1", "_qy1"),
+                    window(hi), level) \
+                    .where(cheb >= lo).drop("_gx", "_gy")
                 if broadcast_queries == "auto":
-                    probe_rows = (probe_rows_next if box else
-                                  None if n_pending is None else
-                                  n_pending * _annulus_cells(lo, hi))
-                    bc = (may_broadcast and probe_rows is not None
-                          and probe_rows <= BROADCAST_PROBE_ROWS)
+                    bc = (broadcast_enabled(spark)
+                          and n_probes <= BROADCAST_PROBE_ROWS)
                 else:
                     bc = bool(broadcast_queries)
                 if bc:
                     probes = F.broadcast(probes)
-                found = probes.join(corp, "cell_id") \
-                    .select(query_id, *q_cols, corpus_id, *c_cols) \
-                    .withColumn("_dist", dist)
+                found = probes.join(index, "cell_id").where(nearest) \
+                    .select(query_id, corpus_id, dist.alias("_dist"))
                 merged = found if acc is None else acc.unionByName(found)
-                if box:
-                    # a box arrives once per touched cover cell (within a
-                    # round and across annuli); duplicate pairs would
-                    # double-count in the top-k window. Rows of one pair
-                    # are identical, so dropDuplicates is exact.
-                    merged = merged.dropDuplicates([query_id, corpus_id])
                 # keep only each query's current top-k — bounds the
                 # accumulator to k rows per query between rounds.
                 # localCheckpoint truncates the lineage: acc feeds pending
                 # feeds next round's acc, so without truncation the logical
                 # plan doubles per round (classic iterative-algorithm trap).
-                # lazy checkpoint: the stats agg below is this round's
-                # first action on acc and materializes it — eager=True
-                # would spend a whole extra job per round on the same work
-                new_acc = _top_k(merged, query_id, corpus_id, k).drop("rank") \
-                    .localCheckpoint(eager=False)
+                # lazy checkpoint: the count below is this round's first
+                # action on acc and materializes it — eager=True would
+                # spend a whole extra job per round on the same work
+                new_acc = _top_k(merged, query_id, corpus_id, k) \
+                    .drop("rank").localCheckpoint(eager=False)
                 # the OLD acc's blocks feed new_acc's lineage (checkpoint
                 # truncation makes them unrecomputable) — release it only
                 # AFTER the count below materializes new_acc
                 prev_acc, acc = acc, new_acc
-                # done: k candidates AND certified (d_k <= hi*cs: every
-                # unexplored cell is at Chebyshev ring >= hi+1, so no
-                # unseen point can be closer than hi*cellsize)
-                stats = acc.groupBy(query_id).agg(
-                    F.count("*").alias("_n"), F.max("_dist").alias("_dk"))
-                # box mode certifies STRICTLY (see docstring): unseen
-                # boxes are >= hi*cs away, and < removes the
-                # boundary-equality tie the point mode tolerates
-                if box:
-                    certified = F.col("_dk") < F.lit(float(hi) * cs)
-                else:
-                    certified = F.col("_dk") <= F.lit(float(hi) * cs)
-                done_q = stats.filter((F.col("_n") >= k) & certified)
-                pending_next = pending.join(done_q.select(query_id),
-                                            query_id, "left_anti") \
-                                      .localCheckpoint(eager=False)
-                # the round's first action materializes BOTH lazy
-                # checkpoints (acc feeds done_q feeds this join), so the
-                # next round starts from stored blocks. Box mode folds the
-                # NEXT annulus's exact probe-row count into the same
-                # aggregate (replacing the former per-round limit+count
-                # probe job on the exploded ring relation).
-                if box and broadcast_queries == "auto":
-                    row = pending_next.agg(
-                        F.count(F.lit(1)).alias("n"),
-                        F.sum(rect_ring_cells(hi + 1, hi * 2 + 2))
-                        .alias("pr")).first()
-                    n_pending, probe_rows_next = row["n"], row["pr"] or 0
-                else:
-                    n_pending = pending_next.count()
+                # done: k candidates nearer than hi*cs (every unseen row
+                # lies in a cell at Chebyshev distance >= hi+1 from the
+                # query's range, hence more than hi*cs away), or rings
+                # that reach the far side of the corpus extent
+                done_q = acc.groupBy(query_id).agg(
+                    F.count("*").alias("_n"), F.max("_dist").alias("_dk")) \
+                    .where((F.col("_n") >= k)
+                           & (F.col("_dk") < F.lit(float(hi) * cs)))
+                pending_next = pending.where(F.col("_reach") > hi) \
+                    .join(done_q.select(query_id), query_id, "left_anti") \
+                    .localCheckpoint(eager=False)
+                lo, hi = hi + 1, 2 * hi + 2
+                # the round's one action materializes BOTH lazy
+                # checkpoints (acc feeds done_q feeds pending_next) and
+                # sizes the next round's probes for the broadcast choice
+                row = pending_next.agg(F.count("*").alias("n"),
+                                       probe_rows(hi).alias("pr")).first()
+                n_pending, n_probes = row["n"], row["pr"]
             if prev_acc is not None:
                 unpersist_checkpoint(prev_acc)
             unpersist_checkpoint(pending)
             pending = pending_next
-            if n_pending == 0:
-                break
-            lo, hi = hi + 1, hi * 2 + 2
             rounds += 1
         unpersist_checkpoint(pending)  # loop-only; materialized by its count
         track_checkpoint(acc)        # feeds the result; scoped release
         return _top_k(acc, query_id, corpus_id, k) \
             .select(query_id, corpus_id, F.col("_dist").alias("dist"), "rank")
     finally:
-        corp.unpersist()
+        for df in cached:
+            df.unpersist()
 
 
 def idw_interpolate(queries: DataFrame, corpus: DataFrame, *, k: int = 5,
                     value_col: str = "v",
                     query_id: str = "query_id", corpus_id: str = "doc_id",
                     x_col: str = "x", y_col: str = "y",
-                    level: int = 8, max_rounds: int = 40,
-                    weight_scale: float = 1e12) -> DataFrame:
+                    level: int = 8, weight_scale: float = 1e12) -> DataFrame:
     """Inverse-distance-weighted interpolation (kriging-lite): estimate
     a value at each query point as the 1/d² weighted mean of its k
     nearest corpus values. Inputs are integer-coordinate relations
@@ -739,8 +687,7 @@ def idw_interpolate(queries: DataFrame, corpus: DataFrame, *, k: int = 5,
                         F.col(y_col).cast("double")).alias("geometry"))
     nn = knn_join(q.select(query_id, "geometry"),
                   c.select(corpus_id, "geometry"),
-                  k=k, level=level, max_rounds=max_rounds,
-                  query_id=query_id, corpus_id=corpus_id)
+                  k=k, level=level, query_id=query_id, corpus_id=corpus_id)
     j = (nn.select(query_id, corpus_id)
          .join(q.select(query_id, "_qx", "_qy"), query_id)
          .join(c.select(corpus_id, "_cx", "_cy", "_v"), corpus_id))
@@ -763,7 +710,7 @@ def knn_classify(queries: DataFrame, corpus: DataFrame, *, k: int = 5,
                  label_col: str = "label",
                  query_id: str = "query_id", corpus_id: str = "doc_id",
                  x_col: str = "x", y_col: str = "y",
-                 level: int = 8, max_rounds: int = 40) -> DataFrame:
+                 level: int = 8) -> DataFrame:
     """Majority-vote kNN classification — the sibling of
     :func:`idw_interpolate` for CATEGORICAL targets: each query point
     takes the most frequent label among its k nearest corpus points
@@ -790,8 +737,7 @@ def knn_classify(queries: DataFrame, corpus: DataFrame, *, k: int = 5,
                         F.col(y_col).cast("double")).alias("geometry"))
     nn = knn_join(q.select(query_id, "geometry"),
                   c.select(corpus_id, "geometry"),
-                  k=k, level=level, max_rounds=max_rounds,
-                  query_id=query_id, corpus_id=corpus_id)
+                  k=k, level=level, query_id=query_id, corpus_id=corpus_id)
     votes = (nn.select(query_id, corpus_id)
              .join(c.select(corpus_id, "_lbl"), corpus_id)
              .groupBy(query_id, "_lbl")

@@ -466,10 +466,40 @@ def refine_candidates(cand: DataFrame, *, left_id: str, right_id: str,
     raise ValueError(f"unknown predicate {predicate!r}")
 
 
-#: cell-key packing for :func:`box_pairs_native`: ``cx * 2^32 + cy``.
-#: With a negative ``cy`` two cells can share a key; a shared key only
-#: adds candidates, which the exact bbox test removes.
-_CELL_PACK = 1 << 32
+def grid_range(minx: str, miny: str, maxx: str, maxy: str,
+               level: int) -> tuple:
+    """Inclusive grid ranges ``(x0, y0, x1, y1)`` (bigint Columns) of
+    the cells a box's bounds columns touch at ``level``: per bound
+    ``floor((v - WORLD_X0) / cellsize)``, clamped into
+    ``[0, 2**level - 1]`` — for a point, exactly
+    :func:`cells.point_grid`. The map is monotone, so any point two
+    boxes share lies in a cell of both ranges; and a box whose range
+    is ``g >= 1`` cells (Chebyshev) from another's lies more than
+    ``(g - 1) * cellsize`` from it, also beyond the world frame."""
+    cs = C.cell_size(level)
+    top = F.lit((1 << level) - 1)
+
+    def cell(v: str, origin: float):
+        return F.least(F.greatest(F.floor((F.col(v) - origin) / cs),
+                                  F.lit(0)), top)
+    return (cell(minx, C.WORLD_X0), cell(miny, C.WORLD_Y0),
+            cell(maxx, C.WORLD_X0), cell(maxy, C.WORLD_Y0))
+
+
+def explode_grid(df: DataFrame, ranges: tuple, level: int) -> DataFrame:
+    """``df`` with one row per cell of its inclusive grid ``ranges``
+    (``(x0, y0, x1, y1)`` Columns), the cell in ``_gx``, ``_gy`` and
+    ``cell_id = _gx * 2**level + _gy``. An empty range (start > stop)
+    emits no row."""
+    x0, y0, x1, y1 = ranges
+
+    def cells(a, b):
+        # sequence counts down when a > b
+        return F.explode(F.when(a <= b, F.sequence(a, b)))
+    return (df.select("*", cells(x0, x1).alias("_gx"))
+              .select("*", cells(y0, y1).alias("_gy"))
+              .withColumn("cell_id",
+                          F.col("_gx") * (1 << level) + F.col("_gy")))
 
 
 def box_pairs_native(left: DataFrame, right: DataFrame, *,
@@ -487,40 +517,27 @@ def box_pairs_native(left: DataFrame, right: DataFrame, *,
     doubles the relation already has, so round-tripping them through
     a WKB blob and two Arrow kernels buys nothing).
 
-    Losslessness of the native cover: each side covers the INCLUSIVE
-    integer cell range ``c(min) .. c(max)`` per axis, with
-    ``c(v) = CAST(v AS BIGINT) DIV cs``. ``c`` truncates toward zero,
-    so the cells next to the axes are twice as wide, but it is
-    monotone: any point ``p`` of the region two boxes share has
-    ``c(p)`` inside both ranges, so boxes that overlap OR touch share a
-    cell, at negative coordinates too. The exact strict-inequality
-    bbox test then decides, exactly as :func:`refine_candidates` does
-    for the decoded path.
+    Losslessness of the native cover: each side covers its inclusive
+    :func:`grid_range`, whose cell map is monotone, so boxes that
+    overlap OR touch share a cell, at negative coordinates and beyond
+    the world frame too. The exact strict-inequality bbox test then
+    decides, exactly as :func:`refine_candidates` does for the decoded
+    path.
 
     Scale: identical to the WKB path — map-side cell fan-out bounded
     by box size / cell size, one equi-join sized by the same broadcast
     planner, one narrow id-pair dedup exchange.
     """
     mnx, mny, mxx, mxy = bounds
-    cs = int(C.cell_size(level))
 
     def indexed(df: DataFrame, id_col: str, p: str) -> DataFrame:
         b = df.select(
             F.col(id_col),
             F.col(mnx).alias(p + "minx"), F.col(mny).alias(p + "miny"),
             F.col(mxx).alias(p + "maxx"), F.col(mxy).alias(p + "maxy"))
-        cx = F.explode(F.sequence(
-            F.expr(f"CAST({p}minx AS BIGINT) DIV {cs}"),
-            F.expr(f"CAST({p}maxx AS BIGINT) DIV {cs}"))).alias("_cx")
-        out = b.select("*", cx)
-        cy = F.explode(F.sequence(
-            F.expr(f"CAST({p}miny AS BIGINT) DIV {cs}"),
-            F.expr(f"CAST({p}maxy AS BIGINT) DIV {cs}"))).alias("_cy")
-        out = out.select("*", cy)
-        return out.select(
-            id_col, p + "minx", p + "miny", p + "maxx", p + "maxy",
-            (F.col("_cx") * F.lit(_CELL_PACK) + F.col("_cy"))
-            .alias("cell_id"))
+        rng = grid_range(p + "minx", p + "miny", p + "maxx", p + "maxy",
+                         level)
+        return explode_grid(b, rng, level).drop("_gx", "_gy")
 
     if broadcast == "auto":
         broadcast = broadcastable(right)

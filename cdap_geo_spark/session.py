@@ -61,6 +61,13 @@ def _tune_malloc_env() -> None:
     os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "-1")
 
 
+def _default_driver_memory() -> str:
+    """Half the host's physical memory, at most 24g: a local session's
+    heap has to fit beside its Python workers and the rest of the host."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(phys // 2, 24 << 30) >> 20}m"
+
+
 def get_spark(app: str = "cdap_geo_spark", cores: int | None = None,
               shuffle_partitions: int | None = None,
               extra_conf: dict | None = None,
@@ -87,7 +94,8 @@ def get_spark(app: str = "cdap_geo_spark", cores: int | None = None,
                                 os.path.join(tempfile.gettempdir(),
                                              "cdap_geo_warehouse")))
          .config("spark.driver.memory",
-                 os.environ.get("SPARK_DRIVER_MEMORY", "24g")))
+                 os.environ.get("SPARK_DRIVER_MEMORY",
+                                _default_driver_memory())))
     if master and master.startswith("local-cluster"):
         # Each executor JVM must be told its OWN core budget: without
         # -XX:ActiveProcessorCount every JVM sizes GC/JIT/netty pools

@@ -1,9 +1,11 @@
 """Arrow-vectorized pandas UDF factories over the NumPy kernels.
 
-This is the ONLY place geometry bytes cross the JVM<->Python boundary,
-always as Arrow batches (engine contract: no per-row Python — the
-reference's 11 per-row ``F.udf`` sites, SURVEY.md §2.10, all collapse
-into these factories). Parameterized UDFs follow the reference's
+Geometry bytes cross the JVM<->Python boundary only as Arrow batches:
+through these column UDFs, or through the operators' own
+``mapInArrow`` passes over whole batches (the broadcast sjoin probe,
+the broadcast kNN top-k, stream enrichment). Engine contract: no
+per-row Python — the reference's 11 per-row ``F.udf`` sites,
+SURVEY.md §2.10, all collapse into these factories and passes. Parameterized UDFs follow the reference's
 currying pattern (closure captures level/how/resolution,
 ``cdap_geo/functions.py:20-24``).
 
@@ -258,93 +260,3 @@ def st_intersection_area():
     def _ia(l: pd.Series, r: pd.Series) -> pd.Series:
         return pd.Series(run(l, r))
     return _ia
-
-
-def st_point_distance():
-    """Fast path: (lx, ly, rx, ry) -> double, fully numeric, no WKB."""
-    @pandas_udf(T.DoubleType())
-    def _d(lx: pd.Series, ly: pd.Series, rx: pd.Series, ry: pd.Series) -> pd.Series:
-        dx = lx.to_numpy(np.float64) - rx.to_numpy(np.float64)
-        dy = ly.to_numpy(np.float64) - ry.to_numpy(np.float64)
-        return pd.Series(np.sqrt(dx * dx + dy * dy))
-    return _d
-
-
-# ---------------------------------------------------------------------------
-# kNN support
-# ---------------------------------------------------------------------------
-
-def st_grid_cell(level: int):
-    """(x, y) -> int64 id of the cell holding the point, clamped into
-    the world grid (:func:`cells.point_grid`) — the kNN corpus key,
-    on the same grid as :func:`st_ring_cells`. Inputs must be
-    non-null."""
-    @pandas_udf(T.LongType())
-    def _cell(x: pd.Series, y: pd.Series) -> pd.Series:
-        xi, yi = C.point_grid(x.to_numpy(np.float64),
-                              y.to_numpy(np.float64), level)
-        return pd.Series(C.encode(level, xi, yi))
-    return _cell
-
-
-def st_ring_cells(level: int):
-    """(x, y, lo:int, hi:int) -> array<long> cells whose Chebyshev
-    distance from the point's (clamped) cell lies in [lo, hi] — the
-    annulus probe for geometric cell-ring expansion in kNN (lo=hi=0
-    is the point's own cell)."""
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def _ring(x: pd.Series, y: pd.Series, lo: pd.Series, hi: pd.Series) -> pd.Series:
-        n = 1 << level
-        xi, yi = C.point_grid(x.to_numpy(np.float64),
-                              y.to_numpy(np.float64), level)
-        los = lo.to_numpy(np.int64)
-        his = hi.to_numpy(np.int64)
-        out = []
-        for cx, cy, l_, h_ in zip(xi, yi, los, his):
-            xs = np.arange(max(cx - h_, 0), min(cx + h_, n - 1) + 1)
-            ys = np.arange(max(cy - h_, 0), min(cy + h_, n - 1) + 1)
-            gx, gy = np.meshgrid(xs, ys, indexing="ij")
-            cheb = np.maximum(np.abs(gx - cx), np.abs(gy - cy))
-            m = (cheb >= l_) & (cheb <= h_)
-            out.append(C.encode(level, gx[m], gy[m]))
-        return pd.Series(out)
-    return _ring
-
-
-def st_ring_cells_rect(level: int):
-    """(minx, miny, maxx, maxy, lo:int, hi:int) -> array<long> cells
-    whose Chebyshev distance from the BOX's cover rectangle lies in
-    [lo, hi] — the annulus probe for box-mode kNN. The base rectangle
-    reproduces :func:`cells.cover_bbox`'s pad=0 floor/ceil arithmetic
-    exactly, so ring cells align with the corpus-side cover index
-    (misaligned conventions would make the certification bound
-    unsound at cell boundaries)."""
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def _ring(minx: pd.Series, miny: pd.Series, maxx: pd.Series,
-              maxy: pd.Series, lo: pd.Series, hi: pd.Series) -> pd.Series:
-        cs = C.cell_size(level)
-        n = 1 << level
-        x1 = np.clip(np.floor((minx.to_numpy(np.float64) - C.WORLD_X0) / cs),
-                     0, n - 1).astype(np.int64)
-        y1 = np.clip(np.floor((miny.to_numpy(np.float64) - C.WORLD_Y0) / cs),
-                     0, n - 1).astype(np.int64)
-        x2 = np.clip(np.ceil((maxx.to_numpy(np.float64) - C.WORLD_X0) / cs),
-                     1, n).astype(np.int64)
-        y2 = np.clip(np.ceil((maxy.to_numpy(np.float64) - C.WORLD_Y0) / cs),
-                     1, n).astype(np.int64)
-        bx = x1 + np.maximum(x2 - x1, 1) - 1
-        by = y1 + np.maximum(y2 - y1, 1) - 1
-        los = lo.to_numpy(np.int64)
-        his = hi.to_numpy(np.int64)
-        out = []
-        for ax0, ay0, ax1, ay1, l_, h_ in zip(x1, y1, bx, by, los, his):
-            xs = np.arange(max(ax0 - h_, 0), min(ax1 + h_, n - 1) + 1)
-            ys = np.arange(max(ay0 - h_, 0), min(ay1 + h_, n - 1) + 1)
-            gx, gy = np.meshgrid(xs, ys, indexing="ij")
-            dx = np.maximum(np.maximum(ax0 - gx, gx - ax1), 0)
-            dy = np.maximum(np.maximum(ay0 - gy, gy - ay1), 0)
-            cheb = np.maximum(dx, dy)
-            m = (cheb >= l_) & (cheb <= h_)
-            out.append(C.encode(level, gx[m], gy[m]))
-        return pd.Series(out)
-    return _ring

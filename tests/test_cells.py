@@ -22,29 +22,6 @@ def test_encode_decode_roundtrip():
         assert (ids >= 0).all()  # sign bit unused
 
 
-def test_parent_child():
-    ids = C.encode(10, np.array([513]), np.array([770]))
-    p = C.parent(ids)
-    lv, xi, yi = C.decode(p)
-    assert (lv[0], xi[0], yi[0]) == (9, 256, 385)
-    kids = C.children(int(p[0]))
-    lv2, xs, ys = C.decode(kids)
-    assert sorted(zip(xs, ys)) == [(512, 770), (512, 771), (513, 770), (513, 771)]
-    assert int(ids[0]) in kids.tolist()
-
-
-def test_k_ring():
-    cid = int(C.encode(8, np.array([100]), np.array([100]))[0])
-    assert len(C.k_ring(cid, 0)) == 1
-    assert len(C.k_ring(cid, 1)) == 9
-    assert len(C.k_ring(cid, 2)) == 25
-    assert len(C.ring_only(cid, 1)) == 8
-    assert len(C.ring_only(cid, 2)) == 16
-    # world clipping at the corner
-    corner = int(C.encode(8, np.array([0]), np.array([0]))[0])
-    assert len(C.k_ring(corner, 1)) == 4
-
-
 def test_cell_box_roundtrip():
     ids = C.encode(12, np.array([2048]), np.array([1024]))
     minx, miny, maxx, maxy = C.cell_box(ids)

@@ -75,7 +75,7 @@ def _check_k1_and_sparse_region(spark):
     queries = spark.createDataFrame(
         [("q1", 500000.0, 900000.0)], "query_id string, x double, y double"
     ).select("query_id", udfs.st_point()(F.col("x"), F.col("y")).alias("geometry"))
-    got = knn_join(queries, corpus, k=2, level=9, max_rounds=80).toPandas()
+    got = knn_join(queries, corpus, k=2, level=9).toPandas()
     # c3 (200100, 200000) is marginally closer to (500000, 900000)
     # than c2 (200000, 200000): 761537 m vs 761577 m
     assert list(got.sort_values("rank").doc_id) == ["c3", "c2"]
@@ -337,7 +337,7 @@ def test_knn_box_matches_bruteforce(spark):
     k = 4
     got = knn_join(queries.selectExpr("gid as query_id", "geometry"),
                    corpus.selectExpr("gid as doc_id", "geometry"),
-                   k=k, level=8, max_rounds=60, how="box").toPandas()
+                   k=k, level=8, how="box").toPandas()
 
     qp = queries.toPandas()
     cp = corpus.toPandas()
@@ -364,10 +364,10 @@ def test_knn_box_degenerate_boxes_match_point_mode(spark):
         .selectExpr("gid as doc_id", "geometry").cache()
     queries = _random_boxes(spark, 8, 13, "q", max_side=0.0) \
         .selectExpr("gid as query_id", "geometry").cache()
-    pt = knn_join(queries, corpus, k=3, level=9, max_rounds=40,
+    pt = knn_join(queries, corpus, k=3, level=9,
                   require_points=False).toPandas()
     bx = knn_join(queries, corpus, k=3, level=9,
-                  how="box", max_rounds=40).toPandas()
+                  how="box").toPandas()
     key = ["query_id", "rank"]
     pt = pt.sort_values(key).reset_index(drop=True)
     bx = bx.sort_values(key).reset_index(drop=True)
@@ -436,7 +436,7 @@ def test_idw_interpolate_matches_bruteforce(spark):
                spark.createDataFrame(queries, "query_id long, x long, y long"),
                spark.createDataFrame(corpus,
                                      "doc_id long, x long, y long, v long"),
-               k=4, level=6, max_rounds=60).collect()}
+               k=4, level=6).collect()}
     for qid, qx, qy in queries:
         nn = sorted(corpus, key=lambda c: ((c[1] - qx) ** 2
                                            + (c[2] - qy) ** 2, c[0]))[:4]
@@ -457,7 +457,7 @@ def test_idw_coincident_point_dominates(spark):
     r = idw_interpolate(
         spark.createDataFrame(queries, "query_id long, x long, y long"),
         spark.createDataFrame(corpus, "doc_id long, x long, y long, v long"),
-        k=4, level=5, max_rounds=60).collect()[0]
+        k=4, level=5).collect()[0]
     assert r.n_nb == 4
     assert abs(r.est_centi - 77700) < 100  # coincident value dominates
 
@@ -477,8 +477,7 @@ def test_knn_classify_matches_bruteforce(spark):
         corpus, "doc_id long, x long, y long, label string")
     qdf = spark.createDataFrame(queries, "query_id long, x long, y long")
     got = {r.query_id: (r.label, r.votes) for r in
-           knn_classify(qdf, cdf, k=5, level=6,
-                        max_rounds=60).collect()}
+           knn_classify(qdf, cdf, k=5, level=6).collect()}
     want = {}
     for qid, qx, qy in queries:
         ranked = sorted(corpus,
@@ -502,5 +501,88 @@ def test_knn_classify_tie_breaks_to_smallest_label(spark):
     cdf = spark.createDataFrame(
         corpus, "doc_id long, x long, y long, label string")
     qdf = spark.createDataFrame(queries, "query_id long, x long, y long")
-    got = knn_classify(qdf, cdf, k=4, level=6, max_rounds=60).collect()
+    got = knn_classify(qdf, cdf, k=4, level=6).collect()
     assert [(r.query_id, r.label, r.votes) for r in got] == [(0, "A", 2)]
+
+
+# --- ring route: far queries, box edges ---
+
+def test_knn_far_query_rings_end_and_find_the_neighbour(spark):
+    # level 16 (64 m cells), a 2-point corpus, one query 1,000 km away:
+    # 15,625 cell rings separate it from the corpus, so the rings must
+    # stay clipped to the corpus extent and the loop end by itself
+    corpus = [("a", 0.0, 0.0), ("b", 500.0, 300.0)]
+    queries = [("near", 100.0, 100.0), ("far", 1_000_000.0, 0.0)]
+    q = _points(spark, queries).withColumnRenamed("gid", "query_id")
+    c = _points(spark, corpus, parts=2).withColumnRenamed("gid", "doc_id")
+    got = _rows(knn_join(q, c, k=1, level=16, broadcast_queries=False))
+    assert got == _bruteforce(queries, corpus, 1)
+
+
+def _box_rows(spark, rows):
+    """(gid, geometry) frame from (id, minx, miny, maxx, maxy) rows; a
+    row (id, wkb) keeps its raw WKB (or None)."""
+    from cdap_geo_spark.core import wkb as W
+    data = [(r[0], bytes(W.boxes_to_wkb([r[1]], [r[2]], [r[3]], [r[4]])[0]))
+            if len(r) == 5 else r for r in rows]
+    return spark.createDataFrame(spark.sparkContext.parallelize(data, 3),
+                                 "gid string, geometry binary")
+
+
+def _box_bruteforce(queries, corpus, k):
+    """Sorted (query_id, rank, doc_id, dist) rows of the exact kNN under
+    box-to-box distance, ranked by (dist, doc_id)."""
+    out = []
+    for qid, qx0, qy0, qx1, qy1 in (q for q in queries if len(q) == 5):
+        ranked = []
+        for cid, cx0, cy0, cx1, cy1 in (c for c in corpus if len(c) == 5):
+            dx = max(qx0 - cx1, cx0 - qx1, 0.0)
+            dy = max(qy0 - cy1, cy0 - qy1, 0.0)
+            ranked.append((math.sqrt(dx * dx + dy * dy), cid))
+        out += [(qid, i + 1, cid, d)
+                for i, (d, cid) in enumerate(sorted(ranked)[:k])]
+    return sorted(out)
+
+
+@pytest.mark.parametrize("flag", [True, False])
+def test_knn_box_edges_match_bruteforce(spark, flag):
+    """Box mode vs the box-distance brute force, exact (rank, id,
+    dist): boxes on cell edges (level 8: 16,384 m cells), boxes over
+    many cells, zero-distance overlaps tied by id, negative
+    coordinates, boxes beyond the world frame and null/empty
+    geometries; probes broadcast or shuffled."""
+    cs = 16384.0
+    corpus = [
+        ("e0", 0.0, 0.0, cs, cs), ("e1", cs, 0.0, 2 * cs, cs),
+        ("e2", -2 * cs, -cs, -cs, 0.0), ("pt", cs, 2 * cs, cs, 2 * cs),
+        ("big", -200_000.0, 100_000.0, 300_000.0, 150_000.0),
+        ("o3", 50_000.0, 50_000.0, 70_000.0, 70_000.0),
+        ("o1", 40_000.0, 40_000.0, 60_000.0, 60_000.0),
+        ("o2", 45_000.0, 45_000.0, 55_000.0, 55_000.0),
+        ("neg", -500_000.5, -300_000.25, -499_000.0, -299_500.0),
+        ("out1", -1_200_000.0, 0.0, -1_100_000.0, 10.0),
+        ("out2", 3_200_000.0, 3_300_000.0, 3_250_000.0, 3_400_000.0),
+        ("null", None), ("pempty", POINT_EMPTY), ("cempty", COLLECTION_EMPTY),
+    ]
+    rng = np.random.RandomState(31)
+    for i in range(40):
+        x, y = rng.uniform(-600_000, 600_000, 2).round(2)
+        w, h = rng.uniform(0, 3 * cs, 2).round(2)
+        corpus.append((f"r{i:02d}", x, y, x + w, y + h))
+    queries = [
+        ("qa", 0.0, 0.0, cs, cs),
+        ("qb", 50_000.0, 50_000.0, 50_000.0, 50_000.0),
+        ("qc", -1_300_000.0, -1_300_000.0, -1_250_000.0, -1_250_000.0),
+        ("qd", -100_000.0, -100_000.0, 400_000.0, 400_000.0),
+        ("qe", -700_000.0, -50_000.0, -690_000.0, -40_000.0),
+        ("qf", 2 * cs, 3 * cs, 2 * cs, 4 * cs),
+        ("qg", 3_300_000.0, 3_500_000.0, 3_400_000.0, 3_600_000.0),
+        ("qnull", None), ("qempty", POINT_EMPTY),
+    ]
+    q = _box_rows(spark, queries).withColumnRenamed("gid", "query_id")
+    c = _box_rows(spark, corpus).withColumnRenamed("gid", "doc_id")
+    want = _box_bruteforce(queries, corpus, 4)
+    assert sum(r[3] == 0.0 for r in want) >= 8   # overlaps and ties
+    got = _rows(knn_join(q, c, k=4, level=8, how="box",
+                         broadcast_queries=flag))
+    assert got == want

@@ -234,6 +234,75 @@ def test_knn_auto_runs_constant_jobs(spark, tmp_path):
     assert set(names) <= {"knn.queries", "knn.local_topk", "knn.merge"}
 
 
+def _knn_points(spark, rows, id_col):
+    from cdap_geo_spark import udfs
+    return spark.createDataFrame(
+        rows, f"{id_col} string, x double, y double").select(
+        id_col, udfs.st_point()("x", "y").alias("geometry"))
+
+
+def test_knn_ring_loop_ends_at_the_corpus_extent(spark):
+    """k exceeds the corpus, so no query ever certifies: the ring loop
+    ends once each query's rings reach the far side of the corpus's
+    grid extent (level 9: hi 3, 8, ..., 158 against q2's reach of 85
+    cells), in 6 rounds."""
+    from cdap_geo_spark.operators.knn import knn_join
+    corpus = _knn_points(spark, [("c1", 0.0, 0.0), ("c2", 100.0, 0.0),
+                                 ("c3", 0.0, 300.0)], "doc_id")
+    queries = _knn_points(spark, [("q1", 1.0, 1.0),
+                                  ("q2", -400_000.0, 700_000.0)], "query_id")
+    rows, names = _job_names(spark, lambda: knn_join(
+        queries, corpus, k=10, level=9, broadcast_queries=False).collect())
+    assert len(rows) == 6
+    rounds = {n for n in names if n.startswith("knn.round[")}
+    assert len(rounds) <= 6, sorted(rounds)
+
+
+#: physical nodes that run Python
+_PYTHON_NODES = ("EvalPython", "MapInArrow", "MapInPandas")
+
+
+def _node_names(df) -> list:
+    """Node names of df's physical plan. Cached relations and
+    checkpoints are leaves, so their own plans are not entered."""
+    todo, names = [df._jdf.queryExecution().executedPlan()], []
+    while todo:
+        node = todo.pop()
+        if node.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+            node = node.inputPlan()
+        names.append(node.nodeName())
+        kids = node.children()
+        todo += [kids.apply(i) for i in range(kids.size())]
+    return names
+
+
+def test_knn_ring_rounds_run_no_python(spark, monkeypatch):
+    """Every ring round's probe join (the frame each round ranks) runs
+    no Python node outside the cached query and corpus relations, in
+    point and in box mode."""
+    from cdap_geo_spark.operators import knn as K
+    ranked = []
+    top_k = K._top_k
+
+    def spy(df, *args):
+        # planned now, while the loop's relations are cached
+        ranked.append(_node_names(df))
+        return top_k(df, *args)
+    monkeypatch.setattr(K, "_top_k", spy)
+    queries = fixtures.knn_queries(spark, 6)
+    corpus = fixtures.knn_queries(spark, 200).withColumnRenamed(
+        "query_id", "doc_id")
+    for how in ("point", "box"):
+        del ranked[:]
+        assert K.knn_join(queries, corpus, k=3, level=9, how=how,
+                          broadcast_queries=False).count() == 18
+        assert len(ranked) >= 2, how      # rounds + the final rank
+        assert "InMemoryTableScan" in ranked[0]
+        for names in ranked:
+            assert not [n for n in names
+                        if any(p in n for p in _PYTHON_NODES)], names
+
+
 def test_sjoin_column_pruning(spark):
     # payload (spans) must not be scanned on the pairs-only path
     import os

@@ -239,10 +239,10 @@ def test_box_pairs_native_matches_wkb_bbox_path(spark):
 
 
 def test_box_pairs_native_negative_coordinates_match_brute_force(spark):
-    """Negative and zero-straddling boxes: CAST ... DIV truncates toward
-    zero, so the cells around the origin are wider and packed keys can
-    collide, but overlapping boxes still share a cell and the exact
-    bbox test drops every extra candidate."""
+    """Negative and zero-straddling boxes: the grid ranges count cells
+    from the world frame's corner, so cells are as wide on both sides
+    of the origin, overlapping or touching boxes share a cell, and the
+    exact bbox test drops every extra candidate."""
     from pyspark.sql import functions as F
     from cdap_geo_spark.operators.sjoin import box_pairs_native
 
