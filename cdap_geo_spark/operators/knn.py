@@ -363,6 +363,14 @@ def knn_join(queries: DataFrame, corpus: DataFrame, *, k: int,
     certified or has seen the whole corpus extent. Both routes return
     the same rows.
 
+    **Cost of a ring round**: the loop bounds the number of rounds, not
+    their size. A round probes each pending query's range widened by
+    ``hi`` and clipped to the corpus's grid extent, so one query can
+    emit up to that extent's area in cells. A query in a sparse part
+    of a wide corpus extent at a fine level still pays for it: at
+    level 16 (64 m cells) a 1,000 km extent is 15,625 cells a side,
+    about 2.4e8 probe rows for that one query in its last round.
+
     In the ring loop, ``'auto'`` decides PER ROUND: the probe relation
     is at most each pending query's clipped window of cells, whose
     size the previous round's count action sums natively, so the

@@ -5,9 +5,9 @@ through these column UDFs, or through the operators' own
 ``mapInArrow`` passes over whole batches (the broadcast sjoin probe,
 the broadcast kNN top-k, stream enrichment). Engine contract: no
 per-row Python — the reference's 11 per-row ``F.udf`` sites,
-SURVEY.md §2.10, all collapse into these factories and passes. Parameterized UDFs follow the reference's
-currying pattern (closure captures level/how/resolution,
-``cdap_geo/functions.py:20-24``).
+SURVEY.md §2.10, all collapse into these factories and passes.
+Parameterized UDFs follow the reference's currying pattern (closure
+captures level/how/resolution, ``cdap_geo/functions.py:20-24``).
 
 Pair predicates factorize the right-hand Series first
 (``pd.factorize`` on the raw WKB bytes) so each distinct geometry is

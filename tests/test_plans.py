@@ -258,10 +258,6 @@ def test_knn_ring_loop_ends_at_the_corpus_extent(spark):
     assert len(rounds) <= 6, sorted(rounds)
 
 
-#: physical nodes that run Python
-_PYTHON_NODES = ("EvalPython", "MapInArrow", "MapInPandas")
-
-
 def _node_names(df) -> list:
     """Node names of df's physical plan. Cached relations and
     checkpoints are leaves, so their own plans are not entered."""
