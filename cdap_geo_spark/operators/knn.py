@@ -16,14 +16,16 @@ corpus id. It has two routes to the same rows.
    per corpus partition, every query's exact top-k among that
    partition's points (:func:`batch_topk`: the batch's points are
    bucketed by cell and every query expands cell rings at once);
-3. one shuffle merges them: ``row_number() over (partition by query
-   order by dist, corpus_id) <= k``. The union of exact per-partition
-   top-k lists under one total order contains the global top-k, so
-   nothing needs certifying.
+   the driver collects these lists as Arrow (one job);
+3. the driver merges them under the same (dist, corpus_id) order
+   (:func:`_topk_rows`) and returns the result as a local relation.
+   The union of exact per-partition top-k lists under one total order
+   contains the global top-k, so nothing needs certifying.
 
-That is at most four Spark jobs through the caller's first action,
-whatever the data (plus the planner's bounded row probe when the
-optimizer has no size estimate for the queries).
+That is two Spark jobs, both run by the call, whatever the data (plus
+the planner's bounded row probe when the optimizer has no size
+estimate for the queries); the caller's action on the result runs
+none.
 
 **Ring route** (box mode, or a query set too large to broadcast) —
 distance-certified iterative expansion, every round planned by
@@ -45,7 +47,8 @@ Catalyst (no Python after the one ``st_bounds`` decode per side):
    distance >= hi+1 from the query's range, hence more than
    hi*cellsize away — or when ``hi`` reaches its Chebyshev distance
    to the far side of the corpus extent (every row has been seen);
-4. final rank: the same window as the broadcast route's merge.
+4. final rank: ``row_number() over (partition by query order by
+   dist, corpus_id)``, the broadcast route's merge order.
 
 The first annulus is density-seeded (:func:`_seed_radius`: sized so
 its inscribed disk expects ``SEED_SAFETY*k`` points, certifying most
@@ -120,16 +123,20 @@ def _seed_radius(n_corpus: int, area: float, k: int, cellsize: float) -> int:
 # Broadcast route: exact per-partition top-k (NumPy, inside the workers)
 # ---------------------------------------------------------------------------
 
+def _group_pos(qs: np.ndarray) -> np.ndarray:
+    """Each row's position within its run of equal values of the
+    sorted ``qs``."""
+    first = np.flatnonzero(np.r_[True, qs[1:] != qs[:-1]])
+    return np.arange(len(qs)) - np.repeat(first,
+                                          np.diff(np.r_[first, len(qs)]))
+
+
 def _topk_rows(q: np.ndarray, d: np.ndarray, tie: np.ndarray,
                k: int) -> np.ndarray:
     """Indices of each query's first k rows under (d, tie), in
     (q, d, tie) order."""
     order = np.lexsort((tie, d, q))
-    qs = q[order]
-    first = np.flatnonzero(np.r_[True, qs[1:] != qs[:-1]])
-    rank = np.arange(len(qs)) - np.repeat(first,
-                                          np.diff(np.r_[first, len(qs)]))
-    return order[rank < k]
+    return order[_group_pos(q[order]) < k]
 
 
 def _kth(q: np.ndarray, d: np.ndarray, n_q: int, k: int) -> np.ndarray:
@@ -261,10 +268,12 @@ def _tie_keys(ids) -> np.ndarray:
                    tiebreaker="dense").to_numpy()
 
 
-def _partition_topk(qx, qy, qids, k: int, level: int, schema):
+def _partition_topk(qx, qy, k: int, level: int, schema):
     """``mapInArrow`` body over (corpus id, WKB) batches: per partition,
-    each query's exact top-k rows ``(query_id, corpus_id, _dist, null)``,
-    then one sentinel row ``(null, null, null, max bounds extent)``.
+    each query's exact top-k rows ``(query index, corpus_id, _dist,
+    null)``, then one sentinel row ``(null, null, null, max bounds
+    extent)``. Rows whose bounds are null, empty or non-finite take
+    no part.
 
     Arrow keeps the ids as Spark sent them (a nullable long id never
     round-trips through float64) and ranks them in Spark's order."""
@@ -276,7 +285,7 @@ def _partition_topk(qx, qy, qids, k: int, level: int, schema):
         ext = 0.0
         for b in batches:
             bounds = W.parse_wkb(b.column(1).to_pylist()).bounds()
-            ok = np.flatnonzero(~np.isnan(bounds[:, 0]))
+            ok = np.flatnonzero(np.isfinite(bounds).all(axis=1))
             if not len(ok):
                 continue
             bb = bounds[ok]
@@ -292,8 +301,9 @@ def _partition_topk(qx, qy, qids, k: int, level: int, schema):
             keep_q, keep_d, keep_id = q[sel], d[sel], ids.take(sel)
         n = len(keep_q)
         yield pa.RecordBatch.from_arrays(
-            [qids.take(keep_q), keep_id, pa.array(keep_d, pa.float64()),
-             pa.nulls(n, pa.float64())], schema=schema)
+            [pa.array(keep_q, pa.int64()), keep_id,
+             pa.array(keep_d, pa.float64()), pa.nulls(n, pa.float64())],
+            schema=schema)
         yield pa.RecordBatch.from_arrays(
             [pa.nulls(1, f.type) for f in schema][:3]
             + [pa.array([ext], pa.float64())], schema=schema)
@@ -354,14 +364,14 @@ def knn_join(queries: DataFrame, corpus: DataFrame, *, k: int,
     ``'auto'`` (default) and
     :func:`~cdap_geo_spark.functions.relational.broadcastable` says
     the query set, fanned out ``k x`` the corpus partition count (the
-    merge receives at most k rows per query from each partition), fits
-    the broadcast threshold — decided from the optimizer's estimate,
-    with no Spark job for file-backed queries. Otherwise (box mode,
-    ``broadcast_queries=False``, a large query set, or broadcast joins
-    switched off with ``spark.sql.autoBroadcastJoinThreshold < 0``) it
-    runs the certified ring loop, which ends once every query is
-    certified or has seen the whole corpus extent. Both routes return
-    the same rows.
+    driver's merge receives at most k rows per query from each
+    partition), fits the broadcast threshold — decided from the
+    optimizer's estimate, with no Spark job for file-backed queries.
+    Otherwise (box mode, ``broadcast_queries=False``, a large query
+    set, or broadcast joins switched off with
+    ``spark.sql.autoBroadcastJoinThreshold < 0``) it runs the certified
+    ring loop, which ends once every query is certified or has seen the
+    whole corpus extent. Both routes return the same rows.
 
     **Cost of a ring round**: the loop bounds the number of rounds, not
     their size. A round probes each pending query's range widened by
@@ -389,8 +399,9 @@ def knn_join(queries: DataFrame, corpus: DataFrame, *, k: int,
     non-degenerate extent (the queries are checked first).
     ``require_points=False`` opts into the documented corner-distance
     semantics for callers who meant it (e.g. tiny boxes from a lossy
-    decode). Rows with a null or empty geometry take no part, on
-    either side.
+    decode). Rows with a null or empty geometry, or with a NaN or
+    infinite coordinate in their bounds, take no part, on either side
+    and on both routes.
 
     **``how='box'`` (round 5d)**: exact kNN under BOUNDING-BOX distance
     (box-to-box min Euclidean distance; exact for axis-aligned box
@@ -400,14 +411,22 @@ def knn_join(queries: DataFrame, corpus: DataFrame, *, k: int,
     corners; ``require_points`` is ignored.
 
     Spark jobs are named after the step that runs them (``knn.plan``,
-    ``knn.queries``, ``knn.local_topk``, ``knn.merge``;
-    ``knn.stats`` and ``knn.round[r]`` in the ring loop).
+    ``knn.queries``, ``knn.local_topk``; ``knn.stats`` and
+    ``knn.round[r]`` in the ring loop).
 
-    **Lifetime contract**: the returned DataFrame is backed by a
-    tracked ``localCheckpoint`` (no recomputable lineage). When run
-    inside a :func:`cdap_geo_spark.core.lifetime.checkpoint_scope`,
-    materialize it fully (count/collect/write) BEFORE the scope
-    closes — actions after the scope fail with missing-block errors.
+    **Driver memory**: the broadcast route merges in the driver, which
+    holds up to queries x k x corpus partitions rows at once — the
+    fan-out ``'auto'`` checks against the broadcast threshold, but
+    ``broadcast_queries=True`` on a large query set holds it whatever
+    its size.
+
+    **Lifetime contract (ring route)**: the returned DataFrame is
+    backed by a tracked ``localCheckpoint`` (no recomputable lineage).
+    When run inside a
+    :func:`cdap_geo_spark.core.lifetime.checkpoint_scope`, materialize
+    it fully (count/collect/write) BEFORE the scope closes — actions
+    after the scope fail with missing-block errors. The broadcast
+    route returns a local relation, which outlives the scope.
     """
     if how not in ("point", "box"):
         raise ValueError(f"knn_join how must be 'point' or 'box': {how!r}")
@@ -432,9 +451,10 @@ def knn_join(queries: DataFrame, corpus: DataFrame, *, k: int,
 def _knn_broadcast(queries: DataFrame, corpus: DataFrame, *, k, level,
                    query_id, corpus_id, query_geom, corpus_geom,
                    require_points) -> DataFrame:
-    """The broadcast route: collect the queries, one corpus pass of
-    exact per-partition top-k, one merge shuffle."""
+    """The broadcast route: collect the queries, collect one corpus
+    pass of exact per-partition top-k, merge them in the driver."""
     import pyarrow as pa
+    import pyarrow.compute as pc
     from pyspark.sql.pandas.types import to_arrow_schema
 
     spark = queries.sparkSession
@@ -444,43 +464,49 @@ def _knn_broadcast(queries: DataFrame, corpus: DataFrame, *, k, level,
     # UDF job would cost more than the decode
     bounds = W.parse_wkb([None if r[1] is None else bytes(r[1])
                           for r in rows]).bounds()
-    ok = np.flatnonzero(~np.isnan(bounds[:, 0]))
+    ok = np.flatnonzero(np.isfinite(bounds).all(axis=1))
     bounds = bounds[ok]
     if require_points and len(ok):
         ext = float(np.max(bounds[:, 2] - bounds[:, 0]
                            + bounds[:, 3] - bounds[:, 1]))
         if ext > 0:
             raise _non_point("queries", ext)
-    schema = T.StructType([
-        T.StructField(query_id, queries.schema[query_id].dataType),
-        T.StructField(corpus_id, corpus.schema[corpus_id].dataType),
+    id_type = corpus.schema[corpus_id].dataType
+    partial = T.StructType([
+        T.StructField("_q", T.LongType()),
+        T.StructField(corpus_id, id_type),
         T.StructField("_dist", T.DoubleType()),
         T.StructField("_ext", T.DoubleType()),
     ])
-    arrow_schema = to_arrow_schema(schema)
-    topk = _partition_topk(
-        bounds[:, 0], bounds[:, 1],
-        pa.array([rows[i][0] for i in ok], arrow_schema.field(0).type),
-        k, level, arrow_schema)
+    topk = _partition_topk(bounds[:, 0], bounds[:, 1], k, level,
+                           to_arrow_schema(partial))
     with job_label(spark, "knn.local_topk"):
-        # lazy: the sentinel read below is its first action
-        local = track_checkpoint(
-            corpus.select(corpus_id, corpus_geom).mapInArrow(topk, schema)
-                  .localCheckpoint(eager=False))
-        if require_points:
-            ext = max((r[0] for r in local.where(F.col("_ext").isNotNull())
-                       .select("_ext").collect()), default=0.0)
-            if ext > 0:
-                raise _non_point("corpus", ext)
-    with job_label(spark, "knn.merge"):
-        # adaptive execution runs the merge's shuffle while planning
-        # the checkpoint; the caller's first action runs its last stage
-        out = _top_k(local.where(F.col("_ext").isNull()), query_id,
-                     corpus_id, k) \
-            .select(query_id, corpus_id, F.col("_dist").alias("dist"),
-                    "rank") \
-            .localCheckpoint(eager=False)
-    return track_checkpoint(out)
+        part = corpus.select(corpus_id, corpus_geom) \
+            .mapInArrow(topk, partial).toArrow()
+    if require_points:
+        ext = pc.max(part["_ext"]).as_py() or 0.0
+        if ext > 0:
+            raise _non_point("corpus", ext)
+    # the union of exact per-partition top-k lists under one total
+    # order holds the global top-k: merged here, it is at most
+    # queries x k x partitions rows, the fan-out the planner admitted
+    part = part.filter(pc.is_null(part["_ext"]))
+    q = part["_q"].to_numpy()
+    ids, dist = (part[c].combine_chunks() for c in (corpus_id, "_dist"))
+    sel = _topk_rows(q, dist.to_numpy(), _tie_keys(ids), k)
+    schema = T.StructType([
+        T.StructField(query_id, queries.schema[query_id].dataType),
+        T.StructField(corpus_id, id_type),
+        T.StructField("dist", T.DoubleType()),
+        T.StructField("rank", T.IntegerType(), nullable=False),
+    ])
+    arrow_schema = to_arrow_schema(schema)
+    qids = pa.array([rows[i][0] for i in ok], arrow_schema.field(0).type)
+    out = pa.table([qids.take(q[sel]), ids.take(sel), dist.take(sel),
+                    pa.array(_group_pos(q[sel]) + 1, pa.int32())],
+                   schema=arrow_schema)
+    # a local relation: the caller's action runs no Spark job
+    return spark.createDataFrame(out, schema)
 
 
 def _knn_rings(queries: DataFrame, corpus: DataFrame, *, k, level,
@@ -499,10 +525,15 @@ def _knn_rings(queries: DataFrame, corpus: DataFrame, *, k, level,
                          .alias("_b")).persist()
 
     def boxes(df: DataFrame, id_col: str, p: str) -> DataFrame:
-        """(id, bounds, extent, grid range) per non-empty geometry; in
-        point mode a degenerate box at the bounds' min corner."""
+        """(id, bounds, extent, grid range) per geometry with finite
+        bounds; in point mode a degenerate box at the bounds' min
+        corner."""
         top = ("maxx", "maxy") if box else ("minx", "miny")
-        out = df.where(F.col("_b.minx").isNotNull()).select(
+        finite = F.col("_b.minx").isNotNull()
+        for n in ("minx", "miny", "maxx", "maxy"):
+            c = F.col("_b." + n)
+            finite &= ~F.isnan(c) & (F.abs(c) != F.lit(float("inf")))
+        out = df.where(finite).select(
             id_col,
             F.col("_b.minx").alias(p + "minx"),
             F.col("_b.miny").alias(p + "miny"),
@@ -611,9 +642,10 @@ def _knn_rings(queries: DataFrame, corpus: DataFrame, *, k, level,
                     probes = F.broadcast(probes)
                 found = probes.join(index, "cell_id").where(nearest) \
                     .select(query_id, corpus_id, dist.alias("_dist"))
-                merged = found if acc is None else acc.unionByName(found)
-                # keep only each query's current top-k — bounds the
-                # accumulator to k rows per query between rounds.
+                merged = found if acc is None else \
+                    acc.drop("rank").unionByName(found)
+                # keep only each query's current top-k, ranked — bounds
+                # the accumulator to k rows per query between rounds.
                 # localCheckpoint truncates the lineage: acc feeds pending
                 # feeds next round's acc, so without truncation the logical
                 # plan doubles per round (classic iterative-algorithm trap).
@@ -621,19 +653,17 @@ def _knn_rings(queries: DataFrame, corpus: DataFrame, *, k, level,
                 # action on acc and materializes it — eager=True would
                 # spend a whole extra job per round on the same work
                 new_acc = _top_k(merged, query_id, corpus_id, k) \
-                    .drop("rank").localCheckpoint(eager=False)
+                    .localCheckpoint(eager=False)
                 # the OLD acc's blocks feed new_acc's lineage (checkpoint
                 # truncation makes them unrecomputable) — release it only
                 # AFTER the count below materializes new_acc
                 prev_acc, acc = acc, new_acc
-                # done: k candidates nearer than hi*cs (every unseen row
-                # lies in a cell at Chebyshev distance >= hi+1 from the
-                # query's range, hence more than hi*cs away), or rings
-                # that reach the far side of the corpus extent
-                done_q = acc.groupBy(query_id).agg(
-                    F.count("*").alias("_n"), F.max("_dist").alias("_dk")) \
-                    .where((F.col("_n") >= k)
-                           & (F.col("_dk") < F.lit(float(hi) * cs)))
+                # done: a rank-k candidate nearer than hi*cs (every
+                # unseen row lies in a cell at Chebyshev distance >= hi+1
+                # from the query's range, hence more than hi*cs away), or
+                # rings that reach the far side of the corpus extent
+                done_q = acc.where((F.col("rank") == k)
+                                   & (F.col("_dist") < F.lit(float(hi) * cs)))
                 pending_next = pending.where(F.col("_reach") > hi) \
                     .join(done_q.select(query_id), query_id, "left_anti") \
                     .localCheckpoint(eager=False)
@@ -651,7 +681,7 @@ def _knn_rings(queries: DataFrame, corpus: DataFrame, *, k, level,
             rounds += 1
         unpersist_checkpoint(pending)  # loop-only; materialized by its count
         track_checkpoint(acc)        # feeds the result; scoped release
-        return _top_k(acc, query_id, corpus_id, k) \
+        return _top_k(acc.drop("rank"), query_id, corpus_id, k) \
             .select(query_id, corpus_id, F.col("_dist").alias("dist"), "rank")
     finally:
         for df in cached:

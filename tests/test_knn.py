@@ -272,6 +272,41 @@ def test_knn_k_larger_than_corpus(spark):
 
 
 @pytest.mark.parametrize("flag", [True, False])
+def test_knn_non_finite_coordinates_take_no_part(spark, flag):
+    # a NaN or infinite coordinate takes no part, like a null or empty
+    # geometry: the other rows' neighbours are the finite rows' exact kNN
+    corpus = [("c1", 0.0, 0.0), ("c2", 10.0, 0.0), ("c3", 0.0, 20.0)]
+    queries = [("q1", 3.0, 0.0), ("q2", 5.0, 5.0)]
+    want = _bruteforce(queries, corpus, 2)
+    cases = [(queries, corpus + [("bad", 0.5, math.nan)]),
+             (queries, corpus + [("bad", math.inf, 0.0)]),
+             (queries, corpus + [("bad", 5.0, -math.inf)]),
+             (queries + [("bad", 3.0, math.nan)], corpus),
+             (queries + [("bad", math.inf, 2.0)], corpus)]
+    for qs, cs in cases:
+        q = _points(spark, qs).withColumnRenamed("gid", "query_id")
+        c = _points(spark, cs, parts=2).withColumnRenamed("gid", "doc_id")
+        got = _rows(knn_join(q, c, k=2, broadcast_queries=flag))
+        assert got == want, (qs, cs)
+
+
+def test_knn_broadcast_result_outlives_its_checkpoint_scope(spark):
+    # the broadcast route returns a local relation, which an action can
+    # read after the scope closes; the ring route's result is backed by
+    # a tracked checkpoint, so it is read inside the scope
+    from cdap_geo_spark.core.lifetime import checkpoint_scope
+    queries = fixtures.knn_queries(spark, 20)
+    corpus = fixtures.knn_queries(spark, 500).withColumnRenamed(
+        "query_id", "doc_id")
+    with checkpoint_scope():
+        bc = knn_join(queries, corpus, k=3, broadcast_queries=True)
+        want = _rows(knn_join(queries, corpus, k=3,
+                              broadcast_queries=False))
+    assert len(want) == 20 * 3
+    assert _rows(bc) == want
+
+
+@pytest.mark.parametrize("flag", [True, False])
 def test_knn_empty_corpus_keeps_schema(spark, flag):
     corpus = _points(spark, [], parts=2).withColumnRenamed("gid", "doc_id")
     queries = _points(spark, [("q1", 5.0, 9.0)]) \

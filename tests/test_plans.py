@@ -208,9 +208,10 @@ def test_manifest_write_jobs_are_labelled(spark, tmp_path):
 
 def test_knn_auto_runs_constant_jobs(spark, tmp_path):
     """knn_join on parquet-backed points takes the broadcast route with
-    no planning job and runs at most 5 Spark jobs through the caller's
-    collect() (the ring loop ran ~24), each named after its step; the
-    caller's own call-site name is restored after."""
+    no planning job: the call runs two Spark jobs, each named after its
+    step, and the caller's collect() runs none — the result is a local
+    relation, with no Exchange, Window or checkpoint RDD in its plan.
+    The caller's own call-site name is restored after."""
     from cdap_geo_spark.operators.knn import knn_join
     qp, cp = str(tmp_path / "q"), str(tmp_path / "c")
     fixtures.knn_queries(spark, 40).select("query_id", "geometry") \
@@ -229,9 +230,11 @@ def test_knn_auto_runs_constant_jobs(spark, tmp_path):
         sc.setLocalProperty("callSite.short", None)
     rows, more = _job_names(spark, res.collect)
     assert len(rows) == 40 * 5
-    assert len(names) + len(more) <= 5, names + more
-    assert {"knn.queries", "knn.local_topk"} <= set(names)
-    assert set(names) <= {"knn.queries", "knn.local_topk", "knn.merge"}
+    assert names == ["knn.queries", "knn.local_topk"], names
+    assert more == [], more
+    plan = res._jdf.queryExecution().executedPlan().toString()
+    for absent in ("Exchange", "Window", "ExistingRDD"):
+        assert absent not in plan, plan
 
 
 def _knn_points(spark, rows, id_col):
@@ -297,6 +300,32 @@ def test_knn_ring_rounds_run_no_python(spark, monkeypatch):
         for names in ranked:
             assert not [n for n in names
                         if any(p in n for p in _PYTHON_NODES)], names
+
+
+def test_knn_ring_round_ends_queries_without_an_aggregate(spark,
+                                                          monkeypatch):
+    """A ring round decides which queries are done from the ranked
+    accumulator's rank-k row: the plan of the next round's pending
+    queries (the one with the left-anti join) has no aggregate."""
+    from cdap_geo_spark.operators.knn import knn_join
+    queries = fixtures.knn_queries(spark, 6)
+    corpus = fixtures.knn_queries(spark, 200).withColumnRenamed(
+        "query_id", "doc_id")
+    planned = []
+    frame = type(queries)
+    checkpoint = frame.localCheckpoint
+
+    def spy(df, *args, **kw):
+        planned.append((df._jdf.queryExecution().executedPlan().toString(),
+                        _node_names(df)))
+        return checkpoint(df, *args, **kw)
+    monkeypatch.setattr(frame, "localCheckpoint", spy)
+    assert knn_join(queries, corpus, k=3, level=9,
+                    broadcast_queries=False).count() == 18
+    pending = [names for plan, names in planned if "LeftAnti" in plan]
+    assert pending, [plan for plan, _ in planned]
+    for names in pending:
+        assert not [n for n in names if "Aggregate" in n], names
 
 
 def test_sjoin_column_pruning(spark):
