@@ -259,10 +259,15 @@ def cover_batch(batch: GeomBatch, level: int, how: str = "bbox",
     (ALL kinds, points included — the straddle rule is irrelevant once
     dilated). This is the candidate generator for distance-d joins:
     anything within d of the geometry lies in the dilated cover.
+
+    A row with a NaN or infinite bound (a vertex) gets no cells, so it
+    takes no part in any join, as in kNN.
     """
     n = len(batch)
+    bounds = batch.bounds()
+    bad = ~np.isfinite(bounds).all(axis=1)
+    bounds[bad] = np.nan
     if dilate > 0.0:
-        bounds = batch.bounds()
         bounds[:, 0] -= dilate
         bounds[:, 1] -= dilate
         bounds[:, 2] += dilate
@@ -270,8 +275,7 @@ def cover_batch(batch: GeomBatch, level: int, how: str = "bbox",
         off, cc = cover_bbox(bounds, level, pad=pad)
         return off, cc, np.zeros(len(cc), bool)
     is_pt = ((batch.kinds == KIND_POINT) | (batch.kinds == KIND_MULTIPOINT)) \
-        & batch.valid
-    bounds = batch.bounds()
+        & batch.valid & ~bad
     offsets_box, cells_box = cover_bbox(
         np.where(is_pt[:, None], np.nan, bounds), level, pad)
     # points use the edge-straddle rule, a MultiPoint on every part

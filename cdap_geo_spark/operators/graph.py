@@ -27,8 +27,8 @@ against a single-node oracle.
 Lineage: the edge/degree relations are referenced every iteration and
 each round's ranks feed the next — both are ``localCheckpoint``ed via
 ``core.lifetime`` (tracked; superseded rounds released eagerly), the
-same contract as ``knn_join``: consume the returned frame fully inside
-the caller's ``checkpoint_scope``.
+same contract as ``dedup_components``: consume the returned frame fully
+inside the caller's ``checkpoint_scope``.
 """
 
 from __future__ import annotations

@@ -27,52 +27,54 @@ the planner's bounded row probe when the optimizer has no size
 estimate for the queries); the caller's action on the result runs
 none.
 
-**Ring route** (box mode, or a query set too large to broadcast) —
-distance-certified iterative expansion, every round planned by
-Catalyst (no Python after the one ``st_bounds`` decode per side):
+**Histogram route** (box mode, or a query set too large to broadcast)
+— bound each query's search window first, then one lazy join planned
+by Catalyst (no Python after the one ``st_bounds`` decode per side):
 
-1. both sides become boxes — point mode uses a degenerate box at the
-   bounds' min corner — with their inclusive grid ranges at ``level``
-   (:func:`~cdap_geo_spark.operators.sjoin.grid_range`); the corpus
-   is indexed under every cell of its range;
-2. round [lo, hi]: each pending query explodes its range widened by
-   ``hi``, clipped to the corpus's grid extent, keeps the cells at
-   Chebyshev distance [lo, hi] from its range, equi-joins the corpus
-   index, and merges the candidates into a per-query top-k
-   accumulator. A join row is kept only at the corpus row's cover
-   cell nearest the query's range, so each (query, corpus) pair is
-   found exactly once, in one round;
-3. a query is DONE when it holds k candidates and its k-th distance
-   d_k < hi * cellsize — every unseen row lies in cells at Chebyshev
-   distance >= hi+1 from the query's range, hence more than
-   hi*cellsize away — or when ``hi`` reaches its Chebyshev distance
-   to the far side of the corpus extent (every row has been seen);
-4. final rank: ``row_number() over (partition by query order by
-   dist, corpus_id)``, the broadcast route's merge order.
+1. ``knn.stats``: one aggregate over both decoded sides — row counts,
+   the bounds extents ``require_points`` checks, the corpus's grid
+   extent at ``level``, and the extent of the rows the histogram
+   counts: corpus rows whose min corner lies inside the world frame
+   (a row clamped into an edge cell is found, but bounds nothing; in
+   box mode a box is no farther from a query than its min corner);
+2. ``knn.histogram`` (skipped when fewer than k rows count): those
+   rows counted per cell at the finest level <= ``level`` whose extent
+   spans at most ``HIST_CELLS`` cells. A summed-area table gives each
+   cell the smallest Chebyshev radius r whose window holds k rows, so
+   every point of the cell has k rows within D = sqrt(2)*(r+1)*cellsize;
+3. each query takes D of the histogram cell nearest its min corner
+   (a point of the query, so it holds for boxes), plus its distance
+   to that cell — or the whole corpus extent when fewer than k rows
+   count. A row within D lies fewer than D/cellsize + 1 cells from the
+   query's grid range (:func:`~cdap_geo_spark.operators.sjoin.grid_range`):
+   that is its probe window W;
+4. the query explodes its range widened by W, clipped to the corpus's
+   grid extent, and equi-joins the corpus indexed under every cell of
+   its range. A join row is kept only at the corpus row's cover cell
+   nearest the query's range, so each pair is found once, and one
+   ``row_number() over (partition by query order by dist, corpus_id)``
+   keeps the first k, the broadcast route's order.
 
-The first annulus is density-seeded (:func:`_seed_radius`: sized so
-its inscribed disk expects ``SEED_SAFETY*k`` points, certifying most
-queries in one round), then the radius doubles per round, so the loop
-ends by itself within about ``level + 2`` rounds. Each round is one
-equi-join plus a ``localCheckpoint``; candidate accumulation stays
-columnar.
+The result is an ordinary lazy frame, with no checkpoint or cache
+behind it — the summary-then-replicate-once plan of Lu et al.,
+*Efficient Processing of k Nearest Neighbor Joins using MapReduce*
+(PVLDB 2012).
 
 Both routes put points outside the world frame into the nearest edge
-cell (:func:`cells.point_grid`), which keeps the ring bound sound.
+cell (:func:`cells.point_grid`), which keeps the cell-distance bounds
+sound.
 """
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from cdap_geo_spark import udfs
 from cdap_geo_spark.core import cells as C, wkb as W
-from cdap_geo_spark.core.lifetime import (track_checkpoint,
-                                           unpersist_checkpoint)
-from cdap_geo_spark.functions.relational import (BROADCAST_PROBE_ROWS,
-                                                 broadcast_enabled,
-                                                 broadcastable)
+from cdap_geo_spark.functions.relational import broadcastable
 from cdap_geo_spark.operators.sjoin import explode_grid, grid_range
 from cdap_geo_spark.session import job_label
 
@@ -87,6 +89,8 @@ SEED_SAFETY = 4.0
 #: seed and pays extra (geometrically growing) rounds instead of a
 #: quadratic first-round probe.
 MAX_SEED_RADIUS = 16
+#: cell budget of the histogram route's corpus count histogram
+HIST_CELLS = 1 << 18
 #: element budget of one vectorised step of :func:`batch_topk`:
 #: (query, cell) probes and (query, point) pairs are built in blocks
 #: of at most this many, whatever the batch or query-set size
@@ -111,7 +115,6 @@ def _seed_radius(n_corpus: int, area: float, k: int, cellsize: float) -> int:
     queries — the certification bound itself is density-free, so
     correctness never depends on this estimate.
     """
-    import math
     if n_corpus <= 0 or area <= 0 or cellsize <= 0:
         return 0
     density = n_corpus / area
@@ -198,7 +201,7 @@ def batch_topk(qx: np.ndarray, qy: np.ndarray, px: np.ndarray,
     (distance, ``tie``) — the per-partition step of the broadcast route.
 
     The points are bucketed by their ``level`` cell and all queries
-    expand Chebyshev rings together on the ring route's schedule
+    expand Chebyshev rings together on a density-seeded schedule
     (:func:`_seed_radius`, then ``[hi+1, 2*hi+2]``). A query stops once
     its k-th candidate lies within ``hi*cellsize`` (every unexplored
     point is farther), once ``bound[q]`` — the k-th distance it already
@@ -208,7 +211,7 @@ def batch_topk(qx: np.ndarray, qy: np.ndarray, px: np.ndarray,
     pass over the remaining occupied cells, which ends the search.
     Points farther than ``bound[q]`` are skipped: they cannot enter the
     query's top k. Distances are ``sqrt(dx*dx + dy*dy)``, bit-identical
-    to the ring route's native box distance over degenerate boxes.
+    to the histogram route's native box distance over degenerate boxes.
 
     Returns ``(query index, point index, distance)`` arrays, at most k
     rows per query.
@@ -369,27 +372,17 @@ def knn_join(queries: DataFrame, corpus: DataFrame, *, k: int,
     optimizer's estimate, with no Spark job for file-backed queries.
     Otherwise (box mode, ``broadcast_queries=False``, a large query
     set, or broadcast joins switched off with
-    ``spark.sql.autoBroadcastJoinThreshold < 0``) it runs the certified
-    ring loop, which ends once every query is certified or has seen the
-    whole corpus extent. Both routes return the same rows.
+    ``spark.sql.autoBroadcastJoinThreshold < 0``) it takes the
+    histogram route, whose join Spark plans by its own size rules.
+    Both routes return the same rows.
 
-    **Cost of a ring round**: the loop bounds the number of rounds, not
-    their size. A round probes each pending query's range widened by
-    ``hi`` and clipped to the corpus's grid extent, so one query can
-    emit up to that extent's area in cells. A query in a sparse part
-    of a wide corpus extent at a fine level still pays for it: at
-    level 16 (64 m cells) a 1,000 km extent is 15,625 cells a side,
-    about 2.4e8 probe rows for that one query in its last round.
-
-    In the ring loop, ``'auto'`` decides PER ROUND: the probe relation
-    is at most each pending query's clipped window of cells, whose
-    size the previous round's count action sums natively, so the
-    probe is broadcast only while that sum stays under
-    ``BROADCAST_PROBE_ROWS`` and broadcast joins are on — a large
-    query set at wide expansion falls back to a plain shuffle
-    equi-join on cell_id instead of overflowing the broadcast. True
-    broadcasts every round; False adds no hint, which leaves the join
-    to Spark's own size-based planning.
+    **Cost of a histogram-route query**: a query explodes its range
+    widened by its window W and clipped to the corpus's grid extent.
+    W follows the corpus density around the query, so one query in a
+    sparse part of a wide corpus extent at a fine level can still emit
+    up to that extent's area in cells: at level 16 (64 m cells) a
+    1,000 km extent is 15,625 cells a side, about 2.4e8 probe rows for
+    that one query.
 
     **Input contract (round 5)**: both sides must be POINTS — the
     ranking is point-to-point distance only; a box/polygon input would
@@ -407,26 +400,20 @@ def knn_join(queries: DataFrame, corpus: DataFrame, *, k: int,
     (box-to-box min Euclidean distance; exact for axis-aligned box
     geometries, a bbox approximation for general polygons — the
     honest upgrade over the validated-out corner-distance trap).
-    Always the ring loop, which then uses full boxes instead of min
-    corners; ``require_points`` is ignored.
+    Always the histogram route, which then uses full boxes instead of
+    min corners; ``require_points`` is ignored.
 
     Spark jobs are named after the step that runs them (``knn.plan``,
     ``knn.queries``, ``knn.local_topk``; ``knn.stats`` and
-    ``knn.round[r]`` in the ring loop).
+    ``knn.histogram`` on the histogram route).
 
     **Driver memory**: the broadcast route merges in the driver, which
     holds up to queries x k x corpus partitions rows at once — the
     fan-out ``'auto'`` checks against the broadcast threshold, but
     ``broadcast_queries=True`` on a large query set holds it whatever
-    its size.
-
-    **Lifetime contract (ring route)**: the returned DataFrame is
-    backed by a tracked ``localCheckpoint`` (no recomputable lineage).
-    When run inside a
-    :func:`cdap_geo_spark.core.lifetime.checkpoint_scope`, materialize
-    it fully (count/collect/write) BEFORE the scope closes — actions
-    after the scope fail with missing-block errors. The broadcast
-    route returns a local relation, which outlives the scope.
+    its size. Both routes return a frame with no checkpoint or cache
+    behind it: the broadcast route a local relation, the histogram
+    route a lazy plan over the inputs.
     """
     if how not in ("point", "box"):
         raise ValueError(f"knn_join how must be 'point' or 'box': {how!r}")
@@ -443,9 +430,8 @@ def knn_join(queries: DataFrame, corpus: DataFrame, *, k: int,
         if fast:
             return _knn_broadcast(queries, corpus,
                                   require_points=require_points, **args)
-    return _knn_rings(queries, corpus, broadcast_queries=broadcast_queries,
-                      require_points=require_points, box=how == "box",
-                      **args)
+    return _knn_histogram(queries, corpus, require_points=require_points,
+                          box=how == "box", **args)
 
 
 def _knn_broadcast(queries: DataFrame, corpus: DataFrame, *, k, level,
@@ -509,25 +495,55 @@ def _knn_broadcast(queries: DataFrame, corpus: DataFrame, *, k, level,
     return spark.createDataFrame(out, schema)
 
 
-def _knn_rings(queries: DataFrame, corpus: DataFrame, *, k, level,
-               query_id, corpus_id, query_geom, corpus_geom,
-               broadcast_queries, require_points, box) -> DataFrame:
-    """The ring route: certified cell-ring expansion, one Spark join per
-    round, no Python after the one bounds decode per side (module
+def _window_radii(counts: np.ndarray, k: int) -> np.ndarray:
+    """Per cell of the 2-D ``counts`` grid, the smallest Chebyshev
+    radius r whose window (clipped to the grid) holds at least k rows;
+    the grid must hold k. A summed-area table gives any window's count
+    in four lookups, and one binary search over r runs for every cell
+    at once."""
+    nx, ny = counts.shape
+    sat = np.zeros((nx + 1, ny + 1), np.int64)
+    sat[1:, 1:] = counts.cumsum(0).cumsum(1)
+    gx, gy = (g.ravel() for g in np.indices((nx, ny)))
+    lo = np.zeros(nx * ny, np.int64)
+    hi = np.full(nx * ny, max(nx, ny) - 1)  # the whole grid from any cell
+    for _ in range(int(hi[0]).bit_length()):
+        mid = (lo + hi) // 2
+        x0, x1 = np.maximum(gx - mid, 0), np.minimum(gx + mid + 1, nx)
+        y0, y1 = np.maximum(gy - mid, 0), np.minimum(gy + mid + 1, ny)
+        ok = sat[x1, y1] - sat[x0, y1] - sat[x1, y0] + sat[x0, y0] >= k
+        hi = np.where(ok, mid, hi)
+        lo = np.where(ok, lo, mid + 1)
+    return hi.reshape(nx, ny)
+
+
+def _in_frame(x: str, y: str):
+    """The point (x, y) lies inside the world frame of the cell grid."""
+    return ((F.col(x) >= C.WORLD_X0) & (F.col(x) < C.WORLD_X0 + C.WORLD_SIZE)
+            & (F.col(y) >= C.WORLD_Y0)
+            & (F.col(y) < C.WORLD_Y0 + C.WORLD_SIZE))
+
+
+def _knn_histogram(queries: DataFrame, corpus: DataFrame, *, k, level,
+                   query_id, corpus_id, query_geom, corpus_geom,
+                   require_points, box) -> DataFrame:
+    """The histogram route: bound each query's search window from a
+    corpus cell-count histogram, then one lazy join (module
     docstring)."""
+    import pyarrow as pa
+
     spark = queries.sparkSession
     cs = C.cell_size(level)
+    cols = ("minx", "miny", "ext", "x0", "y0", "x1", "y1")
 
-    def decoded(df: DataFrame, id_col: str, geom: str) -> DataFrame:
-        # persisted before any filter on the bounds: a filter pushed
-        # below the decode would run the UDF a second time
-        return df.select(F.col(id_col), udfs.st_bounds()(F.col(geom))
-                         .alias("_b")).persist()
-
-    def boxes(df: DataFrame, id_col: str, p: str) -> DataFrame:
+    def boxes(df: DataFrame, id_col: str, geom: str, p: str) -> DataFrame:
         """(id, bounds, extent, grid range) per geometry with finite
         bounds; in point mode a degenerate box at the bounds' min
         corner."""
+        # a nondeterministic decode is a barrier to Catalyst: no filter
+        # or join key is pushed into it, so each row is decoded once
+        df = df.select(F.col(id_col), udfs.st_bounds().asNondeterministic()(
+            F.col(geom)).alias("_b"))
         top = ("maxx", "maxy") if box else ("minx", "miny")
         finite = F.col("_b.minx").isNotNull()
         for n in ("minx", "miny", "maxx", "maxy"):
@@ -546,146 +562,117 @@ def _knn_rings(queries: DataFrame, corpus: DataFrame, *, k, level,
         return out.select("*", *(c.alias(p + n) for c, n in
                                  zip(rng, ("x0", "y0", "x1", "y1"))))
 
-    cached = (decoded(queries, query_id, query_geom),
-              decoded(corpus, corpus_id, corpus_geom))
-    q = boxes(cached[0], query_id, "_q")
-    corp = boxes(cached[1], corpus_id, "_c")
-    try:
-        with job_label(spark, "knn.stats"):
-            cst = corp.agg(
-                F.count("*").alias("n"), F.max("_cext").alias("ext"),
-                F.min("_cminx").alias("x0"), F.min("_cminy").alias("y0"),
-                F.max("_cmaxx").alias("x1"), F.max("_cmaxy").alias("y1"),
-                F.min("_cx0").alias("gx0"), F.min("_cy0").alias("gy0"),
-                F.max("_cx1").alias("gx1"), F.max("_cy1").alias("gy1")
-            ).first()
-            # the corpus's grid extent: probes are clipped to it, and a
-            # query whose rings reach its far side has seen every row
-            ex0, ey0, ex1, ey1 = ((cst["gx0"], cst["gy0"], cst["gx1"],
-                                   cst["gy1"]) if cst["n"] else (0, 0, 0, 0))
-            area = (max((cst["x1"] - cst["x0"]) * (cst["y1"] - cst["y0"]),
-                        cs * cs) if cst["n"] else 0.0)
-            hi = _seed_radius(cst["n"], area, k, cs)
+    q = boxes(queries, query_id, query_geom, "_q")
+    corp = boxes(corpus, corpus_id, corpus_geom, "_c")
+    both = q.select(F.lit(True).alias("_isq"),
+                    *(F.col("_q" + c).alias(c) for c in cols)).unionByName(
+        corp.select(F.lit(False).alias("_isq"),
+                    *(F.col("_c" + c).alias(c) for c in cols)))
+    isq = F.col("_isq")
+    # rows clamped into an edge cell are found, but count for no window
+    counted = ~isq & _in_frame("minx", "miny")
 
-            def window(h: int):
-                """Each query's range widened by ``h``, clipped to the
-                corpus extent."""
-                return (F.greatest(F.col("_qx0") - h, F.lit(ex0)),
-                        F.greatest(F.col("_qy0") - h, F.lit(ey0)),
-                        F.least(F.col("_qx1") + h, F.lit(ex1)),
-                        F.least(F.col("_qy1") + h, F.lit(ey1)))
+    def of(rows, c: str):
+        return F.when(rows, F.col(c))
+    with job_label(spark, "knn.stats"):
+        st = both.agg(
+            F.count(of(isq, "minx")).alias("nq"),
+            F.max(of(isq, "ext")).alias("qext"),
+            F.count(of(~isq, "minx")).alias("nc"),
+            F.max(of(~isq, "ext")).alias("cext"),
+            F.min(of(~isq, "x0")).alias("gx0"),
+            F.min(of(~isq, "y0")).alias("gy0"),
+            F.max(of(~isq, "x1")).alias("gx1"),
+            F.max(of(~isq, "y1")).alias("gy1"),
+            F.count(of(counted, "minx")).alias("nh"),
+            F.min(of(counted, "x0")).alias("hx0"),
+            F.min(of(counted, "y0")).alias("hy0"),
+            F.max(of(counted, "x0")).alias("hx1"),
+            F.max(of(counted, "y0")).alias("hy1")).first()
+    if require_points and not box:
+        for what, ext in (("queries", st["qext"]), ("corpus", st["cext"])):
+            if ext is not None and ext > 0:
+                raise _non_point(what, ext)
+    if not st["nq"] or not st["nc"]:
+        # no neighbour exists: the empty result, without a join
+        schema = T.StructType([
+            q.schema[query_id],
+            T.StructField(corpus_id, corp.schema[corpus_id].dataType),
+            T.StructField("dist", T.DoubleType()),
+            T.StructField("rank", T.IntegerType(), nullable=False),
+        ])
+        return spark.createDataFrame([], schema)
 
-            def probe_rows(h: int):
-                x0, y0, x1, y1 = window(h)
-                # summed as doubles: a bigint sum may overflow
-                return F.sum((F.greatest(x1 - x0 + 1, F.lit(0))
-                              * F.greatest(y1 - y0 + 1, F.lit(0)))
-                             .cast("double"))
+    if st["nh"] >= k:
+        # the histogram's cells are level-``level`` cells shifted right:
+        # the fewest shifts that fit the counted extent in HIST_CELLS
+        def span(d: int) -> int:
+            return (((st["hx1"] >> d) - (st["hx0"] >> d) + 1)
+                    * ((st["hy1"] >> d) - (st["hy0"] >> d) + 1))
+        d = next(s for s in range(level + 1) if span(s) <= HIST_CELLS)
+        hx0, hy0 = st["hx0"] >> d, st["hy0"] >> d
+        hx1, hy1 = st["hx1"] >> d, st["hy1"] >> d
+        with job_label(spark, "knn.histogram"):
+            hist = corp.where(_in_frame("_cminx", "_cminy")).groupBy(
+                F.shiftright("_cx0", d).alias("hx"),
+                F.shiftright("_cy0", d).alias("hy")).count().toArrow()
+        counts = np.zeros((hx1 - hx0 + 1, hy1 - hy0 + 1), np.int64)
+        counts[hist["hx"].to_numpy() - hx0,
+               hist["hy"].to_numpy() - hy0] = hist["count"].to_numpy()
+        # k counted rows lie within this distance of any point of a
+        # cell: each of them is at most r+1 cells away on either axis
+        hcs = cs * (1 << d)
+        bound = math.sqrt(2) * (_window_radii(counts, k) + 1) * hcs
+        gx, gy = (g.ravel() for g in np.indices(counts.shape))
+        table = spark.createDataFrame(pa.table({
+            "_hx": gx + hx0, "_hy": gy + hy0, "_hd": bound.ravel()}))
+        # each query takes the bound of the histogram cell nearest its
+        # min corner, plus its distance to that cell (triangle
+        # inequality)
+        q = q.select("*", *(
+            F.least(F.greatest(F.shiftright(c, d), F.lit(lo)), F.lit(hi))
+            .alias(a) for c, lo, hi, a in (("_qx0", hx0, hx1, "_hx"),
+                                           ("_qy0", hy0, hy1, "_hy")))) \
+            .join(F.broadcast(table), ["_hx", "_hy"])
+        lx = C.WORLD_X0 + F.col("_hx") * hcs
+        ly = C.WORLD_Y0 + F.col("_hy") * hcs
+        ox = F.greatest(lx - F.col("_qminx"), F.col("_qminx") - lx - hcs,
+                        F.lit(0.0))
+        oy = F.greatest(ly - F.col("_qminy"), F.col("_qminy") - ly - hcs,
+                        F.lit(0.0))
+        # a row within D lies fewer than D/cs + 1 cells away
+        # (grid_range); the extra cell absorbs rounding
+        w = F.least(F.ceil((F.sqrt(ox * ox + oy * oy) + F.col("_hd")) / cs)
+                    + 1, F.lit(1 << level))
+    else:
+        # fewer than k counted rows: every query searches the whole extent
+        w = F.lit(1 << level)
 
-            pending = q.withColumn("_reach", F.greatest(
-                F.col("_qx0") - ex0, ex1 - F.col("_qx1"),
-                F.col("_qy0") - ey0, ey1 - F.col("_qy1")))
-            qst = pending.agg(F.count("*").alias("n"),
-                              F.max("_qext").alias("ext"),
-                              probe_rows(hi).alias("pr")).first()
-        if require_points and not box:
-            for what, st in (("queries", qst), ("corpus", cst)):
-                if st["ext"] is not None and st["ext"] > 0:
-                    raise _non_point(what, st["ext"])
-        if not cst["n"] or not qst["n"]:
-            # no neighbour exists: the empty result, without a round
-            schema = T.StructType([
-                q.schema[query_id],
-                T.StructField(corpus_id, corp.schema[corpus_id].dataType),
-                T.StructField("dist", T.DoubleType()),
-                T.StructField("rank", T.IntegerType(), nullable=False),
-            ])
-            return spark.createDataFrame([], schema)
-
-        index = explode_grid(corp, (F.col("_cx0"), F.col("_cy0"),
-                                    F.col("_cx1"), F.col("_cy1")), level)
-        # a pair is kept only at the corpus row's cover cell nearest the
-        # query's range, so each (query, corpus) pair is found once
-        nearest = (
-            (F.col("_gx") == F.least(F.greatest("_cx0", "_qx0"), "_cx1"))
-            & (F.col("_gy") == F.least(F.greatest("_cy0", "_qy0"), "_cy1")))
-        dx = F.greatest(F.col("_qminx") - F.col("_cmaxx"),
-                        F.col("_cminx") - F.col("_qmaxx"), F.lit(0.0))
-        dy = F.greatest(F.col("_qminy") - F.col("_cmaxy"),
-                        F.col("_cminy") - F.col("_qmaxy"), F.lit(0.0))
-        dist = F.sqrt(dx * dx + dy * dy)
-        # a probe cell's Chebyshev distance from its query's range
-        cheb = F.greatest(F.col("_qx0") - F.col("_gx"),
-                          F.col("_gx") - F.col("_qx1"),
-                          F.col("_qy0") - F.col("_gy"),
-                          F.col("_gy") - F.col("_qy1"), F.lit(0))
-        n_pending, n_probes = qst["n"], qst["pr"]
-        lo, rounds, acc = 0, 0, None
-        while n_pending:
-            # adaptive execution runs a lazy checkpoint's shuffles
-            # while planning it, so the whole round sits in its label
-            with job_label(spark, f"knn.round[{rounds}]"):
-                # the Chebyshev annulus [lo, hi] around each query's
-                # range: its clipped window minus the cells nearer
-                # than lo
-                probes = explode_grid(
-                    pending.select(query_id, "_qminx", "_qminy", "_qmaxx",
-                                   "_qmaxy", "_qx0", "_qy0", "_qx1", "_qy1"),
-                    window(hi), level) \
-                    .where(cheb >= lo).drop("_gx", "_gy")
-                if broadcast_queries == "auto":
-                    bc = (broadcast_enabled(spark)
-                          and n_probes <= BROADCAST_PROBE_ROWS)
-                else:
-                    bc = bool(broadcast_queries)
-                if bc:
-                    probes = F.broadcast(probes)
-                found = probes.join(index, "cell_id").where(nearest) \
-                    .select(query_id, corpus_id, dist.alias("_dist"))
-                merged = found if acc is None else \
-                    acc.drop("rank").unionByName(found)
-                # keep only each query's current top-k, ranked — bounds
-                # the accumulator to k rows per query between rounds.
-                # localCheckpoint truncates the lineage: acc feeds pending
-                # feeds next round's acc, so without truncation the logical
-                # plan doubles per round (classic iterative-algorithm trap).
-                # lazy checkpoint: the count below is this round's first
-                # action on acc and materializes it — eager=True would
-                # spend a whole extra job per round on the same work
-                new_acc = _top_k(merged, query_id, corpus_id, k) \
-                    .localCheckpoint(eager=False)
-                # the OLD acc's blocks feed new_acc's lineage (checkpoint
-                # truncation makes them unrecomputable) — release it only
-                # AFTER the count below materializes new_acc
-                prev_acc, acc = acc, new_acc
-                # done: a rank-k candidate nearer than hi*cs (every
-                # unseen row lies in a cell at Chebyshev distance >= hi+1
-                # from the query's range, hence more than hi*cs away), or
-                # rings that reach the far side of the corpus extent
-                done_q = acc.where((F.col("rank") == k)
-                                   & (F.col("_dist") < F.lit(float(hi) * cs)))
-                pending_next = pending.where(F.col("_reach") > hi) \
-                    .join(done_q.select(query_id), query_id, "left_anti") \
-                    .localCheckpoint(eager=False)
-                lo, hi = hi + 1, 2 * hi + 2
-                # the round's one action materializes BOTH lazy
-                # checkpoints (acc feeds done_q feeds pending_next) and
-                # sizes the next round's probes for the broadcast choice
-                row = pending_next.agg(F.count("*").alias("n"),
-                                       probe_rows(hi).alias("pr")).first()
-                n_pending, n_probes = row["n"], row["pr"]
-            if prev_acc is not None:
-                unpersist_checkpoint(prev_acc)
-            unpersist_checkpoint(pending)
-            pending = pending_next
-            rounds += 1
-        unpersist_checkpoint(pending)  # loop-only; materialized by its count
-        track_checkpoint(acc)        # feeds the result; scoped release
-        return _top_k(acc.drop("rank"), query_id, corpus_id, k) \
-            .select(query_id, corpus_id, F.col("_dist").alias("dist"), "rank")
-    finally:
-        for df in cached:
-            df.unpersist()
+    # each query's range widened by its window, clipped to the corpus's
+    # grid extent
+    probes = explode_grid(
+        q.select(query_id, "_qminx", "_qminy", "_qmaxx", "_qmaxy",
+                 "_qx0", "_qy0", "_qx1", "_qy1", w.alias("_w")),
+        (F.greatest(F.col("_qx0") - F.col("_w"), F.lit(st["gx0"])),
+         F.greatest(F.col("_qy0") - F.col("_w"), F.lit(st["gy0"])),
+         F.least(F.col("_qx1") + F.col("_w"), F.lit(st["gx1"])),
+         F.least(F.col("_qy1") + F.col("_w"), F.lit(st["gy1"]))), level) \
+        .drop("_gx", "_gy", "_w")
+    index = explode_grid(corp, (F.col("_cx0"), F.col("_cy0"),
+                                F.col("_cx1"), F.col("_cy1")), level)
+    # a pair is kept only at the corpus row's cover cell nearest the
+    # query's range, so each (query, corpus) pair is found once
+    nearest = (
+        (F.col("_gx") == F.least(F.greatest("_cx0", "_qx0"), "_cx1"))
+        & (F.col("_gy") == F.least(F.greatest("_cy0", "_qy0"), "_cy1")))
+    dx = F.greatest(F.col("_qminx") - F.col("_cmaxx"),
+                    F.col("_cminx") - F.col("_qmaxx"), F.lit(0.0))
+    dy = F.greatest(F.col("_qminy") - F.col("_cmaxy"),
+                    F.col("_cminy") - F.col("_qmaxy"), F.lit(0.0))
+    found = probes.join(index, "cell_id").where(nearest) \
+        .select(query_id, corpus_id, F.sqrt(dx * dx + dy * dy).alias("_dist"))
+    return _top_k(found, query_id, corpus_id, k) \
+        .select(query_id, corpus_id, F.col("_dist").alias("dist"), "rank")
 
 
 def idw_interpolate(queries: DataFrame, corpus: DataFrame, *, k: int = 5,
@@ -711,7 +698,6 @@ def idw_interpolate(queries: DataFrame, corpus: DataFrame, *, k: int = 5,
 
     Returns ``(query_id, n_nb, num, den, est_centi)``.
     """
-    from cdap_geo_spark import udfs
     q = queries.select(
         F.col(query_id), F.col(x_col).cast("long").alias("_qx"),
         F.col(y_col).cast("long").alias("_qy"),
@@ -763,8 +749,6 @@ def knn_classify(queries: DataFrame, corpus: DataFrame, *, k: int = 5,
     count plus a ranking window over the votes relation (queries ×
     distinct labels — dimension-sized, never corpus-sized).
     """
-    from pyspark.sql import Window
-    from cdap_geo_spark import udfs
     q = queries.select(
         F.col(query_id),
         udfs.st_point()(F.col(x_col).cast("double"),

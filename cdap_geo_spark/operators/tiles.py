@@ -134,10 +134,10 @@ def tile_cover(batch: W.GeomBatch, rows: np.ndarray, grid: tuple,
         yi1 = np.floor(b[:, 3] / ry).astype(np.float64)
     # a bbox strictly outside the frame (the sjoin bbox prefilter's
     # test) intersects no tile; clamping it would invent an edge tile.
-    # Frame-edge touches keep theirs.
+    # Frame-edge touches keep theirs. A NaN or infinite bound gets none.
     outside = ((b[:, 0] > x1) | (b[:, 1] > y1)
                | (b[:, 2] < x0) | (b[:, 3] < y0))
-    bad = np.isnan(b[:, 0]) | outside
+    bad = ~np.isfinite(b).all(axis=1) | outside
     xi0 = np.clip(np.nan_to_num(xi0), lx0 // rx, lx1 // rx - 1).astype(np.int64)
     yi0 = np.clip(np.nan_to_num(yi0), ly0 // ry, ly1 // ry - 1).astype(np.int64)
     xi1 = np.clip(np.nan_to_num(xi1), lx0 // rx, lx1 // rx - 1).astype(np.int64)

@@ -2,10 +2,17 @@
 queries() entry on Spark and its oracle_sql() on DuckDB at sf0.01,
 compare row count + order-insensitive values."""
 
+import os
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+# this checkout's package, wherever the script is run from: in the
+# driver, and in the Python workers, which take the environment's path
+ROOT = str(Path(__file__).resolve().parents[1])
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
 
 import duckdb
 import pandas as pd
@@ -15,8 +22,7 @@ from cdap_geo_spark.session import get_spark
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 # data-adapted oracles (trained IVF centroids) sample the compared SF
-import os as _os                                               # noqa: E402
-_os.environ.setdefault("SPARK_GRAFT_ORACLE_SF_DIR", SF_DIR)
+os.environ.setdefault("SPARK_GRAFT_ORACLE_SF_DIR", SF_DIR)
 TABLES = ("region nation customer supplier part orders lineitem events "
           "documents embeddings").split()
 

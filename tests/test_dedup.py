@@ -156,9 +156,9 @@ def test_dedup_pipelines_leak_no_persisted_rdds(spark):
 
 
 def test_knn_and_components_checkpoints_release_in_scope(spark):
-    # the iterative operators (kNN accumulator, components labels)
-    # return results that DEPEND on their final checkpoint; the scope
-    # must release those blocks once the caller materializes inside it
+    # the components labels DEPEND on their final checkpoint, which the
+    # scope releases once the caller materializes inside it; knn_join
+    # leaves no persisted or checkpointed block behind on any route
     import pandas as pd
 
     from cdap_geo_spark.core.lifetime import checkpoint_scope
@@ -177,9 +177,13 @@ def test_knn_and_components_checkpoints_release_in_scope(spark):
         corpus = D.with_geometry(fixtures.documents(spark, 120)) \
                   .select("doc_id", "geometry")
         queries = fixtures.knn_queries(spark, 3)
-        got = knn_join(queries, corpus, k=3, level=9,
-                       require_points=False)
-        assert got.count() == 9
+        for kw in ({"broadcast_queries": True},
+                   {"broadcast_queries": False}, {"how": "box"}):
+            held = _persisted_ids(spark)
+            got = knn_join(queries, corpus, k=3, level=9,
+                           require_points=False, **kw)
+            assert _persisted_ids(spark) - held == set(), kw
+            assert got.count() == 9
     assert _persisted_ids(spark) - before == set()
 
 

@@ -1,4 +1,4 @@
-"""Operator tests: kNN via cell-ring expansion vs brute force
+"""Operator tests: both kNN routes vs brute force
 (FIXTURES.md §5 oracle: brute-force distance sort in pandas).
 """
 
@@ -82,7 +82,7 @@ def _check_k1_and_sparse_region(spark):
 
 
 def test_knn_non_broadcast_path_matches(spark, no_broadcast, monkeypatch):
-    # broadcast joins off: 'auto' must take the ring loop through
+    # broadcast joins off: 'auto' must take the histogram route through
     # shuffle joins, and return the broadcast route's rows exactly
     from cdap_geo_spark.operators import knn as K
     corpus = fixtures.documents(spark, 300, partitions=4)
@@ -104,6 +104,25 @@ def test_annulus_cells_arithmetic():
     assert _annulus_cells(0, 1) == 9
     assert _annulus_cells(1, 2) == 24      # 5^2 - 1
     assert _annulus_cells(3, 6) == 13 ** 2 - 5 ** 2
+
+
+def test_window_radii_matches_bruteforce():
+    # each cell's smallest Chebyshev radius whose window, clipped to the
+    # grid, holds k rows: the vectorised search against a plain loop
+    from cdap_geo_spark.operators.knn import _window_radii
+    rng = np.random.RandomState(7)
+    for nx, ny, k in ((1, 1, 1), (1, 9, 2), (7, 3, 5), (12, 10, 9)):
+        counts = rng.poisson(0.4, (nx, ny))
+        counts[rng.randint(nx), rng.randint(ny)] += k   # the grid holds k
+        want = np.zeros((nx, ny), np.int64)
+        for x in range(nx):
+            for y in range(ny):
+                r = 0
+                while counts[max(x - r, 0):x + r + 1,
+                             max(y - r, 0):y + r + 1].sum() < k:
+                    r += 1
+                want[x, y] = r
+        assert (_window_radii(counts, k) == want).all(), (nx, ny, k)
 
 
 def test_knn_empty_corpus_short_circuits(spark):
@@ -292,8 +311,7 @@ def test_knn_non_finite_coordinates_take_no_part(spark, flag):
 
 def test_knn_broadcast_result_outlives_its_checkpoint_scope(spark):
     # the broadcast route returns a local relation, which an action can
-    # read after the scope closes; the ring route's result is backed by
-    # a tracked checkpoint, so it is read inside the scope
+    # read after the scope closes
     from cdap_geo_spark.core.lifetime import checkpoint_scope
     queries = fixtures.knn_queries(spark, 20)
     corpus = fixtures.knn_queries(spark, 500).withColumnRenamed(

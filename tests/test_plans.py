@@ -4,6 +4,7 @@ iterate until it's the plan you'd want')."""
 
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
 from cdap_geo_spark import docs as D, fixtures
@@ -244,88 +245,52 @@ def _knn_points(spark, rows, id_col):
         id_col, udfs.st_point()("x", "y").alias("geometry"))
 
 
-def test_knn_ring_loop_ends_at_the_corpus_extent(spark):
-    """k exceeds the corpus, so no query ever certifies: the ring loop
-    ends once each query's rings reach the far side of the corpus's
-    grid extent (level 9: hi 3, 8, ..., 158 against q2's reach of 85
-    cells), in 6 rounds."""
+def _knn_world(spark, tmp_path):
+    """40 query points and 3,000 corpus points, read back from parquet
+    so the plans hold no fixture-generator Python nodes."""
+    qp, cp = str(tmp_path / "q"), str(tmp_path / "c")
+    fixtures.knn_queries(spark, 40).select("query_id", "geometry") \
+        .write.parquet(qp)
+    fixtures.knn_queries(spark, 3000).select(
+        F.col("query_id").alias("doc_id"), "geometry") \
+        .repartition(4).write.parquet(cp)
+    return spark.read.parquet(qp), spark.read.parquet(cp)
+
+
+@pytest.mark.parametrize("kw", [{"broadcast_queries": False},
+                                {"how": "box"}], ids=["point", "box"])
+def test_knn_histogram_route_runs_two_labelled_steps(spark, tmp_path, kw):
+    """A non-broadcast knn_join runs its two call-time steps, the stats
+    aggregate and the corpus histogram, and returns a lazy plan whose
+    only Python nodes are the two decodes (one per side), with no
+    checkpoint or cached relation in it."""
     from cdap_geo_spark.operators.knn import knn_join
-    corpus = _knn_points(spark, [("c1", 0.0, 0.0), ("c2", 100.0, 0.0),
-                                 ("c3", 0.0, 300.0)], "doc_id")
-    queries = _knn_points(spark, [("q1", 1.0, 1.0),
-                                  ("q2", -400_000.0, 700_000.0)], "query_id")
-    rows, names = _job_names(spark, lambda: knn_join(
-        queries, corpus, k=10, level=9, broadcast_queries=False).collect())
-    assert len(rows) == 6
-    rounds = {n for n in names if n.startswith("knn.round[")}
-    assert len(rounds) <= 6, sorted(rounds)
+    queries, corpus = _knn_world(spark, tmp_path)
+    res, names = _job_names(spark, lambda: knn_join(queries, corpus, k=5,
+                                                    **kw))
+    assert names == ["knn.stats"] * 2 + ["knn.histogram"] * 2, names
+    nodes = _python_nodes(res)
+    assert len(nodes) == 2, nodes
+    assert all("ArrowEvalPython" in n and "_bounds" in n for n in nodes)
+    plan = res._jdf.queryExecution().executedPlan().toString()
+    for absent in ("ExistingRDD", "InMemoryTableScan"):
+        assert absent not in plan, plan
+    assert res.count() == 40 * 5
 
 
-def _node_names(df) -> list:
-    """Node names of df's physical plan. Cached relations and
-    checkpoints are leaves, so their own plans are not entered."""
-    todo, names = [df._jdf.queryExecution().executedPlan()], []
-    while todo:
-        node = todo.pop()
-        if node.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
-            node = node.inputPlan()
-        names.append(node.nodeName())
-        kids = node.children()
-        todo += [kids.apply(i) for i in range(kids.size())]
-    return names
-
-
-def test_knn_ring_rounds_run_no_python(spark, monkeypatch):
-    """Every ring round's probe join (the frame each round ranks) runs
-    no Python node outside the cached query and corpus relations, in
-    point and in box mode."""
-    from cdap_geo_spark.operators import knn as K
-    ranked = []
-    top_k = K._top_k
-
-    def spy(df, *args):
-        # planned now, while the loop's relations are cached
-        ranked.append(_node_names(df))
-        return top_k(df, *args)
-    monkeypatch.setattr(K, "_top_k", spy)
-    queries = fixtures.knn_queries(spark, 6)
-    corpus = fixtures.knn_queries(spark, 200).withColumnRenamed(
-        "query_id", "doc_id")
-    for how in ("point", "box"):
-        del ranked[:]
-        assert K.knn_join(queries, corpus, k=3, level=9, how=how,
-                          broadcast_queries=False).count() == 18
-        assert len(ranked) >= 2, how      # rounds + the final rank
-        assert "InMemoryTableScan" in ranked[0]
-        for names in ranked:
-            assert not [n for n in names
-                        if any(p in n for p in _PYTHON_NODES)], names
-
-
-def test_knn_ring_round_ends_queries_without_an_aggregate(spark,
-                                                          monkeypatch):
-    """A ring round decides which queries are done from the ranked
-    accumulator's rank-k row: the plan of the next round's pending
-    queries (the one with the left-anti join) has no aggregate."""
+def test_knn_histogram_route_far_query_k_over_corpus(spark):
+    """k exceeds the corpus and one query lies 1,000 km away at level
+    16: no histogram can bound a window, so the call runs the stats
+    step alone and every query searches the corpus's whole extent."""
     from cdap_geo_spark.operators.knn import knn_join
-    queries = fixtures.knn_queries(spark, 6)
-    corpus = fixtures.knn_queries(spark, 200).withColumnRenamed(
-        "query_id", "doc_id")
-    planned = []
-    frame = type(queries)
-    checkpoint = frame.localCheckpoint
-
-    def spy(df, *args, **kw):
-        planned.append((df._jdf.queryExecution().executedPlan().toString(),
-                        _node_names(df)))
-        return checkpoint(df, *args, **kw)
-    monkeypatch.setattr(frame, "localCheckpoint", spy)
-    assert knn_join(queries, corpus, k=3, level=9,
-                    broadcast_queries=False).count() == 18
-    pending = [names for plan, names in planned if "LeftAnti" in plan]
-    assert pending, [plan for plan, _ in planned]
-    for names in pending:
-        assert not [n for n in names if "Aggregate" in n], names
+    corpus = _knn_points(spark, [("a", 0.0, 0.0), ("b", 500.0, 300.0)],
+                         "doc_id")
+    queries = _knn_points(spark, [("near", 100.0, 100.0),
+                                  ("far", 1_000_000.0, 0.0)], "query_id")
+    res, names = _job_names(spark, lambda: knn_join(
+        queries, corpus, k=3, level=16, broadcast_queries=False))
+    assert names == ["knn.stats"] * 2, names
+    assert len(res.collect()) == 4
 
 
 def test_sjoin_column_pruning(spark):

@@ -304,6 +304,13 @@ _AROUND_L = _line((50_000, 600_000), (600_000, 600_000), (600_000, 50_000))
 _EMPTY = struct.pack("<BIdd", 1, 1, float("nan"), float("nan"))
 _EMPTY_GC = struct.pack("<BII", 1, 7, 0)
 
+
+def _triangle(far_x):
+    """A triangle over A's inside with a third vertex at x = ``far_x``."""
+    return bytes(W.polygon_to_wkb([[[500, 500], [700, 500], [far_x, 600],
+                                    [500, 500]]]))
+
+
 #: (doc_id, geometry): edges of the sjoin contract; ids are nullable
 #: longs, a few repeat (same geometry)
 _EDGE_DOCS = [
@@ -329,6 +336,8 @@ _EDGE_DOCS = [
     (18, _pt(1_000_500, 1_000_500)),          # in the second 101
     (None, _pt(700, 300)),                    # null id, inside A
     (19, _pt(2_000, 500)),                    # 1 km east of A
+    (23, _triangle(float("inf"))),            # non-finite vertex: no
+    (24, _triangle(float("nan"))),            # part, like kNN's rows
 ]
 #: (region_id, geometry)
 _EDGE_REGIONS = [
@@ -343,6 +352,8 @@ _EDGE_REGIONS = [
     (106, _EMPTY_GC),
     (107, b"\x01\x03"),
     (None, _box(1_500, 0, 2_500, 1_000)),
+    (109, bytes(W.polygon_to_wkb([[[0, 0], [900, 0], [900, float("inf")],
+                                   [0, 0]]]))),
 ]
 
 _ROUTE_CASES = {
@@ -356,14 +367,17 @@ _ROUTE_CASES = {
 
 
 def _edge_oracle(predicate, distance=None):
-    """Brute force over every (doc, region) row pair."""
+    """Brute force over every (doc, region) row pair; a geometry with a
+    NaN or infinite bound takes no part."""
     lv = W.parse_wkb([g for _, g in _EDGE_DOCS])
     rv = W.parse_wkb([g for _, g in _EDGE_REGIONS])
     lb, rb = lv.bounds(), rv.bounds()
+    lok = lv.valid & np.isfinite(lb).all(axis=1)
+    rok = rv.valid & np.isfinite(rb).all(axis=1)
     out = set()
     for i, (lid, lg) in enumerate(_EDGE_DOCS):
         for j, (rid, rg) in enumerate(_EDGE_REGIONS):
-            if not (lv.valid[i] and rv.valid[j]):
+            if not (lok[i] and rok[j]):
                 continue
             if predicate == "bbox":
                 hit = not (lb[i, 0] > rb[j, 2] or lb[i, 1] > rb[j, 3]
@@ -431,7 +445,7 @@ def test_edge_oracle_covers_the_cases():
             (8, 101), (9, 101), (18, 101), (10, 102), (11, 103),
             (13, 104), (14, 104), (17, 104), (2, None)} <= hits
     assert not {(12, 102), (15, 104), (16, 104)} & hits
-    assert not any(d in (5, 6, 7) or r in (105, 106, 107)
+    assert not any(d in (5, 6, 7, 23, 24) or r in (105, 106, 107, 109)
                    for d, r in hits)
     assert (19, 100) in _edge_oracle("distance", 5_000.0) - hits
 

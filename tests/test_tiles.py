@@ -118,6 +118,9 @@ _FRAME_CASES = {
     "corner_touch": ((700_000, 1_300_000, 700_000, 1_300_000),
                      {"630000-1170000"}),
     "edge_straddle": ((690_000, -10_000, 710_000, 10_000), {"630000-0"}),
+    # a NaN or infinite bound takes no part, as in the sjoin covers
+    "inf_vertex": ((100_000, 100_000, float("inf"), 110_000), set()),
+    "nan_vertex": ((100_000, 100_000, 110_000, float("nan")), set()),
 }
 
 
@@ -413,6 +416,9 @@ def test_tiles_in_the_sjoin_pass_match_both_references(spark, no_broadcast,
     assert tiles_by_doc[22] == {"750000-750000"}
     assert {(10, 102), (11, 103), (18, 101)} <= matched
     assert not {10, 11, 18} & set(tiles_by_doc)
+    # non-finite vertices: no pair and no tile
+    assert not {23, 24} & ({d for d, _ in matched} | set(tiles_by_doc))
+    assert 109 not in {r for _, r in matched}
     assert got[(1, 100, "0-0") if keep else (1, "0-0")] > 1
     assert any(k[0] is None for k in got)
 
