@@ -29,25 +29,26 @@ none.
 
 **Histogram route** (box mode, or a query set too large to broadcast)
 — bound each query's search window first, then one lazy join planned
-by Catalyst (no Python after the one ``st_bounds`` decode per side):
+by Catalyst (no Python after the one ``st_bounds`` decode per side).
+The corpus rows whose min corner lies inside the world frame are
+counted (a row clamped into an edge cell is found, but bounds nothing;
+a box is no farther from a query than its min corner):
 
 1. ``knn.stats``: one aggregate over both decoded sides — row counts,
-   the bounds extents ``require_points`` checks, the corpus's grid
-   extent at ``level``, and the extent of the rows the histogram
-   counts: corpus rows whose min corner lies inside the world frame
-   (a row clamped into an edge cell is found, but bounds nothing; in
-   box mode a box is no farther from a query than its min corner);
-2. ``knn.histogram`` (skipped when fewer than k rows count): those
-   rows counted per cell at the finest level <= ``level`` whose extent
-   spans at most ``HIST_CELLS`` cells. A summed-area table gives each
-   cell the smallest Chebyshev radius r whose window holds k rows, so
-   every point of the cell has k rows within D = sqrt(2)*(r+1)*cellsize;
-3. each query takes D of the histogram cell nearest its min corner
-   (a point of the query, so it holds for boxes), plus its distance
-   to that cell — or the whole corpus extent when fewer than k rows
-   count. A row within D lies fewer than D/cellsize + 1 cells from the
-   query's grid range (:func:`~cdap_geo_spark.operators.sjoin.grid_range`):
-   that is its probe window W;
+   the extents ``require_points`` checks, the corpus's grid extent,
+   and the counted rows' occupied cells at each shift of ``level``;
+2. ``knn.histogram`` (skipped when fewer than k rows count): the
+   counted rows per cell at the finest shift whose occupied cells fit
+   ``HIST_CELLS``. In the driver, a bound pyramid
+   (:func:`_window_bounds`) gives cells a distance D within which k
+   rows lie of any point of the cell;
+3. a query takes, at each shift of the pyramid, D of the cell nearest
+   its min corner plus its distance to that cell, and keeps the least
+   — a query in a dense area gets a window near its k-th distance,
+   however wide the extent. A row within D lies fewer than
+   D/cellsize + 1 cells from the query's grid range
+   (:func:`~cdap_geo_spark.operators.sjoin.grid_range`): that is its
+   probe window W (the whole extent when fewer than k rows count);
 4. the query explodes its range widened by W, clipped to the corpus's
    grid extent, and equi-joins the corpus indexed under every cell of
    its range. A join row is kept only at the corpus row's cover cell
@@ -55,10 +56,9 @@ by Catalyst (no Python after the one ``st_bounds`` decode per side):
    ``row_number() over (partition by query order by dist, corpus_id)``
    keeps the first k, the broadcast route's order.
 
-The result is an ordinary lazy frame, with no checkpoint or cache
-behind it — the summary-then-replicate-once plan of Lu et al.,
-*Efficient Processing of k Nearest Neighbor Joins using MapReduce*
-(PVLDB 2012).
+The result is a lazy frame with no checkpoint or cache behind it — the
+summary-then-replicate-once plan of Lu et al., *Efficient Processing
+of k Nearest Neighbor Joins using MapReduce* (PVLDB 2012).
 
 Both routes put points outside the world frame into the nearest edge
 cell (:func:`cells.point_grid`), which keeps the cell-distance bounds
@@ -89,7 +89,8 @@ SEED_SAFETY = 4.0
 #: seed and pays extra (geometrically growing) rounds instead of a
 #: quadratic first-round probe.
 MAX_SEED_RADIUS = 16
-#: cell budget of the histogram route's corpus count histogram
+#: cell budget of the histogram route: its collected histogram's
+#: occupied cells, and the extent of the pyramid's top shift
 HIST_CELLS = 1 << 18
 #: element budget of one vectorised step of :func:`batch_topk`:
 #: (query, cell) probes and (query, point) pairs are built in blocks
@@ -343,15 +344,6 @@ def _num_partitions(df: DataFrame) -> int:
     return plan.execute().getNumPartitions()
 
 
-def _top_k(df: DataFrame, query_id: str, corpus_id: str,
-           k: int) -> DataFrame:
-    """Each query's first k rows by (``_dist``, corpus id), numbered in
-    ``rank``."""
-    w = Window.partitionBy(query_id).orderBy("_dist", corpus_id)
-    return df.withColumn("rank", F.row_number().over(w)) \
-             .filter(F.col("rank") <= k)
-
-
 def knn_join(queries: DataFrame, corpus: DataFrame, *, k: int,
              level: int = 9,
              query_id: str = "query_id", corpus_id: str = "doc_id",
@@ -362,58 +354,49 @@ def knn_join(queries: DataFrame, corpus: DataFrame, *, k: int,
     """(query_id, doc_id, dist, rank<=k) for point queries over a point
     corpus. Exact, deterministic ties (by corpus id).
 
-    **Route** (see the module docstring): point mode takes the
-    broadcast route when ``broadcast_queries`` is True, or when it is
-    ``'auto'`` (default) and
+    **Route** (module docstring): point mode takes the broadcast route
+    when ``broadcast_queries`` is True, or when it is ``'auto'``
+    (default) and
     :func:`~cdap_geo_spark.functions.relational.broadcastable` says
     the query set, fanned out ``k x`` the corpus partition count (the
     driver's merge receives at most k rows per query from each
-    partition), fits the broadcast threshold — decided from the
-    optimizer's estimate, with no Spark job for file-backed queries.
-    Otherwise (box mode, ``broadcast_queries=False``, a large query
-    set, or broadcast joins switched off with
-    ``spark.sql.autoBroadcastJoinThreshold < 0``) it takes the
-    histogram route, whose join Spark plans by its own size rules.
-    Both routes return the same rows.
+    partition), fits the broadcast threshold — from the optimizer's
+    estimate, with no job for file-backed queries. Box mode,
+    ``broadcast_queries=False``, a large query set, or
+    ``spark.sql.autoBroadcastJoinThreshold < 0`` take the histogram
+    route, whose join Spark plans by its own size rules. Both routes
+    return the same rows. Jobs are named after their step:
+    ``knn.plan``, ``knn.queries``, ``knn.local_topk``; ``knn.stats``
+    and ``knn.histogram`` on the histogram route.
 
-    **Cost of a histogram-route query**: a query explodes its range
-    widened by its window W and clipped to the corpus's grid extent.
-    W follows the corpus density around the query, so one query in a
-    sparse part of a wide corpus extent at a fine level can still emit
-    up to that extent's area in cells: at level 16 (64 m cells) a
-    1,000 km extent is 15,625 cells a side, about 2.4e8 probe rows for
-    that one query.
+    **Cost of a histogram-route query**: it explodes its range widened
+    by its window W, clipped to the corpus's grid extent. W follows the
+    corpus density around the query, so one query in a sparse part of
+    a wide extent at a fine level can still emit up to that extent's
+    area in cells: at level 16 (64 m cells) a 1,000 km extent is
+    15,625 cells a side, about 2.4e8 probe rows for that one query.
 
-    **Input contract (round 5)**: both sides must be POINTS — the
-    ranking is point-to-point distance only; a box/polygon input would
-    silently rank by its bounds' min-corner distance.
-    ``require_points=True`` (default) therefore validates both
-    relations and raises ``ValueError`` at call time on any
-    non-degenerate extent (the queries are checked first).
-    ``require_points=False`` opts into the documented corner-distance
-    semantics for callers who meant it (e.g. tiny boxes from a lossy
-    decode). Rows with a null or empty geometry, or with a NaN or
-    infinite coordinate in their bounds, take no part, on either side
-    and on both routes.
+    **Input contract**: both sides must be POINTS — the ranking is
+    point-to-point distance; a box/polygon would silently rank by its
+    bounds' min corner. ``require_points=True`` (default) raises
+    ``ValueError`` at call time on any non-degenerate extent (queries
+    checked first); ``require_points=False`` opts into the
+    corner-distance semantics (e.g. tiny boxes from a lossy decode).
+    Rows with a null or empty geometry, or a NaN or infinite bound,
+    take no part, on either side and on both routes.
 
-    **``how='box'`` (round 5d)**: exact kNN under BOUNDING-BOX distance
-    (box-to-box min Euclidean distance; exact for axis-aligned box
-    geometries, a bbox approximation for general polygons — the
-    honest upgrade over the validated-out corner-distance trap).
-    Always the histogram route, which then uses full boxes instead of
-    min corners; ``require_points`` is ignored.
+    **``how='box'``**: exact kNN under bounding-box distance (box-to-box
+    min Euclidean distance; exact for axis-aligned boxes, a bbox
+    approximation for general polygons). Always the histogram route,
+    with full boxes instead of min corners; ``require_points`` is
+    ignored.
 
-    Spark jobs are named after the step that runs them (``knn.plan``,
-    ``knn.queries``, ``knn.local_topk``; ``knn.stats`` and
-    ``knn.histogram`` on the histogram route).
-
-    **Driver memory**: the broadcast route merges in the driver, which
-    holds up to queries x k x corpus partitions rows at once — the
-    fan-out ``'auto'`` checks against the broadcast threshold, but
-    ``broadcast_queries=True`` on a large query set holds it whatever
-    its size. Both routes return a frame with no checkpoint or cache
-    behind it: the broadcast route a local relation, the histogram
-    route a lazy plan over the inputs.
+    **Driver memory**: the broadcast route merges up to queries x k x
+    corpus partitions rows in the driver — the fan-out ``'auto'``
+    checks, but ``broadcast_queries=True`` holds it whatever its size;
+    the histogram route collects at most about ``HIST_CELLS`` cells.
+    Neither result has a checkpoint or cache behind it: a local
+    relation, or a lazy plan over the inputs.
     """
     if how not in ("point", "box"):
         raise ValueError(f"knn_join how must be 'point' or 'box': {how!r}")
@@ -517,6 +500,63 @@ def _window_radii(counts: np.ndarray, k: int) -> np.ndarray:
     return hi.reshape(nx, ny)
 
 
+def _near_bounds(x: np.ndarray, y: np.ndarray, n: np.ndarray, k: int,
+                 cellsize: float):
+    """Of the occupied cells (x, y), holding n rows each, and their
+    neighbours: the cells whose own rows (r = 0) or whose 3x3 window's
+    (r = 1) reach k, each with D = sqrt(2)*(r+1)*cellsize for the
+    smaller r — k rows lie within D of any point of the cell."""
+    ox, oy = x.min() - 1, y.min() - 1
+    # a column one cell taller than the neighbours: a step off either
+    # end of a column lands on a neighbour, never on an occupied cell
+    side = int(y.max() - oy) + 2
+    key = (x - ox) * side + (y - oy)
+    order = np.argsort(key)
+    key, n = key[order], n[order]
+    offs = (np.arange(-1, 2)[:, None] * side + np.arange(-1, 2)).ravel()
+
+    def rows(c):
+        pos = np.minimum(np.searchsorted(key, c), len(key) - 1)
+        return np.where(key[pos] == c, n[pos], 0)
+    cells = np.unique((key[:, None] + offs).ravel())
+    cells = cells[sum(rows(cells + o) for o in offs) >= k]
+    r = (rows(cells) < k).astype(np.int64)
+    return cells // side + ox, cells % side + oy, \
+        math.sqrt(2) * (r + 1) * cellsize
+
+
+def _window_bounds(hx: np.ndarray, hy: np.ndarray, n: np.ndarray, k: int,
+                   s: int, level: int) -> list:
+    """The bound pyramid of a count histogram: cells (hx, hy) ``s``
+    shifts coarser than ``level``, holding n rows each, k in all. Per
+    shift t from s up to the first whose extent spans at most
+    ``HIST_CELLS`` cells: ``(t, (x0, y0, x1, y1), (x, y, D))``, the
+    extent of the occupied cells and each bounded cell's D. The top
+    shift bounds every cell of its extent (:func:`_window_radii`); the
+    finer ones only the cells near a dense cell (:func:`_near_bounds`),
+    so a query in a dense area finds a window near its k-th distance."""
+    out = []
+    for t in range(s, level + 1):
+        cells, inv = np.unique((hx >> (t - s) << 32) | (hy >> (t - s)),
+                               return_inverse=True)
+        x, y = cells >> 32, cells & 0xFFFFFFFF
+        rows = np.bincount(inv.ravel(), n).astype(np.int64)
+        ext = (int(x.min()), int(y.min()), int(x.max()), int(y.max()))
+        cellsize = C.cell_size(level) * (1 << t)
+        nx, ny = ext[2] - ext[0] + 1, ext[3] - ext[1] + 1
+        if nx * ny > HIST_CELLS:
+            out.append((t, ext, _near_bounds(x, y, rows, k, cellsize)))
+            continue
+        counts = np.zeros((nx, ny), np.int64)
+        counts[x - ext[0], y - ext[1]] = rows
+        # k rows lie within this distance of any point of a cell: each
+        # of them is at most r+1 cells away on either axis
+        bound = math.sqrt(2) * (_window_radii(counts, k) + 1) * cellsize
+        gx, gy = (g.ravel() for g in np.indices((nx, ny)))
+        out.append((t, ext, (gx + ext[0], gy + ext[1], bound.ravel())))
+        return out
+
+
 def _in_frame(x: str, y: str):
     """The point (x, y) lies inside the world frame of the cell grid."""
     return ((F.col(x) >= C.WORLD_X0) & (F.col(x) < C.WORLD_X0 + C.WORLD_SIZE)
@@ -585,10 +625,12 @@ def _knn_histogram(queries: DataFrame, corpus: DataFrame, *, k, level,
             F.max(of(~isq, "x1")).alias("gx1"),
             F.max(of(~isq, "y1")).alias("gy1"),
             F.count(of(counted, "minx")).alias("nh"),
-            F.min(of(counted, "x0")).alias("hx0"),
-            F.min(of(counted, "y0")).alias("hy0"),
-            F.max(of(counted, "x0")).alias("hx1"),
-            F.max(of(counted, "y0")).alias("hy1")).first()
+            # occupied cells at each shift of ``level``, to find the
+            # finest histogram within the cell budget: a rough estimate
+            # will do, and a small sketch keeps the aggregate cheap
+            *(F.approx_count_distinct(F.when(counted, F.shiftright(
+                "x0", t) * (1 << level) + F.shiftright("y0", t)), 0.3)
+              .alias(f"occ{t}") for t in range(level + 1))).first()
     if require_points and not box:
         for what, ext in (("queries", st["qext"]), ("corpus", st["cext"])):
             if ext is not None and ext > 0:
@@ -603,50 +645,50 @@ def _knn_histogram(queries: DataFrame, corpus: DataFrame, *, k, level,
         ])
         return spark.createDataFrame([], schema)
 
+    # fewer than k counted rows: every query searches the whole extent
+    w = F.lit(1 << level)
     if st["nh"] >= k:
-        # the histogram's cells are level-``level`` cells shifted right:
-        # the fewest shifts that fit the counted extent in HIST_CELLS
-        def span(d: int) -> int:
-            return (((st["hx1"] >> d) - (st["hx0"] >> d) + 1)
-                    * ((st["hy1"] >> d) - (st["hy0"] >> d) + 1))
-        d = next(s for s in range(level + 1) if span(s) <= HIST_CELLS)
-        hx0, hy0 = st["hx0"] >> d, st["hy0"] >> d
-        hx1, hy1 = st["hx1"] >> d, st["hy1"] >> d
+        s = next(t for t in range(level + 1)
+                 if st[f"occ{t}"] <= HIST_CELLS)
         with job_label(spark, "knn.histogram"):
             hist = corp.where(_in_frame("_cminx", "_cminy")).groupBy(
-                F.shiftright("_cx0", d).alias("hx"),
-                F.shiftright("_cy0", d).alias("hy")).count().toArrow()
-        counts = np.zeros((hx1 - hx0 + 1, hy1 - hy0 + 1), np.int64)
-        counts[hist["hx"].to_numpy() - hx0,
-               hist["hy"].to_numpy() - hy0] = hist["count"].to_numpy()
-        # k counted rows lie within this distance of any point of a
-        # cell: each of them is at most r+1 cells away on either axis
-        hcs = cs * (1 << d)
-        bound = math.sqrt(2) * (_window_radii(counts, k) + 1) * hcs
-        gx, gy = (g.ravel() for g in np.indices(counts.shape))
-        table = spark.createDataFrame(pa.table({
-            "_hx": gx + hx0, "_hy": gy + hy0, "_hd": bound.ravel()}))
-        # each query takes the bound of the histogram cell nearest its
-        # min corner, plus its distance to that cell (triangle
-        # inequality)
-        q = q.select("*", *(
-            F.least(F.greatest(F.shiftright(c, d), F.lit(lo)), F.lit(hi))
-            .alias(a) for c, lo, hi, a in (("_qx0", hx0, hx1, "_hx"),
-                                           ("_qy0", hy0, hy1, "_hy")))) \
-            .join(F.broadcast(table), ["_hx", "_hy"])
-        lx = C.WORLD_X0 + F.col("_hx") * hcs
-        ly = C.WORLD_Y0 + F.col("_hy") * hcs
-        ox = F.greatest(lx - F.col("_qminx"), F.col("_qminx") - lx - hcs,
-                        F.lit(0.0))
-        oy = F.greatest(ly - F.col("_qminy"), F.col("_qminy") - ly - hcs,
-                        F.lit(0.0))
-        # a row within D lies fewer than D/cs + 1 cells away
-        # (grid_range); the extra cell absorbs rounding
-        w = F.least(F.ceil((F.sqrt(ox * ox + oy * oy) + F.col("_hd")) / cs)
-                    + 1, F.lit(1 << level))
-    else:
-        # fewer than k counted rows: every query searches the whole extent
-        w = F.lit(1 << level)
+                F.shiftright("_cx0", s).alias("hx"),
+                F.shiftright("_cy0", s).alias("hy")).count().toArrow()
+        hx, hy, n = (hist[c].to_numpy() for c in ("hx", "hy", "count"))
+        # the histogram's own extent and total, not the stats': a
+        # source read twice may not return the same rows
+        if n.sum() >= k:
+            bounds = []
+            for t, (x0, y0, x1, y1), (bx, by, bd) in _window_bounds(
+                    hx, hy, n, k, s, level):
+                if not len(bx):
+                    continue
+                hcs = cs * (1 << t)
+                a, b, c = f"_hx{t}", f"_hy{t}", f"_hd{t}"
+                table = spark.createDataFrame(pa.table({a: bx, b: by,
+                                                        c: bd}))
+                # the query takes D of the shift-t cell nearest its min
+                # corner, plus its distance to that cell (triangle
+                # inequality)
+                q = q.select("*", *(
+                    F.least(F.greatest(F.shiftright(col, t), F.lit(lo)),
+                            F.lit(hi)).alias(name)
+                    for col, lo, hi, name in (("_qx0", x0, x1, a),
+                                              ("_qy0", y0, y1, b)))) \
+                    .join(F.broadcast(table), [a, b], "left")
+                lx = C.WORLD_X0 + F.col(a) * hcs
+                ly = C.WORLD_Y0 + F.col(b) * hcs
+                ox = F.greatest(lx - F.col("_qminx"),
+                                F.col("_qminx") - lx - hcs, F.lit(0.0))
+                oy = F.greatest(ly - F.col("_qminy"),
+                                F.col("_qminy") - ly - hcs, F.lit(0.0))
+                bounds.append(F.sqrt(ox * ox + oy * oy) + F.col(c))
+            # the least D over the shifts (null where a shift bounds
+            # nothing; the top shift bounds every query). A row within
+            # D lies fewer than D/cs + 1 cells away (grid_range); the
+            # extra cell absorbs rounding
+            d = F.least(*bounds) if len(bounds) > 1 else bounds[0]
+            w = F.least(F.ceil(d / cs) + 1, F.lit(1 << level))
 
     # each query's range widened by its window, clipped to the corpus's
     # grid extent
@@ -669,10 +711,11 @@ def _knn_histogram(queries: DataFrame, corpus: DataFrame, *, k, level,
                     F.col("_cminx") - F.col("_qmaxx"), F.lit(0.0))
     dy = F.greatest(F.col("_qminy") - F.col("_cmaxy"),
                     F.col("_cminy") - F.col("_qmaxy"), F.lit(0.0))
-    found = probes.join(index, "cell_id").where(nearest) \
-        .select(query_id, corpus_id, F.sqrt(dx * dx + dy * dy).alias("_dist"))
-    return _top_k(found, query_id, corpus_id, k) \
-        .select(query_id, corpus_id, F.col("_dist").alias("dist"), "rank")
+    rank = F.row_number().over(
+        Window.partitionBy(query_id).orderBy("dist", corpus_id))
+    return probes.join(index, "cell_id").where(nearest) \
+        .select(query_id, corpus_id, F.sqrt(dx * dx + dy * dy).alias("dist")) \
+        .withColumn("rank", rank).where(F.col("rank") <= k)
 
 
 def idw_interpolate(queries: DataFrame, corpus: DataFrame, *, k: int = 5,

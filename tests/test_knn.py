@@ -125,6 +125,44 @@ def test_window_radii_matches_bruteforce():
         assert (_window_radii(counts, k) == want).all(), (nx, ny, k)
 
 
+def test_window_bounds_match_bruteforce(monkeypatch):
+    # the bound pyramid of a clustered count histogram, its cell budget
+    # cut so the finer shifts are sparse: every bounded cell's window
+    # holds k rows and no smaller one does; a sparse shift bounds
+    # exactly the cells whose 3x3 window holds k, the top shift every
+    # cell of its extent
+    from cdap_geo_spark.core import cells as C
+    from cdap_geo_spark.operators import knn as K
+    monkeypatch.setattr(K, "HIST_CELLS", 64)
+    rng = np.random.RandomState(3)
+    level, s, k = 12, 1, 4
+    pts = np.r_[rng.normal(900, 3, (300, 2)),
+                rng.uniform(0, 1500, (40, 2))].astype(np.int64)
+    cells, n = np.unique(pts, axis=0, return_counts=True)
+    hx, hy = cells[:, 0], cells[:, 1]
+    out = K._window_bounds(hx, hy, n, k, s, level)
+    assert [t for t, _, _ in out] == list(range(s, s + len(out)))
+    assert len(out) >= 3
+    for i, (t, ext, (x, y, d)) in enumerate(out):
+        ax, ay = hx >> (t - s), hy >> (t - s)
+        assert ext == (ax.min(), ay.min(), ax.max(), ay.max())
+        cs = C.cell_size(level) * (1 << t)
+        r = np.rint(d / (math.sqrt(2) * cs)).astype(np.int64) - 1
+
+        def rows(cx, cy, rr):
+            return n[(np.abs(ax - cx) <= rr) & (np.abs(ay - cy) <= rr)].sum()
+        for cx, cy, rr in zip(x, y, r):
+            assert rows(cx, cy, rr) >= k
+            assert rr == 0 or rows(cx, cy, rr - 1) < k
+        if i < len(out) - 1:
+            near = {(cx + dx, cy + dy) for cx, cy in zip(ax, ay)
+                    for dx in (-1, 0, 1) for dy in (-1, 0, 1)}
+            assert set(zip(x.tolist(), y.tolist())) == {
+                c for c in near if rows(*c, 1) >= k}
+        else:
+            assert len(x) == (ext[2] - ext[0] + 1) * (ext[3] - ext[1] + 1)
+
+
 def test_knn_empty_corpus_short_circuits(spark):
     from pyspark.sql import functions as F
     from cdap_geo_spark import udfs
@@ -570,6 +608,34 @@ def test_knn_far_query_rings_end_and_find_the_neighbour(spark):
     c = _points(spark, corpus, parts=2).withColumnRenamed("gid", "doc_id")
     got = _rows(knn_join(q, c, k=1, level=16, broadcast_queries=False))
     assert got == _bruteforce(queries, corpus, 1)
+
+
+def test_knn_dense_query_window_ignores_a_wide_extent(spark, monkeypatch):
+    # level 16 (64 m cells): 300 points in a 1 km cluster, then the same
+    # with two more points 800 km away, which widen the corpus extent to
+    # 12,500 cells a side. The cluster queries' probe rows must follow
+    # the cluster's density, not the extent, and the rows stay exact
+    from cdap_geo_spark.operators import knn as K
+    rng = np.random.RandomState(5)
+    xy = rng.uniform(200_000, 201_000, (300, 2)).round(1)
+    cluster = [(f"c{i:03d}", x, y) for i, (x, y) in enumerate(xy)]
+    far = [("far1", 1_000_000.0, 900_000.0), ("far2", 1_000_000.0, 0.0)]
+    queries = [(f"q{i}", 200_100.0 + 200 * i, 200_500.0) for i in range(5)]
+    q = _points(spark, queries).withColumnRenamed("gid", "query_id")
+    probes: list = []
+    explode = K.explode_grid
+
+    def counted(df, ranges, level):
+        out = explode(df, ranges, level)
+        if "query_id" in df.columns:
+            probes.append(out.count())
+        return out
+    monkeypatch.setattr(K, "explode_grid", counted)
+    for corpus in (cluster, cluster + far):
+        c = _points(spark, corpus, parts=2).withColumnRenamed("gid", "doc_id")
+        got = _rows(K.knn_join(q, c, k=5, level=16, broadcast_queries=False))
+        assert got == _bruteforce(queries, corpus, 5)
+    assert probes[1] <= 2 * probes[0], probes
 
 
 def _box_rows(spark, rows):
