@@ -25,7 +25,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from cdap_geo_spark import udfs
 from cdap_geo_spark.core import cells as C
-from cdap_geo_spark.plans.manifest import Manifest, fingerprint, input_identity
+from cdap_geo_spark.plans.manifest import (Manifest, engine_identity,
+                                           fingerprint, input_identity)
 
 
 def with_cell_id(df: DataFrame, geom_col: str = "geometry",
@@ -45,7 +46,7 @@ def ingest(spark: SparkSession, docs: DataFrame, out_root: str, *,
     Returns the (possibly resumed) clustered DataFrame.
     """
     man = Manifest(spark, out_root)
-    fp = fingerprint("ingest", level, partitions, params,
+    fp = fingerprint("ingest", engine_identity(), level, partitions, params,
                      docs._jdf.queryExecution().analyzed().semanticHash(),
                      [input_identity(f) for f in sorted(docs.inputFiles())])
 

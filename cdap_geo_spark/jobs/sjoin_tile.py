@@ -82,11 +82,11 @@ def run(spark: SparkSession, *, docs: str, regions: str, out: str,
         check_invariant: bool = True) -> dict:
     """Run (or resume) the full job; returns the summary dict."""
     from cdap_geo_spark import docs as D
-    from cdap_geo_spark.plans.manifest import (Manifest, fingerprint,
-                                               input_identity)
+    from cdap_geo_spark.plans.manifest import (Manifest, engine_identity,
+                                               fingerprint, input_identity)
 
     man = Manifest(spark, out)
-    fp1 = fingerprint("pairs_tiled", input_identity(docs),
+    fp1 = fingerprint("pairs_tiled", engine_identity(), input_identity(docs),
                       input_identity(regions), level, bbox, splits)
     s1 = man.run_stage(
         "pairs_tiled", fp1,

@@ -29,32 +29,33 @@ none.
 
 **Histogram route** (box mode, or a query set too large to broadcast)
 — bound each query's search window first, then one lazy join planned
-by Catalyst (no Python after the one ``st_bounds`` decode per side).
-The corpus rows whose min corner lies inside the world frame are
-counted (a row clamped into an edge cell is found, but bounds nothing;
-a box is no farther from a query than its min corner):
+by Catalyst (no Python after the one decode per side: ``st_bounds``
+for the corpus, a ``mapInArrow`` pass for the queries). The corpus
+rows whose min corner lies inside the world frame are counted (a row
+clamped into an edge cell is found, but bounds nothing; a box is no
+farther from a query than its min corner):
 
 1. ``knn.stats``: one aggregate over both decoded sides — row counts,
    the extents ``require_points`` checks, the corpus's grid extent,
    and the counted rows' occupied cells at each shift of ``level``;
 2. ``knn.histogram`` (skipped when fewer than k rows count): the
-   counted rows per cell at the finest shift whose occupied cells fit
-   ``HIST_CELLS``. In the driver, a bound pyramid
-   (:func:`_window_bounds`) gives cells a distance D within which k
-   rows lie of any point of the cell;
-3. a query takes, at each shift of the pyramid, D of the cell nearest
-   its min corner plus its distance to that cell, and keeps the least
-   — a query in a dense area gets a window near its k-th distance,
-   however wide the extent. A row within D lies fewer than
-   D/cellsize + 1 cells from the query's grid range
-   (:func:`~cdap_geo_spark.operators.sjoin.grid_range`): that is its
-   probe window W (the whole extent when fewer than k rows count);
+   counted rows per cell at the finest shift s whose occupied cells
+   fit ``HIST_CELLS``, collected to the driver;
+3. the query pass carries the histogram and bounds each query by D
+   (:func:`_reach`): the distance from its min corner to the centre of
+   the j-th nearest occupied cell plus half a cell diagonal, j the
+   fewest nearest cells whose rows reach k — near its k-th distance in
+   a dense area, however wide the extent. A row within D lies fewer
+   than W = D/cellsize + 1 cells from the query's grid range
+   (:func:`~cdap_geo_spark.operators.sjoin.grid_range`), its probe
+   window (the whole extent when fewer than k rows count);
 4. the query explodes its range widened by W, clipped to the corpus's
    grid extent, and equi-joins the corpus indexed under every cell of
-   its range. A join row is kept only at the corpus row's cover cell
-   nearest the query's range, so each pair is found once, and one
-   ``row_number() over (partition by query order by dist, corpus_id)``
-   keeps the first k, the broadcast route's order.
+   its range (broadcast if the index rows the stats count fit the
+   broadcast threshold). A join row is kept only at the corpus row's
+   cover cell nearest the query's range, so each pair is found once,
+   and one ``row_number() over (partition by query order by dist,
+   corpus_id)`` keeps the first k, the broadcast route's order.
 
 The result is a lazy frame with no checkpoint or cache behind it — the
 summary-then-replicate-once plan of Lu et al., *Efficient Processing
@@ -90,7 +91,7 @@ SEED_SAFETY = 4.0
 #: quadratic first-round probe.
 MAX_SEED_RADIUS = 16
 #: cell budget of the histogram route: its collected histogram's
-#: occupied cells, and the extent of the pyramid's top shift
+#: occupied cells
 HIST_CELLS = 1 << 18
 #: element budget of one vectorised step of :func:`batch_topk`:
 #: (query, cell) probes and (query, point) pairs are built in blocks
@@ -371,10 +372,12 @@ def knn_join(queries: DataFrame, corpus: DataFrame, *, k: int,
 
     **Cost of a histogram-route query**: it explodes its range widened
     by its window W, clipped to the corpus's grid extent. W follows the
-    corpus density around the query, so one query in a sparse part of
-    a wide extent at a fine level can still emit up to that extent's
-    area in cells: at level 16 (64 m cells) a 1,000 km extent is
-    15,625 cells a side, about 2.4e8 probe rows for that one query.
+    distance to the query's nearest occupied histogram cells, so one
+    query in a sparse part of a wide extent at a fine level can still
+    emit up to that extent's area in cells: at level 16 (64 m cells) a
+    1,000 km extent is 15,625 cells a side, about 2.4e8 probe rows for
+    that one query. Its query pass also runs :func:`batch_topk` over
+    the histogram's cell centres, once per Arrow batch of queries.
 
     **Input contract**: both sides must be POINTS — the ranking is
     point-to-point distance; a box/polygon would silently rank by its
@@ -394,7 +397,9 @@ def knn_join(queries: DataFrame, corpus: DataFrame, *, k: int,
     **Driver memory**: the broadcast route merges up to queries x k x
     corpus partitions rows in the driver — the fan-out ``'auto'``
     checks, but ``broadcast_queries=True`` holds it whatever its size;
-    the histogram route collects at most about ``HIST_CELLS`` cells.
+    the histogram route collects at most about ``HIST_CELLS`` cells
+    (about 6 MB) and ships them again in its query pass's closure,
+    which PySpark broadcasts to the executors.
     Neither result has a checkpoint or cache behind it: a local
     relation, or a lazy plan over the inputs.
     """
@@ -478,83 +483,51 @@ def _knn_broadcast(queries: DataFrame, corpus: DataFrame, *, k, level,
     return spark.createDataFrame(out, schema)
 
 
-def _window_radii(counts: np.ndarray, k: int) -> np.ndarray:
-    """Per cell of the 2-D ``counts`` grid, the smallest Chebyshev
-    radius r whose window (clipped to the grid) holds at least k rows;
-    the grid must hold k. A summed-area table gives any window's count
-    in four lookups, and one binary search over r runs for every cell
-    at once."""
-    nx, ny = counts.shape
-    sat = np.zeros((nx + 1, ny + 1), np.int64)
-    sat[1:, 1:] = counts.cumsum(0).cumsum(1)
-    gx, gy = (g.ravel() for g in np.indices((nx, ny)))
-    lo = np.zeros(nx * ny, np.int64)
-    hi = np.full(nx * ny, max(nx, ny) - 1)  # the whole grid from any cell
-    for _ in range(int(hi[0]).bit_length()):
-        mid = (lo + hi) // 2
-        x0, x1 = np.maximum(gx - mid, 0), np.minimum(gx + mid + 1, nx)
-        y0, y1 = np.maximum(gy - mid, 0), np.minimum(gy + mid + 1, ny)
-        ok = sat[x1, y1] - sat[x0, y1] - sat[x1, y0] + sat[x0, y0] >= k
-        hi = np.where(ok, mid, hi)
-        lo = np.where(ok, lo, mid + 1)
-    return hi.reshape(nx, ny)
+def _reach(qx: np.ndarray, qy: np.ndarray, hx: np.ndarray, hy: np.ndarray,
+           n: np.ndarray, s: int, k: int, level: int) -> np.ndarray:
+    """Per query (qx, qy), a distance D within which k counted rows lie,
+    from a count histogram ``s`` shifts coarser than ``level`` with
+    occupied cells (hx, hy), n rows each, k in all. A counted row's min
+    corner lies within half a cell diagonal of its cell's centre: D is
+    the distance to the j-th nearest centre plus that, j the fewest
+    nearest cells whose rows reach k — among each query's min(k, cells)
+    nearest (:func:`batch_topk`, cell index as tie)."""
+    cs = C.cell_size(level - s)
+    q, p, d = batch_topk(qx, qy, C.WORLD_X0 + (hx + 0.5) * cs,
+                         C.WORLD_Y0 + (hy + 0.5) * cs, np.arange(len(hx)),
+                         k, level - s, np.full(len(qx), np.inf))
+    sel = _topk_rows(q, d, p, k)
+    m = min(k, len(hx))
+    d, rows = d[sel].reshape(-1, m), n[p[sel]].reshape(-1, m).cumsum(1)
+    return d[np.arange(len(d)), np.argmax(rows >= k, axis=1)] \
+        + math.sqrt(0.5) * cs
 
 
-def _near_bounds(x: np.ndarray, y: np.ndarray, n: np.ndarray, k: int,
-                 cellsize: float):
-    """Of the occupied cells (x, y), holding n rows each, and their
-    neighbours: the cells whose own rows (r = 0) or whose 3x3 window's
-    (r = 1) reach k, each with D = sqrt(2)*(r+1)*cellsize for the
-    smaller r — k rows lie within D of any point of the cell."""
-    ox, oy = x.min() - 1, y.min() - 1
-    # a column one cell taller than the neighbours: a step off either
-    # end of a column lands on a neighbour, never on an occupied cell
-    side = int(y.max() - oy) + 2
-    key = (x - ox) * side + (y - oy)
-    order = np.argsort(key)
-    key, n = key[order], n[order]
-    offs = (np.arange(-1, 2)[:, None] * side + np.arange(-1, 2)).ravel()
-
-    def rows(c):
-        pos = np.minimum(np.searchsorted(key, c), len(key) - 1)
-        return np.where(key[pos] == c, n[pos], 0)
-    cells = np.unique((key[:, None] + offs).ravel())
-    cells = cells[sum(rows(cells + o) for o in offs) >= k]
-    r = (rows(cells) < k).astype(np.int64)
-    return cells // side + ox, cells % side + oy, \
-        math.sqrt(2) * (r + 1) * cellsize
-
-
-def _window_bounds(hx: np.ndarray, hy: np.ndarray, n: np.ndarray, k: int,
-                   s: int, level: int) -> list:
-    """The bound pyramid of a count histogram: cells (hx, hy) ``s``
-    shifts coarser than ``level``, holding n rows each, k in all. Per
-    shift t from s up to the first whose extent spans at most
-    ``HIST_CELLS`` cells: ``(t, (x0, y0, x1, y1), (x, y, D))``, the
-    extent of the occupied cells and each bounded cell's D. The top
-    shift bounds every cell of its extent (:func:`_window_radii`); the
-    finer ones only the cells near a dense cell (:func:`_near_bounds`),
-    so a query in a dense area finds a window near its k-th distance."""
-    out = []
-    for t in range(s, level + 1):
-        cells, inv = np.unique((hx >> (t - s) << 32) | (hy >> (t - s)),
-                               return_inverse=True)
-        x, y = cells >> 32, cells & 0xFFFFFFFF
-        rows = np.bincount(inv.ravel(), n).astype(np.int64)
-        ext = (int(x.min()), int(y.min()), int(x.max()), int(y.max()))
-        cellsize = C.cell_size(level) * (1 << t)
-        nx, ny = ext[2] - ext[0] + 1, ext[3] - ext[1] + 1
-        if nx * ny > HIST_CELLS:
-            out.append((t, ext, _near_bounds(x, y, rows, k, cellsize)))
-            continue
-        counts = np.zeros((nx, ny), np.int64)
-        counts[x - ext[0], y - ext[1]] = rows
-        # k rows lie within this distance of any point of a cell: each
-        # of them is at most r+1 cells away on either axis
-        bound = math.sqrt(2) * (_window_radii(counts, k) + 1) * cellsize
-        gx, gy = (g.ravel() for g in np.indices((nx, ny)))
-        out.append((t, ext, (gx + ext[0], gy + ext[1], bound.ravel())))
-        return out
+def _query_pass(k: int, level: int, box: bool, schema, hist=None):
+    """``mapInArrow`` body over (query id, WKB) batches: each query
+    with finite bounds as ``(id, minx, miny, maxx, maxy, ext, _w)`` —
+    in point mode a degenerate box at the bounds' min corner — and its
+    window W = ceil(D/cellsize) + 1 (the extra cell absorbs rounding),
+    D from :func:`_reach` over ``hist``, a histogram's ``(hx, hy, n,
+    s)``; without one, W spans the whole grid."""
+    def run(batches):
+        import pyarrow as pa
+        for b in batches:
+            bb = W.parse_wkb(b.column(1).to_pylist()).bounds()
+            ok = np.flatnonzero(np.isfinite(bb).all(axis=1))
+            bb = bb[ok]
+            d = np.full(len(ok), np.inf)
+            if hist is not None and len(ok):
+                d = _reach(bb[:, 0], bb[:, 1], *hist, k, level)
+            win = np.minimum(np.ceil(d / C.cell_size(level)) + 1,
+                             1 << level).astype(np.int64)
+            cols = np.ascontiguousarray(np.c_[
+                bb[:, :2], bb[:, 2:] if box else bb[:, :2],
+                bb[:, 2] - bb[:, 0] + bb[:, 3] - bb[:, 1]].T)
+            yield pa.RecordBatch.from_arrays(
+                [b.column(0).take(ok).cast(schema.field(0).type),
+                 *map(pa.array, cols), pa.array(win)], schema=schema)
+    return run
 
 
 def _in_frame(x: str, y: str):
@@ -567,43 +540,46 @@ def _in_frame(x: str, y: str):
 def _knn_histogram(queries: DataFrame, corpus: DataFrame, *, k, level,
                    query_id, corpus_id, query_geom, corpus_geom,
                    require_points, box) -> DataFrame:
-    """The histogram route: bound each query's search window from a
-    corpus cell-count histogram, then one lazy join (module
-    docstring)."""
-    import pyarrow as pa
+    """The histogram route: bound each query's window from a corpus
+    cell-count histogram, then one lazy join (module docstring)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     spark = queries.sparkSession
-    cs = C.cell_size(level)
     cols = ("minx", "miny", "ext", "x0", "y0", "x1", "y1")
+    edges = ("minx", "miny", "maxx", "maxy")
 
-    def boxes(df: DataFrame, id_col: str, geom: str, p: str) -> DataFrame:
-        """(id, bounds, extent, grid range) per geometry with finite
-        bounds; in point mode a degenerate box at the bounds' min
-        corner."""
-        # a nondeterministic decode is a barrier to Catalyst: no filter
-        # or join key is pushed into it, so each row is decoded once
-        df = df.select(F.col(id_col), udfs.st_bounds().asNondeterministic()(
-            F.col(geom)).alias("_b"))
-        top = ("maxx", "maxy") if box else ("minx", "miny")
-        finite = F.col("_b.minx").isNotNull()
-        for n in ("minx", "miny", "maxx", "maxy"):
-            c = F.col("_b." + n)
-            finite &= ~F.isnan(c) & (F.abs(c) != F.lit(float("inf")))
-        out = df.where(finite).select(
-            id_col,
-            F.col("_b.minx").alias(p + "minx"),
-            F.col("_b.miny").alias(p + "miny"),
-            F.col("_b." + top[0]).alias(p + "maxx"),
-            F.col("_b." + top[1]).alias(p + "maxy"),
-            (F.col("_b.maxx") - F.col("_b.minx") + F.col("_b.maxy")
-             - F.col("_b.miny")).alias(p + "ext"))
-        rng = grid_range(p + "minx", p + "miny", p + "maxx", p + "maxy",
-                         level)
-        return out.select("*", *(c.alias(p + n) for c, n in
-                                 zip(rng, ("x0", "y0", "x1", "y1"))))
+    def with_range(df: DataFrame, p: str) -> DataFrame:
+        rng = grid_range(*(p + c for c in edges), level)
+        return df.select("*", *(c.alias(p + n) for c, n in
+                                zip(rng, ("x0", "y0", "x1", "y1"))))
 
-    q = boxes(queries, query_id, query_geom, "_q")
-    corp = boxes(corpus, corpus_id, corpus_geom, "_c")
+    qschema = T.StructType(
+        [queries.schema[query_id]]
+        + [T.StructField("_q" + c, T.DoubleType()) for c in edges + ("ext",)]
+        + [T.StructField("_w", T.LongType())])
+
+    def decoded_queries(hist=None) -> DataFrame:
+        body = _query_pass(k, level, box, to_arrow_schema(qschema), hist)
+        return with_range(queries.select(query_id, query_geom)
+                          .mapInArrow(body, qschema), "_q")
+
+    # (id, bounds, extent, grid range) per corpus geometry with finite
+    # bounds; in point mode a degenerate box at the bounds' min corner.
+    # A nondeterministic decode is a barrier to Catalyst: no filter or
+    # join key is pushed into it, so each row is decoded once
+    b = corpus.select(F.col(corpus_id), udfs.st_bounds().asNondeterministic()(
+        F.col(corpus_geom)).alias("_b"))
+    finite = F.col("_b.minx").isNotNull()
+    for n in edges:
+        c = F.col("_b." + n)
+        finite &= ~F.isnan(c) & (F.abs(c) != F.lit(float("inf")))
+    corp = with_range(b.where(finite).select(
+        corpus_id, *(F.col("_b." + c).alias("_c" + n) for c, n in zip(
+            edges if box else edges[:2] * 2, edges)),
+        (F.col("_b.maxx") - F.col("_b.minx") + F.col("_b.maxy")
+         - F.col("_b.miny")).alias("_cext")), "_c")
+
+    q = decoded_queries()
     both = q.select(F.lit(True).alias("_isq"),
                     *(F.col("_q" + c).alias(c) for c in cols)).unionByName(
         corp.select(F.lit(False).alias("_isq"),
@@ -625,6 +601,8 @@ def _knn_histogram(queries: DataFrame, corpus: DataFrame, *, k, level,
             F.max(of(~isq, "x1")).alias("gx1"),
             F.max(of(~isq, "y1")).alias("gy1"),
             F.count(of(counted, "minx")).alias("nh"),
+            F.sum(F.when(~isq, (F.col("x1") - F.col("x0") + 1)
+                         * (F.col("y1") - F.col("y0") + 1))).alias("ncells"),
             # occupied cells at each shift of ``level``, to find the
             # finest histogram within the cell budget: a rough estimate
             # will do, and a small sketch keeps the aggregate cheap
@@ -635,66 +613,25 @@ def _knn_histogram(queries: DataFrame, corpus: DataFrame, *, k, level,
         for what, ext in (("queries", st["qext"]), ("corpus", st["cext"])):
             if ext is not None and ext > 0:
                 raise _non_point(what, ext)
-    if not st["nq"] or not st["nc"]:
-        # no neighbour exists: the empty result, without a join
-        schema = T.StructType([
-            q.schema[query_id],
-            T.StructField(corpus_id, corp.schema[corpus_id].dataType),
-            T.StructField("dist", T.DoubleType()),
-            T.StructField("rank", T.IntegerType(), nullable=False),
-        ])
-        return spark.createDataFrame([], schema)
-
     # fewer than k counted rows: every query searches the whole extent
-    w = F.lit(1 << level)
-    if st["nh"] >= k:
+    if st["nh"] >= k and st["nq"]:
         s = next(t for t in range(level + 1)
                  if st[f"occ{t}"] <= HIST_CELLS)
         with job_label(spark, "knn.histogram"):
             hist = corp.where(_in_frame("_cminx", "_cminy")).groupBy(
                 F.shiftright("_cx0", s).alias("hx"),
                 F.shiftright("_cy0", s).alias("hy")).count().toArrow()
-        hx, hy, n = (hist[c].to_numpy() for c in ("hx", "hy", "count"))
-        # the histogram's own extent and total, not the stats': a
-        # source read twice may not return the same rows
-        if n.sum() >= k:
-            bounds = []
-            for t, (x0, y0, x1, y1), (bx, by, bd) in _window_bounds(
-                    hx, hy, n, k, s, level):
-                if not len(bx):
-                    continue
-                hcs = cs * (1 << t)
-                a, b, c = f"_hx{t}", f"_hy{t}", f"_hd{t}"
-                table = spark.createDataFrame(pa.table({a: bx, b: by,
-                                                        c: bd}))
-                # the query takes D of the shift-t cell nearest its min
-                # corner, plus its distance to that cell (triangle
-                # inequality)
-                q = q.select("*", *(
-                    F.least(F.greatest(F.shiftright(col, t), F.lit(lo)),
-                            F.lit(hi)).alias(name)
-                    for col, lo, hi, name in (("_qx0", x0, x1, a),
-                                              ("_qy0", y0, y1, b)))) \
-                    .join(F.broadcast(table), [a, b], "left")
-                lx = C.WORLD_X0 + F.col(a) * hcs
-                ly = C.WORLD_Y0 + F.col(b) * hcs
-                ox = F.greatest(lx - F.col("_qminx"),
-                                F.col("_qminx") - lx - hcs, F.lit(0.0))
-                oy = F.greatest(ly - F.col("_qminy"),
-                                F.col("_qminy") - ly - hcs, F.lit(0.0))
-                bounds.append(F.sqrt(ox * ox + oy * oy) + F.col(c))
-            # the least D over the shifts (null where a shift bounds
-            # nothing; the top shift bounds every query). A row within
-            # D lies fewer than D/cs + 1 cells away (grid_range); the
-            # extra cell absorbs rounding
-            d = F.least(*bounds) if len(bounds) > 1 else bounds[0]
-            w = F.least(F.ceil(d / cs) + 1, F.lit(1 << level))
+        hist = [hist[c].to_numpy() for c in ("hx", "hy", "count")] + [s]
+        # the histogram's own total, not the stats': a source read
+        # twice may not return the same rows
+        if hist[2].sum() >= k:
+            q = decoded_queries(hist)
 
     # each query's range widened by its window, clipped to the corpus's
     # grid extent
     probes = explode_grid(
         q.select(query_id, "_qminx", "_qminy", "_qmaxx", "_qmaxy",
-                 "_qx0", "_qy0", "_qx1", "_qy1", w.alias("_w")),
+                 "_qx0", "_qy0", "_qx1", "_qy1", "_w"),
         (F.greatest(F.col("_qx0") - F.col("_w"), F.lit(st["gx0"])),
          F.greatest(F.col("_qy0") - F.col("_w"), F.lit(st["gy0"])),
          F.least(F.col("_qx1") + F.col("_w"), F.lit(st["gx1"])),
@@ -702,6 +639,12 @@ def _knn_histogram(queries: DataFrame, corpus: DataFrame, *, k, level,
         .drop("_gx", "_gy", "_w")
     index = explode_grid(corp, (F.col("_cx0"), F.col("_cy0"),
                                 F.col("_cx1"), F.col("_cy1")), level)
+    # the optimizer sizes the probes without their explode: broadcast
+    # the index if its rows fit at Spark's row-size estimate, else merge
+    size = (st["ncells"] or 0) * (8 + index._jdf.schema().defaultSize())
+    conf = spark._jsparkSession.sessionState().conf()
+    index = (F.broadcast(index) if size <= conf.autoBroadcastJoinThreshold()
+             else index.hint("merge"))
     # a pair is kept only at the corpus row's cover cell nearest the
     # query's range, so each (query, corpus) pair is found once
     nearest = (
@@ -713,9 +656,12 @@ def _knn_histogram(queries: DataFrame, corpus: DataFrame, *, k, level,
                     F.col("_cminy") - F.col("_qmaxy"), F.lit(0.0))
     rank = F.row_number().over(
         Window.partitionBy(query_id).orderBy("dist", corpus_id))
-    return probes.join(index, "cell_id").where(nearest) \
+    out = probes.join(index, "cell_id").where(nearest) \
         .select(query_id, corpus_id, F.sqrt(dx * dx + dy * dy).alias("dist")) \
         .withColumn("rank", rank).where(F.col("rank") <= k)
+    if not st["nq"] or not st["nc"]:
+        return spark.createDataFrame([], out.schema)  # no neighbour exists
+    return out
 
 
 def idw_interpolate(queries: DataFrame, corpus: DataFrame, *, k: int = 5,

@@ -540,7 +540,8 @@ def box_pairs_native(left: DataFrame, right: DataFrame, *,
         return explode_grid(b, rng, level).drop("_gx", "_gy")
 
     if broadcast == "auto":
-        broadcast = broadcastable(right)
+        with job_label(left.sparkSession, "sjoin.broadcast_probe"):
+            broadcast = broadcastable(right)
 
     l = indexed(left, left_id, "_l")
     r = indexed(right, right_id, "_r")

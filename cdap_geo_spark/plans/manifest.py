@@ -20,7 +20,9 @@ commit protocol:
   checkpoints automatically (lineage);
 * an input enters a fingerprint as its :func:`input_identity` (the
   files under it, with size and mtime), not its bare path, so an input
-  rewritten in place re-runs the stages that read it.
+  rewritten in place re-runs the stages that read it; the engine
+  enters as its :func:`engine_identity`, so changed engine code re-runs
+  them too.
 
 On a 1000-executor cluster the same layout works on any shared
 filesystem/object store with atomic rename; the manifest JSON is tiny
@@ -29,6 +31,7 @@ filesystem/object store with atomic rename; the manifest JSON is tiny
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import os
@@ -65,6 +68,27 @@ def input_identity(path: str) -> list:
         rel = st.getPath().toString()[len(prefix):].lstrip("/")
         out.append((rel, st.getLen(), st.getModificationTime()))
     return sorted(out)
+
+
+@functools.cache
+def engine_identity() -> str:
+    """Hash of the ``cdap_geo_spark`` package's module sources, read
+    through its loader (a source tree or a ``--py-files`` zip), once
+    per process. A stage fingerprinted with it re-runs after any change
+    to the package, whether or not the stage uses the changed code."""
+    from importlib.resources import files
+
+    h = hashlib.sha256()
+
+    def walk(d, rel: str):
+        for e in sorted(d.iterdir(), key=lambda e: e.name):
+            if e.is_dir() and e.name != "__pycache__":
+                walk(e, rel + e.name + "/")
+            elif e.name.endswith(".py"):
+                h.update((rel + e.name).encode() + b"\x00")
+                h.update(e.read_bytes() + b"\x00")
+    walk(files("cdap_geo_spark"), "")
+    return h.hexdigest()[:16]
 
 
 @dataclass

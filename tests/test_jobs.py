@@ -95,6 +95,50 @@ def test_job_rebuilds_after_an_input_is_rewritten_in_place(spark, job_inputs,
     assert ids and all(i.startswith("new_") for i in ids)
 
 
+def test_job_rebuilds_after_an_engine_change(spark, job_inputs, tmp_path,
+                                             monkeypatch):
+    """Same inputs and params: the second run resumes, but a changed
+    engine identity (new package sources) re-runs every stage."""
+    from cdap_geo_spark.jobs.sjoin_tile import run
+    from cdap_geo_spark.plans import manifest
+    docs, regs = job_inputs
+    out = str(tmp_path / "out")
+    run(spark, docs=docs, regions=regs, out=out, check_invariant=False)
+    s2 = run(spark, docs=docs, regions=regs, out=out, check_invariant=False)
+    assert [st["skipped"] for st in s2["stages"]] == [True, True]
+    monkeypatch.setattr(manifest, "engine_identity", lambda: "changed")
+    s3 = run(spark, docs=docs, regions=regs, out=out, check_invariant=False)
+    assert [st["skipped"] for st in s3["stages"]] == [False, False]
+
+
+def test_engine_identity_hashes_the_package_sources(tmp_path):
+    """The identity read from the --py-files zip equals the one read
+    from the source tree, and a changed module changes it."""
+    sys.path.insert(0, os.path.join(REPO, "scripts"))
+    try:
+        import package as pkg
+    finally:
+        sys.path.pop(0)
+    code = ("import sys; sys.path.insert(0, sys.argv[1]); "
+            "from cdap_geo_spark.plans.manifest import engine_identity; "
+            "print(engine_identity())")
+
+    def identity(path):
+        return subprocess.run([sys.executable, "-c", code, path], check=True,
+                              capture_output=True, text=True,
+                              cwd=str(tmp_path)).stdout.strip()
+    zpath = pkg.build(str(tmp_path / "a.zip"))
+    assert identity(zpath) == identity(REPO)
+    with zipfile.ZipFile(zpath) as src, \
+            zipfile.ZipFile(str(tmp_path / "b.zip"), "w") as dst:
+        for name in src.namelist():
+            data = src.read(name)
+            if name.endswith("operators/knn.py"):
+                data += b"\n# changed\n"
+            dst.writestr(name, data)
+    assert identity(str(tmp_path / "b.zip")) != identity(zpath)
+
+
 def test_package_zip_is_importable_and_deterministic(tmp_path):
     sys.path.insert(0, os.path.join(REPO, "scripts"))
     try:

@@ -106,61 +106,49 @@ def test_annulus_cells_arithmetic():
     assert _annulus_cells(3, 6) == 13 ** 2 - 5 ** 2
 
 
-def test_window_radii_matches_bruteforce():
-    # each cell's smallest Chebyshev radius whose window, clipped to the
-    # grid, holds k rows: the vectorised search against a plain loop
-    from cdap_geo_spark.operators.knn import _window_radii
-    rng = np.random.RandomState(7)
-    for nx, ny, k in ((1, 1, 1), (1, 9, 2), (7, 3, 5), (12, 10, 9)):
-        counts = rng.poisson(0.4, (nx, ny))
-        counts[rng.randint(nx), rng.randint(ny)] += k   # the grid holds k
-        want = np.zeros((nx, ny), np.int64)
-        for x in range(nx):
-            for y in range(ny):
-                r = 0
-                while counts[max(x - r, 0):x + r + 1,
-                             max(y - r, 0):y + r + 1].sum() < k:
-                    r += 1
-                want[x, y] = r
-        assert (_window_radii(counts, k) == want).all(), (nx, ny, k)
+def _clusters(rng, lo, hi, n_clusters, per, sigma, n_wide):
+    """(n, 2) points: ``per`` Gaussian points (``sigma``) around each
+    of ``n_clusters`` centres drawn over [lo, hi), then ``n_wide``
+    uniform over the same square."""
+    centres = rng.uniform(lo, hi, (n_clusters, 2))
+    return np.r_[np.repeat(centres, per, axis=0)
+                 + rng.normal(0, sigma, (n_clusters * per, 2)),
+                 rng.uniform(lo, hi, (n_wide, 2))]
 
 
-def test_window_bounds_match_bruteforce(monkeypatch):
-    # the bound pyramid of a clustered count histogram, its cell budget
-    # cut so the finer shifts are sparse: every bounded cell's window
-    # holds k rows and no smaller one does; a sparse shift bounds
-    # exactly the cells whose 3x3 window holds k, the top shift every
-    # cell of its extent
+def test_reach_bounds_the_kth_distance(monkeypatch):
+    # D from the histogram at the finest shift s whose occupied cells
+    # fit the budget, cut so s > 0: every query's k-th distance over
+    # the counted rows is at most D, and D exceeds it by at most a cell
+    # diagonal at s, for queries in the clusters, between them and
+    # outside the world frame
     from cdap_geo_spark.core import cells as C
     from cdap_geo_spark.operators import knn as K
     monkeypatch.setattr(K, "HIST_CELLS", 64)
-    rng = np.random.RandomState(3)
-    level, s, k = 12, 1, 4
-    pts = np.r_[rng.normal(900, 3, (300, 2)),
-                rng.uniform(0, 1500, (40, 2))].astype(np.int64)
-    cells, n = np.unique(pts, axis=0, return_counts=True)
-    hx, hy = cells[:, 0], cells[:, 1]
-    out = K._window_bounds(hx, hy, n, k, s, level)
-    assert [t for t, _, _ in out] == list(range(s, s + len(out)))
-    assert len(out) >= 3
-    for i, (t, ext, (x, y, d)) in enumerate(out):
-        ax, ay = hx >> (t - s), hy >> (t - s)
-        assert ext == (ax.min(), ay.min(), ax.max(), ay.max())
-        cs = C.cell_size(level) * (1 << t)
-        r = np.rint(d / (math.sqrt(2) * cs)).astype(np.int64) - 1
-
-        def rows(cx, cy, rr):
-            return n[(np.abs(ax - cx) <= rr) & (np.abs(ay - cy) <= rr)].sum()
-        for cx, cy, rr in zip(x, y, r):
-            assert rows(cx, cy, rr) >= k
-            assert rr == 0 or rows(cx, cy, rr - 1) < k
-        if i < len(out) - 1:
-            near = {(cx + dx, cy + dy) for cx, cy in zip(ax, ay)
-                    for dx in (-1, 0, 1) for dy in (-1, 0, 1)}
-            assert set(zip(x.tolist(), y.tolist())) == {
-                c for c in near if rows(*c, 1) >= k}
-        else:
-            assert len(x) == (ext[2] - ext[0] + 1) * (ext[3] - ext[1] + 1)
+    level = 12
+    for seed in range(4):
+        rng = np.random.RandomState(seed)
+        pts = _clusters(rng, 0, 400_000, 6, 40, 3_000, 30)
+        gx, gy = C.point_grid(pts[:, 0], pts[:, 1], level)
+        s = next(t for t in range(level + 1) if len(np.unique(
+            (gx >> t) * (1 << level) + (gy >> t))) <= K.HIST_CELLS)
+        assert s > 0
+        cells, n = np.unique(np.c_[gx >> s, gy >> s], axis=0,
+                             return_counts=True)
+        qs = np.r_[pts[rng.randint(240, size=20)] + rng.normal(0, 2_000,
+                                                              (20, 2)),
+                   rng.uniform(0, 400_000, (20, 2)),
+                   [[-1_300_000.0, 200_000.0], [5_000_000.0, -3_000_000.0],
+                    [100_000.0, 3_200_000.0]]]
+        dist = np.sqrt(((qs[:, None, :] - pts[None, :, :]) ** 2).sum(-1))
+        dist.sort(axis=1)
+        slack = math.sqrt(2) * C.cell_size(level - s)
+        for k in (1, 5, 41, len(pts)):
+            d = K._reach(qs[:, 0], qs[:, 1], cells[:, 0], cells[:, 1], n, s,
+                         k, level)
+            dk = dist[:, k - 1]
+            assert (dk <= d * (1 + 1e-12)).all(), (seed, k)
+            assert (d <= (dk + slack) * (1 + 1e-12)).all(), (seed, k)
 
 
 def test_knn_empty_corpus_short_circuits(spark):
@@ -705,3 +693,61 @@ def test_knn_box_edges_match_bruteforce(spark, flag):
     got = _rows(knn_join(q, c, k=4, level=8, how="box",
                          broadcast_queries=flag))
     assert got == want
+
+
+@pytest.mark.parametrize("level", [9, 12, 16])
+@pytest.mark.parametrize("how", ["point", "box"])
+@pytest.mark.parametrize("seed", [1, 2])
+def test_knn_histogram_route_random_differential(spark, monkeypatch, seed,
+                                                 how, level):
+    """The histogram route against brute force on a random scene drawn
+    in units of ``level`` cells, so every level sees the same shape:
+    clusters of 8 rows (k 11 exceeds one), a few wide rows, a few rows
+    beyond the world frame's left edge, and queries in the clusters,
+    between them and outside the frame. The histogram's cell budget is
+    cut so it is counted some shifts coarser than ``level``."""
+    from cdap_geo_spark.core import cells as C
+    from cdap_geo_spark.operators import knn as K
+    monkeypatch.setattr(K, "HIST_CELLS", 16)
+    shifts = []
+    query_pass = K._query_pass
+
+    def spied(k, level, box, schema, hist=None):
+        shifts.append(None if hist is None else hist[3])
+        return query_pass(k, level, box, schema, hist)
+    monkeypatch.setattr(K, "_query_pass", spied)
+    rng = np.random.RandomState(seed)
+    k = 11 if seed == 1 else 4
+    cs = C.cell_size(level)
+    # the scene's origin lies 20 cells inside the frame's corner
+    pts = np.r_[_clusters(rng, 0, 60, 6, 8, 2, 4),
+                rng.uniform([-30, 0], [-21, 60], (3, 2))]
+    qs = np.r_[pts[rng.randint(48, size=3)] + rng.normal(0, 1, (3, 2)),
+               rng.uniform(0, 60, (3, 2)), [[-50, 30], [30, -70]],
+               [[-500, -500]]]
+
+    def world(xy, side):
+        x0, y0 = (C.WORLD_X0 + 20 * cs + xy[:, 0] * cs,
+                  C.WORLD_Y0 + 20 * cs + xy[:, 1] * cs)
+        return [(x0[i], y0[i], x0[i] + side[i, 0] * cs,
+                 y0[i] + side[i, 1] * cs) for i in range(len(xy))]
+    if how == "point":
+        corpus = [(f"c{i:02d}", b[0], b[1]) for i, b in
+                  enumerate(world(pts, np.zeros((len(pts), 2))))]
+        queries = [(f"q{i}", b[0], b[1]) for i, b in
+                   enumerate(world(qs, np.zeros((len(qs), 2))))]
+        q = _points(spark, queries).withColumnRenamed("gid", "query_id")
+        c = _points(spark, corpus, parts=3).withColumnRenamed("gid", "doc_id")
+        want = _bruteforce(queries, corpus, k)
+    else:
+        corpus = [(f"c{i:02d}", *b) for i, b in enumerate(
+            world(pts, rng.uniform(0, 3, (len(pts), 2))))]
+        queries = [(f"q{i}", *b) for i, b in enumerate(
+            world(qs, rng.uniform(0, 2, (len(qs), 2))))]
+        q = _box_rows(spark, queries).withColumnRenamed("gid", "query_id")
+        c = _box_rows(spark, corpus).withColumnRenamed("gid", "doc_id")
+        want = _box_bruteforce(queries, corpus, k)
+    got = _rows(knn_join(q, c, k=k, level=level, how=how,
+                         broadcast_queries=False))
+    assert got == want
+    assert shifts[-1] is not None and shifts[-1] > 0, shifts

@@ -115,6 +115,30 @@ def test_ingest_of_a_different_frame_rebuilds(spark, tmp_path):
     assert ingest(spark, _docs(spark, 10), root, level=8).count() == 10
 
 
+def test_ingest_rebuilds_after_an_engine_change(spark, tmp_path,
+                                                monkeypatch):
+    """Same frame into the same root: the second ingest resumes, but a
+    changed engine identity (new package sources) re-runs the stage."""
+    import cdap_geo_spark.io as io
+    root, dd = str(tmp_path / "out"), _docs(spark, 20)
+    man = Manifest(spark, root)
+    ingest(spark, dd, root, level=8)
+    fp = man.stage_info("ingest")["fingerprint"]
+    calls = []
+    build = Manifest.run_stage
+
+    def counted(self, name, fp, fn):
+        res = build(self, name, fp, fn)
+        calls.append(res.skipped)
+        return res
+    monkeypatch.setattr(Manifest, "run_stage", counted)
+    ingest(spark, dd, root, level=8)
+    monkeypatch.setattr(io, "engine_identity", lambda: "changed")
+    assert ingest(spark, dd, root, level=8).count() == 20
+    assert calls == [True, False]
+    assert man.stage_info("ingest")["fingerprint"] != fp
+
+
 def test_ingest_of_a_parquet_input_rewritten_in_place_rebuilds(spark,
                                                                tmp_path):
     """Same path, same schema, new files: the input's file identity

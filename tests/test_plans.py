@@ -180,6 +180,22 @@ def test_sjoin_auto_broadcast_reads_regions_in_one_job(spark, tmp_path):
     assert "MapInArrow" in plan and "BroadcastHashJoin" not in plan
 
 
+def test_box_pairs_native_probe_is_labelled(spark):
+    """box_pairs_native over an RDD-backed right side, which has no
+    size estimate: the planner's bounded row probe is the only job the
+    call runs, and it is named."""
+    from cdap_geo_spark.operators.sjoin import box_pairs_native
+    cols = "id string, minx double, miny double, maxx double, maxy double"
+    left = spark.createDataFrame([("a", 0.0, 0.0, 10.0, 10.0)], cols)
+    right = spark.createDataFrame(spark.sparkContext.parallelize(
+        [("b", 5.0, 5.0, 20.0, 20.0)], 1), cols)
+    pairs, names = _caller_job_names(spark, lambda: box_pairs_native(
+        left, right.withColumnRenamed("id", "rid"), left_id="id",
+        right_id="rid"))
+    assert names and set(names) == {"sjoin.broadcast_probe"}, names
+    assert [tuple(r) for r in pairs.collect()] == [("a", "b")]
+
+
 def test_sjoin_tile_pipeline_runs_bounded_labelled_jobs(spark, tmp_path):
     """sjoin_pairs -> assign_tiles -> dropDuplicates -> count() on
     parquet inputs: a bounded number of jobs, each the labelled region
@@ -262,18 +278,22 @@ def _knn_world(spark, tmp_path):
 def test_knn_histogram_route_runs_two_labelled_steps(spark, tmp_path, kw):
     """A non-broadcast knn_join runs its two call-time steps, the stats
     aggregate and the corpus histogram, and returns a lazy plan whose
-    only Python nodes are the two decodes (one per side), with no
-    checkpoint or cached relation in it."""
+    only Python nodes are the two decodes (the corpus ``_bounds`` UDF,
+    the queries' window pass), joined once on the cell, with no bound
+    table, checkpoint or cached relation in it."""
     from cdap_geo_spark.operators.knn import knn_join
     queries, corpus = _knn_world(spark, tmp_path)
     res, names = _job_names(spark, lambda: knn_join(queries, corpus, k=5,
                                                     **kw))
     assert names == ["knn.stats"] * 2 + ["knn.histogram"] * 2, names
-    nodes = _python_nodes(res)
+    nodes = sorted(_python_nodes(res))
     assert len(nodes) == 2, nodes
-    assert all("ArrowEvalPython" in n and "_bounds" in n for n in nodes)
+    assert "ArrowEvalPython" in nodes[0] and "_bounds" in nodes[0], nodes
+    assert "MapInArrow" in nodes[1] and "_w" in nodes[1], nodes
     plan = res._jdf.queryExecution().executedPlan().toString()
-    for absent in ("ExistingRDD", "InMemoryTableScan"):
+    joins = [ln for ln in plan.splitlines() if "Join " in ln]
+    assert len(joins) == 1 and "cell_id" in joins[0], joins
+    for absent in ("LocalTableScan", "ExistingRDD", "InMemoryTableScan"):
         assert absent not in plan, plan
     assert res.count() == 40 * 5
 
