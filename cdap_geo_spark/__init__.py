@@ -6,8 +6,8 @@ Spark 4.x engine:
 
 * geometry travels as WKB in ``BinaryType`` columns (reference
   convention, ``cdap_geo/index_bbox.py:35``) and is decoded ONLY inside
-  Arrow-vectorized pandas UDFs backed by NumPy kernels (no per-row
-  Python, no shapely);
+  Arrow UDFs and ``mapInArrow`` passes, from the Arrow buffers of each
+  batch, by NumPy kernels (no per-row Python, no shapely);
 * spatial indexing is an int64 hierarchical Z-order cell scheme
   (H3/S2-style parent/child/k-ring algebra) replacing the reference's
   string cell ids (``cdap_geo/index_bbox.py:23``,

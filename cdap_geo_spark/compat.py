@@ -149,7 +149,7 @@ def bng(column, resolution: int = 1000, how: str = "intersects",
     @pandas_udf(ret_type)
     def _bng(s: pd.Series) -> pd.Series:
         out = []
-        batch = W.parse_wkb([None if v is None else bytes(v) for v in s])
+        batch = W.parse_wkb(s)
         b = batch.bounds()
         for g in range(len(batch)):
             if not batch.valid[g] or np.isnan(b[g, 0]):
@@ -322,7 +322,7 @@ def geohash(column, precision: int = 12) -> Column:
     EPSG:4326 (chain :func:`crs` first — the reference's ``to_crs``)."""
     @pandas_udf(T.StringType())
     def _gh(s: pd.Series) -> pd.Series:
-        batch = W.parse_wkb([None if v is None else bytes(v) for v in s])
+        batch = W.parse_wkb(s)
         b = batch.bounds()
         out = []
         for g in range(len(batch)):
@@ -397,8 +397,7 @@ def intersection(left, right) -> Column:
     with holes)."""
     @pandas_udf(T.BinaryType())
     def _inter(l: pd.Series, r: pd.Series) -> pd.Series:
-        lb = W.parse_wkb([None if v is None else bytes(v) for v in l])
-        rb = W.parse_wkb([None if v is None else bytes(v) for v in r])
+        lb, rb = W.parse_wkb(l), W.parse_wkb(r)
         out = []
         for i in range(len(lb)):
             out.append(_clip_geom_of(lb, rb, i))
@@ -666,10 +665,9 @@ def gdf_intersects(pdf: pd.DataFrame, other: bytes,
     (e.g. :func:`to_gdf` output) with the engine's exact kernel."""
     import numpy as np
     from cdap_geo_spark.core import geom as G, wkb as W
-    blobs = [None if v is None else bytes(v) for v in pdf[geometry_column]]
-    lb = W.parse_wkb(blobs)
-    rb = W.parse_wkb([other] * len(blobs))
-    ids = np.arange(len(blobs))
+    lb = W.parse_wkb(pdf[geometry_column])
+    rb = W.parse_wkb([other] * len(pdf))
+    ids = np.arange(len(pdf))
     mask = G.pairs_intersect(lb, rb, ids, ids)
     return pdf[np.asarray(mask, bool)]
 
@@ -683,12 +681,11 @@ def gdf_intersection(pdf: pd.DataFrame, other: bytes,
     ``clip`` keeping the frame's rows)."""
     from cdap_geo_spark.core import wkb as W
     sub = gdf_intersects(pdf, other, geometry_column)
-    blobs = [None if v is None else bytes(v) for v in sub[geometry_column]]
-    lb = W.parse_wkb(blobs)
-    rb = W.parse_wkb([other] * len(blobs))
+    lb = W.parse_wkb(sub[geometry_column])
+    rb = W.parse_wkb([other] * len(sub))
     out = sub.copy()
     out[geometry_column] = [_clip_geom_of(lb, rb, i)
-                            for i in range(len(blobs))]
+                            for i in range(len(sub))]
     return out
 
 

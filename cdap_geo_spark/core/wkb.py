@@ -27,6 +27,7 @@ import struct
 from dataclasses import dataclass
 
 import numpy as np
+import pyarrow as pa
 
 # Geometry kinds (base WKB type codes).
 KIND_NULL = 0
@@ -195,48 +196,73 @@ def _parse_one(r: _Reader, parts_kind: list, rings_len: list,
 
 
 def parse_wkb(blobs) -> GeomBatch:
-    """Parse a sequence of WKB ``bytes`` (or None) into a GeomBatch.
+    """Parse a column of WKB blobs into a GeomBatch.
 
-    Fast paths (no per-row Python): a batch of 2D little-endian Points
-    (the dominant case for document geo-spans) decodes with two
-    ``np.frombuffer`` calls; single-ring LE Polygons (boxes, tiles,
-    regions — the dominant right side of every join) decode in
-    same-length groups the same way. Everything else falls back to the
-    general recursive parser; mixed batches are stitched back into row
-    order.
+    ``blobs`` is a pyarrow ``binary`` or ``large_binary`` array (a
+    ``ChunkedArray`` is combined first), or any sequence of bytes-like
+    values and None, converted once with ``pa.array(blobs,
+    pa.binary())``. Rows are classified with NumPy over the array's
+    validity bitmap, offsets and the first 13 bytes of each blob:
+    2D little-endian Points (the dominant case for document
+    geo-spans) and single-ring LE Polygons (boxes, tiles, regions —
+    the dominant right side of every join) take their coordinates
+    straight from the data buffer, with no per-row Python. Only the
+    remaining rows go through the general recursive parser; mixed
+    batches are stitched back into row order.
     """
-    n = len(blobs)
+    if isinstance(blobs, pa.ChunkedArray):
+        blobs = blobs.combine_chunks()
+    arr = (blobs if isinstance(blobs, pa.Array)
+           else pa.array(blobs, pa.binary()))
+    n = len(arr)
     if n == 0:
         return _empty_batch(0)
+    validity, offsets, data = arr.buffers()
+    otype = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    off = np.frombuffer(offsets, otype, count=n + 1,
+                        offset=arr.offset * np.dtype(otype).itemsize)
+    start = off[:-1].astype(np.int64)
+    length = np.diff(off).astype(np.int64)
+    if validity is not None:
+        bits = np.unpackbits(np.frombuffer(validity, np.uint8),
+                             bitorder="little")
+        length[~bits[arr.offset:arr.offset + n].astype(bool)] = 0
+    data = np.frombuffer(data or b"", np.uint8)
 
-    pt_mask = np.fromiter((_is_le_point(b) for b in blobs), bool, count=n)
-    if pt_mask.all():
-        return _parse_points(blobs, n)
-    sr_mask = np.fromiter(
-        (not p and _is_le_srpoly(b) for p, b in zip(pt_mask, blobs)),
-        bool, count=n)
+    # the first 13 bytes: endian, u32 type, u32 ring count, u32 points
+    rows = np.flatnonzero(length >= 13)
+    hdr = data[start[rows, None] + np.arange(13)]
+    body = length[rows] - 13
+    le2d = (hdr[:, 0] == 1) & ~hdr[:, 2:5].any(axis=1)
+    npts = hdr[:, 9:13].copy().view("<u4")[:, 0].astype(np.int64)
+    pt_mask = np.zeros(n, bool)
+    pt_mask[rows] = le2d & (hdr[:, 1] == 1) & (body == _POINT_WKB_LEN - 13)
+    sr_mask = np.zeros(n, bool)
+    sr_mask[rows] = (le2d & (hdr[:, 1] == 3) & (hdr[:, 5] == 1)
+                     & ~hdr[:, 6:9].any(axis=1) & (body >= 4 * 16)
+                     & (body % 16 == 0) & (npts == body // 16))
 
     pieces: list = []   # (row indices, parsed batch)
     if pt_mask.any():
         idx = np.flatnonzero(pt_mask)
-        pieces.append((idx, _parse_points([blobs[i] for i in idx],
-                                          len(idx))))
+        pieces.append((idx, _single_rings(
+            KIND_POINT, _coords(data, start[idx] + 5,
+                                start[idx] + _POINT_WKB_LEN),
+            np.ones(len(idx), np.int64))))
     if sr_mask.any():
         idx = np.flatnonzero(sr_mask)
-        lens = np.fromiter((len(blobs[i]) for i in idx), np.int64,
-                           count=len(idx))
-        for length in np.unique(lens):
-            sub = idx[lens == length]
-            pieces.append((sub, _parse_srpolys(
-                [blobs[i] for i in sub], len(sub), int(length))))
+        pieces.append((idx, _single_rings(
+            KIND_POLYGON,
+            _coords(data, start[idx] + 13, start[idx] + length[idx]),
+            (length[idx] - 13) // 16)))
     gen_idx = np.flatnonzero(~pt_mask & ~sr_mask)
     if len(gen_idx):
-        pieces.append((gen_idx, _parse_general([blobs[i]
-                                                for i in gen_idx])))
+        buf = data.tobytes()   # a null row is b"": invalid, as None
+        pieces.append((gen_idx, _parse_general([
+            buf[i:i + k] for i, k in zip(start[gen_idx].tolist(),
+                                         length[gen_idx].tolist())])))
     if len(pieces) == 1:
-        idx, batch = pieces[0]
-        if len(idx) == n and np.array_equal(idx, np.arange(n)):
-            return batch
+        return pieces[0][1]
     combined = pieces[0][1]
     for _, b in pieces[1:]:
         combined = concat_batches(combined, b)
@@ -248,18 +274,36 @@ def parse_wkb(blobs) -> GeomBatch:
     return slice_batch(combined, perm)
 
 
-def _parse_points(blobs, n: int) -> GeomBatch:
-    buf = b"".join(blobs)
-    flat = np.frombuffer(buf, dtype=np.uint8).reshape(n, _POINT_WKB_LEN)
-    coords = flat[:, 5:].copy().view("<f8").reshape(n, 2).astype(np.float64)
-    ok = ~np.isnan(coords).any(axis=1)
+def _coords(data: np.ndarray, lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
+    """(m,2) float64 of the LE doubles in the byte ranges ``[lo, hi)``
+    of ``data``, range after range, gathered per double (not per byte)
+    from one shifted view of ``data`` per 8-byte alignment."""
+    dst = np.zeros(len(lo) + 1, np.int64)
+    np.cumsum((hi - lo) // 8, out=dst[1:])
+    out = np.empty(dst[-1])
+    shift = lo % 8
+    for s in np.unique(shift):
+        rows = np.flatnonzero(shift == s)
+        view = np.frombuffer(data, "<f8", (len(data) - s) // 8, s)
+        out[_expand_ranges(dst[rows], dst[rows + 1])] = view[_expand_ranges(
+            (lo[rows] - s) // 8, (hi[rows] - s) // 8)]
+    return out.reshape(-1, 2)
+
+
+def _single_rings(kind: int, coords: np.ndarray, npts) -> GeomBatch:
+    """One part of one ring per row, ring ``i`` the next ``npts[i]``
+    coords; a NaN point is invalid."""
+    n = len(npts)
+    ring_coord_off = np.zeros(n + 1, np.int64)
+    np.cumsum(npts, out=ring_coord_off[1:])
     return GeomBatch(
-        kinds=np.full(n, KIND_POINT, np.uint8),
-        valid=ok,
+        kinds=np.full(n, kind, np.uint8),
+        valid=(~np.isnan(coords).any(axis=1) if kind == KIND_POINT
+               else np.ones(n, bool)),
         geom_part_off=np.arange(n + 1, dtype=np.int64),
-        part_kind=np.full(n, KIND_POINT, np.uint8),
+        part_kind=np.full(n, kind, np.uint8),
         part_ring_off=np.arange(n + 1, dtype=np.int64),
-        ring_coord_off=np.arange(n + 1, dtype=np.int64),
+        ring_coord_off=ring_coord_off,
         coords=coords,
     )
 
@@ -305,41 +349,6 @@ def _parse_general(blobs) -> GeomBatch:
     np.cumsum(geom_nparts, out=geom_part_off[1:])
     return GeomBatch(kinds, valid, geom_part_off, part_kind,
                      part_ring_off, ring_coord_off, coords)
-
-
-def _is_le_point(b) -> bool:
-    return (b is not None and len(b) == _POINT_WKB_LEN and b[0] == 1
-            and b[1] == 1 and not (b[2] or b[3] or b[4]))
-
-
-def _is_le_srpoly(b) -> bool:
-    """2D little-endian Polygon with exactly one ring (box/tile/region
-    shape): header 01 03000000 01000000 + u32 npts + npts*16 bytes."""
-    return (b is not None and len(b) >= 13 + 4 * 16
-            and b[0] == 1 and b[1] == 3 and not (b[2] or b[3] or b[4])
-            and b[5] == 1 and not (b[6] or b[7] or b[8])
-            and (len(b) - 13) % 16 == 0
-            and (b[9] | (b[10] << 8) | (b[11] << 16) | (b[12] << 24))
-            == (len(b) - 13) // 16)
-
-
-def _parse_srpolys(blobs, n: int, length: int) -> GeomBatch:
-    """Vectorized decode of same-length single-ring LE polygons."""
-    buf = b"".join(bytes(b) if not isinstance(b, bytes) else b
-                   for b in blobs)
-    flat = np.frombuffer(buf, dtype=np.uint8).reshape(n, length)
-    npts = (length - 13) // 16
-    coords = (flat[:, 13:].copy().view("<f8")
-              .reshape(n * npts, 2).astype(np.float64))
-    return GeomBatch(
-        kinds=np.full(n, KIND_POLYGON, np.uint8),
-        valid=np.ones(n, bool),
-        geom_part_off=np.arange(n + 1, dtype=np.int64),
-        part_kind=np.full(n, KIND_POLYGON, np.uint8),
-        part_ring_off=np.arange(n + 1, dtype=np.int64),
-        ring_coord_off=np.arange(n + 1, dtype=np.int64) * npts,
-        coords=coords,
-    )
 
 
 def concat_batches(a: GeomBatch, b: GeomBatch) -> GeomBatch:
@@ -456,15 +465,8 @@ def boxes_batch(minx, miny, maxx, maxy) -> GeomBatch:
     ring[:, [1, 2], 0] = np.asarray(maxx, np.float64)[:, None]
     ring[:, [0, 1, 4], 1] = np.asarray(miny, np.float64)[:, None]
     ring[:, [2, 3], 1] = np.asarray(maxy, np.float64)[:, None]
-    return GeomBatch(
-        kinds=np.full(n, KIND_POLYGON, np.uint8),
-        valid=np.ones(n, bool),
-        geom_part_off=np.arange(n + 1, dtype=np.int64),
-        part_kind=np.full(n, KIND_POLYGON, np.uint8),
-        part_ring_off=np.arange(n + 1, dtype=np.int64),
-        ring_coord_off=np.arange(n + 1, dtype=np.int64) * 5,
-        coords=ring.reshape(n * 5, 2),
-    )
+    return _single_rings(KIND_POLYGON, ring.reshape(n * 5, 2),
+                         np.full(n, 5, np.int64))
 
 
 def polygon_to_wkb(rings) -> bytes:

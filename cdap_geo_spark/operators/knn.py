@@ -289,7 +289,7 @@ def _partition_topk(qx, qy, k: int, level: int, schema):
         keep_id = pa.array([], schema.field(1).type)
         ext = 0.0
         for b in batches:
-            bounds = W.parse_wkb(b.column(1).to_pylist()).bounds()
+            bounds = W.parse_wkb(b.column(1)).bounds()
             ok = np.flatnonzero(np.isfinite(bounds).all(axis=1))
             if not len(ok):
                 continue
@@ -433,11 +433,10 @@ def _knn_broadcast(queries: DataFrame, corpus: DataFrame, *, k, level,
 
     spark = queries.sparkSession
     with job_label(spark, "knn.queries"):
-        rows = queries.select(query_id, query_geom).collect()
+        table = queries.select(query_id, query_geom).toArrow()
     # decoded here: a broadcastable query set is small, and a Python
     # UDF job would cost more than the decode
-    bounds = W.parse_wkb([None if r[1] is None else bytes(r[1])
-                          for r in rows]).bounds()
+    bounds = W.parse_wkb(table.column(1)).bounds()
     ok = np.flatnonzero(np.isfinite(bounds).all(axis=1))
     bounds = bounds[ok]
     if require_points and len(ok):
@@ -475,7 +474,8 @@ def _knn_broadcast(queries: DataFrame, corpus: DataFrame, *, k, level,
         T.StructField("rank", T.IntegerType(), nullable=False),
     ])
     arrow_schema = to_arrow_schema(schema)
-    qids = pa.array([rows[i][0] for i in ok], arrow_schema.field(0).type)
+    qids = table.column(0).combine_chunks().take(ok) \
+        .cast(arrow_schema.field(0).type)
     out = pa.table([qids.take(q[sel]), ids.take(sel), dist.take(sel),
                     pa.array(_group_pos(q[sel]) + 1, pa.int32())],
                    schema=arrow_schema)
@@ -513,7 +513,7 @@ def _query_pass(k: int, level: int, box: bool, schema, hist=None):
     def run(batches):
         import pyarrow as pa
         for b in batches:
-            bb = W.parse_wkb(b.column(1).to_pylist()).bounds()
+            bb = W.parse_wkb(b.column(1)).bounds()
             ok = np.flatnonzero(np.isfinite(bb).all(axis=1))
             bb = bb[ok]
             d = np.full(len(ok), np.inf)

@@ -86,9 +86,10 @@ def _index_side(df: DataFrame, id_col: str, geom_col: str, level: int,
                 dilate: float = 0.0) -> DataFrame:
     """Narrow (id, bounds, cell_id, inside[, geometry]) index relation.
 
-    ONE fused ``mapInPandas`` pass: WKB decode + bounds + cell cover +
+    ONE fused ``mapInArrow`` pass: WKB decode + bounds + cell cover +
     explode all happen inside a single Arrow batch in NumPy (the
-    explode is a ``np.repeat``), emitting flat primitive columns only.
+    explode is a ``take`` of the repeated row indices), emitting flat
+    primitive columns only.
     This replaces the reference's three per-row UDF passes + Spark-side
     explode (``cdap_geo/index_bbox.py:8,15-30,45-50``) and avoids
     shipping nested array<struct> columns through Arrow.
@@ -98,7 +99,8 @@ def _index_side(df: DataFrame, id_col: str, geom_col: str, level: int,
     shuffle — the reference's drop-columns-then-fetch-back advice
     (README.md:64-67) built into the plan.
     """
-    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     src = df.select(F.col(id_col), F.col(geom_col))
     id_field = src.schema[id_col]
@@ -115,27 +117,24 @@ def _index_side(df: DataFrame, id_col: str, geom_col: str, level: int,
         T.StructField("_inside", T.BooleanType()),
     ])
 
+    arrow_schema = to_arrow_schema(out_schema)
+
     def gen(batches):
-        for pdf in batches:
-            blobs = [None if v is None else bytes(v) for v in pdf[geom_col]]
-            batch = W.parse_wkb(blobs)
-            b = batch.bounds()
+        for b in batches:
+            batch = W.parse_wkb(b.column(1))
             off, cc, inside = C.cover_batch(batch, level, how=how, pad=pad,
                                             dilate=dilate)
-            counts = off[1:] - off[:-1]
-            owner = np.repeat(np.arange(len(pdf)), counts)
-            out = {id_col: pdf[id_col].to_numpy()[owner]}
+            owner = np.repeat(np.arange(b.num_rows), np.diff(off))
+            cols = [b.column(0).take(owner)]
             if keep_geom:
-                out[geom_col] = pdf[geom_col].to_numpy()[owner]
-            out["_minx"] = b[owner, 0]
-            out["_miny"] = b[owner, 1]
-            out["_maxx"] = b[owner, 2]
-            out["_maxy"] = b[owner, 3]
-            out["cell_id"] = cc
-            out["_inside"] = inside
-            yield pd.DataFrame(out)
+                cols.append(b.column(1).take(owner))
+            # NaN bounds (null or empty geometry) as nulls
+            cols += [pa.array(v, from_pandas=True)
+                     for v in batch.bounds()[owner].T]
+            yield _record_batch(cols + [pa.array(cc), pa.array(inside)],
+                                arrow_schema)
 
-    return src.mapInPandas(gen, schema=out_schema)
+    return src.mapInArrow(gen, schema=out_schema)
 
 
 def sjoin_pairs(left: DataFrame, right: DataFrame, *,
@@ -235,7 +234,7 @@ class RegionIndex:
     cell-sorted table (``cells[i]`` is covered by region
     ``region[i]``; ``inside[i]`` marks a cell wholly inside it)."""
 
-    def __init__(self, ids, blobs: list, level: int, how: str, pad: float):
+    def __init__(self, ids, blobs, level: int, how: str, pad: float):
         self.ids = ids
         self.batch = W.parse_wkb(blobs)
         self.bounds = self.batch.bounds()
@@ -252,14 +251,9 @@ class RegionIndex:
                 level: int, how: str) -> "RegionIndex":
         """Read ``(right_id, right_geom)`` in one Spark job
         (``sjoin.regions``) and index it here, in the driver."""
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_type
-
         with job_label(right.sparkSession, "sjoin.regions"):
-            rows = right.select(right_id, right_geom).collect()
-        return cls(pa.array([r[0] for r in rows],
-                            to_arrow_type(right.schema[right_id].dataType)),
-                   [None if r[1] is None else bytes(r[1]) for r in rows],
+            table = right.select(right_id, right_geom).toArrow()
+        return cls(table.column(0).combine_chunks(), table.column(1),
                    level, how, PAD)
 
     def probe(self, cells: np.ndarray, owner: np.ndarray):
@@ -335,7 +329,7 @@ class BroadcastPass:
 
         def run(batches):
             for b in batches:
-                lb = W.parse_wkb(b.column(1).to_pylist())
+                lb = W.parse_wkb(b.column(1))
                 li, ri, _ = batch_pairs(index, lb, **kw)
                 rows, at = np.unique(li, return_inverse=True)
                 owner, names, inv = tile_cover(lb, rows)
@@ -386,8 +380,7 @@ def _sjoin_broadcast(left: DataFrame, right: DataFrame, *, left_id,
     def run(batches):
         for b in batches:
             geoms = b.column(1)
-            li, ri, d = batch_pairs(index, W.parse_wkb(geoms.to_pylist()),
-                                    **kw)
+            li, ri, d = batch_pairs(index, W.parse_wkb(geoms), **kw)
             cols = [b.column(0).take(li), index.ids.take(ri)]
             if keep_geom:
                 cols.append(geoms.take(li))

@@ -14,7 +14,7 @@ shuffle, no tile table scan. The generic sjoin path stays available
 for irregular tile sets.
 
 :func:`tile_cover` is the one tile rule, in NumPy. :func:`assign_tiles`
-runs it in a ``mapInPandas`` pass of its own, or, over the frame the
+runs it in a ``mapInArrow`` pass of its own, or, over the frame the
 broadcast sjoin route returned, inside that route's pass over the left
 side (one Python node for sjoin + tiles).
 """
@@ -22,9 +22,9 @@ side (one Python node for sjoin + tiles).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 from cdap_geo_spark import udfs
 from cdap_geo_spark.core import geom as G, wkb as W
@@ -37,7 +37,7 @@ def split_grid(spark: SparkSession, bbox: tuple, splits: int,
     Columns (tile_id, z, minx, miny, maxx, maxy, geometry); enumeration
     order x-major then y, matching the reference's loop
     (``cdap_geo/misc.py:13-16``). Built from ``spark.range`` + closed-form
-    box arithmetic — fully native except the WKB emit PUDF.
+    box arithmetic — fully native except the WKB emit UDF.
     """
     x0, y0, x1, y1 = (float(v) for v in bbox)
     dx, dy = (x1 - x0) / splits, (y1 - y0) / splits
@@ -80,13 +80,12 @@ def grid_cover_udf(resolutions, limits):
     rx, ry = int(resolutions[0]), int(resolutions[1])
     lx0, ly0, lx1, ly1 = (int(v) for v in limits)
 
-    @pandas_udf(T.ArrayType(T.StringType()))
-    def _cover(minx: pd.Series, miny: pd.Series,
-               maxx: pd.Series, maxy: pd.Series) -> pd.Series:
-        mnx = minx.to_numpy(np.float64)
-        mny = miny.to_numpy(np.float64)
-        mxx = maxx.to_numpy(np.float64)
-        mxy = maxy.to_numpy(np.float64)
+    @arrow_udf(T.ArrayType(T.StringType()))
+    def _cover(minx: pa.Array, miny: pa.Array,
+               maxx: pa.Array, maxy: pa.Array) -> pa.Array:
+        mnx, mny, mxx, mxy = (
+            np.asarray(c.to_numpy(zero_copy_only=False), np.float64)
+            for c in (minx, miny, maxx, maxy))
         out = []
         for a, b, c, d in zip(mnx, mny, mxx, mxy):
             if np.isnan(a):
@@ -108,7 +107,7 @@ def grid_cover_udf(resolutions, limits):
                                                        - ly0) / ry)), 0))
             ys = ys[(ys > b) & (ys < min(d + ry, ly1))].astype(np.int64)
             out.append([f"{x}-{y}" for x in xs for y in ys])
-        return pd.Series(out)
+        return pa.array(out, pa.list_(pa.string()))
     return _cover
 
 
@@ -191,7 +190,7 @@ def assign_tiles(df: DataFrame, *, bbox: tuple, splits: int,
     right id — the tiles are assigned inside the join's own pass over
     the left side: one Python node, each matched left row tiled once,
     and the left geometry never leaves it. Any other frame gets a
-    ``mapInPandas`` pass of its own. Both give the same rows.
+    ``mapInArrow`` pass of its own. Both give the same rows.
     """
     x0, y0, x1, y1 = (float(v) for v in bbox)
     dx = (x1 - x0) / splits
@@ -216,18 +215,15 @@ def assign_tiles(df: DataFrame, *, bbox: tuple, splits: int,
             out_schema)
 
     def gen(batches):
-        for pdf in batches:
-            blobs = [None if v is None else bytes(v) for v in pdf[geom_col]]
-            batch = W.parse_wkb(blobs)
-            owner, names, inv = tile_cover(batch, np.arange(len(pdf)), grid,
-                                           exact)
-            data = {id_col: pdf[id_col].to_numpy()[owner]}
-            for c in keep:
-                data[c] = pdf[c].to_numpy()[owner]
-            data["tile_id"] = names[inv]
-            yield pd.DataFrame(data)
+        for b in batches:
+            g = b.num_columns - 1
+            owner, names, inv = tile_cover(W.parse_wkb(b.column(g)),
+                                           np.arange(b.num_rows), grid, exact)
+            cols = [b.column(i).take(owner) for i in range(g)]
+            cols.append(pa.array(names, pa.string()).take(inv))
+            yield pa.RecordBatch.from_arrays(cols, names=out_schema.names)
 
-    return src.mapInPandas(gen, schema=out_schema)
+    return src.mapInArrow(gen, schema=out_schema)
 
 
 def tile_rollup(assigned: DataFrame, *, resolutions, factor: int,

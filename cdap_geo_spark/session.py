@@ -2,7 +2,7 @@
 
 Single place for the conf the 100 TB design relies on: AQE (runtime
 broadcast conversion, partition coalescing, skew-join splitting),
-Arrow execution for the pandas-UDF kernels, and shuffle-partition
+Arrow batches for the kernels' UDFs and passes, and shuffle-partition
 sizing. On a real cluster the same conf ships via
 ``spark-submit --py-files`` (north rule); locally we pin
 ``local[N]`` so the bench can compare N vs 4N cores.
@@ -22,7 +22,8 @@ ENGINE_CONF = {
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.adaptive.advisoryPartitionSizeInBytes": "64m",
-    # Arrow boundary for the pandas-UDF kernels. 64k-row batches: a
+    # Arrow boundary for the kernels' UDFs and mapInArrow passes (and
+    # the other operators' pandas UDFs). 64k-row batches: a
     # same-window A/B at sf0.1/local[32] measured 135 s (10k rows) vs
     # 62.8 s (64k rows) for the headline — per-batch socket/IPC/pandas
     # overhead multiplied across 32 task pipelines dominates at small

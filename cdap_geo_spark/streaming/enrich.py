@@ -65,8 +65,7 @@ def spatial_enrich_stream(points: DataFrame, regions: DataFrame, *,
 
     def run(batches):
         for b in batches:
-            li, ri, _ = batch_pairs(
-                index, W.parse_wkb(b.column(g).to_pylist()), **kw)
+            li, ri, _ = batch_pairs(index, W.parse_wkb(b.column(g)), **kw)
             yield pa.RecordBatch.from_arrays(
                 b.take(li).columns + [index.ids.take(ri)],
                 names=schema.names)

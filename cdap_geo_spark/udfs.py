@@ -1,7 +1,9 @@
-"""Arrow-vectorized pandas UDF factories over the NumPy kernels.
+"""Arrow UDF factories over the NumPy kernels.
 
 Geometry bytes cross the JVM<->Python boundary only as Arrow batches:
-through these column UDFs, or through the operators' own
+through these column UDFs (``arrow_udf``: each call gets and returns
+pyarrow arrays, and :func:`~cdap_geo_spark.core.wkb.parse_wkb` decodes
+the binary column from its buffers), or through the operators' own
 ``mapInArrow`` passes over whole batches (the broadcast sjoin probe,
 the broadcast kNN top-k, stream enrichment). Engine contract: no
 per-row Python — the reference's 11 per-row ``F.udf`` sites,
@@ -9,19 +11,22 @@ SURVEY.md §2.10, all collapse into these factories and passes.
 Parameterized UDFs follow the reference's currying pattern (closure
 captures level/how/resolution, ``cdap_geo/functions.py:20-24``).
 
-Pair predicates factorize the right-hand Series first
-(``pd.factorize`` on the raw WKB bytes) so each distinct geometry is
-parsed once per batch and its edge tables are reused across all its
-pairs — the Arrow-batch analogue of shapely prepared geometries
-(``cdap_geo/_indexing.py:253-254``).
+Pair predicates dictionary-encode both blob columns first
+(``pyarrow.compute.dictionary_encode`` on the raw WKB bytes) so each
+distinct geometry is parsed once per batch and its edge tables are
+reused across all its pairs — the Arrow-batch analogue of shapely
+prepared geometries (``cdap_geo/_indexing.py:253-254``).
+
+A NaN in a double result is returned as null.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import functions as F, types as T
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 from cdap_geo_spark.core import cells as C, geom as G, wkb as W
 
@@ -34,8 +39,20 @@ BOUNDS_FIELDS = [
 BOUNDS_TYPE = T.StructType(BOUNDS_FIELDS)
 
 
-def _to_blob_list(s: pd.Series) -> list:
-    return [None if v is None else bytes(v) for v in s]
+def _doubles(x) -> pa.Array:
+    """A float64 result column, NaN as null."""
+    return pa.array(x, pa.float64(), from_pandas=True)
+
+
+def _floats(a: pa.Array) -> np.ndarray:
+    """A float64 argument column as NumPy, null as NaN."""
+    return a.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+
+
+def _struct(cols: dict) -> pa.StructArray:
+    """A struct result column of float64 fields, NaN as null."""
+    return pa.StructArray.from_arrays([_doubles(v) for v in cols.values()],
+                                      names=list(cols))
 
 
 # ---------------------------------------------------------------------------
@@ -49,20 +66,21 @@ def st_bounds():
     ``cdap_geo/index_bbox.py:6-13`` — named struct fields instead of
     positional array access.
     """
-    @pandas_udf(BOUNDS_TYPE)
-    def _bounds(s: pd.Series) -> pd.DataFrame:
-        b = W.parse_wkb(_to_blob_list(s)).bounds()
-        return pd.DataFrame(b, columns=["minx", "miny", "maxx", "maxy"])
+    @arrow_udf(BOUNDS_TYPE)
+    def _bounds(s: pa.Array) -> pa.Array:
+        b = W.parse_wkb(s).bounds()
+        return _struct({"minx": b[:, 0], "miny": b[:, 1],
+                        "maxx": b[:, 2], "maxy": b[:, 3]})
     return _bounds
 
 
 def st_cells(level: int, how: str = "bbox", pad: float = 1.0):
     """binary WKB -> array<long> cell cover only."""
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def _cells(s: pd.Series) -> pd.Series:
-        batch = W.parse_wkb(_to_blob_list(s))
-        off, cc, _ = C.cover_batch(batch, level, how=how, pad=pad)
-        return pd.Series([cc[off[i]:off[i + 1]] for i in range(len(batch))])
+    @arrow_udf(T.ArrayType(T.LongType()))
+    def _cells(s: pa.Array) -> pa.Array:
+        off, cc, _ = C.cover_batch(W.parse_wkb(s), level, how=how, pad=pad)
+        return pa.ListArray.from_arrays(pa.array(off, pa.int32()),
+                                        pa.array(cc, pa.int64()))
     return _cells
 
 
@@ -71,15 +89,13 @@ def st_cell_point(level: int):
     storage layout / range partitioning keys). A point outside the
     world frame gets the nearest edge cell (``cells.point_grid``), the
     cell a region cover clamps to. Null for invalid."""
-    @pandas_udf(T.LongType())
-    def _cell(s: pd.Series) -> pd.Series:
-        b = W.parse_wkb(_to_blob_list(s)).bounds()
+    @arrow_udf(T.LongType())
+    def _cell(s: pa.Array) -> pa.Array:
+        b = W.parse_wkb(s).bounds()
         bad = np.isnan(b[:, 0]) | np.isnan(b[:, 1])
         xi, yi = C.point_grid(np.nan_to_num(b[:, 0]),
                               np.nan_to_num(b[:, 1]), level)
-        out = pd.Series(C.encode(level, xi, yi).astype(object))
-        out[bad] = None
-        return out
+        return pa.array(C.encode(level, xi, yi), pa.int64(), mask=bad)
     return _cell
 
 
@@ -89,9 +105,9 @@ def st_cell_point(level: int):
 
 def st_area():
     """binary -> double (``cdap_geo/functions.py:12-14``, float->double)."""
-    @pandas_udf(T.DoubleType())
-    def _area(s: pd.Series) -> pd.Series:
-        return pd.Series(G.area(W.parse_wkb(_to_blob_list(s))))
+    @arrow_udf(T.DoubleType())
+    def _area(s: pa.Array) -> pa.Array:
+        return _doubles(G.area(W.parse_wkb(s)))
     return _area
 
 
@@ -100,39 +116,37 @@ def st_length():
     line length, point 0 — PostGIS ``ST_Perimeter``/``ST_Length``
     semantics; the reference reads ``shapely .length`` on flattened
     parts). Vectorized batch kernel, no per-row Python."""
-    @pandas_udf(T.DoubleType())
-    def _len(s: pd.Series) -> pd.Series:
-        return pd.Series(G.length(W.parse_wkb(_to_blob_list(s))))
+    @arrow_udf(T.DoubleType())
+    def _len(s: pa.Array) -> pa.Array:
+        return _doubles(G.length(W.parse_wkb(s)))
     return _len
 
 
 def st_num_points():
     """binary -> long vertex count (``cdap_geo/misc.py:30-32``) — the
     engine's skew/cost signal."""
-    @pandas_udf(T.LongType())
-    def _n(s: pd.Series) -> pd.Series:
-        return pd.Series(G.vertex_counts(W.parse_wkb(_to_blob_list(s))))
+    @arrow_udf(T.LongType())
+    def _n(s: pa.Array) -> pa.Array:
+        return pa.array(G.vertex_counts(W.parse_wkb(s)), pa.int64())
     return _n
 
 
 def st_point():
     """(x: double, y: double) -> binary WKB point (vectorized emit)."""
-    @pandas_udf(T.BinaryType())
-    def _pt(x: pd.Series, y: pd.Series) -> pd.Series:
-        return pd.Series(W.points_to_wkb(x.to_numpy(np.float64),
-                                         y.to_numpy(np.float64)))
+    @arrow_udf(T.BinaryType())
+    def _pt(x: pa.Array, y: pa.Array) -> pa.Array:
+        return pa.array(W.points_to_wkb(_floats(x), _floats(y)), pa.binary())
     return _pt
 
 
 def st_box():
     """(minx,miny,maxx,maxy) -> binary WKB box polygon."""
-    @pandas_udf(T.BinaryType())
-    def _box(minx: pd.Series, miny: pd.Series,
-             maxx: pd.Series, maxy: pd.Series) -> pd.Series:
-        return pd.Series(W.boxes_to_wkb(minx.to_numpy(np.float64),
-                                        miny.to_numpy(np.float64),
-                                        maxx.to_numpy(np.float64),
-                                        maxy.to_numpy(np.float64)))
+    @arrow_udf(T.BinaryType())
+    def _box(minx: pa.Array, miny: pa.Array,
+             maxx: pa.Array, maxy: pa.Array) -> pa.Array:
+        return pa.array(W.boxes_to_wkb(_floats(minx), _floats(miny),
+                                       _floats(maxx), _floats(maxy)),
+                        pa.binary())
     return _box
 
 
@@ -142,15 +156,12 @@ def st_centroid():
     :func:`cdap_geo_spark.core.geom.centroid`). NULL/empty -> NULL.
     The recommended pointifier for feeding extended geometries into
     point-mode ``knn_join``."""
-    @pandas_udf(T.BinaryType())
-    def _cent(s: pd.Series) -> pd.Series:
-        c = G.centroid(W.parse_wkb(_to_blob_list(s)))
-        bad = np.isnan(c[:, 0])
+    @arrow_udf(T.BinaryType())
+    def _cent(s: pa.Array) -> pa.Array:
+        c = G.centroid(W.parse_wkb(s))
         blobs = W.points_to_wkb(np.nan_to_num(c[:, 0]),
                                 np.nan_to_num(c[:, 1]))
-        out = pd.Series(blobs)
-        out[bad] = None
-        return out
+        return pa.array(blobs, pa.binary(), mask=np.isnan(c[:, 0]))
     return _cent
 
 
@@ -160,10 +171,10 @@ def st_centroid_xy():
     out_t = T.StructType([T.StructField("x", T.DoubleType()),
                           T.StructField("y", T.DoubleType())])
 
-    @pandas_udf(out_t)
-    def _cent(s: pd.Series) -> pd.DataFrame:
-        c = G.centroid(W.parse_wkb(_to_blob_list(s)))
-        return pd.DataFrame({"x": c[:, 0], "y": c[:, 1]})
+    @arrow_udf(out_t)
+    def _cent(s: pa.Array) -> pa.Array:
+        c = G.centroid(W.parse_wkb(s))
+        return _struct({"x": c[:, 0], "y": c[:, 1]})
     return _cent
 
 
@@ -212,13 +223,11 @@ def _pair_kernel(kernel, out_dtype):
     """Factorize BOTH sides: candidates repeat each doc ~once per
     overlapping region and each region across many docs, so parsing
     unique blobs only cuts WKB decode work by the duplication factor."""
-    def run(l: pd.Series, r: pd.Series) -> np.ndarray:
-        lcodes, lunique = pd.factorize(l, use_na_sentinel=True)
-        rcodes, runique = pd.factorize(r, use_na_sentinel=True)
-        lb = W.parse_wkb(_to_blob_list(pd.Series(lunique)))
-        rb = W.parse_wkb(_to_blob_list(pd.Series(runique)))
-        li = lcodes.astype(np.int64)
-        ri = rcodes.astype(np.int64)
+    def run(l: pa.Array, r: pa.Array) -> np.ndarray:
+        ld, rd = pc.dictionary_encode(l), pc.dictionary_encode(r)
+        lb, rb = W.parse_wkb(ld.dictionary), W.parse_wkb(rd.dictionary)
+        li = ld.indices.fill_null(-1).to_numpy().astype(np.int64)
+        ri = rd.indices.fill_null(-1).to_numpy().astype(np.int64)
         vi = np.flatnonzero((ri >= 0) & (li >= 0))
         out = np.zeros(len(l), out_dtype)
         out[vi] = pair_kernel_chunked(kernel, lb, rb, li[vi], ri[vi],
@@ -232,9 +241,9 @@ def st_intersects():
     (``cdap_geo/functions.py:72-78``; boundary touch counts)."""
     run = _pair_kernel(G.pairs_intersect, bool)
 
-    @pandas_udf(T.BooleanType())
-    def _its(l: pd.Series, r: pd.Series) -> pd.Series:
-        return pd.Series(run(l, r))
+    @arrow_udf(T.BooleanType())
+    def _its(l: pa.Array, r: pa.Array) -> pa.Array:
+        return pa.array(run(l, r), pa.bool_())
     return _its
 
 
@@ -244,9 +253,9 @@ def st_distance():
     ``cdap_geo/sedona.py:136-141``)."""
     run = _pair_kernel(G.pairs_distance, np.float64)
 
-    @pandas_udf(T.DoubleType())
-    def _dist(l: pd.Series, r: pd.Series) -> pd.Series:
-        return pd.Series(run(l, r))
+    @arrow_udf(T.DoubleType())
+    def _dist(l: pa.Array, r: pa.Array) -> pa.Array:
+        return _doubles(run(l, r))
     return _dist
 
 
@@ -256,7 +265,7 @@ def st_intersection_area():
     README.md:27). v1: right side must be a convex polygon/box."""
     run = _pair_kernel(G.pairs_intersection_area, np.float64)
 
-    @pandas_udf(T.DoubleType())
-    def _ia(l: pd.Series, r: pd.Series) -> pd.Series:
-        return pd.Series(run(l, r))
+    @arrow_udf(T.DoubleType())
+    def _ia(l: pa.Array, r: pa.Array) -> pa.Array:
+        return _doubles(run(l, r))
     return _ia

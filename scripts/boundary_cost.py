@@ -2,14 +2,17 @@
 
 Usage: python3 scripts/boundary_cost.py [--seed N] [--repeats R]
 
-Writes the seed's perfbench documents (30,000 docs), then times three
+Writes the seed's perfbench documents (30,000 docs), then times four
 plans over ``(doc_id, geometry)`` of those docs, each written to the
 ``noop`` sink: the bare scan, the scan through one identity
-``mapInArrow``, and through two chained ones. The plans run in rounds
-of one each, after one warm-up round, and the script prints the median
-wall time of each. The differences are what one Python node costs
-before it computes anything. The identity function imports the
-package in the worker, as every node of the library does. The session
+``mapInArrow``, through two chained ones, and through one
+``mapInArrow`` that decodes each batch's WKB (``parse_wkb`` and
+``bounds()``) and passes the batch on. The plans run in rounds of one
+each, after one warm-up round, and the script prints the median wall
+time of each. The differences are what one Python node costs before
+it computes anything, and what the decode adds to it. The identity
+function imports the package in the worker, as every node of the
+library does. The session
 is perfbench's: ``local[nproc]``, a 2 GB driver, scratch files in a
 temporary directory that is removed at the end.
 """
@@ -33,13 +36,21 @@ def identity(batches):
     yield from batches
 
 
+def decode(batches):
+    from cdap_geo_spark.core import wkb as W
+    for b in batches:
+        W.parse_wkb(b.column(1)).bounds()
+        yield b
+
+
 def plans(spark, docs_path: str) -> dict:
     from cdap_geo_spark import docs as D
     scan = D.with_geometry(spark.read.parquet(docs_path)) \
         .select("doc_id", "geometry")
     one = scan.mapInArrow(identity, scan.schema)
     return {"scan": scan, "one_node": one,
-            "two_nodes": one.mapInArrow(identity, scan.schema)}
+            "two_nodes": one.mapInArrow(identity, scan.schema),
+            "decode": scan.mapInArrow(decode, scan.schema)}
 
 
 def main(argv=None) -> int:
@@ -74,6 +85,8 @@ def main(argv=None) -> int:
           f"median of {args.repeats}:")
     for name, ts in times.items():
         print(f"  {name:10s} {median(ts):.3f} s")
+    extra = median(times["decode"]) - median(times["one_node"])
+    print(f"  decode - one_node {extra:+.3f} s")
     return 0
 
 

@@ -340,7 +340,7 @@ def test_pair_kernel_chunk_invariance(monkeypatch):
     result-invariant in the chunk size — slicing is a pure execution
     detail."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
     from cdap_geo_spark import udfs
     from cdap_geo_spark.core import geom as G, wkb as W
     from cdap_geo_spark.fixtures import doc_geometry_wkb
@@ -349,8 +349,8 @@ def test_pair_kernel_chunk_invariance(monkeypatch):
     rng = np.random.default_rng(3)
     li = rng.integers(0, 500, 3000)
     ri = rng.integers(0, 500, 3000)
-    l = pd.Series([blobs[i] for i in li])
-    r = pd.Series([blobs[i] for i in ri])
+    l = pa.array([blobs[i] for i in li], pa.binary())
+    r = pa.array([blobs[i] for i in ri], pa.binary())
     outs = []
     for chunk in (0, 7, 256, 100000):
         monkeypatch.setattr(udfs, "KERNEL_CHUNK", chunk)

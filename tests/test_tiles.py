@@ -387,10 +387,9 @@ def test_tiles_in_the_sjoin_pass_match_both_references(spark, no_broadcast,
     own = assign_tiles(pairs.select("*"), **args)
     assert fused.schema == own.schema
 
-    def plan(df):
-        return df._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" not in plan(fused)  # tiled in the sjoin pass
-    assert "MapInPandas" in plan(own)
+    from test_plans import _python_nodes
+    assert len(_python_nodes(fused)) == 1  # tiled in the sjoin pass
+    assert len(_python_nodes(own)) == 2
     got = Counter(map(tuple, fused.collect()))
     assert got == Counter(map(tuple, own.collect()))
 
@@ -428,6 +427,7 @@ def test_multipart_doc_gets_the_tile_of_every_part(spark):
     touching none of its edges, gets that tile as well as its first
     part's, from assign_tiles on its own pass and inside the sjoin
     pass."""
+    from test_plans import _python_nodes
     from test_sjoin import _box
     doc = W.multi_to_wkb(W.KIND_MULTIPOLYGON, [
         _box(1_000, 1_000, 2_000, 2_000),
@@ -440,8 +440,7 @@ def test_multipart_doc_gets_the_tile_of_every_part(spark):
     pairs = sjoin_pairs(docs, regions, level=7, broadcast=True, dedup=False,
                         keep_left_geom=True)
     fused = assign_tiles(pairs, **args)
-    assert "MapInPandas" not in \
-        fused._jdf.queryExecution().executedPlan().toString()
+    assert len(_python_nodes(fused)) == 1
     want = {"0-0", "140000-260000"}
     assert {r.tile_id for r in assign_tiles(docs, **args).collect()} == want
     assert {r.tile_id for r in fused.collect()} == want

@@ -109,14 +109,84 @@ def test_polygon_with_hole():
     assert oracle.area(oracle.parse(blob)) == pytest.approx(96.0)
 
 
-def test_fast_path_matches_general():
-    xs = np.array([1.5, 2.5, 3.5])
-    ys = np.array([4.5, 5.5, 6.5])
-    blobs = W.points_to_wkb(xs, ys)
-    fast = W.parse_wkb(blobs)                      # uniform → fast path
-    mixed = W.parse_wkb(list(blobs) + [None])      # non-uniform → general
-    np.testing.assert_allclose(fast.coords, mixed.coords[:3])
-    assert fast.kinds.tolist() == mixed.kinds[:3].tolist()
+def _row_coords(b, i):
+    lo, hi = b.ring_coord_off[b.part_ring_off[b.geom_part_off[[i, i + 1]]]]
+    return b.coords[lo:hi]
+
+
+def _edge_blobs() -> list:
+    ext = [[0, 0], [10, 0], [10, 10], [0, 10], [0, 0]]
+    hole = [[4, 4], [6, 4], [6, 6], [4, 6], [4, 4]]
+    return [None, b"", b"\x01\x01\x00", W.point_to_wkb(1, 2)[:-3],
+            struct.pack(">BIdd", 0, 1, 10.0, 20.0),
+            struct.pack("<BIddd", 1, 1001, 1.0, 2.0, 3.0),
+            struct.pack("<BIIdd", 1, 0x20000001, 27700, 7.0, 8.0),
+            struct.pack("<BIdd", 1, 1, float("nan"), float("nan")),
+            struct.pack("<BIdd", 1, 0x10001, 1.0, 2.0),  # unknown type
+            W.polygon_to_wkb([ext, hole]), W.polygon_to_wkb([ext])[:-8],
+            W.polygon_to_wkb([ext])[:-16],
+            bytearray(W.point_to_wkb(3, 4)),
+            memoryview(W.polygon_to_wkb([ext]))]
+
+
+def test_fast_path_matches_general(monkeypatch):
+    """parse_wkb over every input form it takes gives, row for row, the
+    kinds, validity, bounds and coordinates of the general parser; its
+    buffer-classified fast paths take the LE points and single-ring
+    polygons, so the general parser sees only the other rows."""
+    import pandas as pd
+    import pyarrow as pa
+    from cdap_geo_spark.fixtures import doc_geometry_wkb
+
+    docs = list(doc_geometry_wkb(np.arange(1_000, 1_400, dtype=np.int64)))
+    mixed = list(docs)
+    for i, e in zip(range(7, 400, 31), _edge_blobs()):
+        mixed[i] = e
+    plain = [None if b is None else bytes(b) for b in mixed]
+    points = W.points_to_wkb(np.array([1.5, np.nan, 3.5]),
+                             np.array([4.5, np.nan, 6.5]))
+    cases = {
+        "list": (mixed, mixed),
+        "points": (points, points),
+        "series": (pd.Series(mixed), mixed),
+        "binary": (pa.array(plain, pa.binary()), plain),
+        "large_binary": (pa.array(plain, pa.large_binary()), plain),
+        "sliced": (pa.array(plain, pa.binary()).slice(13, 300),
+                   plain[13:313]),
+        "chunked": (pa.chunked_array([pa.array(plain[:50], pa.binary()),
+                                      pa.array(plain[50:], pa.binary())]),
+                    plain),
+        "no_validity": (pa.array(docs, pa.binary()), docs),
+        # null rows whose offsets still span a point
+        "null_over_data": (pa.Array.from_buffers(
+            pa.binary(), 3, [pa.py_buffer(bytes([0b101])),
+                             *pa.array(points, pa.binary()).buffers()[1:]]),
+            [points[0], None, points[2]]),
+        "all_null": (pa.nulls(5, pa.binary()), [None] * 5),
+        "empty": (pa.array([], pa.binary()), []),
+    }
+    assert cases["no_validity"][0].buffers()[0] is None
+    assert cases["sliced"][0].offset == 13
+    general, seen = W._parse_general, {}
+
+    def spy(blobs):
+        seen[name] = seen.get(name, 0) + len(blobs)
+        return general(blobs)
+    monkeypatch.setattr(W, "_parse_general", spy)
+    for name, (given, ref) in cases.items():
+        got, want = W.parse_wkb(given), general(ref)
+        assert len(got) == len(ref), name
+        for f in ("kinds", "valid"):
+            np.testing.assert_array_equal(getattr(got, f), getattr(want, f),
+                                          err_msg=name)
+        np.testing.assert_array_equal(got.bounds(), want.bounds(),
+                                      err_msg=name)
+        for i in np.flatnonzero(want.valid):
+            np.testing.assert_array_equal(_row_coords(got, i),
+                                          _row_coords(want, i), err_msg=name)
+    fast = sum(len(b) == 21 and b[:2] == b"\x01\x01" for b in docs)
+    assert 0 < seen["no_validity"] < len(docs) - fast
+    assert "points" not in seen and "all_null" in seen
 
 
 def test_slice_batch():
